@@ -35,7 +35,7 @@ from __future__ import annotations
 
 import math
 import struct
-from typing import Iterable, List, Tuple
+from typing import List, Tuple
 
 from mongo_analyser_spark.operators.pixels import untrusted_decoder
 
@@ -467,55 +467,27 @@ def wav_features_frame(
     df,
     payload_col: str = "payload",
     id_col: str = "doc_id",
-    fanout: int | None = None,
 ):
     """(id, sample_rate, n_samples, duration_s, rms, peak, zero_crossings)
-    via one Arrow-batched mapInPandas over an explicit-N fanout — the
-    same stage shape as extract_pixel_stats (operators/multimodal.py).
-    """
-    import pandas as pd  # noqa: F401
+    — one row per WAV payload through the per-document Python stage
+    (``operators.fanout.python_rows``)."""
+    from mongo_analyser_spark.operators.fanout import python_rows
 
-    from mongo_analyser_spark.operators.fanout import fanout_for_python
+    def rows_of(rid, payload):
+        f = wav_features(bytes(payload))
+        yield (
+            rid,
+            f["sample_rate"],
+            f["n_samples"],
+            f["duration_s"],
+            f["rms"],
+            f["peak"],
+            f["zero_crossings"],
+        )
 
-    src = df.select(id_col, payload_col)
-    if fanout:
-        src = src.repartition(fanout, id_col)
-    else:
-        src = fanout_for_python(src, id_col)
-
-    def run(batches: Iterable["pd.DataFrame"]):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                f = wav_features(bytes(payload))
-                rows.append(
-                    (
-                        rid,
-                        f["sample_rate"],
-                        f["n_samples"],
-                        f["duration_s"],
-                        f["rms"],
-                        f["peak"],
-                        f["zero_crossings"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col,
-                    "sample_rate",
-                    "n_samples",
-                    "duration_s",
-                    "rms",
-                    "peak",
-                    "zero_crossings",
-                ],
-            )
-
-    return src.mapInPandas(
-        run,
+    return python_rows(
+        df.select(id_col, payload_col),
+        rows_of,
         f"{id_col} long, sample_rate int, n_samples int, duration_s double,"
         " rms double, peak int, zero_crossings int",
     )

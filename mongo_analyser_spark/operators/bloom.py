@@ -47,6 +47,9 @@ from mongo_analyser_spark.functions.text import shingles
 from mongo_analyser_spark.operators.dsir import md5_bucket
 
 WORD_BITS = 32  # 32-bit filter words: 1<<31 fits signed 64-bit on both engines
+#: train-corpus size up to which the distinct-gram arrays are
+#: materialized once (``_grams_ckpt_open``)
+GRAMS_CKPT_MAX_BYTES = 256 << 20
 
 
 def bloom_bits_for(
@@ -180,16 +183,9 @@ def _grams_ckpt_open(train_bytes: int | None) -> bool:
     bloom_decontaminate 1.66 → 1.13 s min-of-7, rows identical), while
     at corpus scale pushing 10× the text through disks loses to
     recomputing the cheap projection — recompute stays the default
-    and the 100 TB-safe path.
-    ``SPARK_GRAFT_BLOOM_GRAMS_CKPT_MAX_BYTES`` (default 256 MiB)."""
-    if train_bytes is None:
-        return False
-    import os
-
-    thr = int(
-        os.environ.get("SPARK_GRAFT_BLOOM_GRAMS_CKPT_MAX_BYTES", str(256 << 20))
-    )
-    return train_bytes <= thr
+    and the 100 TB-safe path. The crossover is
+    ``GRAMS_CKPT_MAX_BYTES``."""
+    return train_bytes is not None and train_bytes <= GRAMS_CKPT_MAX_BYTES
 
 
 def bloom_ngram_contamination(

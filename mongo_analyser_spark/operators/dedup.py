@@ -15,14 +15,16 @@ candidates and signatures (engine-native hash functions differ).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mongo_analyser_spark.operators.fanout import fanout_for_python, sort_plain
 
 from mongo_analyser_spark.functions.text import shingles, tokens
+
+#: corpus size from which the Jaccard-verify candidate semi-filter opens
+#: (``_semi_filter_open``)
+SEMI_FILTER_MIN_BYTES = 4 << 20
 
 
 def exact_dedup(df: DataFrame, key: Column, id_col: str) -> DataFrame:
@@ -152,15 +154,12 @@ def _semi_filter_open(corpus_bytes: int | None) -> bool:
     decorrelated sf1 probe tier (5.9 MB) it wins: dedup_minhash
     16.67→14.04 s, dedup_jaccard 9.70→8.00 s, decontaminate neutral
     (min-of-5, env toggled between reps in ONE session). The gate
-    opens at ``SPARK_GRAFT_JACCARD_SEMI_MIN_BYTES`` (default 4 MiB —
-    between the measured losing and winning corpus sizes; at
-    production sizes the win only grows since the avoided double pass
-    scales with the corpus and the overhead does not). Below the
-    threshold the plan is byte-identical to the ungated form."""
-    if corpus_bytes is None:
-        return False
-    thr = int(os.environ.get("SPARK_GRAFT_JACCARD_SEMI_MIN_BYTES", str(4 << 20)))
-    return corpus_bytes >= thr
+    opens at ``SEMI_FILTER_MIN_BYTES`` (4 MiB — between the measured
+    losing and winning corpus sizes; at production sizes the win only
+    grows since the avoided double pass scales with the corpus and the
+    overhead does not). Below the threshold the plan is byte-identical
+    to the ungated form."""
+    return corpus_bytes is not None and corpus_bytes >= SEMI_FILTER_MIN_BYTES
 
 
 def jaccard_verify(

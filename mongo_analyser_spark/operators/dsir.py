@@ -42,6 +42,10 @@ from pyspark.sql import functions as F
 
 from mongo_analyser_spark.functions.text import shingles, tokens
 
+#: corpus size up to which the feature frame is materialized once
+#: (``_feats_ckpt_open``)
+FEATS_CKPT_MAX_BYTES = 1 << 30
+
 
 def md5_bucket(col: Column, buckets: int) -> Column:
     """Engine-reproducible feature hash: first 13 md5 hex chars (52
@@ -88,17 +92,9 @@ def _feats_ckpt_open(corpus_bytes: int | None) -> bool:
     value-identical). Above it, pushing a 5×-corpus artifact through
     local disks loses to recomputing the cheap projection — the
     jaccard_verify corpus-sized-frame rule, so the default for unknown
-    or big corpora is RECOMPUTE (the 100 TB-safe path).
-    ``SPARK_GRAFT_DSIR_FEATS_CKPT_MAX_BYTES`` (default 1 GiB) tunes the
-    crossover."""
-    if corpus_bytes is None:
-        return False
-    import os
-
-    thr = int(
-        os.environ.get("SPARK_GRAFT_DSIR_FEATS_CKPT_MAX_BYTES", str(1 << 30))
-    )
-    return corpus_bytes <= thr
+    or big corpora is RECOMPUTE (the 100 TB-safe path). The crossover
+    is ``FEATS_CKPT_MAX_BYTES``."""
+    return corpus_bytes is not None and corpus_bytes <= FEATS_CKPT_MAX_BYTES
 
 
 def dsir_weights(

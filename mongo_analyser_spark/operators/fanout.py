@@ -18,11 +18,17 @@ the shuffle when the scan already saturates the executor parallelism.
 Env override ``SPARK_GRAFT_FANOUT`` = ``auto`` (default) | ``always`` |
 ``never`` — the A/B lever tools/scale_probe.py --many-files uses to
 measure both branches on a many-file layout.
+
+``python_rows`` is the one way to run a per-document Python function:
+fanout, then one Arrow-batched ``mapInPandas`` that emits the rows the
+function returns for each (id, payload) pair.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Iterable
+from typing import Any
 
 from pyspark.sql import DataFrame
 
@@ -59,6 +65,47 @@ def fanout_for_python(df: DataFrame, *key_cols: str) -> DataFrame:
     return df.repartition(n, *keys)
 
 
+def python_rows(
+    df: DataFrame,
+    rows_of: Callable[[Any, Any], Iterable[tuple]],
+    schema: str,
+) -> DataFrame:
+    """The per-document Python stage: ``df`` is a two-column
+    ``(id, payload)`` frame; ``rows_of(id, payload)`` returns the output
+    row tuples for one document (zero, one or many), in the column order
+    of the DDL ``schema``. The frame is fanned out on the id column
+    (``fanout_for_python``) and every row is produced inside ONE
+    Arrow-batched ``mapInPandas``. Callers finish with
+    ``.transform(sort_after_python, ...)`` for a deterministic order."""
+    import pandas as pd
+    from pyspark.sql.types import StructType
+
+    id_col, payload_col = df.columns
+    columns = StructType.fromDDL(schema).fieldNames()
+
+    def run(batches):
+        for pdf in batches:
+            yield pd.DataFrame(
+                [
+                    row
+                    for rid, payload in zip(pdf[id_col], pdf[payload_col])
+                    for row in rows_of(rid, payload)
+                ],
+                columns=columns,
+            )
+
+    return fanout_for_python(df, id_col).mapInPandas(run, schema)
+
+
+def ascii_codes(text: str | None) -> bytes:
+    """The printable-ASCII code points (1..127) of a document's text —
+    the bytes the codec rows build their payloads from; the per-row twin
+    of the Column expression ``operators.phash.ascii_codes``. The DuckDB
+    twins keep exactly these with ``ascii(x) BETWEEN 1 AND 127``:
+    non-ASCII characters and NUL are dropped by both engines."""
+    return (text or "").encode("ascii", "ignore").replace(b"\x00", b"")
+
+
 def sort_after_python(df: DataFrame, *cols: str) -> DataFrame:
     """Deterministic output sort for a per-row Python stage (r15,
     guide §2.4 "an orderBy used only to make output deterministic").
@@ -79,14 +126,11 @@ def sort_after_python(df: DataFrame, *cols: str) -> DataFrame:
     the plan-pinning tests (tests/test_plans.py) to assert the fanout
     exchange + MapInPandas shape on.
 
-    ``SPARK_GRAFT_SORT_CHECKPOINT=never`` falls back to the bare
-    ``orderBy`` — the same-session A/B lever tools use to price the
-    checkpoint per row (it is NOT free: on a row whose under-sort
-    segment is already bounded by a shuffle or broadcast artifact the
-    resample is cheap and the extra materialization job is pure loss —
-    the r15 session-3 finding on the recall-report family)."""
-    if os.environ.get("SPARK_GRAFT_SORT_CHECKPOINT", "auto") == "never":
-        return sort_plain(df, *cols)
+    The checkpoint is NOT free: on a row whose under-sort segment is
+    already bounded by a shuffle or broadcast artifact the resample is
+    cheap and the extra materialization job is pure loss (the r15
+    finding on the recall-report family) — those rows use
+    ``sort_plain``."""
     # eager=False (r15 session-3): the eager form materialized at BUILD
     # time, so composite consumers that take ``unsorted(...)`` (the
     # recall reports) still paid the full checkpoint job for a frame

@@ -35,7 +35,9 @@ from mongo_analyser_spark.operators.similarity import (
     srp_planes,
 )
 from mongo_analyser_spark.operators.fanout import (
+    ascii_codes,
     fanout_for_python,
+    python_rows,
     sort_after_python,
     sort_plain,
     unsorted,
@@ -2567,36 +2569,22 @@ def q_pixel_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared floor(x*1e4+0.5)/1e4 (no engine ROUND tie conventions)."""
     import math
 
-    import pandas as pd
-
     from mongo_analyser_spark.operators.pixels import decode_png, encode_png
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                # keep exactly the code points the oracle keeps
-                # (ascii 1..127): non-ASCII and NUL are dropped by both
-                data = bytes(
-                    b
-                    for b in (text or "").encode("ascii", "ignore")
-                    if 1 <= b <= 127
-                )
-                h = max(1, -(-len(data) // 16))
-                padded = data + b"\x00" * (16 * h - len(data))
-                w2, h2, ch, px = decode_png(encode_png(16, h, 1, padded))
-                mean = math.floor(
-                    sum(px) * 10000.0 / (w2 * h2) + 0.5
-                ) / 10000.0
-                rows.append((doc_id, w2, h2, ch, mean))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "channels", "mean_luma"]
-            )
+    def rows_of(doc_id, text):
+        data = ascii_codes(text)
+        h = max(1, -(-len(data) // 16))
+        padded = data + b"\x00" * (16 * h - len(data))
+        w2, h2, ch, px = decode_png(encode_png(16, h, 1, padded))
+        mean = math.floor(
+            sum(px) * 10000.0 / (w2 * h2) + 0.5
+        ) / 10000.0
+        yield (doc_id, w2, h2, ch, mean)
 
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, width int, height int, channels int, mean_luma double",
     ).transform(sort_after_python, "doc_id")
 
@@ -3007,52 +2995,24 @@ def q_jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of one."""
     import math
 
-    import pandas as pd
-
     from mongo_analyser_spark.operators.jpeg import encode_jpeg
     from mongo_analyser_spark.operators.pixels import decode_pixels
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        # adaptive explicit-N fanout (r13): a bare keyed repartition is
-        # an AQE re-coalesce target (~1.5 MB of text collapses to ONE
-        # post-shuffle partition, serializing the Python codec stage —
-        # measured 17.1 s vs 2.1 s solo at sf0.1); explicit-N is exempt.
-        # On many-file layouts where the scan already saturates executor
-        # parallelism the shuffle is skipped entirely (operators/fanout).
-        .transform(fanout_for_python)
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = bytes(
-                    b
-                    for b in (text or "").encode("ascii", "ignore")
-                    if 1 <= b <= 127
-                )[:256]
-                h = max(1, -(-len(data) // 16))
-                padded = data + b"\x00" * (16 * h - len(data))
-                w2, h2, ch, px = decode_pixels(encode_jpeg(16, h, 1, padded))
-                mean = math.floor(sum(px) * 10000.0 / (w2 * h2) + 0.5) / 10000.0
-                src = math.floor(
-                    sum(padded) * 10000.0 / (16 * h) + 0.5
-                ) / 10000.0
-                rows.append(
-                    (doc_id, w2, h2, ch, mean, round(abs(mean - src), 4))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "channels", "mean_luma",
-                    "mean_delta",
-                ],
-            )
+    def rows_of(doc_id, text):
+        data = ascii_codes(text)[:256]
+        h = max(1, -(-len(data) // 16))
+        padded = data + b"\x00" * (16 * h - len(data))
+        w2, h2, ch, px = decode_pixels(encode_jpeg(16, h, 1, padded))
+        mean = math.floor(sum(px) * 10000.0 / (w2 * h2) + 0.5) / 10000.0
+        src = math.floor(
+            sum(padded) * 10000.0 / (16 * h) + 0.5
+        ) / 10000.0
+        yield (doc_id, w2, h2, ch, mean, round(abs(mean - src), 4))
 
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, width int, height int, channels int, "
         "mean_luma double, mean_delta double",
     ).transform(sort_after_python, "doc_id")
@@ -4562,52 +4522,26 @@ def q_wav_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (core/extractor.py:199-200); this is the north-star decode path.
     100-TB shape: explicit-N fanout + one fixed-width row per payload,
     no shuffle after the fanout."""
-    import pandas as pd  # noqa: F401
-
     from mongo_analyser_spark.operators.audio import encode_wav, wav_features
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        # adaptive fanout (r13): explicit-N on single-file fixtures,
-        # skipped when the scan already saturates executor parallelism
-        .transform(fanout_for_python)
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run(batches):
-        import pandas as pd
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        payload = encode_wav(8000, [(c - 64) * 256 for c in codes])
+        f = wav_features(payload)
+        yield (
+            doc_id,
+            f["sample_rate"],
+            f["n_samples"],
+            f["duration_s"],
+            f["rms"],
+            f["peak"],
+            f["zero_crossings"],
+        )
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    b
-                    for b in (text or "").encode("ascii", "ignore")
-                    if 1 <= b <= 127
-                ]
-                payload = encode_wav(8000, [(c - 64) * 256 for c in codes])
-                f = wav_features(payload)
-                rows.append(
-                    (
-                        doc_id,
-                        f["sample_rate"],
-                        f["n_samples"],
-                        f["duration_s"],
-                        f["rms"],
-                        f["peak"],
-                        f["zero_crossings"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_samples", "duration_s",
-                    "rms", "peak", "zero_crossings",
-                ],
-            )
-
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, sample_rate int, n_samples int, duration_s double,"
         " rms double, peak int, zero_crossings int",
     ).transform(sort_after_python, "doc_id")
@@ -4971,56 +4905,30 @@ def q_wav_resample_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the 1-in-4 sample selection directly, so a bug anywhere in the
     resampler, the re-encode, or the second decode breaks the hash —
     the pixel_roundtrip contract applied to the audio resize path."""
-    import pandas as pd  # noqa: F401
-
     from mongo_analyser_spark.operators.audio import (
         encode_wav,
         resample_decimate,
         wav_features,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        # adaptive fanout (r13): explicit-N on single-file fixtures,
-        # skipped when the scan already saturates executor parallelism
-        .transform(fanout_for_python)
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run(batches):
-        import pandas as pd
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        clip = encode_wav(8000, [(c - 64) * 256 for c in codes])
+        f = wav_features(resample_decimate(clip, 4))
+        yield (
+            doc_id,
+            f["sample_rate"],
+            f["n_samples"],
+            f["duration_s"],
+            f["rms"],
+            f["peak"],
+            f["zero_crossings"],
+        )
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    b
-                    for b in (text or "").encode("ascii", "ignore")
-                    if 1 <= b <= 127
-                ]
-                clip = encode_wav(8000, [(c - 64) * 256 for c in codes])
-                f = wav_features(resample_decimate(clip, 4))
-                rows.append(
-                    (
-                        doc_id,
-                        f["sample_rate"],
-                        f["n_samples"],
-                        f["duration_s"],
-                        f["rms"],
-                        f["peak"],
-                        f["zero_crossings"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_samples", "duration_s",
-                    "rms", "peak", "zero_crossings",
-                ],
-            )
-
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, sample_rate int, n_samples int, duration_s double,"
         " rms double, peak int, zero_crossings int",
     ).transform(sort_after_python, "doc_id")
@@ -5068,54 +4976,28 @@ def q_wav_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same exactness contract as wav_audio_features; frames are
     independent so the Arrow stage emits them with zero cross-row
     state. HASH-oracled per frame."""
-    import pandas as pd  # noqa: F401
-
     from mongo_analyser_spark.operators.audio import (
         encode_wav,
         wav_frame_features,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        # adaptive fanout (r13): explicit-N on single-file fixtures,
-        # skipped when the scan already saturates executor parallelism
-        .transform(fanout_for_python)
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    b
-                    for b in (text or "").encode("ascii", "ignore")
-                    if 1 <= b <= 127
-                ]
-                payload = encode_wav(8000, [(c - 64) * 256 for c in codes])
-                for fr in wav_frame_features(payload, frame_len=64):
-                    rows.append(
-                        (
-                            doc_id,
-                            fr["frame_idx"],
-                            fr["n_samples"],
-                            fr["rms"],
-                            fr["peak"],
-                            fr["zero_crossings"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_idx", "n_samples", "rms", "peak",
-                    "zero_crossings",
-                ],
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        payload = encode_wav(8000, [(c - 64) * 256 for c in codes])
+        for fr in wav_frame_features(payload, frame_len=64):
+            yield (
+                doc_id,
+                fr["frame_idx"],
+                fr["n_samples"],
+                fr["rms"],
+                fr["peak"],
+                fr["zero_crossings"],
             )
 
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, frame_idx int, n_samples int, rms double,"
         " peak int, zero_crossings int",
     ).transform(sort_after_python, "doc_id", "frame_idx")
@@ -5169,58 +5051,32 @@ def q_wav_multichannel_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same features from the odd/even code split directly — a bug in
     the float packing, the fmt-chunk fields, the frame de-interleave,
     or the feature math breaks the hash."""
-    import pandas as pd  # noqa: F401
-
     from mongo_analyser_spark.operators.audio import (
         encode_wav_ex,
         wav_multichannel_features,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        # adaptive fanout (r13): explicit-N on single-file fixtures,
-        # skipped when the scan already saturates executor parallelism
-        .transform(fanout_for_python)
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                fl = len(codes) // 2
-                c0 = [(codes[2 * i] - 64) / 128.0 for i in range(fl)]
-                c1 = [(codes[2 * i + 1] - 64) / 128.0 for i in range(fl)]
-                payload = encode_wav_ex(8000, [c0, c1])
-                for ft in wav_multichannel_features(payload):
-                    rows.append(
-                        (
-                            doc_id,
-                            ft["channel"],
-                            ft["n_samples"],
-                            ft["mean"],
-                            ft["rms"],
-                            ft["peak"],
-                            ft["zero_crossings"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "channel", "n_samples", "mean", "rms",
-                    "peak", "zero_crossings",
-                ],
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        fl = len(codes) // 2
+        c0 = [(codes[2 * i] - 64) / 128.0 for i in range(fl)]
+        c1 = [(codes[2 * i + 1] - 64) / 128.0 for i in range(fl)]
+        payload = encode_wav_ex(8000, [c0, c1])
+        for ft in wav_multichannel_features(payload):
+            yield (
+                doc_id,
+                ft["channel"],
+                ft["n_samples"],
+                ft["mean"],
+                ft["rms"],
+                ft["peak"],
+                ft["zero_crossings"],
             )
 
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, channel int, n_samples int, mean double, rms double,"
         " peak double, zero_crossings int",
     ).transform(sort_after_python, "doc_id", "channel")
@@ -5269,55 +5125,29 @@ def q_wav_pcm24_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-byte packing, the sign extension, the fmt-chunk width, or the
     feature math breaks the hash. Same mapInPandas-over-explicit-fanout
     stage shape as wav_multichannel_features_documents."""
-    import pandas as pd  # noqa: F401
-
     from mongo_analyser_spark.operators.audio import (
         encode_wav_ex,
         wav_pcm24_features,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        # adaptive fanout (r13): explicit-N on single-file fixtures,
-        # skipped when the scan already saturates executor parallelism
-        .transform(fanout_for_python)
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run(batches):
-        import pandas as pd
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        smp = [(c - 64) * 4096 for c in codes]
+        payload = encode_wav_ex(8000, [smp], fmt=1, bits24=True)
+        ft = wav_pcm24_features(payload)
+        yield (
+            doc_id,
+            ft["n_samples"],
+            ft["mean"],
+            ft["rms"],
+            ft["peak"],
+            ft["zero_crossings"],
+        )
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                smp = [(c - 64) * 4096 for c in codes]
-                payload = encode_wav_ex(8000, [smp], fmt=1, bits24=True)
-                ft = wav_pcm24_features(payload)
-                rows.append(
-                    (
-                        doc_id,
-                        ft["n_samples"],
-                        ft["mean"],
-                        ft["rms"],
-                        ft["peak"],
-                        ft["zero_crossings"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_samples", "mean", "rms", "peak",
-                    "zero_crossings",
-                ],
-            )
-
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, n_samples int, mean double, rms double, peak int,"
         " zero_crossings int",
     ).transform(sort_after_python, "doc_id")
@@ -5490,48 +5320,27 @@ def q_frame_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoder, the fcTL walk, the unfilter loop, the composition order, or
     the sampling law breaks the hash. Luma is exact: 64 = 2^6 divides
     exactly, then the shared floor(x*1e4+0.5)/1e4."""
-    import pandas as pd  # noqa: F401
-
     from mongo_analyser_spark.operators.frames import encode_apng
     from mongo_analyser_spark.operators.multimodal import (
         sample_frame_pixel_rows,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        # adaptive fanout (r13): explicit-N on single-file fixtures,
-        # skipped when the scan already saturates executor parallelism
-        .transform(fanout_for_python)
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run(batches):
-        import pandas as pd
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        n = 1 + len(codes) % 8
+        f0 = codes[:64].ljust(64, b"\x00")
+        frames = [(0, 0, 8, 8, f0)]
+        for j in range(1, n):
+            seg = codes[64 + 8 * (j - 1) : 64 + 8 * j]
+            frames.append((0, j - 1, 8, 1, seg.ljust(8, b"\x00")))
+        payload = encode_apng(8, 8, 1, frames)
+        for nf, fi, luma in sample_frame_pixel_rows(payload, 4):
+            yield (doc_id, nf, fi, luma)
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                n = 1 + len(codes) % 8
-                f0 = bytes((codes[:64] + [0] * 64)[:64])
-                frames = [(0, 0, 8, 8, f0)]
-                for j in range(1, n):
-                    seg = codes[64 + 8 * (j - 1) : 64 + 8 * j]
-                    frames.append((0, j - 1, 8, 1, bytes((seg + [0] * 8)[:8])))
-                payload = encode_apng(8, 8, 1, frames)
-                for nf, fi, luma in sample_frame_pixel_rows(payload, 4):
-                    rows.append((doc_id, nf, fi, luma))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_frames", "frame_idx", "frame_luma"],
-            )
-
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, n_frames int, frame_idx int, frame_luma double",
     ).transform(sort_after_python, "doc_id", "frame_idx")
 
@@ -5573,50 +5382,29 @@ def q_gif_frame_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     for a grayscale table collapses to the exact index mean, so the
     oracle states it directly from the cyclic shift. A bit anywhere in
     either LZW direction breaks the hash."""
-    import pandas as pd  # noqa: F401
-
     from mongo_analyser_spark.operators.frames import encode_gif
     from mongo_analyser_spark.operators.multimodal import (
         sample_frame_pixel_rows,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        # adaptive fanout (r13): explicit-N on single-file fixtures,
-        # skipped when the scan already saturates executor parallelism
-        .transform(fanout_for_python)
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run(batches):
-        import pandas as pd
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        ln = len(codes)
+        n = 1 + ln % 4
+        frames = [
+            [codes[(i + 8 * j) % ln] for i in range(64)]
+            if ln
+            else [0] * 64
+            for j in range(n)
+        ]
+        payload = encode_gif(8, 8, frames, palette_bits=8)
+        for nf, fi, luma in sample_frame_pixel_rows(payload, 4):
+            yield (doc_id, nf, fi, luma)
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                ln = len(codes)
-                n = 1 + ln % 4
-                frames = [
-                    [codes[(i + 8 * j) % ln] for i in range(64)]
-                    if ln
-                    else [0] * 64
-                    for j in range(n)
-                ]
-                payload = encode_gif(8, 8, frames, palette_bits=8)
-                for nf, fi, luma in sample_frame_pixel_rows(payload, 4):
-                    rows.append((doc_id, nf, fi, luma))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_frames", "frame_idx", "frame_luma"],
-            )
-
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, n_frames int, frame_idx int, frame_luma double",
     ).transform(sort_after_python, "doc_id", "frame_idx")
 
@@ -5664,53 +5452,35 @@ def q_avi_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     indices, and emits the mean luma, which the oracle states directly
     as (Σ_b 2·codes[…])/4. A bit anywhere in the RIFF walk, the idx1
     check, either JPEG direction, or the sampling law breaks the hash."""
-    import pandas as pd  # noqa: F401
-
     from mongo_analyser_spark.operators.frames import encode_avi_mjpeg
     from mongo_analyser_spark.operators.jpeg import encode_jpeg
     from mongo_analyser_spark.operators.multimodal import (
         sample_frame_pixel_rows,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run(batches):
-        import pandas as pd
+    blocks = [(0, 0), (8, 0), (0, 8), (8, 8)]
 
-        blocks = [(0, 0), (8, 0), (0, 8), (8, 8)]
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                ln = len(codes)
-                n = 1 + ln % 4
-                jpgs = []
-                for j in range(n):
-                    px = bytearray(256)
-                    for b, (ox, oy) in enumerate(blocks):
-                        v = 2 * codes[(4 * j + b) % ln] if ln else 128
-                        for yy in range(8):
-                            base = (oy + yy) * 16 + ox
-                            px[base : base + 8] = bytes([v]) * 8
-                    jpgs.append(encode_jpeg(16, 16, 1, bytes(px)))
-                payload = encode_avi_mjpeg(16, 16, jpgs)
-                for nf, fi, luma in sample_frame_pixel_rows(payload, 4):
-                    rows.append((doc_id, nf, fi, luma))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_frames", "frame_idx", "frame_luma"],
-            )
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        ln = len(codes)
+        n = 1 + ln % 4
+        jpgs = []
+        for j in range(n):
+            px = bytearray(256)
+            for b, (ox, oy) in enumerate(blocks):
+                v = 2 * codes[(4 * j + b) % ln] if ln else 128
+                for yy in range(8):
+                    base = (oy + yy) * 16 + ox
+                    px[base : base + 8] = bytes([v]) * 8
+            jpgs.append(encode_jpeg(16, 16, 1, bytes(px)))
+        payload = encode_avi_mjpeg(16, 16, jpgs)
+        for nf, fi, luma in sample_frame_pixel_rows(payload, 4):
+            yield (doc_id, nf, fi, luma)
 
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, n_frames int, frame_idx int, frame_luma double",
     ).transform(sort_after_python, "doc_id", "frame_idx")
 
@@ -5745,51 +5515,34 @@ def q_jpeg12_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizer, so the oracle states the mean and max directly from the
     codes; any bit lost in the wide DQT parse, the 12-bit categories,
     or the 2048-shift IDCT breaks the hash."""
-    import pandas as pd  # noqa: F401
+    import math
 
     from mongo_analyser_spark.operators.jpeg import (
         decode_jpeg_ex,
         encode_jpeg12,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run(batches):
-        import math
+    blocks = [(0, 0), (8, 0), (0, 8), (8, 8)]
 
-        import pandas as pd
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        ln = len(codes)
+        px = [0] * 256
+        for b, (ox, oy) in enumerate(blocks):
+            v = 32 * codes[b % ln] if ln else 2048
+            for yy in range(8):
+                base = (oy + yy) * 16 + ox
+                px[base : base + 8] = [v] * 8
+        _w, _h, _ch, _mx, out = decode_jpeg_ex(
+            encode_jpeg12(16, 16, 1, px)
+        )
+        mean = math.floor(sum(out) / 256 * 10000.0 + 0.5) / 10000.0
+        yield (doc_id, mean, max(out))
 
-        blocks = [(0, 0), (8, 0), (0, 8), (8, 8)]
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                ln = len(codes)
-                px = [0] * 256
-                for b, (ox, oy) in enumerate(blocks):
-                    v = 32 * codes[b % ln] if ln else 2048
-                    for yy in range(8):
-                        base = (oy + yy) * 16 + ox
-                        px[base : base + 8] = [v] * 8
-                _w, _h, _ch, _mx, out = decode_jpeg_ex(
-                    encode_jpeg12(16, 16, 1, px)
-                )
-                mean = math.floor(sum(out) / 256 * 10000.0 + 0.5) / 10000.0
-                rows.append((doc_id, mean, max(out)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "mean_val", "max_val"]
-            )
-
-    return docs.mapInPandas(
-        run, "doc_id long, mean_val double, max_val int"
+    return python_rows(
+        docs, rows_of, "doc_id long, mean_val double, max_val int"
     ).transform(sort_after_python, "doc_id")
 
 
@@ -5825,51 +5578,34 @@ def q_jpeg12p_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     progressive path is not a weaker twin (the deep_melt_arrow
     precedent). The JPEG gate is now exactly arithmetic coding +
     12-bit subsampling."""
-    import pandas as pd  # noqa: F401
+    import math
 
     from mongo_analyser_spark.operators.jpeg import (
         decode_jpeg_ex,
         encode_jpeg12_progressive,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run(batches):
-        import math
+    blocks = [(0, 0), (8, 0), (0, 8), (8, 8)]
 
-        import pandas as pd
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        ln = len(codes)
+        px = [0] * 256
+        for b, (ox, oy) in enumerate(blocks):
+            v = 32 * codes[b % ln] if ln else 2048
+            for yy in range(8):
+                base = (oy + yy) * 16 + ox
+                px[base : base + 8] = [v] * 8
+        _w, _h, _ch, _mx, out = decode_jpeg_ex(
+            encode_jpeg12_progressive(16, 16, 1, px)
+        )
+        mean = math.floor(sum(out) / 256 * 10000.0 + 0.5) / 10000.0
+        yield (doc_id, mean, max(out))
 
-        blocks = [(0, 0), (8, 0), (0, 8), (8, 8)]
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                ln = len(codes)
-                px = [0] * 256
-                for b, (ox, oy) in enumerate(blocks):
-                    v = 32 * codes[b % ln] if ln else 2048
-                    for yy in range(8):
-                        base = (oy + yy) * 16 + ox
-                        px[base : base + 8] = [v] * 8
-                _w, _h, _ch, _mx, out = decode_jpeg_ex(
-                    encode_jpeg12_progressive(16, 16, 1, px)
-                )
-                mean = math.floor(sum(out) / 256 * 10000.0 + 0.5) / 10000.0
-                rows.append((doc_id, mean, max(out)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "mean_val", "max_val"]
-            )
-
-    return docs.mapInPandas(
-        run, "doc_id long, mean_val double, max_val int"
+    return python_rows(
+        docs, rows_of, "doc_id long, mean_val double, max_val int"
     ).transform(sort_after_python, "doc_id")
 
 
@@ -5904,53 +5640,36 @@ def q_jpeg12s_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     subsampled geometry, or the 2048-centered color convert breaks the
     hash. The mean over the 768 RGB samples equals the mean over the 4
     block values because all three channels carry v."""
-    import pandas as pd  # noqa: F401
+    import math
 
     from mongo_analyser_spark.operators.jpeg import (
         decode_jpeg_ex,
         encode_jpeg12,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run(batches):
-        import math
+    blocks = [(0, 0), (8, 0), (0, 8), (8, 8)]
 
-        import pandas as pd
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        ln = len(codes)
+        px = [0] * (256 * 3)
+        for b, (ox, oy) in enumerate(blocks):
+            v = 32 * codes[b % ln] if ln else 2048
+            for yy in range(8):
+                base = ((oy + yy) * 16 + ox) * 3
+                px[base : base + 24] = [v] * 24
+        _w, _h, _ch, _mx, out = decode_jpeg_ex(
+            encode_jpeg12(16, 16, 3, px, subsample=True)
+        )
+        mean = (
+            math.floor(sum(out) / len(out) * 10000.0 + 0.5) / 10000.0
+        )
+        yield (doc_id, mean, max(out))
 
-        blocks = [(0, 0), (8, 0), (0, 8), (8, 8)]
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                ln = len(codes)
-                px = [0] * (256 * 3)
-                for b, (ox, oy) in enumerate(blocks):
-                    v = 32 * codes[b % ln] if ln else 2048
-                    for yy in range(8):
-                        base = ((oy + yy) * 16 + ox) * 3
-                        px[base : base + 24] = [v] * 24
-                _w, _h, _ch, _mx, out = decode_jpeg_ex(
-                    encode_jpeg12(16, 16, 3, px, subsample=True)
-                )
-                mean = (
-                    math.floor(sum(out) / len(out) * 10000.0 + 0.5) / 10000.0
-                )
-                rows.append((doc_id, mean, max(out)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "mean_val", "max_val"]
-            )
-
-    return docs.mapInPandas(
-        run, "doc_id long, mean_val double, max_val int"
+    return python_rows(
+        docs, rows_of, "doc_id long, mean_val double, max_val int"
     ).transform(sort_after_python, "doc_id")
 
 
@@ -5985,57 +5704,40 @@ def q_tiff_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     states the stats straight from the law; any bit lost in the IFD
     walk, either LZW early-change boundary, a PackBits run, or the
     predictor accumulation breaks the hash."""
-    import pandas as pd  # noqa: F401
+    import math
 
     from mongo_analyser_spark.operators.pixels import decode_pixels
     from mongo_analyser_spark.operators.tiff import encode_tiff
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run(batches):
-        import math
+    comps = ["none", "packbits", "lzw"]
 
-        import pandas as pd
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        ln = len(codes)
+        a = codes[0] if ln else 128
+        px = bytes(
+            (a + 3 * x + 5 * y) % 256
+            for y in range(16)
+            for x in range(16)
+        )
+        comp = comps[ln % 3]
+        payload = encode_tiff(
+            16, 16, 1, px,
+            compression=comp,
+            byte_order="II" if ln % 2 == 0 else "MM",
+            predictor=(comp == "lzw"),
+            rows_per_strip=4,
+        )
+        _w, _h, _ch, out = decode_pixels(payload)
+        mean = (
+            math.floor(sum(out) / 256 * 10000.0 + 0.5) / 10000.0
+        )
+        yield (doc_id, mean, max(out))
 
-        comps = ["none", "packbits", "lzw"]
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                ln = len(codes)
-                a = codes[0] if ln else 128
-                px = bytes(
-                    (a + 3 * x + 5 * y) % 256
-                    for y in range(16)
-                    for x in range(16)
-                )
-                comp = comps[ln % 3]
-                payload = encode_tiff(
-                    16, 16, 1, px,
-                    compression=comp,
-                    byte_order="II" if ln % 2 == 0 else "MM",
-                    predictor=(comp == "lzw"),
-                    rows_per_strip=4,
-                )
-                _w, _h, _ch, out = decode_pixels(payload)
-                mean = (
-                    math.floor(sum(out) / 256 * 10000.0 + 0.5) / 10000.0
-                )
-                rows.append((doc_id, mean, max(out)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "mean_val", "max_val"]
-            )
-
-    return docs.mapInPandas(
-        run, "doc_id long, mean_val double, max_val int"
+    return python_rows(
+        docs, rows_of, "doc_id long, mean_val double, max_val int"
     ).transform(sort_after_python, "doc_id")
 
 
@@ -6072,46 +5774,31 @@ def q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     line 'x&y<z', then the whitespace-collapsed body. Script/style
     leakage, a missed entity, broken block-newline structure, or a
     whitespace-policy drift all break the hash."""
-    import pandas as pd  # noqa: F401
+    import html as _html
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
+    from mongo_analyser_spark.operators.textextract import (
+        html_text_features,
     )
 
-    def run(batches):
-        import html as _html
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-        import pandas as pd
-
-        from mongo_analyser_spark.operators.textextract import (
-            html_text_features,
+    def rows_of(doc_id, text):
+        body = _html.escape(text or "")
+        page = (
+            f"<html><head><title>D{doc_id}</title>"
+            "<style>p{color:red}</style></head><body>"
+            "<!-- not content -->"
+            "<h1>x&amp;y&lt;&#122;</h1>"
+            f"<p>{body.replace(' agg ', ' <b>agg</b> ')}</p>"
+            '<script>var t = "<p>not text</p>";</script>'
+            "</body></html>"
         )
+        f = html_text_features(page)
+        first = f["text"].split("\n", 1)[0] if f["text"] else ""
+        yield (doc_id, f["n_chars"], f["n_lines"], first)
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                body = _html.escape(text or "")
-                page = (
-                    f"<html><head><title>D{doc_id}</title>"
-                    "<style>p{color:red}</style></head><body>"
-                    "<!-- not content -->"
-                    "<h1>x&amp;y&lt;&#122;</h1>"
-                    f"<p>{body.replace(' agg ', ' <b>agg</b> ')}</p>"
-                    '<script>var t = "<p>not text</p>";</script>'
-                    "</body></html>"
-                )
-                f = html_text_features(page)
-                first = f["text"].split("\n", 1)[0] if f["text"] else ""
-                rows.append((doc_id, f["n_chars"], f["n_lines"], first))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_chars", "n_lines", "first_line"],
-            )
-
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, n_chars int, n_lines int, first_line string",
     ).transform(sort_after_python, "doc_id")
 
@@ -6146,75 +5833,55 @@ def q_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, status, and extracted text straight from the source — a
     framing drift in any of the three stages (gzip member walk, WARC
     header grammar, HTTP head split, markup strip) breaks the hash."""
-    import pandas as pd  # noqa: F401
+    import html as _html
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
+    from mongo_analyser_spark.operators.textextract import (
+        extract_text_html,
+    )
+    from mongo_analyser_spark.sources.warc import (
+        build_warc,
+        build_warc_record,
+        http_response_payload,
+        parse_warc,
+        split_http_payload,
     )
 
-    def run(batches):
-        import html as _html
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-        import pandas as pd
-
-        from mongo_analyser_spark.operators.textextract import (
-            extract_text_html,
+    def rows_of(doc_id, text):
+        page = (
+            f"<html><head><title>W{doc_id}</title></head>"
+            f"<body><p>{_html.escape(text or '')}</p>"
+            "</body></html>"
+        ).encode()
+        rid = f"{int(doc_id):032x}"
+        payload = build_warc(
+            [
+                build_warc_record(
+                    "warcinfo", b"software: spark\r\n", rid,
+                    content_type="application/warc-fields",
+                ),
+                build_warc_record(
+                    "response", http_response_payload(page), rid,
+                    target_uri=f"http://corpus.local/{doc_id}",
+                    content_type=(
+                        "application/http;msgtype=response"
+                    ),
+                ),
+            ],
+            gzip_members=True,
         )
-        from mongo_analyser_spark.sources.warc import (
-            build_warc,
-            build_warc_record,
-            http_response_payload,
-            parse_warc,
-            split_http_payload,
+        recs = list(parse_warc(payload))
+        resp = next(
+            r for r in recs if r["warc-type"] == "response"
         )
+        status, _hdrs, body = split_http_payload(resp["content"])
+        txt = extract_text_html(body.decode())
+        first = txt.split("\n", 1)[0] if txt else ""
+        yield (doc_id, len(recs), status, len(txt), first)
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                page = (
-                    f"<html><head><title>W{doc_id}</title></head>"
-                    f"<body><p>{_html.escape(text or '')}</p>"
-                    "</body></html>"
-                ).encode()
-                rid = f"{int(doc_id):032x}"
-                payload = build_warc(
-                    [
-                        build_warc_record(
-                            "warcinfo", b"software: spark\r\n", rid,
-                            content_type="application/warc-fields",
-                        ),
-                        build_warc_record(
-                            "response", http_response_payload(page), rid,
-                            target_uri=f"http://corpus.local/{doc_id}",
-                            content_type=(
-                                "application/http;msgtype=response"
-                            ),
-                        ),
-                    ],
-                    gzip_members=True,
-                )
-                recs = list(parse_warc(payload))
-                resp = next(
-                    r for r in recs if r["warc-type"] == "response"
-                )
-                status, _hdrs, body = split_http_payload(resp["content"])
-                txt = extract_text_html(body.decode())
-                first = txt.split("\n", 1)[0] if txt else ""
-                rows.append(
-                    (doc_id, len(recs), status, len(txt), first)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_records", "http_status", "n_chars",
-                    "first_line",
-                ],
-            )
-
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, n_records int, http_status int, n_chars int, "
         "first_line string",
     ).transform(sort_after_python, "doc_id")
@@ -6261,50 +5928,29 @@ def q_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolution, unreserved percent-decode with hex uppercasing,
     tracking-param drop, and credential stripping each have a dedicated
     variant that breaks the hash if the step drifts."""
-    import pandas as pd  # noqa: F401
+    from mongo_analyser_spark.operators.urltools import url_features
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run(batches):
-        import pandas as pd
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        ln = len(codes)
+        t = str(codes[0]) if ln else "0"
+        v = ln % 6
+        url = [
+            f"HTTP://Example.COM:80/a/b/../c{t}?x=1#frag",
+            f"https://EXAMPLE.com:443/./p{t}/",
+            "http://example.com",
+            f"http://example.com/%41{t}%2f?q=%7e",
+            f"http://example.com/a//b{t}?utm_source=x&y=2"
+            "&fbclid=z",
+            f"http://User:Pw@example.com/p{t}",
+        ][v]
+        f = url_features(url, drop_tracking=True)
+        yield (doc_id, f["canonical"], f["host"], f["path_depth"])
 
-        from mongo_analyser_spark.operators.urltools import url_features
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                ln = len(codes)
-                t = str(codes[0]) if ln else "0"
-                v = ln % 6
-                url = [
-                    f"HTTP://Example.COM:80/a/b/../c{t}?x=1#frag",
-                    f"https://EXAMPLE.com:443/./p{t}/",
-                    "http://example.com",
-                    f"http://example.com/%41{t}%2f?q=%7e",
-                    f"http://example.com/a//b{t}?utm_source=x&y=2"
-                    "&fbclid=z",
-                    f"http://User:Pw@example.com/p{t}",
-                ][v]
-                f = url_features(url, drop_tracking=True)
-                rows.append(
-                    (doc_id, f["canonical"], f["host"], f["path_depth"])
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "canonical", "host", "path_depth"],
-            )
-
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, canonical string, host string, path_depth int",
     ).transform(sort_after_python, "doc_id")
 
@@ -6352,63 +5998,39 @@ def q_au_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash."""
     import math
 
-    import pandas as pd  # noqa: F401
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
+    from mongo_analyser_spark.operators.audio import (
+        decode_au,
+        encode_au,
+        mulaw_expand,
     )
 
-    def run(batches):
-        import pandas as pd
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-        from mongo_analyser_spark.operators.audio import (
-            decode_au,
-            encode_au,
-            mulaw_expand,
+    def q4(x):
+        return math.floor(x * 10000.0 + 0.5) / 10000.0
+
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        lin = [mulaw_expand(c) for c in codes]
+        rate, out = decode_au(
+            encode_au(8000, [lin], encoding=1,
+                      annotation=b"corpus")
+        )
+        smp = [int(round(v * 32768.0)) for v in out[0]]
+        n = len(smp)
+        sum_sq = sum(v * v for v in smp)
+        peak = max((abs(v) for v in smp), default=0)
+        zc = sum(
+            1 for i in range(1, n) if smp[i - 1] * smp[i] < 0
+        )
+        yield (
+            doc_id, rate, n, q4(n / 8000.0),
+            q4(math.sqrt(sum_sq / n)) if n else 0.0,
+            peak, zc,
         )
 
-        def q4(x):
-            return math.floor(x * 10000.0 + 0.5) / 10000.0
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                lin = [mulaw_expand(c) for c in codes]
-                rate, out = decode_au(
-                    encode_au(8000, [lin], encoding=1,
-                              annotation=b"corpus")
-                )
-                smp = [int(round(v * 32768.0)) for v in out[0]]
-                n = len(smp)
-                sum_sq = sum(v * v for v in smp)
-                peak = max((abs(v) for v in smp), default=0)
-                zc = sum(
-                    1 for i in range(1, n) if smp[i - 1] * smp[i] < 0
-                )
-                rows.append(
-                    (
-                        doc_id, rate, n, q4(n / 8000.0),
-                        q4(math.sqrt(sum_sq / n)) if n else 0.0,
-                        peak, zc,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_samples", "duration_s",
-                    "rms", "peak", "zero_crossings",
-                ],
-            )
-
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, sample_rate int, n_samples int, duration_s double, "
         "rms double, peak int, zero_crossings int",
     ).transform(sort_after_python, "doc_id")
@@ -6447,78 +6069,57 @@ def q_media_header_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     mime/width/height/n_frames the oracle states. This pins the
     DISPATCH (magic recognition across every new format) as a
     first-class contract, not just the per-format decoders."""
-    import pandas as pd  # noqa: F401
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
+    from mongo_analyser_spark.operators.frames import encode_y4m
+    from mongo_analyser_spark.operators.multimodal import (
+        parse_image_header,
+        parse_video_header,
     )
+    from mongo_analyser_spark.operators.pixels import (
+        encode_ico,
+        encode_png,
+        encode_pnm,
+    )
+    from mongo_analyser_spark.operators.tiff import encode_tiff
 
-    def run(batches):
-        import pandas as pd
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-        from mongo_analyser_spark.operators.frames import encode_y4m
-        from mongo_analyser_spark.operators.multimodal import (
-            parse_image_header,
-            parse_video_header,
-        )
-        from mongo_analyser_spark.operators.pixels import (
-            encode_ico,
-            encode_png,
-            encode_pnm,
-        )
-        from mongo_analyser_spark.operators.tiff import encode_tiff
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        a0 = codes[0] if codes else 0
+        v = len(codes) % 6
+        w, h = 1 + a0 % 32, 1 + a0 % 24
+        blank = bytes(w * h)
+        payload = [
+            lambda: encode_tiff(w, h, 1, blank),
+            lambda: encode_pnm(w, h, 1, blank),
+            lambda: encode_ico(
+                [
+                    encode_png(8, 8, 1, bytes(64)),
+                    encode_png(16, 16, 1, bytes(256)),
                 ]
-                a0 = codes[0] if codes else 0
-                v = len(codes) % 6
-                w, h = 1 + a0 % 32, 1 + a0 % 24
-                blank = bytes(w * h)
-                payload = [
-                    lambda: encode_tiff(w, h, 1, blank),
-                    lambda: encode_pnm(w, h, 1, blank),
-                    lambda: encode_ico(
-                        [
-                            encode_png(8, 8, 1, bytes(64)),
-                            encode_png(16, 16, 1, bytes(256)),
-                        ]
-                    ),
-                    lambda: (
-                        f'<svg xmlns="http://www.w3.org/2000/svg" '
-                        f'width="{w}" height="{h}"></svg>'
-                    ).encode(),
-                    lambda: encode_y4m(w, h, [blank] * 3),
-                    lambda: encode_png(w, h, 1, blank),
-                ][v]()
-                hdr = (
-                    parse_video_header(payload)
-                    if v == 4
-                    else parse_image_header(payload)
-                )
-                rows.append(
-                    (
-                        doc_id,
-                        hdr["mime"],
-                        hdr["width"],
-                        hdr["height"],
-                        hdr["n_frames"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "mime", "width", "height", "n_frames"],
-            )
+            ),
+            lambda: (
+                f'<svg xmlns="http://www.w3.org/2000/svg" '
+                f'width="{w}" height="{h}"></svg>'
+            ).encode(),
+            lambda: encode_y4m(w, h, [blank] * 3),
+            lambda: encode_png(w, h, 1, blank),
+        ][v]()
+        hdr = (
+            parse_video_header(payload)
+            if v == 4
+            else parse_image_header(payload)
+        )
+        yield (
+            doc_id,
+            hdr["mime"],
+            hdr["width"],
+            hdr["height"],
+            hdr["n_frames"],
+        )
 
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, mime string, width int, height int, n_frames int",
     ).transform(sort_after_python, "doc_id")
 
@@ -6550,59 +6151,40 @@ def q_ico_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     convention) and decode it exactly — the SAME gradient oracle as
     the TIFF and netpbm rows, with the member count proving the
     directory walk."""
-    import pandas as pd  # noqa: F401
+    import math
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
+    from mongo_analyser_spark.operators.pixels import (
+        decode_ico,
+        encode_ico,
+        encode_png,
     )
 
-    def run(batches):
-        import math
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-        import pandas as pd
-
-        from mongo_analyser_spark.operators.pixels import (
-            decode_ico,
-            encode_ico,
-            encode_png,
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        ln = len(codes)
+        a = codes[0] if ln else 128
+        gray = bytes(
+            (a + 3 * x + 5 * y) % 256
+            for y in range(16)
+            for x in range(16)
         )
+        ico = encode_ico(
+            [
+                encode_png(8, 8, 1, bytes(64)),
+                encode_png(16, 16, 1, gray),
+            ]
+        )
+        count, best, imgs = decode_ico(ico)
+        _w, _h, _c, out = imgs[best]
+        mean = (
+            math.floor(sum(out) / 256 * 10000.0 + 0.5) / 10000.0
+        )
+        yield (doc_id, count, mean, max(out))
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                ln = len(codes)
-                a = codes[0] if ln else 128
-                gray = bytes(
-                    (a + 3 * x + 5 * y) % 256
-                    for y in range(16)
-                    for x in range(16)
-                )
-                ico = encode_ico(
-                    [
-                        encode_png(8, 8, 1, bytes(64)),
-                        encode_png(16, 16, 1, gray),
-                    ]
-                )
-                count, best, imgs = decode_ico(ico)
-                _w, _h, _c, out = imgs[best]
-                mean = (
-                    math.floor(sum(out) / 256 * 10000.0 + 0.5) / 10000.0
-                )
-                rows.append((doc_id, count, mean, max(out)))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_members", "mean_val", "max_val"],
-            )
-
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, n_members int, mean_val double, max_val int",
     ).transform(sort_after_python, "doc_id")
 
@@ -6655,71 +6237,46 @@ def q_aiff_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (c-64)/128, so every feature stays order-free exact. A bit lost in
     the COMM extended-float parse, the big-endian frame de-interleave,
     or the SSND offset handling breaks the hash."""
-    import pandas as pd  # noqa: F401
+    import math
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
+    from mongo_analyser_spark.operators.audio import (
+        decode_aiff,
+        encode_aiff,
     )
 
-    def run(batches):
-        import math
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-        import pandas as pd
+    def q4(x):
+        return math.floor(x * 10000.0 + 0.5) / 10000.0
 
-        from mongo_analyser_spark.operators.audio import (
-            decode_aiff,
-            encode_aiff,
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        fl = len(codes) // 2
+        ch0 = [(codes[2 * i] - 64) * 256 for i in range(fl)]
+        ch1 = [(codes[2 * i + 1] - 64) * 256 for i in range(fl)]
+        _rate, out = decode_aiff(
+            encode_aiff(8000, [ch0, ch1])
         )
-
-        def q4(x):
-            return math.floor(x * 10000.0 + 0.5) / 10000.0
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                fl = len(codes) // 2
-                ch0 = [(codes[2 * i] - 64) * 256 for i in range(fl)]
-                ch1 = [(codes[2 * i + 1] - 64) * 256 for i in range(fl)]
-                _rate, out = decode_aiff(
-                    encode_aiff(8000, [ch0, ch1])
-                )
-                for channel, smp in enumerate(out):
-                    n = len(smp)
-                    if n == 0:
-                        rows.append((doc_id, channel, 0, 0.0, 0.0,
-                                     0.0, 0))
-                        continue
-                    sv = sum(smp)
-                    sq = sum(v * v for v in smp)
-                    pk = max(abs(v) for v in smp)
-                    zc = sum(
-                        1
-                        for i in range(1, n)
-                        if smp[i - 1] * smp[i] < 0
-                    )
-                    rows.append(
-                        (
-                            doc_id, channel, n, q4(sv / n),
-                            q4(math.sqrt(sq / n)), q4(pk), zc,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "channel", "n_samples", "mean", "rms",
-                    "peak", "zero_crossings",
-                ],
+        for channel, smp in enumerate(out):
+            n = len(smp)
+            if n == 0:
+                yield (doc_id, channel, 0, 0.0, 0.0, 0.0, 0)
+                continue
+            sv = sum(smp)
+            sq = sum(v * v for v in smp)
+            pk = max(abs(v) for v in smp)
+            zc = sum(
+                1
+                for i in range(1, n)
+                if smp[i - 1] * smp[i] < 0
+            )
+            yield (
+                doc_id, channel, n, q4(sv / n),
+                q4(math.sqrt(sq / n)), q4(pk), zc,
             )
 
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, channel int, n_samples int, mean double, "
         "rms double, peak double, zero_crossings int",
     ).transform(sort_after_python, "doc_id", "channel")
@@ -6754,66 +6311,42 @@ def q_id3_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     trailer by L mod 3, around a fake MPEG payload; the production
     parser must read identical fields back from all three containers
     — the oracle states them once."""
-    import pandas as pd  # noqa: F401
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
+    from mongo_analyser_spark.operators.audio import (
+        encode_id3v1,
+        encode_id3v2,
+        parse_id3,
     )
 
-    def run(batches):
-        import pandas as pd
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-        from mongo_analyser_spark.operators.audio import (
-            encode_id3v1,
-            encode_id3v2,
-            parse_id3,
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        a0 = codes[0] if codes else 0
+        v = len(codes) % 3
+        fields = {
+            "title": f"T{a0}",
+            "artist": f"A{a0}",
+            "album": "corpus",
+            "year": str(1990 + a0 % 40),
+            "track": str(1 + a0 % 20),
+        }
+        payload = [
+            lambda: encode_id3v2(fields, 4, b"\xff\xfbxx"),
+            lambda: encode_id3v2(fields, 3, b"\xff\xfbxx"),
+            lambda: encode_id3v1(fields, b"\xff\xfbxx"),
+        ][v]()
+        tag = parse_id3(payload)
+        yield (
+            doc_id,
+            tag["version"],
+            tag["title"],
+            tag["artist"],
+            tag["year"],
+            tag["track"],
         )
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                a0 = codes[0] if codes else 0
-                v = len(codes) % 3
-                fields = {
-                    "title": f"T{a0}",
-                    "artist": f"A{a0}",
-                    "album": "corpus",
-                    "year": str(1990 + a0 % 40),
-                    "track": str(1 + a0 % 20),
-                }
-                payload = [
-                    lambda: encode_id3v2(fields, 4, b"\xff\xfbxx"),
-                    lambda: encode_id3v2(fields, 3, b"\xff\xfbxx"),
-                    lambda: encode_id3v1(fields, b"\xff\xfbxx"),
-                ][v]()
-                tag = parse_id3(payload)
-                rows.append(
-                    (
-                        doc_id,
-                        tag["version"],
-                        tag["title"],
-                        tag["artist"],
-                        tag["year"],
-                        tag["track"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "version", "title", "artist", "year",
-                    "track",
-                ],
-            )
-
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, version string, title string, artist string, "
         "year string, track string",
     ).transform(sort_after_python, "doc_id")
@@ -6848,69 +6381,46 @@ def q_exif_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     (byte order alternating II/MM per doc), and strip_exif must remove
     the segment while leaving the image decodable — the oracle states
     the fields and the after-strip absence."""
-    import pandas as pd  # noqa: F401
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
+    from mongo_analyser_spark.operators.jpeg import encode_jpeg
+    from mongo_analyser_spark.operators.tiff import (
+        encode_exif_app1,
+        insert_exif,
+        parse_exif,
+        strip_exif,
     )
 
-    def run(batches):
-        import pandas as pd
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-        from mongo_analyser_spark.operators.jpeg import encode_jpeg
-        from mongo_analyser_spark.operators.tiff import (
-            encode_exif_app1,
-            insert_exif,
-            parse_exif,
-            strip_exif,
+    base = encode_jpeg(8, 8, 1, bytes([128]) * 64)
+
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        a0 = codes[0] if codes else 0
+        j = insert_exif(
+            base,
+            encode_exif_app1(
+                make=f"Cam-{a0}",
+                model="X",
+                orientation=1 + a0 % 8,
+                datetime="2026:08:16 00:00:00",
+                exposure=(1, 2 + a0 % 500),
+                iso=100 + a0,
+                byte_order="II" if a0 % 2 == 0 else "MM",
+            ),
+        )
+        ex = parse_exif(j)
+        stripped = parse_exif(strip_exif(j))
+        yield (
+            doc_id,
+            ex["make"],
+            ex["orientation"],
+            ex["iso"],
+            ex["exposure"][1],
+            stripped is not None,
         )
 
-        base = encode_jpeg(8, 8, 1, bytes([128]) * 64)
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                a0 = codes[0] if codes else 0
-                j = insert_exif(
-                    base,
-                    encode_exif_app1(
-                        make=f"Cam-{a0}",
-                        model="X",
-                        orientation=1 + a0 % 8,
-                        datetime="2026:08:16 00:00:00",
-                        exposure=(1, 2 + a0 % 500),
-                        iso=100 + a0,
-                        byte_order="II" if a0 % 2 == 0 else "MM",
-                    ),
-                )
-                ex = parse_exif(j)
-                stripped = parse_exif(strip_exif(j))
-                rows.append(
-                    (
-                        doc_id,
-                        ex["make"],
-                        ex["orientation"],
-                        ex["iso"],
-                        ex["exposure"][1],
-                        stripped is not None,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "make", "orientation", "iso",
-                    "exposure_den", "exif_after_strip",
-                ],
-            )
-
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, make string, orientation int, iso int, "
         "exposure_den int, exif_after_strip boolean",
     ).transform(sort_after_python, "doc_id")
@@ -6951,79 +6461,55 @@ def q_webdataset_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode_pixels — tar framing, sample assembly, and the image decode
     all sit under one oracle that states sample/file counts, the label,
     the text length, and the pixel mean straight from the source."""
-    import pandas as pd  # noqa: F401
+    import math
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
+    from mongo_analyser_spark.operators.pixels import (
+        decode_pixels,
+        encode_pnm,
+    )
+    from mongo_analyser_spark.sources.webdataset import (
+        build_webdataset,
+        iter_tar_samples,
     )
 
-    def run(batches):
-        import math
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-        import pandas as pd
-
-        from mongo_analyser_spark.operators.pixels import (
-            decode_pixels,
-            encode_pnm,
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        ln = len(codes)
+        a0 = codes[0] if ln else 0
+        n = 1 + ln % 3
+        gray = bytes((a0 + 7 * i) % 256 for i in range(16))
+        shard = build_webdataset(
+            [
+                {
+                    "__key__": f"d{doc_id}-{j}",
+                    "txt": (text or "").encode(),
+                    "cls": str(a0).encode(),
+                    "ppm": encode_pnm(4, 4, 1, gray),
+                }
+                for j in range(n)
+            ],
+            gzip_shard=True,
         )
-        from mongo_analyser_spark.sources.webdataset import (
-            build_webdataset,
-            iter_tar_samples,
+        samples = list(iter_tar_samples(shard))
+        n_files = sum(len(s) - 1 for s in samples)
+        first = samples[0]
+        _w, _h, _c, out = decode_pixels(first["ppm"])
+        mean = (
+            math.floor(sum(out) / 16 * 10000.0 + 0.5) / 10000.0
+        )
+        yield (
+            doc_id,
+            len(samples),
+            n_files,
+            first["cls"].decode(),
+            len(first["txt"]),
+            mean,
         )
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                ln = len(codes)
-                a0 = codes[0] if ln else 0
-                n = 1 + ln % 3
-                gray = bytes((a0 + 7 * i) % 256 for i in range(16))
-                shard = build_webdataset(
-                    [
-                        {
-                            "__key__": f"d{doc_id}-{j}",
-                            "txt": (text or "").encode(),
-                            "cls": str(a0).encode(),
-                            "ppm": encode_pnm(4, 4, 1, gray),
-                        }
-                        for j in range(n)
-                    ],
-                    gzip_shard=True,
-                )
-                samples = list(iter_tar_samples(shard))
-                n_files = sum(len(s) - 1 for s in samples)
-                first = samples[0]
-                _w, _h, _c, out = decode_pixels(first["ppm"])
-                mean = (
-                    math.floor(sum(out) / 16 * 10000.0 + 0.5) / 10000.0
-                )
-                rows.append(
-                    (
-                        doc_id,
-                        len(samples),
-                        n_files,
-                        first["cls"].decode(),
-                        len(first["txt"]),
-                        mean,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_samples", "n_files", "cls0",
-                    "txt_len", "ppm_mean",
-                ],
-            )
-
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, n_samples int, n_files int, cls0 string, "
         "txt_len int, ppm_mean double",
     ).transform(sort_after_python, "doc_id")
@@ -7057,59 +6543,41 @@ def q_pnm_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     may be '#' (must not be eaten as a comment) and ASCII bodies with
     a comment line both decode through the production decode_pixels
     dispatch. Lossless, so the oracle states stats from the law."""
-    import pandas as pd  # noqa: F401
+    import math
 
     from mongo_analyser_spark.operators.pixels import (
         decode_pixels,
         encode_pnm,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run(batches):
-        import math
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        ln = len(codes)
+        a = codes[0] if ln else 128
+        gray = bytes(
+            (a + 3 * x + 5 * y) % 256
+            for y in range(16)
+            for x in range(16)
+        )
+        ascii_form, ch = [
+            (False, 1), (True, 1), (False, 3), (True, 3),
+        ][ln % 4]
+        px = (
+            gray if ch == 1
+            else bytes(v for v in gray for _ in range(3))
+        )
+        payload = encode_pnm(16, 16, ch, px, ascii_form)
+        _w, _h, _c, out = decode_pixels(payload)
+        n = len(out)
+        mean = (
+            math.floor(sum(out) / n * 10000.0 + 0.5) / 10000.0
+        )
+        yield (doc_id, mean, max(out))
 
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                ln = len(codes)
-                a = codes[0] if ln else 128
-                gray = bytes(
-                    (a + 3 * x + 5 * y) % 256
-                    for y in range(16)
-                    for x in range(16)
-                )
-                ascii_form, ch = [
-                    (False, 1), (True, 1), (False, 3), (True, 3),
-                ][ln % 4]
-                px = (
-                    gray if ch == 1
-                    else bytes(v for v in gray for _ in range(3))
-                )
-                payload = encode_pnm(16, 16, ch, px, ascii_form)
-                _w, _h, _c, out = decode_pixels(payload)
-                n = len(out)
-                mean = (
-                    math.floor(sum(out) / n * 10000.0 + 0.5) / 10000.0
-                )
-                rows.append((doc_id, mean, max(out)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "mean_val", "max_val"]
-            )
-
-    return docs.mapInPandas(
-        run, "doc_id long, mean_val double, max_val int"
+    return python_rows(
+        docs, rows_of, "doc_id long, mean_val double, max_val int"
     ).transform(sort_after_python, "doc_id")
 
 
@@ -7164,103 +6632,80 @@ def q_web_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     Five components compose and the oracle states every output column
     from the source — a drift in ANY stage breaks the hash. This is
     the corpus_build_documents pattern applied to crawl input."""
-    import pandas as pd  # noqa: F401
+    import html as _html
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
+    from mongo_analyser_spark.operators.textextract import (
+        decode_html_bytes,
+        extract_text_html,
+    )
+    from mongo_analyser_spark.operators.urltools import url_features
+    from mongo_analyser_spark.sources.warc import (
+        build_warc,
+        build_warc_record,
+        http_response_payload,
+        parse_warc,
+        split_http_payload,
     )
 
-    def run(batches):
-        import html as _html
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-        import pandas as pd
-
-        from mongo_analyser_spark.operators.textextract import (
-            decode_html_bytes,
-            extract_text_html,
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        ln = len(codes)
+        t = str(codes[0]) if ln else "0"
+        vu, vc = ln % 6, ln % 5
+        messy = [
+            f"HTTP://Example.COM:80/a/b/../c{t}?x=1#frag",
+            f"https://EXAMPLE.com:443/./p{t}/",
+            "http://example.com",
+            f"http://example.com/%41{t}%2f?q=%7e",
+            f"http://example.com/a//b{t}?utm_source=x&y=2"
+            "&fbclid=z",
+            f"http://User:Pw@example.com/p{t}",
+        ][vu]
+        meta = '<meta charset="utf-8">' if vc == 3 else ""
+        page = (
+            f"<html><head><title>W{doc_id}</title>{meta}"
+            f"</head><body><p>{_html.escape(text or '')}</p>"
+            "</body></html>"
         )
-        from mongo_analyser_spark.operators.urltools import url_features
-        from mongo_analyser_spark.sources.warc import (
-            build_warc,
-            build_warc_record,
-            http_response_payload,
-            parse_warc,
-            split_http_payload,
+        enc_body, ct = [
+            (b"\xef\xbb\xbf" + page.encode("utf-8"),
+             "text/html"),
+            (b"\xff\xfe" + page.encode("utf-16-le"),
+             "text/html"),
+            (page.encode("latin-1"),
+             "text/html; charset=ISO-8859-1"),
+            (page.encode("utf-8"), "text/html"),
+            (page.encode("ascii"), "text/html"),
+        ][vc]
+        payload = build_warc(
+            [
+                build_warc_record(
+                    "response",
+                    http_response_payload(enc_body, ct),
+                    f"{int(doc_id):032x}",
+                    target_uri=messy,
+                    content_type=(
+                        "application/http;msgtype=response"
+                    ),
+                )
+            ],
+            gzip_members=True,
         )
+        rec = next(iter(parse_warc(payload)))
+        _status, hdrs, body = split_http_payload(rec["content"])
+        enc, txt_raw = decode_html_bytes(
+            body, hdrs.get("content-type")
+        )
+        txt = extract_text_html(txt_raw)
+        canon = url_features(
+            rec["warc-target-uri"], drop_tracking=True
+        )["canonical"]
+        yield (doc_id, canon, enc, len(txt), len(txt) >= 20)
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                ln = len(codes)
-                t = str(codes[0]) if ln else "0"
-                vu, vc = ln % 6, ln % 5
-                messy = [
-                    f"HTTP://Example.COM:80/a/b/../c{t}?x=1#frag",
-                    f"https://EXAMPLE.com:443/./p{t}/",
-                    "http://example.com",
-                    f"http://example.com/%41{t}%2f?q=%7e",
-                    f"http://example.com/a//b{t}?utm_source=x&y=2"
-                    "&fbclid=z",
-                    f"http://User:Pw@example.com/p{t}",
-                ][vu]
-                meta = '<meta charset="utf-8">' if vc == 3 else ""
-                page = (
-                    f"<html><head><title>W{doc_id}</title>{meta}"
-                    f"</head><body><p>{_html.escape(text or '')}</p>"
-                    "</body></html>"
-                )
-                enc_body, ct = [
-                    (b"\xef\xbb\xbf" + page.encode("utf-8"),
-                     "text/html"),
-                    (b"\xff\xfe" + page.encode("utf-16-le"),
-                     "text/html"),
-                    (page.encode("latin-1"),
-                     "text/html; charset=ISO-8859-1"),
-                    (page.encode("utf-8"), "text/html"),
-                    (page.encode("ascii"), "text/html"),
-                ][vc]
-                payload = build_warc(
-                    [
-                        build_warc_record(
-                            "response",
-                            http_response_payload(enc_body, ct),
-                            f"{int(doc_id):032x}",
-                            target_uri=messy,
-                            content_type=(
-                                "application/http;msgtype=response"
-                            ),
-                        )
-                    ],
-                    gzip_members=True,
-                )
-                rec = next(iter(parse_warc(payload)))
-                _status, hdrs, body = split_http_payload(rec["content"])
-                enc, txt_raw = decode_html_bytes(
-                    body, hdrs.get("content-type")
-                )
-                txt = extract_text_html(txt_raw)
-                canon = url_features(
-                    rec["warc-target-uri"], drop_tracking=True
-                )["canonical"]
-                rows.append(
-                    (doc_id, canon, enc, len(txt), len(txt) >= 20)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "canonical", "encoding", "n_chars", "keep",
-                ],
-            )
-
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, canonical string, encoding string, n_chars int, "
         "keep boolean",
     ).transform(sort_after_python, "doc_id")
@@ -7295,70 +6740,48 @@ def q_sitemap_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     production stdlib-ElementTree walk; the oracle states the URL
     count, the first loc, and the mean priority (= (n-1)/2/10 exactly
     under the law) straight from the codes."""
-    import pandas as pd  # noqa: F401
+    import gzip
+    import io
+    import math
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
-    )
+    from mongo_analyser_spark.operators.urltools import parse_sitemap
 
-    def run(batches):
-        import gzip
-        import io
-        import math
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-        import pandas as pd
-
-        from mongo_analyser_spark.operators.urltools import parse_sitemap
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                ln = len(codes)
-                t = str(codes[0]) if ln else "0"
-                n = 1 + ln % 5
-                body = (
-                    '<?xml version="1.0" encoding="UTF-8"?>'
-                    '<urlset xmlns='
-                    '"http://www.sitemaps.org/schemas/sitemap/0.9">'
-                    + "".join(
-                        f"<url><loc>http://example.com/p{t}-{j}</loc>"
-                        f"<priority>{j / 10:.1f}</priority></url>"
-                        for j in range(n)
-                    )
-                    + "</urlset>"
-                ).encode()
-                buf = io.BytesIO()
-                with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
-                    gz.write(body)
-                sm = parse_sitemap(buf.getvalue())
-                prios = [e["priority"] for e in sm["entries"]]
-                mean = (
-                    math.floor(sum(prios) / len(prios) * 10.0 + 0.5)
-                    / 10.0
-                )
-                rows.append(
-                    (
-                        doc_id,
-                        len(sm["entries"]),
-                        sm["entries"][0]["loc"],
-                        mean,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_urls", "first_loc",
-                         "mean_priority"],
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        ln = len(codes)
+        t = str(codes[0]) if ln else "0"
+        n = 1 + ln % 5
+        body = (
+            '<?xml version="1.0" encoding="UTF-8"?>'
+            '<urlset xmlns='
+            '"http://www.sitemaps.org/schemas/sitemap/0.9">'
+            + "".join(
+                f"<url><loc>http://example.com/p{t}-{j}</loc>"
+                f"<priority>{j / 10:.1f}</priority></url>"
+                for j in range(n)
             )
+            + "</urlset>"
+        ).encode()
+        buf = io.BytesIO()
+        with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
+            gz.write(body)
+        sm = parse_sitemap(buf.getvalue())
+        prios = [e["priority"] for e in sm["entries"]]
+        mean = (
+            math.floor(sum(prios) / len(prios) * 10.0 + 0.5)
+            / 10.0
+        )
+        yield (
+            doc_id,
+            len(sm["entries"]),
+            sm["entries"][0]["loc"],
+            mean,
+        )
 
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, n_urls int, first_loc string, "
         "mean_priority double",
     ).transform(sort_after_python, "doc_id")
@@ -7393,51 +6816,36 @@ def q_charset_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoding round-trips; the BOM must also be stripped or n_chars
     breaks). The oracle states label, certainty, and length per
     variant."""
-    import pandas as pd  # noqa: F401
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
+    from mongo_analyser_spark.operators.textextract import (
+        decode_html_bytes,
+        sniff_charset,
     )
 
-    def run(batches):
-        import pandas as pd
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-        from mongo_analyser_spark.operators.textextract import (
-            decode_html_bytes,
-            sniff_charset,
-        )
+    def rows_of(doc_id, text):
+        t = text or ""
+        v = len(t) % 5
+        meta = '<meta charset="utf-8">'
+        body, ct = [
+            (b"\xef\xbb\xbf" + t.encode("utf-8"), None),
+            (b"\xff\xfe" + t.encode("utf-16-le"), None),
+            (
+                t.encode("latin-1"),
+                "text/html; charset=ISO-8859-1",
+            ),
+            ((meta + t).encode("utf-8"), None),
+            (t.encode("ascii"), None),
+        ][v]
+        enc, certain = sniff_charset(body, ct)
+        _enc2, txt = decode_html_bytes(body, ct)
+        if v == 3:
+            txt = txt[len(meta):]  # strip the declaration tag
+        assert txt == t  # ASCII corpus: exact round trip
+        yield (doc_id, enc, certain, len(txt))
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                t = text or ""
-                v = len(t) % 5
-                meta = '<meta charset="utf-8">'
-                body, ct = [
-                    (b"\xef\xbb\xbf" + t.encode("utf-8"), None),
-                    (b"\xff\xfe" + t.encode("utf-16-le"), None),
-                    (
-                        t.encode("latin-1"),
-                        "text/html; charset=ISO-8859-1",
-                    ),
-                    ((meta + t).encode("utf-8"), None),
-                    (t.encode("ascii"), None),
-                ][v]
-                enc, certain = sniff_charset(body, ct)
-                _enc2, txt = decode_html_bytes(body, ct)
-                if v == 3:
-                    txt = txt[len(meta):]  # strip the declaration tag
-                assert txt == t  # ASCII corpus: exact round trip
-                rows.append((doc_id, enc, certain, len(txt)))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "encoding", "certain", "n_chars"],
-            )
-
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, encoding string, certain boolean, n_chars int",
     ).transform(sort_after_python, "doc_id")
 
@@ -7472,67 +6880,43 @@ def q_robots_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     code-parameterized Disallow plus a Sitemap line. The oracle states
     the allow flags, delay, and sitemap count per variant — a drift in
     group matching, rule order, or delay parsing breaks the hash."""
-    import pandas as pd  # noqa: F401
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
+    from mongo_analyser_spark.operators.urltools import (
+        robots_features,
     )
 
-    def run(batches):
-        import pandas as pd
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-        from mongo_analyser_spark.operators.urltools import (
-            robots_features,
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        ln = len(codes)
+        t = str(codes[0]) if ln else "0"
+        v = ln % 3
+        robots = [
+            "User-agent: *\nDisallow: /private/\n"
+            "Allow: /private/ok\nCrawl-delay: 2\n",
+            "User-agent: sparkbot\nDisallow: /\n\n"
+            "User-agent: *\nDisallow:\n",
+            f"User-agent: *\nDisallow: /pub{t}\n"
+            "Sitemap: http://example.com/sitemap.xml\n",
+        ][v]
+        f = robots_features(
+            robots,
+            "sparkbot",
+            [
+                "http://example.com/private/ok",
+                f"http://example.com/pub{t}",
+            ],
+        )
+        yield (
+            doc_id,
+            f["allowed"][0],
+            f["allowed"][1],
+            f["crawl_delay"],
+            f["n_sitemaps"],
         )
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                ln = len(codes)
-                t = str(codes[0]) if ln else "0"
-                v = ln % 3
-                robots = [
-                    "User-agent: *\nDisallow: /private/\n"
-                    "Allow: /private/ok\nCrawl-delay: 2\n",
-                    "User-agent: sparkbot\nDisallow: /\n\n"
-                    "User-agent: *\nDisallow:\n",
-                    f"User-agent: *\nDisallow: /pub{t}\n"
-                    "Sitemap: http://example.com/sitemap.xml\n",
-                ][v]
-                f = robots_features(
-                    robots,
-                    "sparkbot",
-                    [
-                        "http://example.com/private/ok",
-                        f"http://example.com/pub{t}",
-                    ],
-                )
-                rows.append(
-                    (
-                        doc_id,
-                        f["allowed"][0],
-                        f["allowed"][1],
-                        f["crawl_delay"],
-                        f["n_sitemaps"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "allowed_private", "allowed_pub",
-                    "crawl_delay", "n_sitemaps",
-                ],
-            )
-
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, allowed_private boolean, allowed_pub boolean, "
         "crawl_delay int, n_sitemaps int",
     ).transform(sort_after_python, "doc_id")
@@ -7571,46 +6955,27 @@ def q_y4m_frame_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixed frame size, replicates the 4:2:0 chroma and converts;
     the oracle states luma straight from the codes with the same k=4
     floor sampling law as the AVI/MP4 rows."""
-    import pandas as pd  # noqa: F401
-
     from mongo_analyser_spark.operators.frames import encode_y4m
     from mongo_analyser_spark.operators.multimodal import (
         sample_frame_pixel_rows,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run(batches):
-        import pandas as pd
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        ln = len(codes)
+        n = 1 + ln % 4
+        ys = [
+            bytes([2 * codes[j % ln] if ln else 128]) * 256
+            for j in range(n)
+        ]
+        payload = encode_y4m(16, 16, ys)
+        for nf, fi, luma in sample_frame_pixel_rows(payload, 4):
+            yield (doc_id, nf, fi, luma)
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                ln = len(codes)
-                n = 1 + ln % 4
-                ys = [
-                    bytes([2 * codes[j % ln] if ln else 128]) * 256
-                    for j in range(n)
-                ]
-                payload = encode_y4m(16, 16, ys)
-                for nf, fi, luma in sample_frame_pixel_rows(payload, 4):
-                    rows.append((doc_id, nf, fi, luma))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_frames", "frame_idx", "frame_luma"],
-            )
-
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, n_frames int, frame_idx int, frame_luma double",
     ).transform(sort_after_python, "doc_id", "frame_idx")
 
@@ -7656,53 +7021,35 @@ def q_mp4_jpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     states it as (Σ_b 2·codes[…])/4. A bit anywhere in the box walk,
     the sample-table reconstruction, either JPEG direction, or the
     sampling law breaks the hash."""
-    import pandas as pd  # noqa: F401
-
     from mongo_analyser_spark.operators.frames import encode_mp4_mjpeg
     from mongo_analyser_spark.operators.jpeg import encode_jpeg
     from mongo_analyser_spark.operators.multimodal import (
         sample_frame_pixel_rows,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run(batches):
-        import pandas as pd
+    blocks = [(0, 0), (8, 0), (0, 8), (8, 8)]
 
-        blocks = [(0, 0), (8, 0), (0, 8), (8, 8)]
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                ln = len(codes)
-                n = 1 + ln % 5
-                jpgs = []
-                for j in range(n):
-                    px = bytearray(256)
-                    for b, (ox, oy) in enumerate(blocks):
-                        v = 2 * codes[(4 * j + b) % ln] if ln else 128
-                        for yy in range(8):
-                            base = (oy + yy) * 16 + ox
-                            px[base : base + 8] = bytes([v]) * 8
-                    jpgs.append(encode_jpeg(16, 16, 1, bytes(px)))
-                payload = encode_mp4_mjpeg(16, 16, jpgs)
-                for nf, fi, luma in sample_frame_pixel_rows(payload, 4):
-                    rows.append((doc_id, nf, fi, luma))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_frames", "frame_idx", "frame_luma"],
-            )
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        ln = len(codes)
+        n = 1 + ln % 5
+        jpgs = []
+        for j in range(n):
+            px = bytearray(256)
+            for b, (ox, oy) in enumerate(blocks):
+                v = 2 * codes[(4 * j + b) % ln] if ln else 128
+                for yy in range(8):
+                    base = (oy + yy) * 16 + ox
+                    px[base : base + 8] = bytes([v]) * 8
+            jpgs.append(encode_jpeg(16, 16, 1, bytes(px)))
+        payload = encode_mp4_mjpeg(16, 16, jpgs)
+        for nf, fi, luma in sample_frame_pixel_rows(payload, 4):
+            yield (doc_id, nf, fi, luma)
 
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, n_frames int, frame_idx int, frame_luma double",
     ).transform(sort_after_python, "doc_id", "frame_idx")
 
@@ -7750,66 +7097,42 @@ def q_flac_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     per payload, no shuffle after the fanout."""
     import math
 
-    import pandas as pd  # noqa: F401
-
     from mongo_analyser_spark.operators.flac import decode_flac, encode_flac
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                smp = [(c - 64) * 256 for c in codes]
-                if smp:
-                    rate, out = decode_flac(
-                        encode_flac(8000, [smp], block_size=256)
-                    )
-                    s = out[0]
-                else:
-                    rate, s = 8000, []
-                n = len(s)
-                sum_sq = sum(v * v for v in s)
-                peak = max((abs(v) for v in s), default=0)
-                zc = sum(
-                    1 for i in range(1, n) if s[i - 1] * s[i] < 0
-                )
-                rows.append(
-                    (
-                        doc_id,
-                        rate,
-                        n,
-                        math.floor(n / 8000.0 * 10000.0 + 0.5) / 10000.0,
-                        math.floor(
-                            math.sqrt(sum_sq / n) * 10000.0 + 0.5
-                        ) / 10000.0
-                        if n
-                        else 0.0,
-                        peak,
-                        zc,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_samples", "duration_s",
-                    "rms", "peak", "zero_crossings",
-                ],
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        smp = [(c - 64) * 256 for c in codes]
+        if smp:
+            rate, out = decode_flac(
+                encode_flac(8000, [smp], block_size=256)
             )
+            s = out[0]
+        else:
+            rate, s = 8000, []
+        n = len(s)
+        sum_sq = sum(v * v for v in s)
+        peak = max((abs(v) for v in s), default=0)
+        zc = sum(
+            1 for i in range(1, n) if s[i - 1] * s[i] < 0
+        )
+        yield (
+            doc_id,
+            rate,
+            n,
+            math.floor(n / 8000.0 * 10000.0 + 0.5) / 10000.0,
+            math.floor(
+                math.sqrt(sum_sq / n) * 10000.0 + 0.5
+            ) / 10000.0
+            if n
+            else 0.0,
+            peak,
+            zc,
+        )
 
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, sample_rate int, n_samples int, duration_s double, "
         "rms double, peak int, zero_crossings int",
     ).transform(sort_after_python, "doc_id")
@@ -7860,68 +7183,44 @@ def q_g711_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     and 100-TB shape as the wav/flac audio rows."""
     import math
 
-    import pandas as pd  # noqa: F401
-
     from mongo_analyser_spark.operators.audio import (
         decode_wav_ex,
         encode_wav_g711,
         mulaw_expand,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                if codes:
-                    lin = [mulaw_expand(c) for c in codes]
-                    _rate, chans = decode_wav_ex(
-                        encode_wav_g711(8000, [lin], law="mulaw")
-                    )
-                    s = [int(v) for v in chans[0]]
-                else:
-                    s = []
-                n = len(s)
-                sum_sq = sum(v * v for v in s)
-                peak = max((abs(v) for v in s), default=0)
-                zc = sum(1 for i in range(1, n) if s[i - 1] * s[i] < 0)
-                rows.append(
-                    (
-                        doc_id,
-                        8000,
-                        n,
-                        math.floor(n / 8000.0 * 10000.0 + 0.5) / 10000.0,
-                        math.floor(
-                            math.sqrt(sum_sq / n) * 10000.0 + 0.5
-                        ) / 10000.0
-                        if n
-                        else 0.0,
-                        peak,
-                        zc,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_samples", "duration_s",
-                    "rms", "peak", "zero_crossings",
-                ],
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        if codes:
+            lin = [mulaw_expand(c) for c in codes]
+            _rate, chans = decode_wav_ex(
+                encode_wav_g711(8000, [lin], law="mulaw")
             )
+            s = [int(v) for v in chans[0]]
+        else:
+            s = []
+        n = len(s)
+        sum_sq = sum(v * v for v in s)
+        peak = max((abs(v) for v in s), default=0)
+        zc = sum(1 for i in range(1, n) if s[i - 1] * s[i] < 0)
+        yield (
+            doc_id,
+            8000,
+            n,
+            math.floor(n / 8000.0 * 10000.0 + 0.5) / 10000.0,
+            math.floor(
+                math.sqrt(sum_sq / n) * 10000.0 + 0.5
+            ) / 10000.0
+            if n
+            else 0.0,
+            peak,
+            zc,
+        )
 
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, sample_rate int, n_samples int, duration_s double, "
         "rms double, peak int, zero_crossings int",
     ).transform(sort_after_python, "doc_id")
@@ -7968,64 +7267,41 @@ def q_webp_lossless_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     fanout, one Arrow stage, fixed-width output."""
     import math
 
-    import pandas as pd  # noqa: F401
-
     from mongo_analyser_spark.operators.pixels import decode_pixels
     from mongo_analyser_spark.operators.vp8l import encode_webp_lossless
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run(batches):
-        import pandas as pd
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        ln = len(codes)
+        px = bytearray(16 * 4)
+        for i in range(16):
+            px[4 * i] = codes[i % ln] if ln else 128
+            px[4 * i + 1] = codes[(i + 1) % ln] if ln else 128
+            px[4 * i + 2] = codes[(i + 2) % ln] if ln else 128
+            px[4 * i + 3] = 255
+        w2, h2, ch2, out = decode_pixels(
+            encode_webp_lossless(8, 2, 4, bytes(px))
+        )
+        rs = sum(out[4 * i] for i in range(16))
+        gs = sum(out[4 * i + 1] for i in range(16))
+        bs = sum(out[4 * i + 2] for i in range(16))
+        peak = max(
+            max(out[4 * i + k] for i in range(16))
+            for k in range(3)
+        )
+        yield (
+            doc_id,
+            w2 * h2,
+            math.floor(rs / 16 * 10000.0 + 0.5) / 10000.0,
+            math.floor(gs / 16 * 10000.0 + 0.5) / 10000.0,
+            math.floor(bs / 16 * 10000.0 + 0.5) / 10000.0,
+            peak,
+        )
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                ln = len(codes)
-                px = bytearray(16 * 4)
-                for i in range(16):
-                    px[4 * i] = codes[i % ln] if ln else 128
-                    px[4 * i + 1] = codes[(i + 1) % ln] if ln else 128
-                    px[4 * i + 2] = codes[(i + 2) % ln] if ln else 128
-                    px[4 * i + 3] = 255
-                w2, h2, ch2, out = decode_pixels(
-                    encode_webp_lossless(8, 2, 4, bytes(px))
-                )
-                rs = sum(out[4 * i] for i in range(16))
-                gs = sum(out[4 * i + 1] for i in range(16))
-                bs = sum(out[4 * i + 2] for i in range(16))
-                peak = max(
-                    max(out[4 * i + k] for i in range(16))
-                    for k in range(3)
-                )
-                rows.append(
-                    (
-                        doc_id,
-                        w2 * h2,
-                        math.floor(rs / 16 * 10000.0 + 0.5) / 10000.0,
-                        math.floor(gs / 16 * 10000.0 + 0.5) / 10000.0,
-                        math.floor(bs / 16 * 10000.0 + 0.5) / 10000.0,
-                        peak,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_px", "mean_r", "mean_g", "mean_b", "peak",
-                ],
-            )
-
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, n_px int, mean_r double, mean_g double, "
         "mean_b double, peak int",
     ).transform(sort_after_python, "doc_id")
@@ -8119,68 +7395,44 @@ def q_adpcm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow stage, fixed-width rows."""
     import math
 
-    import pandas as pd  # noqa: F401
-
     from mongo_analyser_spark.operators.audio import (
         decode_wav_ex,
         encode_wav_ima_adpcm_stream,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run(batches):
-        import pandas as pd
+    def rows_of(doc_id, text):
+        codes = ascii_codes(text)
+        ln = len(codes)
+        nibbles = [
+            (codes[i % ln] % 16 if ln else 0)
+            for i in range(_ADPCM_N)
+        ]
+        _rate, chans = decode_wav_ex(
+            encode_wav_ima_adpcm_stream(8000, 0, ln % 89, nibbles)
+        )
+        s = [int(v) for v in chans[0]]
+        n = len(s)
+        sum_sq = sum(v * v for v in s)
+        peak = max(abs(v) for v in s)
+        zc = sum(
+            1 for i in range(1, n) if s[i - 1] * s[i] < 0
+        )
+        yield (
+            doc_id,
+            8000,
+            n,
+            math.floor(n / 8000.0 * 10000.0 + 0.5) / 10000.0,
+            math.floor(
+                math.sqrt(sum_sq / n) * 10000.0 + 0.5
+            ) / 10000.0,
+            peak,
+            zc,
+        )
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                ln = len(codes)
-                nibbles = [
-                    (codes[i % ln] % 16 if ln else 0)
-                    for i in range(_ADPCM_N)
-                ]
-                _rate, chans = decode_wav_ex(
-                    encode_wav_ima_adpcm_stream(8000, 0, ln % 89, nibbles)
-                )
-                s = [int(v) for v in chans[0]]
-                n = len(s)
-                sum_sq = sum(v * v for v in s)
-                peak = max(abs(v) for v in s)
-                zc = sum(
-                    1 for i in range(1, n) if s[i - 1] * s[i] < 0
-                )
-                rows.append(
-                    (
-                        doc_id,
-                        8000,
-                        n,
-                        math.floor(n / 8000.0 * 10000.0 + 0.5) / 10000.0,
-                        math.floor(
-                            math.sqrt(sum_sq / n) * 10000.0 + 0.5
-                        ) / 10000.0,
-                        peak,
-                        zc,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_samples", "duration_s",
-                    "rms", "peak", "zero_crossings",
-                ],
-            )
-
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, sample_rate int, n_samples int, duration_s double, "
         "rms double, peak int, zero_crossings int",
     ).transform(sort_after_python, "doc_id")
@@ -8259,79 +7511,55 @@ def q_mp1_subband_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage, fixed-width rows."""
     import math
 
-    import pandas as pd  # noqa: F401
-
     from mongo_analyser_spark.operators.audio import (
         decode_mp1,
         encode_mp1,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .transform(fanout_for_python)
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run(batches):
-        import pandas as pd
+    def rows_of(doc_id, text):
+        k = ascii_codes(text)
+        ln = max(len(k), 1)
+        k2 = k if k else [0]
+        alloc = [1 + (k2[sb % ln] % 3) for sb in range(32)]
+        sfidx = [3 * (k2[(sb + 7) % ln] % 21) for sb in range(32)]
+        # legal Layer I codes only: the quantizer has 2^nb − 1
+        # steps, all-ones is forbidden (mp1_dequant docstring)
+        codes = [
+            [
+                k2[(g * 32 + sb) % ln]
+                % ((1 << (alloc[sb] + 1)) - 1)
+                for sb in range(32)
+            ]
+            for g in range(12)
+        ]
+        rate, lanes = decode_mp1(
+            encode_mp1(32000, alloc, sfidx, codes)
+        )
+        # g-major traversal matching the oracle's i = g*32 + sb
+        vq = [
+            math.floor(lanes[sb][g] * 1048576.0 + 0.5) / 1048576.0
+            for g in range(12)
+            for sb in range(32)
+        ]
+        ss = sum(x * x for x in vq)  # q20 grid => exact sum
+        peak = max(abs(x) for x in vq)
+        s0 = sum(vq[g * 32] for g in range(12))
+        yield (
+            doc_id,
+            rate,
+            384,
+            math.floor(
+                math.sqrt(ss / 384.0) * 1000000.0 + 0.5
+            ) / 1000000.0,
+            peak,
+            math.floor((s0 / 12.0) * 1000000.0 + 0.5)
+            / 1000000.0,
+        )
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                k = [
-                    c
-                    for c in (text or "").encode("ascii", "ignore")
-                    if 1 <= c <= 127
-                ]
-                ln = max(len(k), 1)
-                k2 = k if k else [0]
-                alloc = [1 + (k2[sb % ln] % 3) for sb in range(32)]
-                sfidx = [3 * (k2[(sb + 7) % ln] % 21) for sb in range(32)]
-                # legal Layer I codes only: the quantizer has 2^nb − 1
-                # steps, all-ones is forbidden (mp1_dequant docstring)
-                codes = [
-                    [
-                        k2[(g * 32 + sb) % ln]
-                        % ((1 << (alloc[sb] + 1)) - 1)
-                        for sb in range(32)
-                    ]
-                    for g in range(12)
-                ]
-                rate, lanes = decode_mp1(
-                    encode_mp1(32000, alloc, sfidx, codes)
-                )
-                # g-major traversal matching the oracle's i = g*32 + sb
-                vq = [
-                    math.floor(lanes[sb][g] * 1048576.0 + 0.5) / 1048576.0
-                    for g in range(12)
-                    for sb in range(32)
-                ]
-                ss = sum(x * x for x in vq)  # q20 grid => exact sum
-                peak = max(abs(x) for x in vq)
-                s0 = sum(vq[g * 32] for g in range(12))
-                rows.append(
-                    (
-                        doc_id,
-                        rate,
-                        384,
-                        math.floor(
-                            math.sqrt(ss / 384.0) * 1000000.0 + 0.5
-                        ) / 1000000.0,
-                        peak,
-                        math.floor((s0 / 12.0) * 1000000.0 + 0.5)
-                        / 1000000.0,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_samples", "rms", "peak",
-                    "sb0_mean",
-                ],
-            )
-
-    return docs.mapInPandas(
-        run,
+    return python_rows(
+        docs, rows_of,
         "doc_id long, sample_rate int, n_samples int, rms double, "
         "peak double, sb0_mean double",
     ).transform(sort_after_python, "doc_id")

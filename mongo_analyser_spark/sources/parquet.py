@@ -133,7 +133,10 @@ _ROW_COUNT_CACHE: dict[tuple, int] = {}
 
 def table_row_count(sf_dir: str, name: str) -> int:
     """Exact row count of a table from parquet footer metadata (zero
-    Spark jobs; memoized per process on file identity)."""
+    Spark jobs; memoized per process on file identity). An empty table
+    counts 0 (``srp_band_params(0)`` falls back to its defaults); a
+    table directory holding no ``.parquet`` file raises
+    ``FileNotFoundError`` rather than pass for an empty table."""
     import pyarrow.parquet as pq
 
     path = os.path.join(sf_dir, f"{name}.parquet")
@@ -144,18 +147,20 @@ def table_row_count(sf_dir: str, name: str) -> int:
             # recursive walk (r16, ADVICE): a Hive-partitioned layout
             # (key=value subdirectories) would silently count 0 under a
             # top-level-only listing and mis-size SRP band params
-            n = 0
-            for root, _dirs, files in os.walk(path):
-                for f in sorted(files):
-                    if f.endswith(".parquet"):
-                        n += pq.read_metadata(os.path.join(root, f)).num_rows
+            files = [
+                os.path.join(root, f)
+                for root, _dirs, names in os.walk(path)
+                for f in sorted(names)
+                if f.endswith(".parquet")
+            ]
+            if not files:
+                raise FileNotFoundError(
+                    f"table_row_count({path}): no .parquet file under the "
+                    "table directory"
+                )
         else:
-            n = pq.read_metadata(path).num_rows
-        if n <= 0:
-            raise ValueError(
-                f"table_row_count({path}): 0 rows from footer metadata — "
-                "unexpected layout; refusing to mis-size downstream params"
-            )
+            files = [path]
+        n = sum(pq.read_metadata(f).num_rows for f in files)
         _ROW_COUNT_CACHE[key] = n
     return n
 

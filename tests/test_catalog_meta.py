@@ -132,3 +132,29 @@ def test_table_row_count_matches_scan_and_invalidates(spark, tmp_path):
     p.unlink()
     shutil.copytree(tmp_path / "docs2.parquet", p)
     assert src.table_row_count(sf_dir, "docs") == 7
+
+
+def test_table_row_count_empty_table_and_missing_files(tmp_path):
+    """A table whose footers say 0 rows counts 0 (and sizes SRP bands
+    with the defaults); only a table path holding no .parquet file
+    raises."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from mongo_analyser_spark.operators.dedup import srp_band_params
+    from mongo_analyser_spark.sources import parquet as src
+
+    empty = pa.table({"doc_id": pa.array([], pa.int64())})
+    pq.write_table(empty, tmp_path / "flat.parquet")
+    (tmp_path / "parts.parquet").mkdir()
+    pq.write_table(empty, tmp_path / "parts.parquet" / "part-0.parquet")
+    (tmp_path / "parts.parquet" / "_SUCCESS").touch()
+    assert src.table_row_count(str(tmp_path), "flat") == 0
+    assert src.table_row_count(str(tmp_path), "parts") == 0
+    assert srp_band_params(0) == srp_band_params(1)
+
+    (tmp_path / "bare.parquet").mkdir()
+    (tmp_path / "bare.parquet" / "_SUCCESS").touch()
+    with pytest.raises(FileNotFoundError):
+        src.table_row_count(str(tmp_path), "bare")

@@ -9,7 +9,12 @@ from __future__ import annotations
 
 import os
 
-from mongo_analyser_spark.operators.fanout import fanout_for_python
+from mongo_analyser_spark.operators.fanout import (
+    ascii_codes,
+    fanout_for_python,
+    python_rows,
+)
+from mongo_analyser_spark.plans.inspect import formatted_plan, num_exchanges
 from mongo_analyser_spark.sources.parquet import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -49,3 +54,33 @@ def test_fanout_env_overrides(spark):
 def test_fanout_preserves_rows(spark):
     docs = load_table(spark, SF, "documents").select("doc_id")
     assert fanout_for_python(docs).count() == docs.count()
+
+
+def test_python_rows_emits_zero_one_or_many_rows_per_document(spark):
+    """python_rows: fanout on the id column, one MapInPandas, output
+    columns named from the DDL schema, and each document contributing
+    exactly the rows its function returns."""
+    df = spark.createDataFrame(
+        [(1, "a"), (2, ""), (3, "abc")], "rid long, payload string"
+    ).coalesce(1)  # one input partition, as a single-file scan plans
+
+    def rows_of(rid, payload):
+        for i, ch in enumerate(payload):
+            yield (rid, i, ch.upper())
+
+    out = python_rows(df, rows_of, "rid long, pos int, ch string")
+    plan = formatted_plan(out)
+    assert "MapInPandas" in plan and num_exchanges(out, plan) == 1
+    assert out.columns == ["rid", "pos", "ch"]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, 0, "A"), (3, 0, "A"), (3, 1, "B"), (3, 2, "C"),
+    ]
+
+
+def test_ascii_codes_keeps_code_points_1_to_127():
+    text = "a\x00b\u00e9c\x7f\u4e2d"
+    expected = bytes(
+        b for b in text.encode("ascii", "ignore") if 1 <= b <= 127
+    )
+    assert ascii_codes(text) == expected == b"abc\x7f"
+    assert ascii_codes(None) == ascii_codes("") == b""

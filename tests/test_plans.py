@@ -546,13 +546,16 @@ def test_ivfpq_scan_reads_codes_not_floats(spark):
 
 
 def test_wav_rows_fan_out_before_python(spark):
-    """The audio Arrow stages must not inherit the single-file scan's
-    parallelism (the round-9 char_entropy/jpeg signature): an explicit
-    exchange sits below every mapInPandas."""
+    """The per-document Python stages (audio, pixel, frame rows) must
+    not inherit the single-file scan's parallelism (the round-9
+    char_entropy/jpeg signature): an explicit exchange sits below every
+    mapInPandas."""
     for name in (
         "wav_audio_features_documents",
         "wav_frame_features_documents",
         "wav_resample_features_documents",
+        "pixel_roundtrip_documents",
+        "gif_frame_pixels_documents",
     ):
         q = QUERIES[name](spark, SF)
         # r15: the skinny feature output is checkpointed before the

@@ -18,17 +18,6 @@ import time
 
 import duckdb
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-args = sys.argv[1:]
-SKIP: set[str] = set()
-if "--skip" in args:
-    i = args.index("--skip")
-    SKIP = set(args[i + 1:])
-    args = args[:i]
-SF_DIR = args[0] if args else "/root/testdata/sf0.01"
-ONLY = set(args[1:])
-
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -57,28 +46,46 @@ def multiset(rows, cols):
     return out
 
 
-def main() -> int:
-    from mongo_analyser_spark import get_spark
-    from mongo_analyser_spark.queries import ORACLE_GENERATORS, ORACLES, QUERIES
-
-    spark = get_spark(cpus=8)
+def oracle_views(sf_dir: str):
+    """A DuckDB connection with one view per fixture table."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
+    return con
+
+
+def main() -> int:
+    args = sys.argv[1:]
+    skip: set[str] = set()
+    if "--skip" in args:
+        i = args.index("--skip")
+        skip = set(args[i + 1:])
+        args = args[:i]
+    only = set(args[1:])
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from mongo_analyser_spark import get_spark
+    from mongo_analyser_spark.queries import ORACLE_GENERATORS, ORACLES, QUERIES
+    from mongo_analyser_spark.queries_pipeline import ORACLE_SF_DIR
+
+    sf_dir = args[0] if args else ORACLE_SF_DIR
+
+    spark = get_spark(cpus=8)
+    con = oracle_views(sf_dir)
 
     failures = []
     n_ran = 0
     for name, fn in QUERIES.items():
-        if ONLY and name not in ONLY:
+        if only and name not in only:
             continue
         n_ran += 1
         t0 = time.time()
         # per-query isolation (mirrors tools/driver_sim.py): one broken
         # query must not hide the status of everything after it
         try:
-            sdf = fn(spark, SF_DIR)
+            sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001 — report and continue
@@ -86,7 +93,7 @@ def main() -> int:
             print(f"  {name}: ERR {msg} [{time.time()-t0:.1f}s]")
             failures.append((name, f"spark error: {msg}"))
             continue
-        if name not in ORACLES or name in SKIP:
+        if name not in ORACLES or name in skip:
             why = "oracle skipped" if name in ORACLES else "no oracle"
             print(f"  {name}: rows={len(srows)} (rows-only, {why}) "
                   f"[{time.time()-t0:.1f}s]")
@@ -94,7 +101,7 @@ def main() -> int:
                 failures.append((name, "0 rows"))
             continue
         try:
-            osql = (ORACLE_GENERATORS[name](SF_DIR)
+            osql = (ORACLE_GENERATORS[name](sf_dir)
                     if name in ORACLE_GENERATORS else ORACLES[name])
             ores = con.execute(osql)
             ocols = [d[0] for d in ores.description]

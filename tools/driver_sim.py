@@ -11,43 +11,16 @@ Usage: TZ=America/Chicago python tools/driver_sim.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 import time
 
-import duckdb
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-ONLY = set(sys.argv[2:])
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def norm(v):
-    if isinstance(v, float) and math.isnan(v):
-        return "NaN"
-    # distinguish -0.0 from 0.0 like the driver's repr-level value hash
-    if isinstance(v, float) and v == 0.0 and math.copysign(1.0, v) < 0:
-        return "-0.0"
-    return v
-
-
-def multiset(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out: dict = {}
-    for row in rows:
-        key = tuple(norm(row[i]) for i in order)
-        out[key] = out.get(key, 0) + 1
-    return out
+from check_oracle import multiset, oracle_views
 
 
 def main() -> int:
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
     from pyspark.sql import SparkSession
 
     # deliberately NOT get_spark(): no nanosAsLong, no UTC pin, no AQE
@@ -56,20 +29,20 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     from mongo_analyser_spark.queries import ORACLE_GENERATORS, ORACLES, QUERIES
+    from mongo_analyser_spark.queries_pipeline import ORACLE_SF_DIR
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else ORACLE_SF_DIR
+    only = set(sys.argv[2:])
+
+    con = oracle_views(sf_dir)
 
     failures = []
     for name, fn in QUERIES.items():
-        if ONLY and name not in ONLY:
+        if only and name not in only:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, SF_DIR)
+            sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
             if name not in ORACLES:  # rows-only sketch queries
@@ -78,7 +51,7 @@ def main() -> int:
                 if not srows:
                     failures.append(name)
                 continue
-            osql = (ORACLE_GENERATORS[name](SF_DIR)
+            osql = (ORACLE_GENERATORS[name](sf_dir)
                     if name in ORACLE_GENERATORS else ORACLES[name])
             ores = con.execute(osql)
             ocols = [d[0] for d in ores.description]
@@ -96,7 +69,7 @@ def main() -> int:
         except Exception as e:
             failures.append(name)
             print(f"  {name}: ERR {str(e).splitlines()[0][:140]}")
-    checked = len(ONLY) if ONLY else len(QUERIES)
+    checked = len(only) if only else len(QUERIES)
     print(f"\n{checked - len(failures)}/{checked} OK under bare session (TZ={os.environ.get('TZ', 'system')})")
     return 1 if failures else 0
 

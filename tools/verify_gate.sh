@@ -65,19 +65,22 @@ echo "== [4/4] bench completes under budget and prints one JSON line =="
 # heredoc replace the piped stdin and json.loads('') always fails.
 BENCH_BUDGET_S="${BENCH_BUDGET_S:-1200}"
 T0=$(date +%s)
-# round 16: bench prints the full per-query line FIRST, then <=50-row
-# bench_queries chunks (verdict-r15 #2 — they survive the driver's
-# front-truncation), then the compact summary LAST. Grade the full
-# first line; sanity-check the summary last line.
+# bench prints the full per-query line, <=50-row bench_queries chunks
+# (they survive a consumer that keeps only the tail of stdout) and a
+# compact summary.
+# Select each line by its metric, not by its position: grade the full
+# per-query line; sanity-check the summary line.
 BENCH_RAW="$(timeout "$BENCH_BUDGET_S" python bench.py 2>/dev/null)"
-BENCH_OUT="$(printf '%s\n' "$BENCH_RAW" | head -1)"
-BENCH_SUM="$(printf '%s\n' "$BENCH_RAW" | tail -1)"
+BENCH_OUT="$(printf '%s\n' "$BENCH_RAW" | grep -F '"metric": "total_query_wall_clock"' | head -1 || true)"
+BENCH_SUM="$(printf '%s\n' "$BENCH_RAW" | grep -F '"metric": "bench_summary"' | tail -1 || true)"
 # persist the per-query timings so tools/bench_compare.py can run a
 # vs-BASELINE regression report on the SAME run the gate graded
 printf '%s\n' "$BENCH_OUT" > .bench_last.json
 WALL=$(( $(date +%s) - T0 ))
 python - "$BENCH_OUT" "$BENCH_SUM" "$WALL" "$BENCH_BUDGET_S" <<'EOF'
 import json, sys
+assert sys.argv[1], "bench printed no total_query_wall_clock line"
+assert sys.argv[2], "bench printed no bench_summary line"
 d = json.loads(sys.argv[1])
 s = json.loads(sys.argv[2])
 wall, budget = int(sys.argv[3]), int(sys.argv[4])
