@@ -25,6 +25,9 @@ numbers straight from the source data:
   floor(x*1e4+0.5)/1e4 convention (no engine ROUND tie rules);
 - ``duration_s`` = n/rate quantized the same way.
 
+``clip_features`` states this law once; every audio row and feature
+function here goes through it.
+
 100-TB shape: the codec runs inside ``mapInPandas`` over an explicit-N
 repartition (the coalescible-python-fanout rule, plans/lint.py) and emits
 one fixed-width row per payload — no shuffle besides the fanout, no
@@ -37,6 +40,7 @@ import math
 import struct
 from typing import List, Tuple
 
+from mongo_analyser_spark.operators.fanout import q4
 from mongo_analyser_spark.operators.pixels import untrusted_decoder
 
 _PCM_FORMAT = 1  # WAVE_FORMAT_PCM
@@ -114,9 +118,20 @@ def decode_wav(payload: bytes) -> Tuple[int, List[int]]:
     return sample_rate, samples
 
 
-def _q4(x: float) -> float:
-    """Shared cross-engine quantizer: floor(x*1e4 + 0.5)/1e4."""
-    return math.floor(x * 10000.0 + 0.5) / 10000.0
+def clip_features(s: list) -> tuple:
+    """The clip-feature law over one channel's samples: ``(n, mean, rms,
+    peak, zero_crossings)``. mean and rms are ``q4``-quantized (0.0 for
+    an empty clip); peak is the raw max |s| (0 when empty), left to the
+    caller to quantize or cast; zero crossings count adjacent pairs
+    with a strictly negative product. Sums run in sample order, so int
+    samples (and dyadic floats) give exact, engine-independent sums."""
+    n = len(s)
+    if not n:
+        return 0, 0.0, 0.0, 0, 0
+    zc = sum(1 for i in range(1, n) if s[i - 1] * s[i] < 0)
+    mean = q4(sum(s) / n)
+    rms = q4(math.sqrt(sum(v * v for v in s) / n))
+    return n, mean, rms, max(abs(v) for v in s), zc
 
 
 _FLOAT_FORMAT = 3  # WAVE_FORMAT_IEEE_FLOAT
@@ -400,25 +415,9 @@ def wav_multichannel_features(payload: bytes) -> List[dict]:
     regardless of order (the hash-oracle design point of the float row:
     the synthesized samples are (c-64)/128), so mean/rms stay
     engine-deterministic; peak and zero crossings are exact
-    comparisons. All floats quantized with the shared _q4."""
+    comparisons. All floats quantized with the shared ``q4``."""
     _rate, chans = decode_wav_ex(payload)
-    out = []
-    for ci, s in enumerate(chans):
-        n = len(s)
-        sum_v = sum(s)
-        sum_sq = sum(v * v for v in s)
-        zc = sum(1 for i in range(1, n) if s[i - 1] * s[i] < 0)
-        out.append(
-            {
-                "channel": ci,
-                "n_samples": n,
-                "mean": _q4(sum_v / n) if n else 0.0,
-                "rms": _q4(math.sqrt(sum_sq / n)) if n else 0.0,
-                "peak": _q4(max((abs(v) for v in s), default=0.0)),
-                "zero_crossings": zc,
-            }
-        )
-    return out
+    return _channel_features(chans)
 
 
 def wav_pcm24_features(payload: bytes) -> dict:
@@ -428,20 +427,16 @@ def wav_pcm24_features(payload: bytes) -> dict:
     (|s| <= 8388607 < 2^23), so sum and sum-of-squares are exact in
     double for any clip short of 2^53/2^46 samples; mean and rms are one
     IEEE division (+ correctly-rounded sqrt) away from exact, then
-    quantized with the shared _q4 — the same order-free hash-oracle
+    quantized with the shared ``q4`` — the same order-free hash-oracle
     design as wav_multichannel_features. peak and zero_crossings are
     exact ints."""
     _rate, chans = decode_wav_ex(payload)
-    s = chans[0] if chans else []
-    n = len(s)
-    sum_v = sum(s)
-    sum_sq = sum(v * v for v in s)
-    zc = sum(1 for i in range(1, n) if s[i - 1] * s[i] < 0)
+    n, mean, rms, peak, zc = clip_features(chans[0] if chans else [])
     return {
         "n_samples": n,
-        "mean": _q4(sum_v / n) if n else 0.0,
-        "rms": _q4(math.sqrt(sum_sq / n)) if n else 0.0,
-        "peak": int(max((abs(v) for v in s), default=0.0)),
+        "mean": mean,
+        "rms": rms,
+        "peak": int(peak),
         "zero_crossings": zc,
     }
 
@@ -450,15 +445,13 @@ def wav_features(payload: bytes) -> dict:
     """Decode + per-clip features, every one either integer-exact or one
     deterministic IEEE op away from exact integers (see module doc)."""
     rate, s = decode_wav(payload)
-    n = len(s)
-    sum_sq = sum(v * v for v in s)  # exact: Python int
-    zc = sum(1 for i in range(1, n) if s[i - 1] * s[i] < 0)
+    n, _mean, rms, peak, zc = clip_features(s)
     return {
         "sample_rate": rate,
         "n_samples": n,
-        "duration_s": _q4(n / rate) if rate else 0.0,
-        "rms": _q4(math.sqrt(sum_sq / n)) if n else 0.0,
-        "peak": max((abs(v) for v in s), default=0),
+        "duration_s": q4(n / rate) if rate else 0.0,
+        "rms": rms,
+        "peak": peak,
         "zero_crossings": zc,
     }
 
@@ -508,15 +501,13 @@ def wav_frame_features(payload: bytes, frame_len: int = 160) -> list[dict]:
         w = s[fi : fi + frame_len]
         if not w and fi > 0:
             break
-        n = len(w)
-        sum_sq = sum(v * v for v in w)
-        zc = sum(1 for i in range(1, n) if w[i - 1] * w[i] < 0)
+        n, _mean, rms, peak, zc = clip_features(w)
         out.append(
             {
                 "frame_idx": fi // frame_len,
                 "n_samples": n,
-                "rms": _q4(math.sqrt(sum_sq / n)) if n else 0.0,
-                "peak": max((abs(v) for v in w), default=0),
+                "rms": rms,
+                "peak": peak,
                 "zero_crossings": zc,
             }
         )
@@ -684,21 +675,18 @@ def parse_audio_header(payload: bytes) -> dict | None:
 
 
 def _channel_features(chans: List[list]) -> List[dict]:
-    """The shared per-channel feature law over decoded channel lists
-    (int or float samples — the _q4 quantization is the contract)."""
+    """``clip_features`` per decoded channel (int or float samples),
+    with the peak ``q4``-quantized."""
     out = []
     for ci, s in enumerate(chans):
-        n = len(s)
-        sum_v = sum(s)
-        sum_sq = sum(v * v for v in s)
-        zc = sum(1 for i in range(1, n) if s[i - 1] * s[i] < 0)
+        n, mean, rms, peak, zc = clip_features(s)
         out.append(
             {
                 "channel": ci,
                 "n_samples": n,
-                "mean": _q4(sum_v / n) if n else 0.0,
-                "rms": _q4(math.sqrt(sum_sq / n)) if n else 0.0,
-                "peak": _q4(float(max((abs(v) for v in s), default=0))),
+                "mean": mean,
+                "rms": rms,
+                "peak": q4(peak),
                 "zero_crossings": zc,
             }
         )

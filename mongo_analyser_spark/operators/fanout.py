@@ -15,18 +15,16 @@ scale waste: it reads the OBSERVED scan partition count off the physical
 plan (no job — ``df.rdd`` materializes the plan, not the data) and skips
 the shuffle when the scan already saturates the executor parallelism.
 
-Env override ``SPARK_GRAFT_FANOUT`` = ``auto`` (default) | ``always`` |
-``never`` — the A/B lever tools/scale_probe.py --many-files uses to
-measure both branches on a many-file layout.
-
 ``python_rows`` is the one way to run a per-document Python function:
 fanout, then one Arrow-batched ``mapInPandas`` that emits the rows the
-function returns for each (id, payload) pair.
+function returns for each (id, payload) pair. ``ascii_codes`` and ``q4``
+are the payload source and the float quantizer the codec rows share
+with their DuckDB twins.
 """
 
 from __future__ import annotations
 
-import os
+import math
 from collections.abc import Callable, Iterable
 from typing import Any
 
@@ -50,18 +48,14 @@ def fanout_for_python(df: DataFrame, *key_cols: str) -> DataFrame:
     the fanout, outputs identical). On a production table the scan
     splits naturally and the auto probe skips the shuffle."""
     keys = key_cols or ("doc_id",)
-    mode = os.environ.get("SPARK_GRAFT_FANOUT", "auto")
     spark = df.sparkSession
-    n = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    if mode == "never":
+    try:
+        observed = df.rdd.getNumPartitions()
+    except Exception:
+        observed = 0  # exotic plan: keep the safe fanout
+    if observed >= spark.sparkContext.defaultParallelism:
         return df
-    if mode == "auto":
-        try:
-            observed = df.rdd.getNumPartitions()
-        except Exception:
-            observed = 0  # exotic plan: keep the safe fanout
-        if observed >= spark.sparkContext.defaultParallelism:
-            return df
+    n = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     return df.repartition(n, *keys)
 
 
@@ -104,6 +98,13 @@ def ascii_codes(text: str | None) -> bytes:
     twins keep exactly these with ``ascii(x) BETWEEN 1 AND 127``:
     non-ASCII characters and NUL are dropped by both engines."""
     return (text or "").encode("ascii", "ignore").replace(b"\x00", b"")
+
+
+def q4(x: float) -> float:
+    """The codec rows' float quantizer, ``floor(x*1e4 + 0.5)/1e4``: the
+    DuckDB twins state the same ``FLOOR(x * 10000.0 + 0.5) / 10000.0``,
+    so no engine's ROUND tie rule enters the hash."""
+    return math.floor(x * 10000.0 + 0.5) / 10000.0
 
 
 def sort_after_python(df: DataFrame, *cols: str) -> DataFrame:

@@ -39,6 +39,7 @@ from __future__ import annotations
 import struct
 import zlib
 
+from mongo_analyser_spark.operators.fanout import q4
 from mongo_analyser_spark.operators.pixels import (
     _PNG_CHANNELS,
     _PNG_SIG,
@@ -1306,9 +1307,7 @@ def decode_frames(payload: bytes) -> tuple[int, int, int, list[bytearray]]:
 def frame_mean_luma(frame: bytes, ch: int) -> float:
     """Rec. 601 mean luma over exact integer channel sums (gray images
     use the single channel), quantized floor(x*1e4+0.5)/1e4 — the
-    pixel_stats convention, per composed frame."""
-    import math
-
+    pixel_stats convention (``fanout.q4``), per composed frame."""
     n = len(frame) // ch
     if n == 0:
         return 0.0
@@ -1321,4 +1320,4 @@ def frame_mean_luma(frame: bytes, ch: int) -> float:
         val = (299 * sums[0] + 587 * sums[1] + 114 * sums[2]) / (1000 * n)
     else:
         val = sum(frame) / n
-    return math.floor(val * 10000.0 + 0.5) / 10000.0
+    return q4(val)

@@ -26,6 +26,8 @@ from __future__ import annotations
 import struct
 import zlib
 
+from mongo_analyser_spark.operators.fanout import q4
+
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 #: channels per PNG color type (8-bit, non-interlaced support set)
 _PNG_CHANNELS = {0: 1, 2: 3, 6: 4}
@@ -488,6 +490,31 @@ def pixel_stats(payload: bytes) -> dict:
         "channels": ch,
         "mean_luma": luma,
     }
+
+
+def mean_max(px) -> tuple[float, int]:
+    """``(mean, max)`` over a decoded image's samples, the mean
+    ``q4``-quantized: the features of the ``mean_val``/``max_val``
+    pixel rows."""
+    return q4(sum(px) / len(px)), max(px)
+
+
+def gradient_gray(a: int) -> bytes:
+    """The 16x16 grayscale ramp p(x, y) = (a + 3x + 5y) mod 256 that the
+    gradient pixel rows build from a document's first code ``a``."""
+    return bytes((a + 3 * x + 5 * y) % 256 for y in range(16) for x in range(16))
+
+
+def four_blocks(values, channels: int = 1) -> list[int]:
+    """A 16x16 image of four constant 8x8 blocks (top-left, top-right,
+    bottom-left, bottom-right take ``values[0..3]``); every one of a
+    pixel's ``channels`` interleaved samples carries its block's value."""
+    px = [0] * (256 * channels)
+    for (ox, oy), v in zip(((0, 0), (8, 0), (0, 8), (8, 8)), values):
+        for yy in range(8):
+            base = ((oy + yy) * 16 + ox) * channels
+            px[base : base + 8 * channels] = [v] * (8 * channels)
+    return px
 
 
 def resize_nearest(payload: bytes, new_w: int, new_h: int) -> bytes:

@@ -2516,10 +2516,8 @@ def q_schema_with_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # The external harness oracle-checks the first 50 registry entries in
-# order, so the registry order IS a contract. WINDOW_QUERIES pins the
-# in-window set explicitly: one representative per query family, chosen
-# so the driver's sample covers every family (streaming, multimodal,
-# dedup, ANN, TPC-H, conversions, windows, schema) every round.
+# order, so the registry order is a contract: WINDOW_QUERIES is that
+# window (one representative per query family), TAIL_QUERIES the rest.
 WINDOW_QUERIES = (
     "field_stats_events",
     "type_histogram_events",
@@ -2534,322 +2532,85 @@ WINDOW_QUERIES = (
     "join_range_part_lineitem",
     "schema_documents",
     "q2_min_cost_supplier",
-    # late-round-10 rotation: this round's own flagship families go
-    # in-window for external verification (the round-9 policy): audio
-    # codec round trip, mergeable Misra-Gries, bottom-k quantile report,
-    # theta set algebra, near-dup triangles. Five thrice-green rows with
-    # in-window siblings ride the tail (see TAIL_QUERIES note).
     "wav_audio_features_documents",
     "mg_heavy_hitters_events",
     "quantile_sketch_report_events",
     "theta_overlap_pairs_documents",
     "triangle_count_near_dup",
-    # round-10 rotation (verdict-r9 #8): the round-9 sketch/quality
-    # families get their external verification — count-min, Bloom
-    # decontamination, Kneser-Ney, and the FIXED char_entropy (plus
-    # embedding_covariance_upper staying until hash-green, below). The
-    # round-8 flagships ride the tail after TWO recorded driver-green
-    # appearances each (r08+r09; siblings in-window: multimodal_metadata
-    # for dhash_pairs, pii_scrub in tail + text reps for pii_extended,
-    # bpe_token_counts_documents for the pretok twin, dsir_select in
-    # tail sharing dsir_weights' plan prefix)
     "countmin_user_counts_events",
     "bloom_decontaminate_documents",
     "kneser_ney_nll_documents",
     "char_entropy_documents",
-    # round-14 rotation (verdict-r13 #1): the six round-13 codec rows get
-    # their FIRST external driver record — FLAC, WebP-lossless/VP8L,
-    # G.711, 12-bit JPEG, AVI-MJPEG and MP4-'jpeg' containers. OUT: six
-    # rows with 8-12 recorded driver-green appearances each, family
-    # siblings staying in-window —
-    #   multimodal_metadata_documents — the six codec rows ARE the
-    #                                   multimodal family this round
-    #   q21_waiting_suppliers    — TPC-H keeps q1/q2; q22's left-anti
-    #                              covers the anti shape in the tail
-    #   trailing_window_range_events — W family keeps scd2_event_type +
-    #                                  ewma_smooth
-    #   decontaminate_exact_ngram_documents — bloom_decontaminate stays
-    #   gopher_rules_documents   — quality family keeps kneser_ney +
-    #                              char_entropy
-    #   embedding_dedup_clusters — embedding family keeps kmeans_step,
-    #                              ivfpq, pq_adc_rerank, arrow top-k
     "flac_audio_features_documents",
     "webp_lossless_pixels_documents",
     "g711_audio_features_documents",
     "jpeg12_pixel_stats_documents",
     "avi_mjpeg_frames_documents",
     "mp4_jpeg_frames_documents",
-    # round-9 rotation: this round's flagship families go in-window for
-    # CORRECTNESS_r09 (prefix-blocked TF-IDF cosine join, PQ ADC+rerank,
-    # exact covariance, JL projection); four members with in-window
-    # siblings and recorded r08 green appearances ride the tail
-    # (schema_with_stats: J1 with schema_documents in-window; text_stats:
-    # text family with gopher_rules staying; fingerprint: dedup family
-    # keeps exact/minhash/near-dup reps; time_rollup: A12 family with
-    # grouping_sets in-window, green r07+r08)
     "tfidf_cosine_pairs_documents",
     "pq_adc_rerank_topk_embeddings",
     "embedding_covariance_upper",
     "dedup_minhash_pairs_documents",
     "tumbling_hourly_events",
     "dedup_first_event_per_user_type",
-    # round-7 rotation (verdict-r6 #6): the round-7 flagships (BPE token
-    # math) come IN, plus the three registry families that had never
-    # appeared in an external CORRECTNESS_rN (time-rollup, salted-agg,
-    # HLL sketch twin — the last is rows-only by design and the driver
-    # records the weaker check, which is the point: every declared
-    # rows-only row should be externally observed at least once)
-    # round-8 rotation (verdict-r7 #2): the HLL sketch had its one
-    # external rows-only appearance in CORRECTNESS_r07 (err: no_oracle —
-    # deliberate); it rotates back to the tail so the driver window is
-    # 50/50 hash-green again, and the round-7 flagship span remover (the
-    # variable-length interval-union generalization of the Lee et al.
-    # gram join, hash-oracled, never driver-seen) takes the slot.
     "remove_repeated_spans_documents",
-    # round-11 rotation (verdict-r10 #3): every round-10 family that has
-    # never been externally hash-checked gets its driver appearance —
-    # SCD2 gaps-and-islands, EWMA time-series, schema drift, composed
-    # IVFADC, the minhash estimate certification (now slice-bounded),
-    # per-group bottom-k quantiles, per-frame audio features, theta set
-    # differences (now slice-bounded), and the round-11 REAL APNG frame
-    # decode. OUT: nine rows with 2+ recorded driver-green appearances,
-    # each with an in-window family sibling (bm25->unigram family keeps
-    # kneser_ney + char_entropy; distinct_kmv -> quantile/countmin/MG
-    # sketch reps stay; grouping_sets/setops -> TPC-H q1/q3/q21 keep the
-    # agg shapes; value_percentiles -> quantile_sketch_report certifies
-    # vs the exact percentile in-window; token_budget_select_bpe ->
-    # sampling rep sample_events_deterministic; jl_project ->
-    # embedding_covariance_upper + pca_project stay; semantic_dedup ->
-    # embedding_near_dup_pairs + embedding_dedup_clusters stay)
     "scd2_event_type_events",
     "ewma_smooth_events",
     "ivfpq_topk_embeddings",
     "minhash_estimate_error_pairs",
     "frame_pixel_stats_documents",
-    # round-12 rotation (verdict-r11 #2): the round-11 graduations and
-    # re-plans get their FIRST external hash-green record — the PCA
-    # graduation (quantization-synced power iteration, rows-only until
-    # r11), the real GIF-frame and multichannel-WAV codec rows, the SCD2
-    # point-in-time join, and the two L-axis re-plans whose byte-identity
-    # claims were only judge-checked (chunk_tokens, the fixed-n gram
-    # remover). OUT: six rows with 11 recorded driver-green appearances
-    # each, family siblings staying in-window —
-    #   q3_shipping_priority     — TPC-H keeps q1/q2/q21
-    #   asof_join_events_signup  — J5; scd2_pit_join_events is the
-    #                              point-in-time consumer of the same
-    #                              as-of shape, scd2_event_type stays
-    #   window_top3_orders       — W1; trailing_window_range stays
-    #   dedup_exact_documents    — dedup keeps minhash pairs + estimate
-    #                              certification + the gram remover
-    #   embedding_near_dup_pairs — embedding_dedup_clusters stays
-    #   ann_srp_topk_embeddings  — ivfpq + pq_adc_rerank keep ANN
     "pca_project_embeddings",
     "scd2_pit_join_events",
     "chunk_tokens_documents",
-    # round-13 rotation (verdict-r12 #7): the round-12 graduation
-    # (FLOOR-quantized Arrow BLAS top-k — hash-oracled since r12 but
-    # never externally recorded) and the FINISHED PCM24 audio row (the
-    # r12 stub, now a real builder + oracle) come in-window. OUT: two
-    # rows with 2 recorded driver-green appearances (r11+r12), each with
-    # an in-window family sibling —
-    #   quantile_sketch_by_type_events — quantile_sketch_report stays
-    #   theta_difference_pairs_documents — theta_overlap_pairs stays
-    #   schema_drift_events — melt-variant family keeps
-    #                         type_histogram_events + the new deep melt
     "similarity_topk_embeddings_arrow",
     "wav_pcm24_features_documents",
-    # round-13 flagship: the depth-8 unbounded-recursion melt
-    # (verdict-r12 #6) goes straight in-window for its external record
     "deep_melt_documents",
-    # round-15 rotation (verdict-r14 #1): the four round-14 rows get
-    # their FIRST external driver record — multichannel IMA/MS ADPCM,
-    # the Arrow deep-melt fallback (same oracle as deep_melt_documents),
-    # and the two production-width d=768 rows. The wide tier is
-    # rows-only BY DESIGN (driver eigh / np.round have no SQL twins at
-    # d=768) — the driver records the weaker rows-only check, exactly
-    # the deliberate HLL precedent from round 7; their 64-dim
-    # hash-oracled siblings (pca_project_embeddings, ivfpq_topk) stay
-    # in-window as the exactness witnesses. OUT: four rows with 3-4
-    # recorded green appearances each, family siblings staying —
-    #   wav_frame_features_documents (4 greens r11-r14) — audio keeps
-    #       wav_audio + flac + g711 + pcm24 + adpcm(new)
-    #   wav_multichannel_features_documents (3 greens r12-r14) — same
-    #   gif_frame_pixels_documents (3 greens r12-r14) — pixels keep
-    #       frame_pixel_stats + webp_lossless + jpeg12 + avi + mp4
-    #   remove_repeated_ngrams_documents (3 greens r12-r14) — dedup
-    #       keeps remove_repeated_spans + minhash pairs + estimate
-    #       certification + bloom_decontaminate
     "adpcm_audio_features_documents",
     "deep_melt_arrow_documents",
-    # round-16 rotation (verdict-r15 #1): the two rows-only wide-tier
-    # rows made their one deliberate in-window appearance in r15 (the
-    # r7 HLL precedent) and rotate back to the tail — the driver counts
-    # a no_oracle record as not-correct, so a 50/50 zero-err window
-    # requires every slot hash-oracled. Their 64-dim hash-oracled
-    # siblings (pca_project_embeddings, ivfpq_topk_embeddings,
-    # pq_adc_rerank) stay in-window as the exactness witnesses, and the
-    # wide rows keep their pytest fidelity/recall gates + bench rows.
-    # IN: the two round-15 hash-oracled codec additions whose tail
-    # comments already scheduled them "in-window next per the rotation
-    # policy" — MPEG-1 Layer I subbands and progressive 12-bit JPEG —
-    # for their FIRST external records (audio family keeps wav/flac/
-    # g711/pcm24/adpcm in-window; jpeg12 baseline stays in-window).
     "mp1_subband_features_documents",
     "jpeg12p_pixel_stats_documents",
 )
 
-# Near-duplicates of an already-in-window sibling ride the tail (still
-# registered: the local tools/check_oracle.py gate and pytest run the
-# FULL registry — len(QUERIES), not a sample):
-#   rollup/cube            — A12, grouping_sets_orders stays in-window
-#   observed_type_histogram — A4, type_histogram_events stays
-#   lang_detect            — lang_histogram aggregates the same detector
-#   dedup_vocab            — exact-dedup variant of dedup_exact
-#   minhash_signatures     — exercised transitively by dedup_minhash_pairs
-#   q12                    — J2 equi-join + conditional agg, covered by q3/q10
-# Round-6 rotation (verdict-r5 #1): the round-5 flagships
-# (decontaminate / chunk / quantize-int8 / embedding-dedup-clusters /
-# trailing-window-RANGE) moved INTO the window; these five redundant
-# family members moved out to make room:
-#   window_user_running_value — W4 ROWS-frame twin of trailing_window_range
-#   distinct_event_types      — A11, top_values/field_stats cover
-#   q4_priority_with_returns  — TPC-H family keeps q1/q3/q5/q6/q10
-#   dedup_jaccard_pairs       — verify stage of in-window minhash pairs
-#   sliding_window_events     — ST2; tumbling/session/late-data stay
-# Mid-round-6 rotation (same policy, applied to round-6's own additions
-# so the driver's hard signal covers them): IN — unigram_nll,
-# semantic_dedup, kmeans_step, q21, decontaminate_exact_ngram,
-# pack_sequences; OUT (redundant family members):
-#   binary_conversion / bytes_human — P2/F7; convert_export +
-#                                     display_truncation stay in-window
-#   q5 / q6                   — TPC-H keeps q1/q3/q10 + the new q21;
-#                               q5's broadcast-hint policy and q6's
-#                               minimal-scan pin stay pytest-enforced
-#   join_anti_customers       — J3; join_semi stays, and q22's left-anti
-#                               covers the anti shape in the tail
-#   user_totals_events        — ST5 stateful family keeps
-#                               dedup_first_event_per_user_type
 TAIL_QUERIES = (
-    # round-16 rotation (verdict-r15 #1): the production-width tier back
-    # to the tail after its one deliberate rows-only in-window
-    # appearance (CORRECTNESS_r15 records it; the r7 HLL precedent) —
-    # still registered, benched, and gated by tests/test_pca.py
-    # (planted-subspace fidelity) + tests/test_pq.py (recall@5)
     "pca_project_wide_embeddings",
     "ivfpq_wide_topk_embeddings",
-    # (mp1_subband_features_documents / jpeg12p_pixel_stats_documents
-    # promoted in-window round 16 for their first external records, as
-    # their round-15 comments scheduled)
-    # round-15 addition: 12-bit SUBSAMPLED (4:2:0) JPEG — the third
-    # container against the same even constant-block oracle (3-channel
-    # gray-RGB law), closing the 12-bit-subsampling gate; the JPEG gate
-    # is now exactly arithmetic coding. Tail this round per policy.
     "jpeg12s_pixel_stats_documents",
-    # round-15 addition: baseline TIFF 6.0 round trip (operators/tiff.py
-    # — new image container family: strips, none/PackBits/LZW with the
-    # early-change width convention, predictor, both byte orders),
-    # gradient law so every compressor does real work; hash-oracled
     "tiff_pixel_stats_documents",
-    # round-15 additions: the web-corpus ingestion chain — stdlib HTML
-    # text extraction (entities/script-style/block-newline policy) and
-    # the WARC -> HTTP -> HTML -> text composition over the member-gzip
-    # source (sources/warc.py); both hash-oracled against SQL-stated
-    # expected text
     "html_extract_documents",
     "warc_extract_documents",
-    # round-15 addition: Sun AU/.snd (the RFC 2046 audio/basic carrier)
-    # — the G.711 law through a third audio container, SAME oracle as
-    # the g711-in-WAV row
     "au_audio_features_documents",
-    # round-15 consolidation: the header-metadata dispatch across ALL
-    # round-15 containers (TIFF/netpbm/ICO/SVG/Y4M/PNG) in one oracled
-    # row — the 200th registered query
     "media_header_matrix_documents",
-    # round-15 addition: ICO/favicon container (PNG + 32bpp-DIB
-    # members, largest-member selection) — third container on the
-    # shared gradient oracle; SVG header metadata rides
-    # parse_image_header (pytest-covered)
     "ico_pixel_stats_documents",
-    # round-15 addition: AIFF container (big-endian PCM, 80-bit
-    # extended-float rate) — the wav_multichannel law through a second
-    # audio container against the SAME oracle
     "aiff_audio_features_documents",
-    # round-15 addition: ID3v1/v2.3/v2.4 tag parse — the EXIF twin for
-    # audio corpora (syncsafe frames, per-frame text encodings, the
-    # fixed v1 trailer)
     "id3_metadata_documents",
-    # round-15 addition: EXIF inspect + strip (the TIFF IFD walker on
-    # the JPEG APP1 blob — orientation/make/ISO/RATIONAL exposure in
-    # both byte orders, and the PII-scrub strip twin)
     "exif_metadata_documents",
-    # round-15 addition: WebDataset tar-shard samples (the multimodal
-    # training-data container) — tar walk, first-dot key grouping, and
-    # a netpbm member decode under one oracle
     "webdataset_samples_documents",
-    # round-15 addition: netpbm P2/P3/P5/P6 (the CV-corpus interchange
-    # formats) — same gradient oracle as the TIFF row, all four
-    # subformats cycled per doc
     "pnm_pixel_stats_documents",
-    # round-15 capstone: the COMPLETE web-ingestion front-end in one
-    # hash-oracled chain — WARC member-gzip walk -> HTTP split ->
-    # charset sniff/decode (fed by the record's real Content-Type) ->
-    # HTML extract -> canonical-URL dedup key -> keep gate; five
-    # components compose, the oracle states every column
     "web_corpus_build_documents",
-    # round-15 addition: sitemap-protocol parse (urlset + sitemapindex,
-    # gzip wrapper, junk-priority tolerance) — crawl discovery beside
-    # robots.txt
     "sitemap_urls_documents",
-    # round-15 additions: charset sniffing/decode (HTML5 prescan order:
-    # BOM > transport header > meta, windows-1252 uncertain default)
-    # and robots.txt crawl policy (stdlib robotparser first-match-wins
-    # group semantics, crawl delay, sitemap count)
     "charset_decode_documents",
     "robots_policy_documents",
-    # round-15 addition: RFC 3986 URL canonicalization — the crawl-dedup
-    # key (scheme/host case, default ports, dot segments, percent
-    # policy, tracking params, credential strip — one oracle variant
-    # per step)
     "url_canonical_documents",
-    # round-15 addition: Y4M/YUV4MPEG2 raw planar video — the
-    # uncompressed video carrier beside the AVI/MP4 containers
-    # (plain-text header + fixed-stride frames, 4:2:0 replication
-    # upsample with the exact-for-neutral-chroma YCbCr convert);
-    # hash-oracled with the same k=4 floor sampling law
     "y4m_frame_pixels_documents",
-    # round-15 rotation (verdict-r14 #1): out of the window after 3-4
-    # recorded green driver appearances each (in-window siblings noted
-    # at the round-15 WINDOW comment); the four round-14 rows took the
-    # slots for their first external records
     "wav_frame_features_documents",
     "wav_multichannel_features_documents",
     "gif_frame_pixels_documents",
     "remove_repeated_ngrams_documents",
-    # round-14 rotation: out of the window after 8-12 recorded green
-    # driver appearances each (in-window siblings noted at the
-    # round-14 WINDOW comment); the six round-13 codec rows took the
-    # slots for their first external records
     "multimodal_metadata_documents",
     "q21_waiting_suppliers",
     "trailing_window_range_events",
     "decontaminate_exact_ngram_documents",
     "gopher_rules_documents",
     "embedding_dedup_clusters",
-    # round-13 rotation: out of the window after 2 recorded green driver
-    # appearances each (r11+r12; in-window siblings noted at WINDOW list)
     "quantile_sketch_by_type_events",
     "theta_difference_pairs_documents",
     "schema_drift_events",
-    # round-12 rotation: out of the window after 11 recorded green
-    # driver appearances each (in-window siblings noted at the WINDOW list)
     "q3_shipping_priority",
     "asof_join_events_signup",
     "window_top3_orders_per_customer",
     "dedup_exact_documents",
     "embedding_near_dup_pairs",
     "ann_srp_topk_embeddings",
-    # round-11 rotation: out of the window after 2+ recorded green
-    # driver appearances (in-window siblings noted at the WINDOW list)
     "bm25_topk_documents",
     "unigram_nll_documents",
     "distinct_kmv_events",
@@ -2859,15 +2620,6 @@ TAIL_QUERIES = (
     "token_budget_select_bpe_documents",
     "jl_project_embeddings",
     "semantic_dedup_embeddings",
-
-    # round-7 rotation: r6-driver-green family members move out to make
-    # room (all still judge/tool-checked via the full registry):
-    #   decontaminate_documents — LSH variant; exact-ngram twin stays in
-    #   simhash_documents       — signature stage; pairs twin rides tail
-    #   session_window_users / late_data_drop_events — ST3/ST4, green in
-    #     CORRECTNESS_r06; tumbling + dedup_first keep ST coverage
-    #   join_semi_customers_with_orders — J3, green in r06; q21/q22
-    #     exercise semi/anti shapes in-window
     "decontaminate_documents",
     "simhash_documents",
     "session_window_users",
@@ -2875,9 +2627,6 @@ TAIL_QUERIES = (
     "join_semi_customers_with_orders",
     "binary_conversion_documents",
     "bytes_human_documents",
-    # late-round-6 rotation: S3/P4/A4-adjacent family members whose
-    # siblings stay in-window (newest-N: window_top3 + trailing_window;
-    # truncation: convert_export; lang: text_stats/lang_detect)
     "newest_n_events",
     "display_truncation_documents",
     "lang_histogram_documents",
@@ -2897,223 +2646,83 @@ TAIL_QUERIES = (
     "q4_priority_with_returns",
     "dedup_jaccard_pairs_documents",
     "sliding_window_events",
-    # similarity family keeps brute-force + SRP in-window; IVF rides tail
     "ann_ivf_topk_embeddings",
     "ann_ivf_adaptive_topk_embeddings",
-    # dedup family keeps exact/minhash/jaccard in-window; clusters ride tail
     "dedup_clusters_documents",
-    # sampling family's in-window rep is sample_events_deterministic
     "stratified_sample_documents",
-    # TPC-H family keeps q1/q3/q21 (+q2 since late round 6) in-window;
-    # the rest ride the tail
     "q10_returned_revenue",
     "q14_promo_revenue",
     "q18_large_orders",
     "q19_disjunctive_predicates",
     "q7_nation_volume_shipping",
     "q15_top_supplier",
-    # round-6 TPC-H breadth: the remaining partsupp-free queries
-    # (q8 snowflake share, q13 outer-join distribution, q17/q22
-    # decorrelated scalar subqueries; q21 rotated in-window)
     "q8_market_share",
     "q13_customer_distribution",
     "q17_small_quantity_revenue",
     "q22_inactive_customers",
-    # round-6 (cont.): the partsupp-dependent queries, adapted — the
-    # part-supplier relation is derived from lineitem (see _PS_SQL);
-    # join/subquery structure preserved. Full 22-query TPC-H coverage
-    # (q2, the richest shape, rotated in-window late round 6).
     "q9_product_type_profit",
     "q11_important_part_value",
     "q16_supplier_relationship",
     "q20_excess_share_suppliers",
     "corpus_build_documents",
     "simhash_pairs_documents",
-    # (time_rollup / salted_user_event_totals rotated IN-window by the
-    # round-7 curation)
-    # sketch variants: rows-only by design, exact twins are in-window
-    # (field_stats_events_hll back in the tail after its deliberate
-    # round-7 external rows-only appearance — verdict-r7 #2)
     "field_stats_events_hll",
     "value_percentiles_events_approx",
-    # sampling family rep in-window is sample_events_deterministic
     "dataset_split_documents",
-    # text-analysis family rep in-window is text_stats/fingerprint
     "pii_scrub_documents",
-    # A5/A6 family rep in-window is field_stats/array_stats
     "numeric_profile_documents",
-    # round-3 curation ops: text-analysis / dedup / window families all
-    # have in-window reps; these extensions ride the tail
     "repetition_stats_documents",
     "ngram_topk_corpus",
     "quality_deciles_documents",
-    # round-5: scale-safe sketch twin of quality_deciles (since round 6
-    # exactly SQL-reproducible — histogram/cumulative-rank rewrite)
     "quality_deciles_documents_approx",
-    # round-6: stream-stream interval join batch twin (ST family reps
-    # in-window: tumbling/session/late-data/dedup_first)
     "interval_join_events",
-    # (similarity_topk_embeddings_arrow rotated IN-window round 13 —
-    # hash-oracled since its r12 FLOOR-quantization graduation)
-    # round-6: training-mix curation pair (sampling family reps
-    # in-window: sample_events_deterministic, stratified in tail)
     "mixture_sample_documents",
     "token_budget_select_documents",
-    # (gopher_rules / bm25_topk / distinct_kmv / q2 rotated IN-window
-    # by the late-round-6 curation)
-    # round-6 (cont.): per-source dedup health report — the analytics
-    # view over the fingerprint near-dup signal
     "dedup_report_by_source",
-    # round-6 (cont.): ANN index-quality gate — recall@3 of the SRP path
-    # vs exact top-3, the recall number itself oracle-verified
     "ann_recall_report",
-    # round-6 (cont.): PageRank over the near-dup graph (canonical-copy
-    # ranking; oracle = the recurrence exactly unrolled, ROUND(9)/iter)
     "pagerank_near_dup",
-    # (remove_repeated_ngrams_documents — the round-6 Lee et al. fixed-n
-    # gram-join remover, L-axis re-planned round 11 — rotated IN-window
-    # round 12 for external confirmation of the re-plan's byte-identity)
-    # (remove_repeated_spans_documents rotated IN-window round 8)
-    # round-7: full BPE encode twin (token SEQUENCE hash-verified; the
-    # count flagship bpe_token_counts rides in-window)
     "bpe_encode_documents",
-    # (bpe_token_counts_pretok_documents rotated IN-window round 8)
-    # round-7: sequence packing in tokenizer tokens (the budget twin
-    # token_budget_select_bpe rides in-window)
     "pack_sequences_bpe_documents",
-    # (chunk_tokens_documents — round-7, L-axis re-planned round 11 —
-    # rotated IN-window round 12)
-    # round-7: bigram-LM NLL (unigram_nll is the in-window family rep)
     "bigram_nll_documents",
-    # round-8: supervised NB quality classifier (model-based quality
-    # filtering — the fastText stage of CCNet/LLaMA-style curation;
-    # exact-integer LLR algebra keeps it hash-oracled)
     "nb_quality_scores_documents",
-    # round-7: the composed curation verdict (keeper x gopher x budget
-    # in one plan; each branch individually in-window or tail-verified)
     "curation_decisions_documents",
-    # round-7: real PNG encode/decode round trip, hash-oracled against
-    # DuckDB's direct byte mean (multimodal family rep stays in-window)
     "pixel_roundtrip_documents",
-    # round-8: baseline-JPEG codec round trip (declared rows-only — IDCT
-    # floats are engine-specific; the mean_delta column carries the
-    # quantization residual and pytest pins DC-only fixtures exactly)
     "jpeg_pixel_stats_documents",
-    # round-8: DSIR selection step (the weights flagship rotated
-    # IN-window; the top-k cut shares its whole plan prefix)
     "dsir_select_documents",
-    # round-8: dHash fingerprint projection (the pairs flagship rotated
-    # IN-window and exercises the fingerprints transitively)
     "dhash_documents",
-    # (dhash_pairs_documents / pii_scrub_extended_documents rotated
-    # IN-window round 8)
-    # round-8 rotation (cont.): four members with in-window siblings and
-    # recorded r07 green appearances moved here from the window
     "pivot_event_counts_by_user",
     "quantize_embeddings_int8",
     "chunk_documents",
     "scalar_subquery_customers",
-    # round-7: IVF twin of the SRP recall gate (both classic ANN shapes
-    # now recall-gated)
     "ann_ivf_recall_report",
-    # round-6 (cont.): event-sequence analytics — ordered funnel with
-    # per-stage 24h anchors, and the day-cohort retention triangle
     "funnel_conversion_events",
     "retention_cohorts_events",
-    # round-6 (cont.): Morton key for the Z-order clustered sink
-    # (multi-dim data skipping; bit-identical integer oracle)
     "zorder_key_events",
-    # round-9: sparse TF-IDF tier — per-doc keyword sketch and the
-    # recall gate ride the tail (the prefix-filtered cosine join is the
-    # in-window flagship and exercises the postings transitively)
     "tfidf_topk_terms_documents",
     "tfidf_pairs_recall_report",
-    # round-9: PQ tier — codes + recall gate ride the tail (ADC+rerank
-    # in-window shares the whole codebook/encode plan prefix)
     "pq_encode_embeddings",
     "pq_recall_report_embeddings",
-    # (pca_project_embeddings — graduated to hash-oracled round 11 —
-    # rotated IN-window round 12 for its first external hash record)
-    # round-9 rotation: r08-green family members out of the window
-    # (siblings remain in-window — see the WINDOW_QUERIES note)
     "schema_with_stats_documents",
     "text_stats_documents",
     "fingerprint_documents",
     "time_rollup_events",
-    # round-9: count-min sketch tier — the raw sketch rides the tail
-    # (the estimates row countmin_user_counts_events rotated IN-window
-    # round 10 and exercises the sketch transitively)
     "countmin_sketch_events",
-    # round-10 rotation: the round-8 flagships after two driver-green
-    # appearances each (r08 + r09)
     "dsir_weights_documents",
     "dhash_pairs_documents",
     "pii_scrub_extended_documents",
     "bpe_token_counts_pretok_documents",
-    # round-9: Gumbel-top-k weighted sampling without replacement
-    # (md5-derived uniforms, score values themselves hash-oracled)
     "gumbel_weighted_sample_documents",
-    # (bloom_decontaminate / kneser_ney_nll / char_entropy /
-    # countmin_user_counts rotated IN-window round 10)
-    # round-10: bottom-k quantile sketch — the raw sketch rides the tail
-    # (the report row, which also oracle-verifies accuracy vs the exact
-    # percentile, rotated in-window late round 10)
     "quantile_sketch_events",
-    # round-10: theta/KMV per-source sketches (the overlap-pairs row
-    # with its exact-intersection certification rotated in-window)
     "theta_sketch_sources_documents",
-    # round-10: time-series tier over events — EWMA smoother (α=0.5
-    # power-of-two folds, bit-identical across engines) and population
-    # z-score outlier flags (ROUND-gated, the gopher discipline)
     "zscore_outliers_events",
-    # round-10: frame sampling for multi-frame media — the video member
-    # of the decode/feature-extract/resize/frame-sample quartet (real
-    # explode/selection plumbing, documented deterministic fake decode)
     "frame_sample_documents",
-    # round-10: SCD2 validity-interval build from the event stream
-    # (gaps-and-islands; the change-history table the as-of join
-    # consumes — asof_join_events_signup stays the in-window W rep)
-    # round-10: per-group bottom-k quantiles (the sketch sharded by a
-    # group key; the in-window report row certifies the global form)
-    # round-10: schema drift report between corpus eras (the monitoring
-    # extension of the reference's one-shot inference; type_histogram +
-    # dynamic_schema stay the in-window A4 reps)
-    # round-10: MinHash estimate-vs-exact certification (the
-    # countmin/theta/MG contract applied to the first sketch family;
-    # dedup_minhash_pairs stays the in-window flagship)
-    # round-10: IVFADC composed end-to-end (IVF cell gate + PQ/ADC +
-    # exact rerank — the production ANN shape; pq_adc_rerank stays the
-    # in-window PQ rep) + its recall gate (the fourth, quantifying the
-    # nprobe=1 cell-gate cost on top of quantization)
     "ivfpq_recall_report_embeddings",
-    # round-10: per-frame audio features (frame-local RMS/peak/ZC over
-    # 64-sample windows — the frame-level member of the audio tier;
-    # wav_audio_features is the in-window clip-level rep)
-    # round-10: audio resize round trip (decimate-by-4 resample between
-    # a real encode and a real decode, features oracled from the 1-in-4
-    # selection directly)
     "wav_resample_features_documents",
-    # round-10: theta set DIFFERENCE estimates — the missing member of
-    # the sketch set algebra (theta_overlap_pairs in-window covers
-    # union/intersection/Jaccard)
-    # late-round-10 rotation: thrice-green (r07+r08+r09) rows whose
-    # families keep in-window representatives —
-    #   similarity_topk — exact-cosine twin; ann_srp + pq_adc stay
-    #   pack_sequences — two-level prefix sum; token_budget_select_bpe
-    #     runs the same shape in-window
-    #   bpe_token_counts — the Arrow BPE stage rides in-window inside
-    #     token_budget_select_bpe
-    #   salted_user_event_totals — J2 skew twin; q1/q3/q21 keep equi-agg
-    #     shapes, user_totals in tail
-    #   dynamic_schema_histogram — A4; type_histogram_events stays
     "similarity_topk_embeddings",
     "pack_sequences_documents",
     "bpe_token_counts_documents",
     "salted_user_event_totals",
     "dynamic_schema_histogram_events",
-    # (gif_frame_pixels_documents / wav_multichannel_features_documents /
-    # scd2_pit_join_events — the round-11 codec and PIT-join rows —
-    # rotated IN-window round 12 for their first external records)
 )
 
 

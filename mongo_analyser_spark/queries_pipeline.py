@@ -38,6 +38,7 @@ from mongo_analyser_spark.operators.fanout import (
     ascii_codes,
     fanout_for_python,
     python_rows,
+    q4,
     sort_after_python,
     sort_plain,
     unsorted,
@@ -335,7 +336,7 @@ tot AS (SELECT CAST(SUM(cp) AS BIGINT) AS tp, CAST(SUM(cn) AS BIGINT) AS tn,
                CAST(count(*) AS BIGINT) AS v FROM vocab)
 SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
   ROUND(AVG((ln(CAST(cp + 1 AS DOUBLE)) - ln(CAST(tp + v AS DOUBLE)))
-          - (ln(CAST(cn + 1 AS DOUBLE)) - ln(CAST(tn + v AS DOUBLE)))), 6)
+          - (ln(CAST(cn + 1 AS DOUBLE)) - ln(CAST(tn + v AS DOUBLE)))), 6) + 0.0
     AS avg_llr,
   ROUND(AVG((ln(CAST(cp + 1 AS DOUBLE)) - ln(CAST(tp + v AS DOUBLE)))
           - (ln(CAST(cn + 1 AS DOUBLE)) - ln(CAST(tn + v AS DOUBLE)))), 6) > 0
@@ -1880,7 +1881,7 @@ best AS (
     FROM scored) WHERE rn = 1)
 SELECT CAST(cell AS INT) AS cell, CAST(j AS INT) AS pos,
   CAST(count(*) AS BIGINT) AS n_members,
-  ROUND(AVG(v[j]), 6) AS mean_val
+  ROUND(AVG(v[j]), 6) + 0.0 AS mean_val
 FROM best, generate_series(1, {dim}) t(j)
 GROUP BY cell, j ORDER BY cell, pos
 """
@@ -2821,6 +2822,14 @@ _CODES_SQL = (
     "list_filter(list_transform(string_split(text, ''), x -> ascii(x)), "
     "c -> c BETWEEN 1 AND 127)"
 )
+
+# The opening CTE ``a(doc_id, codes)`` of the codec rows' oracles: each
+# document's printable-ASCII codes, the twin of ``fanout.ascii_codes``.
+_CODES_CTE = """WITH a AS (
+  SELECT doc_id,
+    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
+                c -> c BETWEEN 1 AND 127) AS codes
+  FROM documents),"""
 
 
 def _dhash_sql() -> str:
@@ -3938,7 +3947,7 @@ def _jl_sql() -> str:
     return f"""
 WITH pl(pos, v) AS (VALUES
     {values})
-SELECT e.vec_id, CAST(pl.pos AS INT) AS pos, ROUND({chain}, 6) AS val
+SELECT e.vec_id, CAST(pl.pos AS INT) AS pos, ROUND({chain}, 6) + 0.0 AS val
 FROM embeddings e CROSS JOIN pl
 ORDER BY e.vec_id, pl.pos
 """
@@ -4478,15 +4487,21 @@ def q_theta_difference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return theta_difference_report(items, "source", F.col("sh"), _THETA_K)
 
 
-@register(
-    "wav_audio_features_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
-s AS (SELECT doc_id, list_transform(codes, c -> (c - 64) * 256) AS smp FROM a),
+#: CTE ``s(doc_id, smp)``: the mono PCM16 law (c - 64) * 256 of the
+#: WAV and FLAC rows
+_PCM16_SAMPLES = (
+    "s AS (SELECT doc_id, list_transform(codes, c -> (c - 64) * 256) AS smp FROM a),"
+)
+
+
+def _mono_clip_sql(samples: str, rate: int = 8000) -> str:
+    """Oracle of a mono clip row (doc_id, sample_rate, n_samples,
+    duration_s, rms, peak, zero_crossings): the codes CTE, ``samples``
+    (a CTE ``s(doc_id, smp)`` of integer samples), then the clip-feature
+    law — the twin of ``audio.clip_features``."""
+    return f"""
+{_CODES_CTE}
+{samples}
 f AS (
   SELECT doc_id,
     COALESCE(len(smp), 0) AS n,
@@ -4495,17 +4510,77 @@ f AS (
     COALESCE(len(list_filter(smp, (x, i) -> i > 1 AND smp[i-1] * x < 0)), 0) AS zc
   FROM s)
 SELECT doc_id,
-  CAST(8000 AS INTEGER) AS sample_rate,
+  CAST({rate} AS INTEGER) AS sample_rate,
   CAST(n AS INTEGER) AS n_samples,
-  FLOOR(CAST(n AS DOUBLE) / 8000.0 * 10000.0 + 0.5) / 10000.0 AS duration_s,
+  FLOOR(CAST(n AS DOUBLE) / {rate}.0 * 10000.0 + 0.5) / 10000.0 AS duration_s,
   CASE WHEN n = 0 THEN 0.0
        ELSE FLOOR(sqrt(CAST(sum_sq AS DOUBLE) / n) * 10000.0 + 0.5) / 10000.0
   END AS rms,
   CAST(peak AS INTEGER) AS peak,
   CAST(zc AS INTEGER) AS zero_crossings
 FROM f ORDER BY doc_id
-""",
-)
+"""
+
+
+def _clip_moments_sql(samples: str, per_channel: bool) -> str:
+    """Oracle of a clip row that also reports the mean (n_samples, mean,
+    rms, peak, zero_crossings), the twin of ``audio.clip_features``.
+    ``samples`` ends in ``u(doc_id, channel, smp)`` with a q4-quantized
+    peak when ``per_channel``, else in ``s(doc_id, smp)`` with an int
+    peak."""
+    if per_channel:
+        src, key, order = "u", " channel,", ", channel"
+        out_key = " CAST(channel AS INT) AS channel,"
+        peak = "FLOOR(CAST(pk AS DOUBLE) * 10000.0 + 0.5) / 10000.0"
+    else:
+        src, key, out_key, order = "s", "", "", ""
+        peak = "CAST(pk AS INTEGER)"
+    return f"""
+{_CODES_CTE}
+{samples}
+f AS (
+  SELECT doc_id,{key}
+    COALESCE(len(smp), 0) AS n,
+    COALESCE(list_sum(smp), 0) AS sv,
+    COALESCE(list_sum(list_transform(smp, v -> v * v)), 0) AS sq,
+    COALESCE(list_max(list_transform(smp, v -> abs(v))), 0.0) AS pk,
+    COALESCE(len(list_filter(smp, (x, i) -> i > 1 AND smp[i-1] * x < 0)), 0) AS zc
+  FROM {src})
+SELECT doc_id,{out_key} CAST(n AS INTEGER) AS n_samples,
+  CASE WHEN n = 0 THEN 0.0
+       ELSE FLOOR(CAST(sv AS DOUBLE) / n * 10000.0 + 0.5) / 10000.0 END AS mean,
+  CASE WHEN n = 0 THEN 0.0
+       ELSE FLOOR(sqrt(CAST(sq AS DOUBLE) / n) * 10000.0 + 0.5) / 10000.0
+  END AS rms,
+  {peak} AS peak,
+  CAST(zc AS INTEGER) AS zero_crossings
+FROM f ORDER BY doc_id{order}
+"""
+
+
+#: the WAV and FLAC rows' oracle
+_PCM16_CLIP_SQL = _mono_clip_sql(_PCM16_SAMPLES)
+#: the G.711 and Sun AU rows' oracle: mulaw_expand(c) stated arithmetically
+_MULAW_CLIP_SQL = _mono_clip_sql("""s AS (SELECT doc_id, list_transform(codes, c ->
+        CASE WHEN ((255 - c) & 128) = 128
+             THEN 132 - (((255 - c) & 15) * 8 + 132) * (1 << (((255 - c) >> 4) & 7))
+             ELSE (((255 - c) & 15) * 8 + 132) * (1 << (((255 - c) >> 4) & 7)) - 132
+        END) AS smp FROM a),""")
+#: the stereo WAV and AIFF rows' oracle: channel 0 takes the odd codes,
+#: channel 1 the even ones, as (c - 64)/128
+_STEREO_CLIP_SQL = _clip_moments_sql("""b AS (SELECT doc_id, codes, COALESCE(len(codes),0) // 2 AS fl FROM a),
+s AS (SELECT doc_id, fl,
+  list_transform(list_filter(codes, (x,i) -> i % 2 = 1 AND i <= 2*fl),
+                 c -> (c - 64)/128.0) AS c0,
+  list_transform(list_filter(codes, (x,i) -> i % 2 = 0 AND i <= 2*fl),
+                 c -> (c - 64)/128.0) AS c1
+  FROM b),
+u AS (
+  SELECT doc_id, 0 AS channel, c0 AS smp FROM s
+  UNION ALL SELECT doc_id, 1, c1 FROM s),""", per_channel=True)
+
+
+@register("wav_audio_features_documents", _PCM16_CLIP_SQL)
 def q_wav_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio-codec round trip, hash-oracled (the WAV sibling of
     pixel_roundtrip_documents): each document's printable-ASCII codes
@@ -4529,16 +4604,7 @@ def q_wav_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     def rows_of(doc_id, text):
         codes = ascii_codes(text)
         payload = encode_wav(8000, [(c - 64) * 256 for c in codes])
-        f = wav_features(payload)
-        yield (
-            doc_id,
-            f["sample_rate"],
-            f["n_samples"],
-            f["duration_s"],
-            f["rms"],
-            f["peak"],
-            f["zero_crossings"],
-        )
+        yield (doc_id, *wav_features(payload).values())
 
     return python_rows(
         docs, rows_of,
@@ -4867,35 +4933,14 @@ def q_zscore_outliers_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "wav_resample_features_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
-s AS (
+    _mono_clip_sql(
+        """s AS (
   SELECT doc_id,
     list_filter(list_transform(codes, c -> (c - 64) * 256),
                 (x, i) -> i % 4 = 1) AS smp
-  FROM a),
-f AS (
-  SELECT doc_id,
-    COALESCE(len(smp), 0) AS n,
-    COALESCE(list_sum(list_transform(smp, v -> v * v)), 0) AS sum_sq,
-    COALESCE(list_max(list_transform(smp, v -> abs(v))), 0) AS peak,
-    COALESCE(len(list_filter(smp, (x, i) -> i > 1 AND smp[i-1] * x < 0)), 0) AS zc
-  FROM s)
-SELECT doc_id,
-  CAST(2000 AS INTEGER) AS sample_rate,
-  CAST(n AS INTEGER) AS n_samples,
-  FLOOR(CAST(n AS DOUBLE) / 2000.0 * 10000.0 + 0.5) / 10000.0 AS duration_s,
-  CASE WHEN n = 0 THEN 0.0
-       ELSE FLOOR(sqrt(CAST(sum_sq AS DOUBLE) / n) * 10000.0 + 0.5) / 10000.0
-  END AS rms,
-  CAST(peak AS INTEGER) AS peak,
-  CAST(zc AS INTEGER) AS zero_crossings
-FROM f ORDER BY doc_id
-""",
+  FROM a),""",
+        rate=2000,
+    ),
 )
 def q_wav_resample_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio resize round trip: synthesize each document's PCM16 clip,
@@ -4916,16 +4961,7 @@ def q_wav_resample_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     def rows_of(doc_id, text):
         codes = ascii_codes(text)
         clip = encode_wav(8000, [(c - 64) * 256 for c in codes])
-        f = wav_features(resample_decimate(clip, 4))
-        yield (
-            doc_id,
-            f["sample_rate"],
-            f["n_samples"],
-            f["duration_s"],
-            f["rms"],
-            f["peak"],
-            f["zero_crossings"],
-        )
+        yield (doc_id, *wav_features(resample_decimate(clip, 4)).values())
 
     return python_rows(
         docs, rows_of,
@@ -4936,13 +4972,9 @@ def q_wav_resample_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "wav_frame_features_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
-s AS (SELECT doc_id, list_transform(codes, c -> (c - 64) * 256) AS smp FROM a),
+    f"""
+{_CODES_CTE}
+{_PCM16_SAMPLES}
 f AS (
   SELECT doc_id, smp, COALESCE(len(smp), 0) AS n,
          GREATEST(1, CAST(ceil(COALESCE(len(smp), 0) / 64.0) AS BIGINT)) AS nf
@@ -4987,14 +5019,7 @@ def q_wav_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         codes = ascii_codes(text)
         payload = encode_wav(8000, [(c - 64) * 256 for c in codes])
         for fr in wav_frame_features(payload, frame_len=64):
-            yield (
-                doc_id,
-                fr["frame_idx"],
-                fr["n_samples"],
-                fr["rms"],
-                fr["peak"],
-                fr["zero_crossings"],
-            )
+            yield (doc_id, *fr.values())
 
     return python_rows(
         docs, rows_of,
@@ -5003,43 +5028,7 @@ def q_wav_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).transform(sort_after_python, "doc_id", "frame_idx")
 
 
-@register(
-    "wav_multichannel_features_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
-b AS (SELECT doc_id, codes, COALESCE(len(codes),0) // 2 AS fl FROM a),
-s AS (SELECT doc_id, fl,
-  list_transform(list_filter(codes, (x,i) -> i % 2 = 1 AND i <= 2*fl),
-                 c -> (c - 64)/128.0) AS c0,
-  list_transform(list_filter(codes, (x,i) -> i % 2 = 0 AND i <= 2*fl),
-                 c -> (c - 64)/128.0) AS c1
-  FROM b),
-u AS (
-  SELECT doc_id, 0 AS channel, c0 AS smp FROM s
-  UNION ALL SELECT doc_id, 1, c1 FROM s),
-f AS (
-  SELECT doc_id, channel,
-    COALESCE(len(smp), 0) AS n,
-    COALESCE(list_sum(smp), 0) AS sv,
-    COALESCE(list_sum(list_transform(smp, v -> v * v)), 0) AS sq,
-    COALESCE(list_max(list_transform(smp, v -> abs(v))), 0.0) AS pk,
-    COALESCE(len(list_filter(smp, (x, i) -> i > 1 AND smp[i-1] * x < 0)), 0) AS zc
-  FROM u)
-SELECT doc_id, CAST(channel AS INT) AS channel, CAST(n AS INTEGER) AS n_samples,
-  CASE WHEN n = 0 THEN 0.0
-       ELSE FLOOR(CAST(sv AS DOUBLE) / n * 10000.0 + 0.5) / 10000.0 END AS mean,
-  CASE WHEN n = 0 THEN 0.0
-       ELSE FLOOR(sqrt(CAST(sq AS DOUBLE) / n) * 10000.0 + 0.5) / 10000.0
-  END AS rms,
-  FLOOR(CAST(pk AS DOUBLE) * 10000.0 + 0.5) / 10000.0 AS peak,
-  CAST(zc AS INTEGER) AS zero_crossings
-FROM f ORDER BY doc_id, channel
-""",
-)
+@register("wav_multichannel_features_documents", _STEREO_CLIP_SQL)
 def q_wav_multichannel_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IEEE-FLOAT32 STEREO WAV round trip (round-10 verdict #7 — the
     codec gate narrows to genuinely compressed audio): each document's
@@ -5065,15 +5054,7 @@ def q_wav_multichannel_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         c1 = [(codes[2 * i + 1] - 64) / 128.0 for i in range(fl)]
         payload = encode_wav_ex(8000, [c0, c1])
         for ft in wav_multichannel_features(payload):
-            yield (
-                doc_id,
-                ft["channel"],
-                ft["n_samples"],
-                ft["mean"],
-                ft["rms"],
-                ft["peak"],
-                ft["zero_crossings"],
-            )
+            yield (doc_id, *ft.values())
 
     return python_rows(
         docs, rows_of,
@@ -5084,32 +5065,11 @@ def q_wav_multichannel_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "wav_pcm24_features_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
-s AS (SELECT doc_id,
-  list_transform(codes, c -> CAST((c - 64) * 4096 AS DOUBLE)) AS smp FROM a),
-f AS (
-  SELECT doc_id,
-    COALESCE(len(smp), 0) AS n,
-    COALESCE(list_sum(smp), 0) AS sv,
-    COALESCE(list_sum(list_transform(smp, v -> v * v)), 0) AS sq,
-    COALESCE(list_max(list_transform(smp, v -> abs(v))), 0.0) AS pk,
-    COALESCE(len(list_filter(smp, (x, i) -> i > 1 AND smp[i-1] * x < 0)), 0) AS zc
-  FROM s)
-SELECT doc_id, CAST(n AS INTEGER) AS n_samples,
-  CASE WHEN n = 0 THEN 0.0
-       ELSE FLOOR(CAST(sv AS DOUBLE) / n * 10000.0 + 0.5) / 10000.0 END AS mean,
-  CASE WHEN n = 0 THEN 0.0
-       ELSE FLOOR(sqrt(CAST(sq AS DOUBLE) / n) * 10000.0 + 0.5) / 10000.0
-  END AS rms,
-  CAST(pk AS INTEGER) AS peak,
-  CAST(zc AS INTEGER) AS zero_crossings
-FROM f ORDER BY doc_id
-""",
+    _clip_moments_sql(
+        """s AS (SELECT doc_id,
+  list_transform(codes, c -> CAST((c - 64) * 4096 AS DOUBLE)) AS smp FROM a),""",
+        per_channel=False,
+    ),
 )
 def q_wav_pcm24_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """24-BIT PACKED PCM WAV round trip (verdict-r11 #6 / verdict-r12 #1
@@ -5136,15 +5096,7 @@ def q_wav_pcm24_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         codes = ascii_codes(text)
         smp = [(c - 64) * 4096 for c in codes]
         payload = encode_wav_ex(8000, [smp], fmt=1, bits24=True)
-        ft = wav_pcm24_features(payload)
-        yield (
-            doc_id,
-            ft["n_samples"],
-            ft["mean"],
-            ft["rms"],
-            ft["peak"],
-            ft["zero_crossings"],
-        )
+        yield (doc_id, *wav_pcm24_features(payload).values())
 
     return python_rows(
         docs, rows_of,
@@ -5268,14 +5220,42 @@ def q_deep_melt_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).transform(sort_after_python, "doc_id", "path")
 
 
+def _sampled_frames_sql(max_frames: int) -> str:
+    """The codes CTE, then ``b`` (a document has 1 + L mod ``max_frames``
+    frames) and ``idx``, whose ``fis`` lists the k=4 evenly spread frame
+    indices ``multimodal.sample_frame_pixel_rows`` picks."""
+    return f"""{_CODES_CTE}
+b AS (SELECT doc_id, codes, COALESCE(len(codes),0) AS L,
+             1 + COALESCE(len(codes),0) % {max_frames} AS n FROM a),
+idx AS (SELECT doc_id, codes, L, n,
+  list_sort(list_distinct(list_transform(generate_series(0,3),
+    t -> CAST(FLOOR(CAST(t AS DOUBLE)*(n-1)/3) AS INTEGER)))) AS fis FROM b),"""
+
+
+def _mjpeg_frames_sql(max_frames: int) -> str:
+    """Oracle of the AVI and MP4 MJPEG rows: frame j is four constant
+    blocks valued 2 * codes[(4j + b) mod L] (128 when empty), so its
+    luma is their mean."""
+    return f"""
+{_sampled_frames_sql(max_frames)}
+sums AS (SELECT doc_id, n, fis,
+   list_transform(generate_series(0,{max_frames - 1}), j ->
+     CASE WHEN L=0 THEN 512.0
+          ELSE CAST(list_sum(list_transform(generate_series(0,3),
+            bb -> 2*codes[((4*j + bb) % L) + 1])) AS DOUBLE) END) AS fsum
+   FROM idx),
+e AS (SELECT doc_id, CAST(n AS INTEGER) AS n_frames, u.fi AS frame_idx,
+      fsum[u.fi + 1] AS s FROM sums, LATERAL unnest(fis) AS u(fi))
+SELECT doc_id, n_frames, frame_idx,
+  FLOOR(s/4*10000.0 + 0.5)/10000.0 AS frame_luma
+FROM e ORDER BY doc_id, frame_idx
+"""
+
+
 @register(
     "frame_pixel_stats_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
+    f"""
+{_CODES_CTE}
 b AS (SELECT doc_id, codes, COALESCE(len(codes),0) AS L,
              1 + COALESCE(len(codes),0) % 8 AS n FROM a),
 rs AS (
@@ -5347,17 +5327,8 @@ def q_frame_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "gif_frame_pixels_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
-b AS (SELECT doc_id, codes, COALESCE(len(codes),0) AS L,
-             1 + COALESCE(len(codes),0) % 4 AS n FROM a),
-idx AS (SELECT doc_id, codes, L, n,
-  list_sort(list_distinct(list_transform(generate_series(0,3),
-    t -> CAST(FLOOR(CAST(t AS DOUBLE)*(n-1)/3) AS INTEGER)))) AS fis FROM b),
+    f"""
+{_sampled_frames_sql(4)}
 sums AS (SELECT doc_id, n, fis,
    list_transform(generate_series(0,3), j ->
      CASE WHEN L=0 THEN 0 ELSE COALESCE(list_sum(list_transform(generate_series(0,63),
@@ -5409,32 +5380,7 @@ def q_gif_frame_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).transform(sort_after_python, "doc_id", "frame_idx")
 
 
-@register(
-    "avi_mjpeg_frames_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
-b AS (SELECT doc_id, codes, COALESCE(len(codes),0) AS L,
-             1 + COALESCE(len(codes),0) % 4 AS n FROM a),
-idx AS (SELECT doc_id, codes, L, n,
-  list_sort(list_distinct(list_transform(generate_series(0,3),
-    t -> CAST(FLOOR(CAST(t AS DOUBLE)*(n-1)/3) AS INTEGER)))) AS fis FROM b),
-sums AS (SELECT doc_id, n, fis,
-   list_transform(generate_series(0,3), j ->
-     CASE WHEN L=0 THEN 512.0
-          ELSE CAST(list_sum(list_transform(generate_series(0,3),
-            bb -> 2*codes[((4*j + bb) % L) + 1])) AS DOUBLE) END) AS fsum
-   FROM idx),
-e AS (SELECT doc_id, CAST(n AS INTEGER) AS n_frames, u.fi AS frame_idx,
-      fsum[u.fi + 1] AS s FROM sums, LATERAL unnest(fis) AS u(fi))
-SELECT doc_id, n_frames, frame_idx,
-  FLOOR(s/4*10000.0 + 0.5)/10000.0 AS frame_luma
-FROM e ORDER BY doc_id, frame_idx
-""",
-)
+@register("avi_mjpeg_frames_documents", _mjpeg_frames_sql(4))
 def q_avi_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AVI/MJPEG container round trip, hash-oracled (round 13 — the
     'true video container' gate narrows to inter-frame codecs): each
@@ -5457,10 +5403,9 @@ def q_avi_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo_analyser_spark.operators.multimodal import (
         sample_frame_pixel_rows,
     )
+    from mongo_analyser_spark.operators.pixels import four_blocks
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    blocks = [(0, 0), (8, 0), (0, 8), (8, 8)]
 
     def rows_of(doc_id, text):
         codes = ascii_codes(text)
@@ -5468,13 +5413,8 @@ def q_avi_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         n = 1 + ln % 4
         jpgs = []
         for j in range(n):
-            px = bytearray(256)
-            for b, (ox, oy) in enumerate(blocks):
-                v = 2 * codes[(4 * j + b) % ln] if ln else 128
-                for yy in range(8):
-                    base = (oy + yy) * 16 + ox
-                    px[base : base + 8] = bytes([v]) * 8
-            jpgs.append(encode_jpeg(16, 16, 1, bytes(px)))
+            vals = [2 * codes[(4 * j + b) % ln] if ln else 128 for b in range(4)]
+            jpgs.append(encode_jpeg(16, 16, 1, bytes(four_blocks(vals))))
         payload = encode_avi_mjpeg(16, 16, jpgs)
         for nf, fi, luma in sample_frame_pixel_rows(payload, 4):
             yield (doc_id, nf, fi, luma)
@@ -5485,14 +5425,10 @@ def q_avi_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).transform(sort_after_python, "doc_id", "frame_idx")
 
 
-@register(
-    "jpeg12_pixel_stats_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
+#: the three 12-bit JPEG rows' oracle: four constant blocks valued
+#: 32 * codes[b mod L] (2048 when empty)
+_JPEG12_SQL = f"""
+{_CODES_CTE}
 b AS (SELECT doc_id, codes, COALESCE(len(codes),0) AS L FROM a),
 v AS (SELECT doc_id, list_transform(generate_series(0,3), bb ->
         CASE WHEN L=0 THEN 2048 ELSE 32*codes[(bb % L) + 1] END) AS vals
@@ -5501,8 +5437,27 @@ SELECT doc_id,
   FLOOR(CAST(list_sum(vals) AS DOUBLE)/4*10000.0 + 0.5)/10000.0 AS mean_val,
   CAST(list_max(vals) AS INTEGER) AS max_val
 FROM v ORDER BY doc_id
-""",
-)
+"""
+
+
+def _gradient_sql(extra: str = "") -> str:
+    """Oracle of the gradient pixel rows (``pixels.gradient_gray`` of the
+    first code, 128 when empty): mean_val and max_val, after ``extra``
+    output columns."""
+    return f"""
+{_CODES_CTE}
+b AS (SELECT doc_id, codes, COALESCE(len(codes),0) AS L FROM a),
+v AS (SELECT doc_id, list_transform(generate_series(0,255), i ->
+        ((CASE WHEN L=0 THEN 128 ELSE codes[1] END) + 3*(i%16) + 5*(i//16)) % 256
+      ) AS vals FROM b)
+SELECT doc_id,{extra}
+  FLOOR(CAST(list_sum(vals) AS DOUBLE)/256*10000.0 + 0.5)/10000.0 AS mean_val,
+  CAST(list_max(vals) AS INTEGER) AS max_val
+FROM v ORDER BY doc_id
+"""
+
+
+@register("jpeg12_pixel_stats_documents", _JPEG12_SQL)
 def q_jpeg12_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """12-BIT JPEG round trip, hash-oracled (round 13 — the precision
     half of the JPEG gate closes; arithmetic coding remains): each
@@ -5515,55 +5470,29 @@ def q_jpeg12_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizer, so the oracle states the mean and max directly from the
     codes; any bit lost in the wide DQT parse, the 12-bit categories,
     or the 2048-shift IDCT breaks the hash."""
-    import math
-
     from mongo_analyser_spark.operators.jpeg import (
         decode_jpeg_ex,
         encode_jpeg12,
     )
+    from mongo_analyser_spark.operators.pixels import four_blocks, mean_max
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    blocks = [(0, 0), (8, 0), (0, 8), (8, 8)]
 
     def rows_of(doc_id, text):
         codes = ascii_codes(text)
         ln = len(codes)
-        px = [0] * 256
-        for b, (ox, oy) in enumerate(blocks):
-            v = 32 * codes[b % ln] if ln else 2048
-            for yy in range(8):
-                base = (oy + yy) * 16 + ox
-                px[base : base + 8] = [v] * 8
+        px = four_blocks([32 * codes[b % ln] if ln else 2048 for b in range(4)])
         _w, _h, _ch, _mx, out = decode_jpeg_ex(
             encode_jpeg12(16, 16, 1, px)
         )
-        mean = math.floor(sum(out) / 256 * 10000.0 + 0.5) / 10000.0
-        yield (doc_id, mean, max(out))
+        yield (doc_id, *mean_max(out))
 
     return python_rows(
         docs, rows_of, "doc_id long, mean_val double, max_val int"
     ).transform(sort_after_python, "doc_id")
 
 
-@register(
-    "jpeg12p_pixel_stats_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
-b AS (SELECT doc_id, codes, COALESCE(len(codes),0) AS L FROM a),
-v AS (SELECT doc_id, list_transform(generate_series(0,3), bb ->
-        CASE WHEN L=0 THEN 2048 ELSE 32*codes[(bb % L) + 1] END) AS vals
-      FROM b)
-SELECT doc_id,
-  FLOOR(CAST(list_sum(vals) AS DOUBLE)/4*10000.0 + 0.5)/10000.0 AS mean_val,
-  CAST(list_max(vals) AS INTEGER) AS max_val
-FROM v ORDER BY doc_id
-""",
-)
+@register("jpeg12p_pixel_stats_documents", _JPEG12_SQL)
 def q_jpeg12p_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """12-BIT PROGRESSIVE JPEG round trip, hash-oracled (round 15 — the
     last non-arithmetic JPEG gate closes): the SAME even constant-block
@@ -5578,55 +5507,29 @@ def q_jpeg12p_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     progressive path is not a weaker twin (the deep_melt_arrow
     precedent). The JPEG gate is now exactly arithmetic coding +
     12-bit subsampling."""
-    import math
-
     from mongo_analyser_spark.operators.jpeg import (
         decode_jpeg_ex,
         encode_jpeg12_progressive,
     )
+    from mongo_analyser_spark.operators.pixels import four_blocks, mean_max
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    blocks = [(0, 0), (8, 0), (0, 8), (8, 8)]
 
     def rows_of(doc_id, text):
         codes = ascii_codes(text)
         ln = len(codes)
-        px = [0] * 256
-        for b, (ox, oy) in enumerate(blocks):
-            v = 32 * codes[b % ln] if ln else 2048
-            for yy in range(8):
-                base = (oy + yy) * 16 + ox
-                px[base : base + 8] = [v] * 8
+        px = four_blocks([32 * codes[b % ln] if ln else 2048 for b in range(4)])
         _w, _h, _ch, _mx, out = decode_jpeg_ex(
             encode_jpeg12_progressive(16, 16, 1, px)
         )
-        mean = math.floor(sum(out) / 256 * 10000.0 + 0.5) / 10000.0
-        yield (doc_id, mean, max(out))
+        yield (doc_id, *mean_max(out))
 
     return python_rows(
         docs, rows_of, "doc_id long, mean_val double, max_val int"
     ).transform(sort_after_python, "doc_id")
 
 
-@register(
-    "jpeg12s_pixel_stats_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
-b AS (SELECT doc_id, codes, COALESCE(len(codes),0) AS L FROM a),
-v AS (SELECT doc_id, list_transform(generate_series(0,3), bb ->
-        CASE WHEN L=0 THEN 2048 ELSE 32*codes[(bb % L) + 1] END) AS vals
-      FROM b)
-SELECT doc_id,
-  FLOOR(CAST(list_sum(vals) AS DOUBLE)/4*10000.0 + 0.5)/10000.0 AS mean_val,
-  CAST(list_max(vals) AS INTEGER) AS max_val
-FROM v ORDER BY doc_id
-""",
-)
+@register("jpeg12s_pixel_stats_documents", _JPEG12_SQL)
 def q_jpeg12s_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """12-BIT SUBSAMPLED (4:2:0) JPEG round trip, hash-oracled
     (round 15 — the JPEG gate narrows to exactly arithmetic coding):
@@ -5640,57 +5543,31 @@ def q_jpeg12s_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     subsampled geometry, or the 2048-centered color convert breaks the
     hash. The mean over the 768 RGB samples equals the mean over the 4
     block values because all three channels carry v."""
-    import math
-
     from mongo_analyser_spark.operators.jpeg import (
         decode_jpeg_ex,
         encode_jpeg12,
     )
+    from mongo_analyser_spark.operators.pixels import four_blocks, mean_max
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    blocks = [(0, 0), (8, 0), (0, 8), (8, 8)]
 
     def rows_of(doc_id, text):
         codes = ascii_codes(text)
         ln = len(codes)
-        px = [0] * (256 * 3)
-        for b, (ox, oy) in enumerate(blocks):
-            v = 32 * codes[b % ln] if ln else 2048
-            for yy in range(8):
-                base = ((oy + yy) * 16 + ox) * 3
-                px[base : base + 24] = [v] * 24
+        px = four_blocks(
+            [32 * codes[b % ln] if ln else 2048 for b in range(4)], channels=3
+        )
         _w, _h, _ch, _mx, out = decode_jpeg_ex(
             encode_jpeg12(16, 16, 3, px, subsample=True)
         )
-        mean = (
-            math.floor(sum(out) / len(out) * 10000.0 + 0.5) / 10000.0
-        )
-        yield (doc_id, mean, max(out))
+        yield (doc_id, *mean_max(out))
 
     return python_rows(
         docs, rows_of, "doc_id long, mean_val double, max_val int"
     ).transform(sort_after_python, "doc_id")
 
 
-@register(
-    "tiff_pixel_stats_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
-b AS (SELECT doc_id, codes, COALESCE(len(codes),0) AS L FROM a),
-v AS (SELECT doc_id, list_transform(generate_series(0,255), i ->
-        ((CASE WHEN L=0 THEN 128 ELSE codes[1] END) + 3*(i%16) + 5*(i//16)) % 256
-      ) AS vals FROM b)
-SELECT doc_id,
-  FLOOR(CAST(list_sum(vals) AS DOUBLE)/256*10000.0 + 0.5)/10000.0 AS mean_val,
-  CAST(list_max(vals) AS INTEGER) AS max_val
-FROM v ORDER BY doc_id
-""",
-)
+@register("tiff_pixel_stats_documents", _gradient_sql())
 def q_tiff_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Baseline TIFF round trip, hash-oracled (round 15 — a new image
     container family: TIFF 6.0, operators/tiff.py): each document's
@@ -5704,9 +5581,11 @@ def q_tiff_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     states the stats straight from the law; any bit lost in the IFD
     walk, either LZW early-change boundary, a PackBits run, or the
     predictor accumulation breaks the hash."""
-    import math
-
-    from mongo_analyser_spark.operators.pixels import decode_pixels
+    from mongo_analyser_spark.operators.pixels import (
+        decode_pixels,
+        gradient_gray,
+        mean_max,
+    )
     from mongo_analyser_spark.operators.tiff import encode_tiff
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -5716,25 +5595,16 @@ def q_tiff_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     def rows_of(doc_id, text):
         codes = ascii_codes(text)
         ln = len(codes)
-        a = codes[0] if ln else 128
-        px = bytes(
-            (a + 3 * x + 5 * y) % 256
-            for y in range(16)
-            for x in range(16)
-        )
         comp = comps[ln % 3]
         payload = encode_tiff(
-            16, 16, 1, px,
+            16, 16, 1, gradient_gray(codes[0] if ln else 128),
             compression=comp,
             byte_order="II" if ln % 2 == 0 else "MM",
             predictor=(comp == "lzw"),
             rows_per_strip=4,
         )
         _w, _h, _ch, out = decode_pixels(payload)
-        mean = (
-            math.floor(sum(out) / 256 * 10000.0 + 0.5) / 10000.0
-        )
-        yield (doc_id, mean, max(out))
+        yield (doc_id, *mean_max(out))
 
     return python_rows(
         docs, rows_of, "doc_id long, mean_val double, max_val int"
@@ -5889,12 +5759,8 @@ def q_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "url_canonical_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
+    f"""
+{_CODES_CTE}
 b AS (SELECT doc_id,
         COALESCE(len(codes),0) % 6 AS v,
         CAST(CASE WHEN COALESCE(len(codes),0)=0 THEN 0 ELSE codes[1] END
@@ -5955,38 +5821,7 @@ def q_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).transform(sort_after_python, "doc_id")
 
 
-@register(
-    "au_audio_features_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
-s AS (SELECT doc_id, list_transform(codes, c ->
-        CASE WHEN ((255 - c) & 128) = 128
-             THEN 132 - (((255 - c) & 15) * 8 + 132) * (1 << (((255 - c) >> 4) & 7))
-             ELSE (((255 - c) & 15) * 8 + 132) * (1 << (((255 - c) >> 4) & 7)) - 132
-        END) AS smp FROM a),
-f AS (
-  SELECT doc_id,
-    COALESCE(len(smp), 0) AS n,
-    COALESCE(list_sum(list_transform(smp, v -> v * v)), 0) AS sum_sq,
-    COALESCE(list_max(list_transform(smp, v -> abs(v))), 0) AS peak,
-    COALESCE(len(list_filter(smp, (x, i) -> i > 1 AND smp[i-1] * x < 0)), 0) AS zc
-  FROM s)
-SELECT doc_id,
-  CAST(8000 AS INTEGER) AS sample_rate,
-  CAST(n AS INTEGER) AS n_samples,
-  FLOOR(CAST(n AS DOUBLE) / 8000.0 * 10000.0 + 0.5) / 10000.0 AS duration_s,
-  CASE WHEN n = 0 THEN 0.0
-       ELSE FLOOR(sqrt(CAST(sum_sq AS DOUBLE) / n) * 10000.0 + 0.5) / 10000.0
-  END AS rms,
-  CAST(peak AS INTEGER) AS peak,
-  CAST(zc AS INTEGER) AS zero_crossings
-FROM f ORDER BY doc_id
-""",
-)
+@register("au_audio_features_documents", _MULAW_CLIP_SQL)
 def q_au_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sun AU (.snd) mu-law round trip against the SAME oracle as
     g711_audio_features_documents (round 15 — the RFC 2046 audio/basic
@@ -5996,18 +5831,14 @@ def q_au_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoded by decode_au's shared-compander branch. A bit lost in the
     six-word header parse, the offset skip, or the compander breaks
     the hash."""
-    import math
-
     from mongo_analyser_spark.operators.audio import (
+        clip_features,
         decode_au,
         encode_au,
         mulaw_expand,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def q4(x):
-        return math.floor(x * 10000.0 + 0.5) / 10000.0
 
     def rows_of(doc_id, text):
         codes = ascii_codes(text)
@@ -6017,17 +5848,8 @@ def q_au_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                       annotation=b"corpus")
         )
         smp = [int(round(v * 32768.0)) for v in out[0]]
-        n = len(smp)
-        sum_sq = sum(v * v for v in smp)
-        peak = max((abs(v) for v in smp), default=0)
-        zc = sum(
-            1 for i in range(1, n) if smp[i - 1] * smp[i] < 0
-        )
-        yield (
-            doc_id, rate, n, q4(n / 8000.0),
-            q4(math.sqrt(sum_sq / n)) if n else 0.0,
-            peak, zc,
-        )
+        n, _mean, rms, peak, zc = clip_features(smp)
+        yield doc_id, rate, n, q4(n / 8000.0), rms, peak, zc
 
     return python_rows(
         docs, rows_of,
@@ -6038,12 +5860,8 @@ def q_au_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "media_header_matrix_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
+    f"""
+{_CODES_CTE}
 b AS (SELECT doc_id,
         COALESCE(len(codes),0) % 6 AS v,
         CASE WHEN COALESCE(len(codes),0)=0 THEN 0 ELSE codes[1] END AS a0
@@ -6124,25 +5942,7 @@ def q_media_header_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).transform(sort_after_python, "doc_id")
 
 
-@register(
-    "ico_pixel_stats_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
-b AS (SELECT doc_id, codes, COALESCE(len(codes),0) AS L FROM a),
-v AS (SELECT doc_id, list_transform(generate_series(0,255), i ->
-        ((CASE WHEN L=0 THEN 128 ELSE codes[1] END) + 3*(i%16) + 5*(i//16)) % 256
-      ) AS vals FROM b)
-SELECT doc_id,
-  2 AS n_members,
-  FLOOR(CAST(list_sum(vals) AS DOUBLE)/256*10000.0 + 0.5)/10000.0 AS mean_val,
-  CAST(list_max(vals) AS INTEGER) AS max_val
-FROM v ORDER BY doc_id
-""",
-)
+@register("ico_pixel_stats_documents", _gradient_sql("\n  2 AS n_members,"))
 def q_ico_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ICO/favicon round trip, hash-oracled (round 15 — the crawl's
     image wrapper, operators/pixels.decode_ico): each document becomes
@@ -6151,25 +5951,19 @@ def q_ico_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     convention) and decode it exactly — the SAME gradient oracle as
     the TIFF and netpbm rows, with the member count proving the
     directory walk."""
-    import math
-
     from mongo_analyser_spark.operators.pixels import (
         decode_ico,
         encode_ico,
         encode_png,
+        gradient_gray,
+        mean_max,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
     def rows_of(doc_id, text):
         codes = ascii_codes(text)
-        ln = len(codes)
-        a = codes[0] if ln else 128
-        gray = bytes(
-            (a + 3 * x + 5 * y) % 256
-            for y in range(16)
-            for x in range(16)
-        )
+        gray = gradient_gray(codes[0] if codes else 128)
         ico = encode_ico(
             [
                 encode_png(8, 8, 1, bytes(64)),
@@ -6178,10 +5972,7 @@ def q_ico_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         count, best, imgs = decode_ico(ico)
         _w, _h, _c, out = imgs[best]
-        mean = (
-            math.floor(sum(out) / 256 * 10000.0 + 0.5) / 10000.0
-        )
-        yield (doc_id, count, mean, max(out))
+        yield (doc_id, count, *mean_max(out))
 
     return python_rows(
         docs, rows_of,
@@ -6189,43 +5980,7 @@ def q_ico_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).transform(sort_after_python, "doc_id")
 
 
-@register(
-    "aiff_audio_features_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
-b AS (SELECT doc_id, codes, COALESCE(len(codes),0) // 2 AS fl FROM a),
-s AS (SELECT doc_id, fl,
-  list_transform(list_filter(codes, (x,i) -> i % 2 = 1 AND i <= 2*fl),
-                 c -> (c - 64)/128.0) AS c0,
-  list_transform(list_filter(codes, (x,i) -> i % 2 = 0 AND i <= 2*fl),
-                 c -> (c - 64)/128.0) AS c1
-  FROM b),
-u AS (
-  SELECT doc_id, 0 AS channel, c0 AS smp FROM s
-  UNION ALL SELECT doc_id, 1, c1 FROM s),
-f AS (
-  SELECT doc_id, channel,
-    COALESCE(len(smp), 0) AS n,
-    COALESCE(list_sum(smp), 0) AS sv,
-    COALESCE(list_sum(list_transform(smp, v -> v * v)), 0) AS sq,
-    COALESCE(list_max(list_transform(smp, v -> abs(v))), 0.0) AS pk,
-    COALESCE(len(list_filter(smp, (x, i) -> i > 1 AND smp[i-1] * x < 0)), 0) AS zc
-  FROM u)
-SELECT doc_id, CAST(channel AS INT) AS channel, CAST(n AS INTEGER) AS n_samples,
-  CASE WHEN n = 0 THEN 0.0
-       ELSE FLOOR(CAST(sv AS DOUBLE) / n * 10000.0 + 0.5) / 10000.0 END AS mean,
-  CASE WHEN n = 0 THEN 0.0
-       ELSE FLOOR(sqrt(CAST(sq AS DOUBLE) / n) * 10000.0 + 0.5) / 10000.0
-  END AS rms,
-  FLOOR(CAST(pk AS DOUBLE) * 10000.0 + 0.5) / 10000.0 AS peak,
-  CAST(zc AS INTEGER) AS zero_crossings
-FROM f ORDER BY doc_id, channel
-""",
-)
+@register("aiff_audio_features_documents", _STEREO_CLIP_SQL)
 def q_aiff_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AIFF stereo round trip against the SAME oracle as
     wav_multichannel_features_documents (round 15 — the
@@ -6237,43 +5992,20 @@ def q_aiff_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (c-64)/128, so every feature stays order-free exact. A bit lost in
     the COMM extended-float parse, the big-endian frame de-interleave,
     or the SSND offset handling breaks the hash."""
-    import math
-
     from mongo_analyser_spark.operators.audio import (
-        decode_aiff,
+        audio_multichannel_features,
         encode_aiff,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def q4(x):
-        return math.floor(x * 10000.0 + 0.5) / 10000.0
 
     def rows_of(doc_id, text):
         codes = ascii_codes(text)
         fl = len(codes) // 2
         ch0 = [(codes[2 * i] - 64) * 256 for i in range(fl)]
         ch1 = [(codes[2 * i + 1] - 64) * 256 for i in range(fl)]
-        _rate, out = decode_aiff(
-            encode_aiff(8000, [ch0, ch1])
-        )
-        for channel, smp in enumerate(out):
-            n = len(smp)
-            if n == 0:
-                yield (doc_id, channel, 0, 0.0, 0.0, 0.0, 0)
-                continue
-            sv = sum(smp)
-            sq = sum(v * v for v in smp)
-            pk = max(abs(v) for v in smp)
-            zc = sum(
-                1
-                for i in range(1, n)
-                if smp[i - 1] * smp[i] < 0
-            )
-            yield (
-                doc_id, channel, n, q4(sv / n),
-                q4(math.sqrt(sq / n)), q4(pk), zc,
-            )
+        for ft in audio_multichannel_features(encode_aiff(8000, [ch0, ch1])):
+            yield (doc_id, *ft.values())
 
     return python_rows(
         docs, rows_of,
@@ -6284,12 +6016,8 @@ def q_aiff_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "id3_metadata_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
+    f"""
+{_CODES_CTE}
 b AS (SELECT doc_id,
         COALESCE(len(codes),0) % 3 AS v,
         CASE WHEN COALESCE(len(codes),0)=0 THEN 0 ELSE codes[1] END AS a0
@@ -6354,12 +6082,8 @@ def q_id3_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "exif_metadata_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
+    f"""
+{_CODES_CTE}
 b AS (SELECT doc_id,
         CASE WHEN COALESCE(len(codes),0)=0 THEN 0 ELSE codes[1] END AS a0
       FROM a)
@@ -6461,8 +6185,6 @@ def q_webdataset_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode_pixels — tar framing, sample assembly, and the image decode
     all sit under one oracle that states sample/file counts, the label,
     the text length, and the pixel mean straight from the source."""
-    import math
-
     from mongo_analyser_spark.operators.pixels import (
         decode_pixels,
         encode_pnm,
@@ -6496,9 +6218,7 @@ def q_webdataset_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_files = sum(len(s) - 1 for s in samples)
         first = samples[0]
         _w, _h, _c, out = decode_pixels(first["ppm"])
-        mean = (
-            math.floor(sum(out) / 16 * 10000.0 + 0.5) / 10000.0
-        )
+        mean = q4(sum(out) / 16)
         yield (
             doc_id,
             len(samples),
@@ -6515,24 +6235,7 @@ def q_webdataset_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).transform(sort_after_python, "doc_id")
 
 
-@register(
-    "pnm_pixel_stats_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
-b AS (SELECT doc_id, codes, COALESCE(len(codes),0) AS L FROM a),
-v AS (SELECT doc_id, list_transform(generate_series(0,255), i ->
-        ((CASE WHEN L=0 THEN 128 ELSE codes[1] END) + 3*(i%16) + 5*(i//16)) % 256
-      ) AS vals FROM b)
-SELECT doc_id,
-  FLOOR(CAST(list_sum(vals) AS DOUBLE)/256*10000.0 + 0.5)/10000.0 AS mean_val,
-  CAST(list_max(vals) AS INTEGER) AS max_val
-FROM v ORDER BY doc_id
-""",
-)
+@register("pnm_pixel_stats_documents", _gradient_sql())
 def q_pnm_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """netpbm round trip, hash-oracled (round 15 — the CV-corpus
     interchange formats, operators/pixels.decode_pnm): the SAME
@@ -6543,11 +6246,11 @@ def q_pnm_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     may be '#' (must not be eaten as a comment) and ASCII bodies with
     a comment line both decode through the production decode_pixels
     dispatch. Lossless, so the oracle states stats from the law."""
-    import math
-
     from mongo_analyser_spark.operators.pixels import (
         decode_pixels,
         encode_pnm,
+        gradient_gray,
+        mean_max,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -6555,12 +6258,7 @@ def q_pnm_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     def rows_of(doc_id, text):
         codes = ascii_codes(text)
         ln = len(codes)
-        a = codes[0] if ln else 128
-        gray = bytes(
-            (a + 3 * x + 5 * y) % 256
-            for y in range(16)
-            for x in range(16)
-        )
+        gray = gradient_gray(codes[0] if ln else 128)
         ascii_form, ch = [
             (False, 1), (True, 1), (False, 3), (True, 3),
         ][ln % 4]
@@ -6570,11 +6268,7 @@ def q_pnm_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         payload = encode_pnm(16, 16, ch, px, ascii_form)
         _w, _h, _c, out = decode_pixels(payload)
-        n = len(out)
-        mean = (
-            math.floor(sum(out) / n * 10000.0 + 0.5) / 10000.0
-        )
-        yield (doc_id, mean, max(out))
+        yield (doc_id, *mean_max(out))
 
     return python_rows(
         docs, rows_of, "doc_id long, mean_val double, max_val int"
@@ -6713,12 +6407,8 @@ def q_web_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sitemap_urls_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
+    f"""
+{_CODES_CTE}
 b AS (SELECT doc_id,
         1 + COALESCE(len(codes),0) % 5 AS n,
         CAST(CASE WHEN COALESCE(len(codes),0)=0 THEN 0 ELSE codes[1] END
@@ -6852,12 +6542,8 @@ def q_charset_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "robots_policy_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
+    f"""
+{_CODES_CTE}
 b AS (SELECT doc_id, COALESCE(len(codes),0) % 3 AS v FROM a)
 SELECT doc_id,
   CASE v WHEN 0 THEN FALSE WHEN 1 THEN FALSE ELSE TRUE END
@@ -6924,17 +6610,8 @@ def q_robots_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "y4m_frame_pixels_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
-b AS (SELECT doc_id, codes, COALESCE(len(codes),0) AS L,
-             1 + COALESCE(len(codes),0) % 4 AS n FROM a),
-idx AS (SELECT doc_id, codes, L, n,
-  list_sort(list_distinct(list_transform(generate_series(0,3),
-    t -> CAST(FLOOR(CAST(t AS DOUBLE)*(n-1)/3) AS INTEGER)))) AS fis FROM b),
+    f"""
+{_sampled_frames_sql(4)}
 e AS (SELECT doc_id, CAST(n AS INTEGER) AS n_frames, u.fi AS frame_idx,
         CASE WHEN L=0 THEN 128.0
              ELSE CAST(2*codes[(u.fi % L) + 1] AS DOUBLE) END AS frame_luma
@@ -6980,32 +6657,7 @@ def q_y4m_frame_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).transform(sort_after_python, "doc_id", "frame_idx")
 
 
-@register(
-    "mp4_jpeg_frames_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
-b AS (SELECT doc_id, codes, COALESCE(len(codes),0) AS L,
-             1 + COALESCE(len(codes),0) % 5 AS n FROM a),
-idx AS (SELECT doc_id, codes, L, n,
-  list_sort(list_distinct(list_transform(generate_series(0,3),
-    t -> CAST(FLOOR(CAST(t AS DOUBLE)*(n-1)/3) AS INTEGER)))) AS fis FROM b),
-sums AS (SELECT doc_id, n, fis,
-   list_transform(generate_series(0,4), j ->
-     CASE WHEN L=0 THEN 512.0
-          ELSE CAST(list_sum(list_transform(generate_series(0,3),
-            bb -> 2*codes[((4*j + bb) % L) + 1])) AS DOUBLE) END) AS fsum
-   FROM idx),
-e AS (SELECT doc_id, CAST(n AS INTEGER) AS n_frames, u.fi AS frame_idx,
-      fsum[u.fi + 1] AS s FROM sums, LATERAL unnest(fis) AS u(fi))
-SELECT doc_id, n_frames, frame_idx,
-  FLOOR(s/4*10000.0 + 0.5)/10000.0 AS frame_luma
-FROM e ORDER BY doc_id, frame_idx
-""",
-)
+@register("mp4_jpeg_frames_documents", _mjpeg_frames_sql(5))
 def q_mp4_jpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MP4 (ISO-BMFF) container round trip, hash-oracled (round 13 —
     the second true-video-container gate closes for intra-frame codecs):
@@ -7026,10 +6678,9 @@ def q_mp4_jpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo_analyser_spark.operators.multimodal import (
         sample_frame_pixel_rows,
     )
+    from mongo_analyser_spark.operators.pixels import four_blocks
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    blocks = [(0, 0), (8, 0), (0, 8), (8, 8)]
 
     def rows_of(doc_id, text):
         codes = ascii_codes(text)
@@ -7037,13 +6688,8 @@ def q_mp4_jpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         n = 1 + ln % 5
         jpgs = []
         for j in range(n):
-            px = bytearray(256)
-            for b, (ox, oy) in enumerate(blocks):
-                v = 2 * codes[(4 * j + b) % ln] if ln else 128
-                for yy in range(8):
-                    base = (oy + yy) * 16 + ox
-                    px[base : base + 8] = bytes([v]) * 8
-            jpgs.append(encode_jpeg(16, 16, 1, bytes(px)))
+            vals = [2 * codes[(4 * j + b) % ln] if ln else 128 for b in range(4)]
+            jpgs.append(encode_jpeg(16, 16, 1, bytes(four_blocks(vals))))
         payload = encode_mp4_mjpeg(16, 16, jpgs)
         for nf, fi, luma in sample_frame_pixel_rows(payload, 4):
             yield (doc_id, nf, fi, luma)
@@ -7054,34 +6700,7 @@ def q_mp4_jpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).transform(sort_after_python, "doc_id", "frame_idx")
 
 
-@register(
-    "flac_audio_features_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
-s AS (SELECT doc_id, list_transform(codes, c -> (c - 64) * 256) AS smp FROM a),
-f AS (
-  SELECT doc_id,
-    COALESCE(len(smp), 0) AS n,
-    COALESCE(list_sum(list_transform(smp, v -> v * v)), 0) AS sum_sq,
-    COALESCE(list_max(list_transform(smp, v -> abs(v))), 0) AS peak,
-    COALESCE(len(list_filter(smp, (x, i) -> i > 1 AND smp[i-1] * x < 0)), 0) AS zc
-  FROM s)
-SELECT doc_id,
-  CAST(8000 AS INTEGER) AS sample_rate,
-  CAST(n AS INTEGER) AS n_samples,
-  FLOOR(CAST(n AS DOUBLE) / 8000.0 * 10000.0 + 0.5) / 10000.0 AS duration_s,
-  CASE WHEN n = 0 THEN 0.0
-       ELSE FLOOR(sqrt(CAST(sum_sq AS DOUBLE) / n) * 10000.0 + 0.5) / 10000.0
-  END AS rms,
-  CAST(peak AS INTEGER) AS peak,
-  CAST(zc AS INTEGER) AS zero_crossings
-FROM f ORDER BY doc_id
-""",
-)
+@register("flac_audio_features_documents", _PCM16_CLIP_SQL)
 def q_flac_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL compressed-audio round trip, hash-oracled (round 13 — the
     lossless half of the MP3/AAC/Opus gate closes): the
@@ -7095,8 +6714,7 @@ def q_flac_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the predictor/Rice/framing round trip breaks the hash. Same
     100-TB shape as the WAV row: adaptive fanout, one fixed-width row
     per payload, no shuffle after the fanout."""
-    import math
-
+    from mongo_analyser_spark.operators.audio import clip_features
     from mongo_analyser_spark.operators.flac import decode_flac, encode_flac
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -7111,25 +6729,8 @@ def q_flac_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             s = out[0]
         else:
             rate, s = 8000, []
-        n = len(s)
-        sum_sq = sum(v * v for v in s)
-        peak = max((abs(v) for v in s), default=0)
-        zc = sum(
-            1 for i in range(1, n) if s[i - 1] * s[i] < 0
-        )
-        yield (
-            doc_id,
-            rate,
-            n,
-            math.floor(n / 8000.0 * 10000.0 + 0.5) / 10000.0,
-            math.floor(
-                math.sqrt(sum_sq / n) * 10000.0 + 0.5
-            ) / 10000.0
-            if n
-            else 0.0,
-            peak,
-            zc,
-        )
+        n, _mean, rms, peak, zc = clip_features(s)
+        yield doc_id, rate, n, q4(n / 8000.0), rms, peak, zc
 
     return python_rows(
         docs, rows_of,
@@ -7138,38 +6739,7 @@ def q_flac_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).transform(sort_after_python, "doc_id")
 
 
-@register(
-    "g711_audio_features_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
-s AS (SELECT doc_id, list_transform(codes, c ->
-        CASE WHEN ((255 - c) & 128) = 128
-             THEN 132 - (((255 - c) & 15) * 8 + 132) * (1 << (((255 - c) >> 4) & 7))
-             ELSE (((255 - c) & 15) * 8 + 132) * (1 << (((255 - c) >> 4) & 7)) - 132
-        END) AS smp FROM a),
-f AS (
-  SELECT doc_id,
-    COALESCE(len(smp), 0) AS n,
-    COALESCE(list_sum(list_transform(smp, v -> v * v)), 0) AS sum_sq,
-    COALESCE(list_max(list_transform(smp, v -> abs(v))), 0) AS peak,
-    COALESCE(len(list_filter(smp, (x, i) -> i > 1 AND smp[i-1] * x < 0)), 0) AS zc
-  FROM s)
-SELECT doc_id,
-  CAST(8000 AS INTEGER) AS sample_rate,
-  CAST(n AS INTEGER) AS n_samples,
-  FLOOR(CAST(n AS DOUBLE) / 8000.0 * 10000.0 + 0.5) / 10000.0 AS duration_s,
-  CASE WHEN n = 0 THEN 0.0
-       ELSE FLOOR(sqrt(CAST(sum_sq AS DOUBLE) / n) * 10000.0 + 0.5) / 10000.0
-  END AS rms,
-  CAST(peak AS INTEGER) AS peak,
-  CAST(zc AS INTEGER) AS zero_crossings
-FROM f ORDER BY doc_id
-""",
-)
+@register("g711_audio_features_documents", _MULAW_CLIP_SQL)
 def q_g711_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G.711 telephony-audio round trip, hash-oracled (round 13): each
     document's codes become MU-LAW bytes — samples mulaw_expand(c) are
@@ -7181,9 +6751,8 @@ def q_g711_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     with ū = 255−c — so a bit lost anywhere in the compander, the fmt-7
     chunk walk, or the feature math breaks the hash. Same feature law
     and 100-TB shape as the wav/flac audio rows."""
-    import math
-
     from mongo_analyser_spark.operators.audio import (
+        clip_features,
         decode_wav_ex,
         encode_wav_g711,
         mulaw_expand,
@@ -7201,23 +6770,8 @@ def q_g711_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             s = [int(v) for v in chans[0]]
         else:
             s = []
-        n = len(s)
-        sum_sq = sum(v * v for v in s)
-        peak = max((abs(v) for v in s), default=0)
-        zc = sum(1 for i in range(1, n) if s[i - 1] * s[i] < 0)
-        yield (
-            doc_id,
-            8000,
-            n,
-            math.floor(n / 8000.0 * 10000.0 + 0.5) / 10000.0,
-            math.floor(
-                math.sqrt(sum_sq / n) * 10000.0 + 0.5
-            ) / 10000.0
-            if n
-            else 0.0,
-            peak,
-            zc,
-        )
+        n, _mean, rms, peak, zc = clip_features(s)
+        yield doc_id, 8000, n, q4(n / 8000.0), rms, peak, zc
 
     return python_rows(
         docs, rows_of,
@@ -7228,12 +6782,8 @@ def q_g711_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "webp_lossless_pixels_documents",
-    """
-WITH a AS (
-  SELECT doc_id,
-    list_filter(list_transform(string_split(COALESCE(text,''), ''), x -> ascii(x)),
-                c -> c BETWEEN 1 AND 127) AS codes
-  FROM documents),
+    f"""
+{_CODES_CTE}
 b AS (SELECT doc_id, codes, COALESCE(len(codes),0) AS L FROM a),
 ch AS (SELECT doc_id, L,
   list_transform(generate_series(0,15), i ->
@@ -7265,8 +6815,6 @@ def q_webp_lossless_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the prefix-code build, the bit packing, or the RIFF walk breaks
     the hash. Same 100-TB shape as the other codec rows: adaptive
     fanout, one Arrow stage, fixed-width output."""
-    import math
-
     from mongo_analyser_spark.operators.pixels import decode_pixels
     from mongo_analyser_spark.operators.vp8l import encode_webp_lossless
 
@@ -7291,14 +6839,7 @@ def q_webp_lossless_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
             max(out[4 * i + k] for i in range(16))
             for k in range(3)
         )
-        yield (
-            doc_id,
-            w2 * h2,
-            math.floor(rs / 16 * 10000.0 + 0.5) / 10000.0,
-            math.floor(gs / 16 * 10000.0 + 0.5) / 10000.0,
-            math.floor(bs / 16 * 10000.0 + 0.5) / 10000.0,
-            peak,
-        )
+        yield doc_id, w2 * h2, q4(rs / 16), q4(gs / 16), q4(bs / 16), peak
 
     return python_rows(
         docs, rows_of,
@@ -7393,9 +6934,8 @@ def q_adpcm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest-pinned in tests/test_audio.py with SNR bounds. Same feature
     law and 100-TB shape as the G.711/FLAC rows: adaptive fanout, one
     Arrow stage, fixed-width rows."""
-    import math
-
     from mongo_analyser_spark.operators.audio import (
+        clip_features,
         decode_wav_ex,
         encode_wav_ima_adpcm_stream,
     )
@@ -7412,24 +6952,8 @@ def q_adpcm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         _rate, chans = decode_wav_ex(
             encode_wav_ima_adpcm_stream(8000, 0, ln % 89, nibbles)
         )
-        s = [int(v) for v in chans[0]]
-        n = len(s)
-        sum_sq = sum(v * v for v in s)
-        peak = max(abs(v) for v in s)
-        zc = sum(
-            1 for i in range(1, n) if s[i - 1] * s[i] < 0
-        )
-        yield (
-            doc_id,
-            8000,
-            n,
-            math.floor(n / 8000.0 * 10000.0 + 0.5) / 10000.0,
-            math.floor(
-                math.sqrt(sum_sq / n) * 10000.0 + 0.5
-            ) / 10000.0,
-            peak,
-            zc,
-        )
+        n, _mean, rms, peak, zc = clip_features([int(v) for v in chans[0]])
+        yield doc_id, 8000, n, q4(n / 8000.0), rms, peak, zc
 
     return python_rows(
         docs, rows_of,

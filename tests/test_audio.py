@@ -232,7 +232,7 @@ def test_wav_pcm24_roundtrip_and_clamp():
 
     with pytest.raises(ValueError):
         decode_wav_ex(payload[:-1])
-    # feature helper: exact-integer sums, shared _q4 quantization
+    # feature helper: exact-integer sums, shared q4 quantization
     ft = wav_pcm24_features(encode_wav_ex(8000, [[4096, -4096, 4096]],
                                           fmt=1, bits24=True))
     assert ft["n_samples"] == 3
@@ -246,6 +246,29 @@ def test_wav_pcm24_roundtrip_and_clamp():
     ft0 = wav_pcm24_features(encode_wav_ex(8000, [[]], fmt=1, bits24=True))
     assert ft0 == {"n_samples": 0, "mean": 0.0, "rms": 0.0, "peak": 0,
                    "zero_crossings": 0}
+
+
+def test_clip_features_law():
+    """clip_features is the one statement of the clip law: (n, q4 mean,
+    q4 rms, raw peak, zero crossings), summed in sample order."""
+    from mongo_analyser_spark.operators.audio import clip_features
+
+    def q(x):
+        return math.floor(x * 10000.0 + 0.5) / 10000.0
+
+    ints = [(c - 64) * 256 for c in b"Hello, world! 0"]
+    floats = [(c - 64) / 128.0 for c in b"Hello"]
+    for s in (ints, floats, [5], [0, 3, -3, 0, -1]):
+        n = len(s)
+        assert clip_features(s) == (
+            n,
+            q(sum(s) / n),
+            q(math.sqrt(sum(v * v for v in s) / n)),
+            max(abs(v) for v in s),
+            sum(1 for i in range(1, n) if s[i - 1] * s[i] < 0),
+        )
+    assert clip_features([]) == (0, 0.0, 0.0, 0, 0)
+    assert clip_features([0, 3, -3, 0, -1])[4] == 1  # a zero breaks a crossing
 
 
 def test_wav_multichannel_features_exact():

@@ -7,8 +7,6 @@ bytes)."""
 
 from __future__ import annotations
 
-import os
-
 from mongo_analyser_spark.operators.fanout import (
     ascii_codes,
     fanout_for_python,
@@ -37,18 +35,44 @@ def test_fanout_skipped_when_scan_saturates(spark):
     assert out is df  # unchanged plan object — no shuffle added
 
 
-def test_fanout_env_overrides(spark):
+def test_fanout_follows_scan_layout(spark, tmp_path):
+    """The same rows written as one file (one scan task: the fanout
+    exchange is planned) and as two files per core (the scan already has
+    the default parallelism: no exchange) give identical rows through
+    one python_rows stage."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     par = spark.sparkContext.defaultParallelism
-    wide = spark.range(0, 1_000, 1, par).withColumnRenamed("id", "doc_id")
-    narrow = spark.range(0, 1_000, 1, 1).withColumnRenamed("id", "doc_id")
-    try:
-        os.environ["SPARK_GRAFT_FANOUT"] = "always"
-        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        assert fanout_for_python(wide).rdd.getNumPartitions() == n
-        os.environ["SPARK_GRAFT_FANOUT"] = "never"
-        assert fanout_for_python(narrow) is narrow
-    finally:
-        os.environ.pop("SPARK_GRAFT_FANOUT", None)
+    n_files = 2 * par
+    table = pa.table({
+        "doc_id": pa.array(range(250 * n_files), pa.int64()),
+        "text": [f"doc {i}" for i in range(250 * n_files)],
+    })
+    pq.write_table(table, str(tmp_path / "one.parquet"))
+    (tmp_path / "split.parquet").mkdir()
+    for i in range(n_files):
+        pq.write_table(
+            table.slice(250 * i, 250),
+            str(tmp_path / "split.parquet" / f"part-{i:03d}.parquet"),
+        )
+
+    def rows_of(doc_id, text):
+        yield (doc_id, len(text))
+
+    runs = {}
+    for layout in ("one", "split"):
+        df = spark.read.parquet(str(tmp_path / f"{layout}.parquet"))
+        out = python_rows(df, rows_of, "doc_id long, n int")
+        runs[layout] = (
+            df.rdd.getNumPartitions(),
+            num_exchanges(out, formatted_plan(out)),
+            sorted(tuple(r) for r in out.collect()),
+        )
+    assert runs["one"][0] == 1 and runs["one"][1] == 1
+    assert runs["split"][0] >= par and runs["split"][1] == 0
+    assert runs["one"][2] == runs["split"][2]
+    assert len(runs["one"][2]) == table.num_rows
 
 
 def test_fanout_preserves_rows(spark):

@@ -129,6 +129,24 @@ def test_pixel_stats_exact_means():
     assert stats["mean_luma"] == round((299 + 114) * 127.5 / 1000, 4)
 
 
+def test_block_gradient_and_mean_max_helpers():
+    """The synthesis laws the codec rows build their images from, and
+    the q4 mean / max they report."""
+    vals = [10, 20, 30, 40]
+    for ch in (1, 3):
+        px = pixels.four_blocks(vals, channels=ch)
+        assert len(px) == 256 * ch
+        for y in range(16):
+            for x in range(16):
+                v = vals[(x >= 8) + 2 * (y >= 8)]
+                assert px[(y * 16 + x) * ch : (y * 16 + x + 1) * ch] == [v] * ch
+    g = pixels.gradient_gray(250)
+    assert len(g) == 256 and g[0] == 250 and g[1] == 253 and g[16] == 255
+    assert g[17] == (250 + 3 + 5) % 256
+    assert pixels.mean_max([1, 2, 2]) == (1.6667, 2)
+    assert pixels.mean_max(bytearray([0, 255])) == (127.5, 255)
+
+
 def test_resize_nearest_halves_checkerboard():
     blob = pixels.encode_png(4, 4, 3, _checker_rgb(4, 4))
     out = pixels.resize_nearest(blob, 2, 2)

@@ -6,9 +6,7 @@ from mongo_analyser_spark.queries import ORACLES, QUERIES
 
 CHECK_WINDOW = 50
 
-# one representative per family that previously fell outside the window,
-# plus the round-5 flagships rotated in for round 6 (verdict-r5 #1) and
-# round-6's own additions (mid-round rotation, same policy)
+# one representative per query family, each inside the window
 MUST_BE_CHECKED = [
     "kmeans_step_embeddings",
     "tumbling_hourly_events",
@@ -17,98 +15,39 @@ MUST_BE_CHECKED = [
     "q1_pricing_summary",
     "dedup_minhash_pairs_documents",
     "convert_export_events",
-    # round-14 rotation (verdict-r13 #1): q21_waiting_suppliers /
-    # decontaminate_exact_ngram / multimodal_metadata /
-    # embedding_dedup_clusters / trailing_window_range / gopher_rules
-    # rotated to the tail with 8-12 recorded green appearances each and
-    # in-window family siblings (queries.py round-14 WINDOW note); the
-    # six round-13 codec rows take the slots (listed at the bottom)
-    # late-round-6 rotation: the round's own flagship additions
     "q2_min_cost_supplier",
-    # round-7 rotation (verdict-r6 #6): BPE flagships + the last three
-    # never-externally-checked families; session_window / late_data_drop /
-    # decontaminate(LSH) / simhash / join_semi moved out after their r6
-    # driver-green appearance (family siblings remain in-window)
-    # time_rollup_events: externally green r07+r08, rotated to the tail
-    # in round 9 (grouping_sets stays as the A12 family rep)
-    # round-8 rotation (verdict-r7 #2): HLL's deliberate rows-only
-    # appearance is on record in CORRECTNESS_r07; back to the tail, and
-    # the never-driver-seen round-7 flagship takes the slot
     "remove_repeated_spans_documents",
-    # round-10 rotation (verdict-r9 #8): the round-9 sketch/quality
-    # families in for external verification; the round-8 flagships
-    # (dsir_weights / dhash_pairs / pii_scrub_extended /
-    # bpe_token_counts_pretok) ride the tail after two recorded
-    # driver-green appearances each (r08 + r09)
     "countmin_user_counts_events",
     "bloom_decontaminate_documents",
     "kneser_ney_nll_documents",
     "char_entropy_documents",
-    # round-9 rotation: the new flagship families go in-window for
-    # CORRECTNESS_r09; schema_with_stats / text_stats / fingerprint /
-    # time_rollup ride the tail after recorded r08 green appearances
-    # (family siblings stay in-window — see queries.py note)
     "tfidf_cosine_pairs_documents",
     "pq_adc_rerank_topk_embeddings",
     "embedding_covariance_upper",
-    # late-round-10 rotation: the round's own flagship families in for
-    # external verification (pack_sequences / bpe_token_counts /
-    # salted_user_event_totals / similarity_topk / dynamic_schema_histogram
-    # ride the tail after three driver-green appearances each, family
-    # siblings staying in-window)
     "wav_audio_features_documents",
     "mg_heavy_hitters_events",
     "quantile_sketch_report_events",
     "theta_overlap_pairs_documents",
     "triangle_count_near_dup",
-    # round-11 rotation (verdict-r10 #3): every round-10 family gets its
-    # external hash-green appearance; the six removed names above it
-    # each rotated to the tail with 2+ recorded green appearances and an
-    # in-window family sibling (see queries.py WINDOW note)
     "scd2_event_type_events",
     "ewma_smooth_events",
     "ivfpq_topk_embeddings",
     "minhash_estimate_error_pairs",
     "frame_pixel_stats_documents",
-    # round-12 rotation (verdict-r11 #2): the round-11 graduations and
-    # L-axis re-plans get their first external hash-green record; the
-    # six rotated-out veterans each had 11 recorded green appearances
-    # and keep in-window family siblings (queries.py WINDOW note).
-    # ann_srp_topk_embeddings rotated out above: ivfpq + pq_adc stay.
     "pca_project_embeddings",
     "scd2_pit_join_events",
     "chunk_tokens_documents",
-    # round-13 rotation (verdict-r12 #7): the r12 Arrow-top-k graduation
-    # gets its external record, and the finished PCM24 row replaces the
-    # r12 stub. quantile_sketch_by_type / theta_difference rotated out
-    # above with 2 recorded green appearances each; their family
-    # siblings (quantile_sketch_report, theta_overlap) stay in-window.
     "similarity_topk_embeddings_arrow",
     "wav_pcm24_features_documents",
-    # round-13 flagship: the depth-8 unbounded melt; schema_drift_events
-    # rotated out above (2 recorded greens; type_histogram + this row
-    # keep the melt-variant family in-window)
     "deep_melt_documents",
-    # round-14 rotation (verdict-r13 #1): the six round-13 codec rows get
-    # their FIRST external driver record
     "flac_audio_features_documents",
     "webp_lossless_pixels_documents",
     "g711_audio_features_documents",
     "jpeg12_pixel_stats_documents",
     "avi_mjpeg_frames_documents",
     "mp4_jpeg_frames_documents",
-    # round-15 rotation (verdict-r14 #1): the four round-14 rows get
-    # their first external driver record; wav_frame_features /
-    # wav_multichannel / gif_frame_pixels / remove_repeated_ngrams
-    # rotated to the tail above with 3-4 recorded green appearances
-    # each and in-window family siblings (queries.py round-15 note)
     "adpcm_audio_features_documents",
     "deep_melt_arrow_documents",
-    # round-16 rotation (verdict-r15 #1): the two rows-only wide-tier
-    # rows rotated back to the tail after their one deliberate
-    # in-window appearance (CORRECTNESS_r15); the two round-15
-    # hash-oracled codec additions take the slots for their first
-    # external records
     "mp1_subband_features_documents",
     "jpeg12p_pixel_stats_documents",
 ]

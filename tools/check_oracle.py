@@ -7,6 +7,10 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...] [--skip name ...]
 --skip downgrades a query to rows-only (Spark still runs; the oracle is
 skipped) — for oracles that are impractical at a given scale, e.g. the
 recursive-CTE cluster closure at sf0.1.
+
+``check`` is the one compare loop: tools/driver_sim.py runs it under a
+bare session, and importing this module loads neither Spark nor the
+engine.
 """
 
 from __future__ import annotations
@@ -56,25 +60,18 @@ def oracle_views(sf_dir: str):
     return con
 
 
-def main() -> int:
-    args = sys.argv[1:]
-    skip: set[str] = set()
-    if "--skip" in args:
-        i = args.index("--skip")
-        skip = set(args[i + 1:])
-        args = args[:i]
-    only = set(args[1:])
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from mongo_analyser_spark import get_spark
+def check(spark, sf_dir: str, only=(), skip=()) -> tuple[int, list]:
+    """Run every registered query (or only those named in ``only``) on
+    ``spark`` and compare it with its DuckDB twin over ``sf_dir``: column
+    names, row count and the order-insensitive value multiset. Queries
+    named in ``skip`` and queries without an oracle are checked for a
+    non-empty result only. Each query is isolated, so one broken query
+    does not hide the status of the rest. Prints one line per query;
+    returns the number of queries run and the ``(name, problem)``
+    failures."""
     from mongo_analyser_spark.queries import ORACLE_GENERATORS, ORACLES, QUERIES
-    from mongo_analyser_spark.queries_pipeline import ORACLE_SF_DIR
 
-    sf_dir = args[0] if args else ORACLE_SF_DIR
-
-    spark = get_spark(cpus=8)
     con = oracle_views(sf_dir)
-
     failures = []
     n_ran = 0
     for name, fn in QUERIES.items():
@@ -82,8 +79,6 @@ def main() -> int:
             continue
         n_ran += 1
         t0 = time.time()
-        # per-query isolation (mirrors tools/driver_sim.py): one broken
-        # query must not hide the status of everything after it
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
@@ -128,6 +123,23 @@ def main() -> int:
         for p in problems:
             print(f"      {p}")
             failures.append((name, p))
+    return n_ran, failures
+
+
+def main() -> int:
+    args = sys.argv[1:]
+    skip: set[str] = set()
+    if "--skip" in args:
+        i = args.index("--skip")
+        skip = set(args[i + 1:])
+        args = args[:i]
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from mongo_analyser_spark import get_spark
+    from mongo_analyser_spark.queries_pipeline import ORACLE_SF_DIR
+
+    sf_dir = args[0] if args else ORACLE_SF_DIR
+    n_ran, failures = check(get_spark(cpus=8), sf_dir, set(args[1:]), skip)
     print(f"\n{n_ran - len(set(f[0] for f in failures))}/{n_ran} OK")
     return 1 if failures else 0
 

@@ -543,12 +543,11 @@ def main_manyfiles(names: list[str]) -> None:
     """Many-file layout probe (verdict-r12 #4): on a 64-file documents
     table with split-count-scale scan settings (maxPartitionBytes /
     openCostInBytes lowered so the toy corpus produces >= parallelism
-    splits, emulating the regime a 100-TB table is always in), each
-    Python-stage row is timed with the explicit-N fanout FORCED
-    (SPARK_GRAFT_FANOUT=always — the pre-round-13 behavior: an extra
-    full shuffle of the payloads) vs ADAPTIVE (auto — the shuffle is
-    skipped because the scan already saturates parallelism). Done =
-    auto within ±10% of always or faster, identical row counts."""
+    splits, emulating the regime a 100-TB table is always in), reports
+    the scan partition count against the default parallelism (the
+    fanout is skipped when the scan already saturates it) and times
+    each Python-stage row with its row count. The forced-fanout side of
+    this probe's round-13 A/B is recorded in SCALE.md."""
     from mongo_analyser_spark import get_spark
     from mongo_analyser_spark.queries import QUERIES
 
@@ -560,7 +559,6 @@ def main_manyfiles(names: list[str]) -> None:
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(256 * 1024))
     spark.conf.set("spark.sql.files.openCostInBytes", "0")
     names = names or MANYFILE_QUERIES
-    os.environ["SPARK_GRAFT_FANOUT"] = "always"
     for n in names:
         QUERIES[n](spark, many).collect()  # warm-up
     scan_parts = (
@@ -569,23 +567,16 @@ def main_manyfiles(names: list[str]) -> None:
     )
     par = spark.sparkContext.defaultParallelism
     print(f"scan partitions on many-file layout: {scan_parts} "
-          f"(defaultParallelism {par}; adaptive skip {'ACTIVE' if scan_parts >= par else 'INACTIVE'})")
-    print("| query | fanout=always (s) | fanout=auto (s) | auto/always | rows equal |")
-    print("|---|---|---|---|---|")
+          f"(defaultParallelism {par}; fanout {'skipped' if scan_parts >= par else 'taken'})")
+    print("| query | time (s) | rows |")
+    print("|---|---|---|")
     results = {}
     for n in names:
-        os.environ["SPARK_GRAFT_FANOUT"] = "always"
         t0 = time.time()
-        rows_a = QUERIES[n](spark, many).count()
-        ta = time.time() - t0
-        os.environ["SPARK_GRAFT_FANOUT"] = "auto"
-        t0 = time.time()
-        rows_b = QUERIES[n](spark, many).count()
-        tb = time.time() - t0
-        results[n] = {"always_s": round(ta, 3), "auto_s": round(tb, 3),
-                      "ratio": round(tb / ta, 2), "rows_equal": rows_a == rows_b}
-        print(f"| {n} | {ta:.2f} | {tb:.2f} | {tb / ta:.2f}× | {rows_a == rows_b} |")
-    os.environ.pop("SPARK_GRAFT_FANOUT", None)
+        rows = QUERIES[n](spark, many).count()
+        dt = time.time() - t0
+        results[n] = {"s": round(dt, 3), "rows": rows}
+        print(f"| {n} | {dt:.2f} | {rows} |")
     print(json.dumps({"metric": "manyfile_probe", "scan_partitions": scan_parts,
                       "default_parallelism": par, "results": results}))
 
