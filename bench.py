@@ -26,7 +26,11 @@ def main() -> None:
     # measures steady-state execution (the plan), not JIT/codegen
     # compilation and classloading — higher-order-function and Pandas-UDF
     # codepaths each have their own first-run cost a single warmup query
-    # doesn't touch
+    # doesn't touch. The warm-up's generated classes (~2,000 for the
+    # registry) stay compiled for the timed reps because get_spark sizes
+    # Spark's class cache to hold them (session.CODEGEN_CACHE_ENTRIES);
+    # at Spark's default of 100 they were evicted long before each row's
+    # reps, whose first rep then recompiled them.
     # a builder that returns non-DataFrame (e.g. a mid-edit stub whose
     # body is `pass`) must fail HERE with its NAME, not as an anonymous
     # AttributeError deep in collect() — BENCH_r12 rc 1 post-mortem

@@ -131,8 +131,9 @@ def bloom_filter_words(
     # densify: sorted (w, wv) entries -> map -> fixed-length array with
     # zero-filled gaps, all inside one single-row aggregate. The map is
     # STAGED (lazy localCheckpoint on the one-row frame — plan cut now,
-    # computed at first action, matching mg_summary; eager would fire a
-    # Spark job at construction time) before the
+    # the one-row aggregate computed at first action, matching
+    # mg_summary; under AQE the call still runs the upstream query
+    # stages, 2 jobs here, when it is made) before the
     # per-word transform indexes it: a single-use alias gets inlined by
     # CollapseProject, and interpreted HOFs would then rebuild
     # map_from_entries(sort_array(...)) once per word probe (the

@@ -132,13 +132,15 @@ def sort_after_python(df: DataFrame, *cols: str) -> DataFrame:
     cheap and the extra materialization job is pure loss (the r15
     finding on the recall-report family) — those rows use
     ``sort_plain``."""
-    # eager=False (r15 session-3): the eager form materialized at BUILD
-    # time, so composite consumers that take ``unsorted(...)`` (the
-    # recall reports) still paid the full checkpoint job for a frame
-    # they never execute. Lazily, the sort's range-sampling job is what
-    # materializes the partitions and the shuffle reuses them — same
-    # one-materialization guarantee for sorted consumers, zero cost for
-    # unwrapped ones.
+    # eager=False: the eager form also ran the checkpointed segment itself
+    # at BUILD time, so composite consumers that take ``unsorted(...)``
+    # (the recall reports) paid that job for a frame they never execute.
+    # Lazily, the sort's range-sampling job is what materializes the
+    # partitions and the shuffle reuses them — same one-materialization
+    # guarantee for sorted consumers. The lazy call is not free either:
+    # under AQE it still runs every query stage upstream of the
+    # checkpoint (shuffles, broadcasts) when it is called (measured:
+    # bloom_decontaminate_documents fires 5 jobs at this call).
     out = df.localCheckpoint(eager=False).orderBy(*cols)
     out._pre_sort_child = df
     return out

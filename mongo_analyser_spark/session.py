@@ -13,6 +13,13 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Spark's generated-class cache (static, default 100 entries). One warm
+# `curate` pass generates ~140 classes and the 201-row registry 1,981 at
+# sf0.01, so at 100 every repeated query recompiled its classes with
+# Janino and ran them cold in the JIT again. 4096 holds the whole
+# registry with headroom; SCALE.md has the measurement and its cost.
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def get_spark(app_name: str = "mongo_analyser_spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession.
@@ -23,6 +30,8 @@ def get_spark(app_name: str = "mongo_analyser_spark", cpus: int | None = None) -
       ~2-3× total executor cores (AQE coalesces the excess).
     * Arrow on — any Pandas-UDF path transfers columnar batches.
     * UTC session timezone — reference parity for datetime stats/export.
+    * A generated-class cache that holds the registry's classes, so a
+      repeated query reuses compiled code (CODEGEN_CACHE_ENTRIES).
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
@@ -38,10 +47,12 @@ def get_spark(app_name: str = "mongo_analyser_spark", cpus: int | None = None) -
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # the driver testdata stores events.ts as parquet TIMESTAMP(NANOS),
-        # which Spark refuses by default; read as long + convert in loader
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # some testdata generations store events.ts as parquet
+        # TIMESTAMP(NANOS), which Spark refuses by default; read as long +
+        # convert in loader
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # r15: DataFrame-debugging call-site capture (Spark 4, default
+        # DataFrame-debugging call-site capture (Spark 4, default
         # on) walks the Python stack and adds two py4j round trips for
         # EVERY DataFrame op — profiled at ~10 ms/op, ~45% of q1's
         # build phase. Error-message enrichment only (PySpark's own
