@@ -41,14 +41,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mongo_analyser_spark.operators.fanout import sort_after_python
+from mongo_analyser_spark.operators.fanout import input_bytes, sort_after_python
 
 from mongo_analyser_spark.functions.text import shingles
 from mongo_analyser_spark.operators.dsir import md5_bucket
 
 WORD_BITS = 32  # 32-bit filter words: 1<<31 fits signed 64-bit on both engines
-#: train-corpus size up to which the distinct-gram arrays are
-#: materialized once (``_grams_ckpt_open``)
+#: train-corpus size up to which ``bloom_ngram_contamination``
+#: materializes its distinct-gram arrays (~10× the text) once for the
+#: probe and the exact join: at sf0.1 that took bloom_decontaminate
+#: 1.66 → 1.13 s, while at corpus scale writing 10× the text through
+#: local disks loses to a second scan+shingle pass.
 GRAMS_CKPT_MAX_BYTES = 256 << 20
 
 
@@ -173,22 +176,6 @@ def bloom_member(gram: Column, words: Column, num_hashes: int, num_bits: int) ->
     )
 
 
-def _grams_ckpt_open(train_bytes: int | None) -> bool:
-    """Materialize-vs-recompute rule for the per-doc distinct-gram
-    arrays (r16, the dsir._feats_ckpt_open pattern): the TRAIN corpus
-    feeds TWO passes — the per-doc Bloom probe (array form) and the
-    exact-certification join (exploded form) — and each pass re-runs
-    the scan + n-gram zip_with build. Distinct 8-gram arrays are ~10×
-    the source text, so below the threshold one write+read of the
-    artifact beats the second scan+shingle pass (measured at sf0.1:
-    bloom_decontaminate 1.66 → 1.13 s min-of-7, rows identical), while
-    at corpus scale pushing 10× the text through disks loses to
-    recomputing the cheap projection — recompute stays the default
-    and the 100 TB-safe path. The crossover is
-    ``GRAMS_CKPT_MAX_BYTES``."""
-    return train_bytes is not None and train_bytes <= GRAMS_CKPT_MAX_BYTES
-
-
 def bloom_ngram_contamination(
     train: DataFrame,
     test: DataFrame,
@@ -197,7 +184,6 @@ def bloom_ngram_contamination(
     n: int = 8,
     num_hashes: int = 2,
     num_bits: int = 16384,
-    train_bytes: int | None = None,
 ) -> DataFrame:
     """(train_id, n_grams, n_bloom_hits, n_exact_hits, n_false_pos,
     bloom_flag): every training document's distinct-n-gram count, how
@@ -208,7 +194,11 @@ def bloom_ngram_contamination(
     pattern). The ``num_bits``/``num_hashes`` DEFAULTS ARE
     FIXTURE-SCALE — size production filters from the held-out gram
     count with ``bloom_bits_for`` and watch ``bloom_fill_fraction``
-    (fill > ~0.5 collapses the fp bound)."""
+    (fill > ~0.5 collapses the fp bound). Up to
+    ``GRAMS_CKPT_MAX_BYTES`` of train input (``input_bytes``) the
+    train-side gram arrays are materialized once; above it, the exact
+    join re-runs the scan+shingle pass."""
+    ckpt = input_bytes(train) <= GRAMS_CKPT_MAX_BYTES
     gram_src = F.explode(
         F.array_distinct(shingles(F.col(text_col), n))
     ).alias("g")
@@ -224,7 +214,6 @@ def bloom_ngram_contamination(
     # (no CSE across HOF consumers; the hof-inline-producer class).
     grams = F.array_distinct(shingles(F.col(text_col), n))
     gtab = train.select(F.col(id_col).alias("train_id"), grams.alias("__g"))
-    ckpt = _grams_ckpt_open(train_bytes)
     if ckpt:
         # ONE scan+shingle pass total: the probe (array form) and the
         # exact join (exploded form) both read the materialized arrays

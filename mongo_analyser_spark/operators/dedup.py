@@ -18,13 +18,26 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mongo_analyser_spark.operators.fanout import fanout_for_python, sort_plain
+from mongo_analyser_spark.operators.fanout import (
+    fanout_for_python,
+    input_bytes,
+    sort_plain,
+)
 
 from mongo_analyser_spark.functions.text import shingles, tokens
 
-#: corpus size from which the Jaccard-verify candidate semi-filter opens
-#: (``_semi_filter_open``)
+#: corpus size from which the Jaccard verify semi-joins each side's scan
+#: to the candidate ids: measured slower on the 0.6 MB sf0.1 corpus (full
+#: rows 2.02 → 2.22 s) and faster on the 5.9 MB sf1 tier (dedup_minhash
+#: 16.67 → 14.04 s, dedup_jaccard 9.70 → 8.00 s), and the pair-id list it
+#: broadcasts grows with the candidate count, unbounded by any measured
+#: size (ROADMAP D3).
 SEMI_FILTER_MIN_BYTES = 4 << 20
+
+#: distinct edge count up to which ``connected_components`` and
+#: ``graph.pagerank`` solve the graph in one task instead of the
+#: distributed loop (2M edges ≈ tens of MB).
+IN_CORE_EDGES = 2_000_000
 
 
 def exact_dedup(df: DataFrame, key: Column, id_col: str) -> DataFrame:
@@ -140,26 +153,14 @@ def lsh_candidate_pairs(band_df: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def _semi_filter_open(corpus_bytes: int | None) -> bool:
-    """Gate for the candidate semi-filter on the Jaccard-verify corpus
-    scans (r16, verdict-r15 #5 — the r15 attempt was measured regressive
-    at fixture scale and reverted). The semi-filter trades TWO fixed
-    costs (a localCheckpoint job for the pair list + a broadcast build
-    of the distinct pair ids) for skipping the non-candidate share of
-    the corpus-sized shingle projection that runs ONCE PER JOIN SIDE.
-    The crossover is corpus SIZE, known for free from file metadata,
-    and was MEASURED on both sides: at the bench fixture (documents
-    0.6 MB, sf0.1) the filter loses — full rows 2.02→2.22 s,
-    decontaminate 2.11× baseline, the r15 revert — while at the 10×
-    decorrelated sf1 probe tier (5.9 MB) it wins: dedup_minhash
-    16.67→14.04 s, dedup_jaccard 9.70→8.00 s, decontaminate neutral
-    (min-of-5, env toggled between reps in ONE session). The gate
-    opens at ``SEMI_FILTER_MIN_BYTES`` (4 MiB — between the measured
-    losing and winning corpus sizes; at production sizes the win only
-    grows since the avoided double pass scales with the corpus and the
-    overhead does not). Below the threshold the plan is byte-identical
-    to the ungated form."""
-    return corpus_bytes is not None and corpus_bytes >= SEMI_FILTER_MIN_BYTES
+def jaccard(set_a: Column | str, set_b: Column | str) -> Column:
+    """Exact Jaccard of two distinct-element arrays: integer intersect
+    and union sizes, one division, ``ROUND(…, 6)`` — deterministic in
+    both engines. The DuckDB twins state it as
+    ``queries_pipeline._JACCARD_SQL``."""
+    inter = F.size(F.array_intersect(set_a, set_b)).cast("double")
+    union = (F.size(set_a) + F.size(set_b)).cast("double") - inter
+    return F.round(inter / union, 6)
 
 
 def jaccard_verify(
@@ -169,11 +170,9 @@ def jaccard_verify(
     text_col: str,
     shingle_n: int = 3,
     min_jaccard: float = 0.0,
-    corpus_bytes: int | None = None,
 ) -> DataFrame:
-    """Verify candidates with the exact shingle-set Jaccard (integer set
-    sizes → one division → deterministic). Output
-    (doc_a, doc_b, jaccard double).
+    """Verify candidates with the exact shingle-set Jaccard (``jaccard``).
+    Output (doc_a, doc_b, jaccard double).
 
     The shingle-set frame is deliberately NOT materialized even though
     both join sides derive from it: shingle sets are corpus-sized
@@ -181,62 +180,46 @@ def jaccard_verify(
     projection twice beats storing it once — the opposite call from the
     fixed-width fingerprint/band tables above.
 
-    ``corpus_bytes`` (r16): pass the corpus table's on-disk size (file
-    metadata, e.g. ``sources.parquet.table_bytes``) to arm the
-    candidate semi-filter above ``_semi_filter_open``'s threshold: the
-    pair list is materialized once and its distinct per-side ids are
-    broadcast-semi-joined onto the corpus scan, so the shingle
-    projection runs only for pair members (guide §3.2). The per-doc
-    expression is unchanged, so each surviving pair's Jaccard is
-    bit-identical (oracle-verified both ways).
+    From ``SEMI_FILTER_MIN_BYTES`` of input (``input_bytes``) the pair
+    list is materialized once and each side's scan is broadcast-semi-
+    joined to that side's distinct pair ids, so the shingle projection
+    runs only for pair members (guide §3.2). The per-doc expression is
+    the same on both sides of the gate, so each pair's Jaccard is
+    bit-identical.
 
     Shingle sets travel as xxhash64 LONG arrays, not string arrays
     (~3x fewer bytes through both joins — the heaviest payload in the
     verify stage); intersection/union SIZES, hence the Jaccard number
     the oracle hashes, are invariant to the injective keying.
 
-    r16: adaptive fanout before the shingle build — the per-doc
-    tokenize + n-gram zip + xxhash64 chain serialized on the fixture's
+    Adaptive fanout before the shingle build — the per-doc tokenize +
+    n-gram zip + xxhash64 chain serialized on the fixture's
     one-row-group scan task; both join sides read the SAME fanout
     exchange (ReuseExchange), and the auto probe skips it when the
     scan already splits (fanout_for_python docstring)."""
+    semi = input_bytes(df) >= SEMI_FILTER_MIN_BYTES
     df = fanout_for_python(df, id_col)
-    if _semi_filter_open(corpus_bytes):
+    if semi:
         pairs = pairs.localCheckpoint()
 
-        def side(side_col: str, set_col: str) -> DataFrame:
+    def side(side_col: str, set_col: str) -> DataFrame:
+        src = df
+        if semi:
             ids = pairs.select(F.col(side_col).alias(id_col)).distinct()
-            return df.join(F.broadcast(ids), id_col).select(
-                F.col(id_col).alias(side_col),
-                hashed_shingles(
-                    F.col(text_col), shingle_n, distinct=True
-                ).alias(set_col),
-            )
+            src = df.join(F.broadcast(ids), id_col)
+        return src.select(
+            F.col(id_col).alias(side_col),
+            hashed_shingles(F.col(text_col), shingle_n, distinct=True).alias(
+                set_col
+            ),
+        )
 
-        joined = pairs.join(side("doc_a", "set_a"), "doc_a").join(
-            side("doc_b", "set_b"), "doc_b"
-        )
-        inter = F.size(F.array_intersect("set_a", "set_b")).cast("double")
-        union = (F.size("set_a") + F.size("set_b")).cast("double") - inter
-        jac = F.round(inter / union, 6)
-        return joined.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
-            F.col("jaccard") >= min_jaccard
-        )
-    sets = df.select(
-        F.col(id_col),
-        hashed_shingles(F.col(text_col), shingle_n, distinct=True).alias("sh_set"),
+    joined = pairs.join(side("doc_a", "set_a"), "doc_a").join(
+        side("doc_b", "set_b"), "doc_b"
     )
-    joined = (
-        pairs.join(sets.withColumnRenamed(id_col, "doc_a").withColumnRenamed("sh_set", "set_a"), "doc_a")
-        .join(sets.withColumnRenamed(id_col, "doc_b").withColumnRenamed("sh_set", "set_b"), "doc_b")
-    )
-    inter = F.size(F.array_intersect("set_a", "set_b")).cast("double")
-    union = (F.size("set_a") + F.size("set_b")).cast("double") - inter
-    jac = F.round(inter / union, 6)
-    return (
-        joined.select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= min_jaccard)
-    )
+    return joined.select(
+        "doc_a", "doc_b", jaccard("set_a", "set_b").alias("jaccard")
+    ).filter(F.col("jaccard") >= min_jaccard)
 
 
 def cross_corpus_contamination(
@@ -249,8 +232,6 @@ def cross_corpus_contamination(
     rows_per_band: int = 2,
     shingle_n: int = 3,
     min_jaccard: float = 0.5,
-    broadcast_test: bool = True,
-    train_bytes: int | None = None,
 ) -> DataFrame:
     """Train/test decontamination: near-dup join BETWEEN two corpora —
     the cross-table form of MinHash-LSH dedup a training pipeline runs
@@ -263,41 +244,37 @@ def cross_corpus_contamination(
     (bands × 1 row/doc); candidates are the equi-join on
     (band_id, band_hash) — never train × test. The TEST side is a
     benchmark suite (thousands of docs against billions of training
-    docs), so its band table and shingle sets are broadcast
-    (``broadcast_test=False`` for the rare symmetric case): no JOIN ever
-    shuffles the training corpus — its only shuffles are the two skinny
-    signature/band aggregations (id + fixed-width hashes, not text)."""
+    docs), so its band table and shingle sets are broadcast: no JOIN
+    ever shuffles the training corpus — its only shuffles are the two
+    skinny signature/band aggregations (id + fixed-width hashes, not
+    text). The train side's verify scan is semi-filtered to the
+    candidates from ``SEMI_FILTER_MIN_BYTES`` of train input, as in
+    ``jaccard_verify``."""
+    semi = input_bytes(train_df) >= SEMI_FILTER_MIN_BYTES
     sig_tr = minhash_signatures(train_df, id_col, text_col, num_hashes, shingle_n)
     sig_te = minhash_signatures(test_df, id_col, text_col, num_hashes, shingle_n)
     b_tr = lsh_band_hashes(sig_tr, id_col, bands, rows_per_band)
     b_te = lsh_band_hashes(sig_te, id_col, bands, rows_per_band)
-    te_side = b_te.select(F.col(id_col).alias("test_id"), "band_id", "band_hash")
-    if broadcast_test:
-        te_side = F.broadcast(te_side)
+    te_side = F.broadcast(
+        b_te.select(F.col(id_col).alias("test_id"), "band_id", "band_hash")
+    )
     cand = (
         b_tr.select(F.col(id_col).alias("train_id"), "band_id", "band_hash")
         .join(te_side, ["band_id", "band_hash"])
         .select("train_id", "test_id")
         .distinct()
     )
-    semi = _semi_filter_open(train_bytes)
-    if semi:
-        # materialized once (2 longs/row, O(contaminated docs)): the
-        # train-side verify semi-filters on it, and without the
-        # checkpoint the consumer would re-run the signature/band
-        # pipeline. Gated on the TRAIN corpus size — see
-        # _semi_filter_open; below the threshold the plan is
-        # byte-identical to the ungated form.
-        cand = cand.localCheckpoint()
     # hashed shingle-set arrays, same rationale as jaccard_verify: the
     # Jaccard NUMBER is invariant, the broadcast/join payload ~3x smaller
     sets_tr_src = train_df
     if semi:
-        # train-side shingle projection only for candidate members
-        # (guide §3.2): the un-filtered form runs the text projection
-        # over the ENTIRE training corpus when candidates are
-        # O(contaminated docs). Per-doc expression unchanged → Jaccard
+        # materialized once (2 longs/row, O(contaminated docs)): the
+        # train-side verify semi-filters on it, and without the
+        # checkpoint the consumer would re-run the signature/band
+        # pipeline. The train-side shingle projection then runs only for
+        # candidate members; per-doc expression unchanged → Jaccard
         # bit-identical.
+        cand = cand.localCheckpoint()
         sets_tr_src = train_df.join(
             F.broadcast(cand.select(F.col("train_id").alias(id_col)).distinct()),
             id_col,
@@ -306,12 +283,12 @@ def cross_corpus_contamination(
         F.col(id_col).alias("train_id"),
         hashed_shingles(F.col(text_col), shingle_n, distinct=True).alias("set_a"),
     )
-    sets_te = test_df.select(
-        F.col(id_col).alias("test_id"),
-        hashed_shingles(F.col(text_col), shingle_n, distinct=True).alias("set_b"),
+    sets_te = F.broadcast(
+        test_df.select(
+            F.col(id_col).alias("test_id"),
+            hashed_shingles(F.col(text_col), shingle_n, distinct=True).alias("set_b"),
+        )
     )
-    if broadcast_test:
-        sets_te = F.broadcast(sets_te)
     # under the open gate, cand is broadcast into the verify joins
     # (2 longs/row, bounded by test-side collisions): keeps the
     # operator's no-shuffle-join contract now that the checkpointed
@@ -319,12 +296,9 @@ def cross_corpus_contamination(
     joined = (F.broadcast(cand) if semi else cand).join(sets_tr, "train_id").join(
         sets_te, "test_id"
     )
-    inter = F.size(F.array_intersect("set_a", "set_b")).cast("double")
-    union = (F.size("set_a") + F.size("set_b")).cast("double") - inter
-    jac = F.round(inter / union, 6)
-    return joined.select("train_id", "test_id", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= min_jaccard
-    )
+    return joined.select(
+        "train_id", "test_id", jaccard("set_a", "set_b").alias("jaccard")
+    ).filter(F.col("jaccard") >= min_jaccard)
 
 
 def exact_ngram_contamination(
@@ -333,7 +307,6 @@ def exact_ngram_contamination(
     id_col: str,
     text_col: str,
     n: int = 8,
-    broadcast_test: bool = True,
 ) -> DataFrame:
     """Exact n-gram collision decontamination — the OTHER standard
     benchmark-contamination check next to the MinHash-LSH near-dup form
@@ -353,7 +326,7 @@ def exact_ngram_contamination(
     single groupBy(id) over skinny (id, hit) rows — no join ever
     shuffles the training corpus, same contract as the LSH form.
 
-    Grams travel as xxhash64 LONGS, not strings (verdict-r6 #3): the
+    Grams travel as xxhash64 LONGS, not strings: the
     broadcast set and every join compare move 8 bytes per gram instead
     of ~n words of text — an ~n-fold size cut on the heaviest data
     structure here. A 64-bit collision would need ~2^32 DISTINCT grams
@@ -361,19 +334,17 @@ def exact_ngram_contamination(
     ~1e-4); a collision can only ADD a spurious hit-gram, never drop a
     real one. Output counts are hash-invariant otherwise.
 
-    r16: adaptive fanout on the TRAIN side — the tokenize + 8-gram zip
+    Adaptive fanout on the TRAIN side — the tokenize + 8-gram zip
     + xxhash64 map pass serialized on the one-row-group fixture scan
     task; auto-skipped when the scan splits (fanout_for_python
     docstring). The broadcast test side stays un-fanned (bounded)."""
-    te_grams = (
+    te_grams = F.broadcast(
         test_df.select(
             F.explode(hashed_shingles(F.col(text_col), n, distinct=True)).alias("g")
         )
         .distinct()
         .withColumn("__hit", F.lit(1))
     )
-    if broadcast_test:
-        te_grams = F.broadcast(te_grams)
     tr_grams = fanout_for_python(train_df, id_col).select(
         F.col(id_col).alias("train_id"),
         F.explode(hashed_shingles(F.col(text_col), n, distinct=True)).alias("g"),
@@ -399,7 +370,6 @@ def ngram_jaccard_pairs(
     text_col: str,
     shingle_n: int = 3,
     min_jaccard: float = 0.0,
-    corpus_bytes: int | None = None,
 ) -> DataFrame:
     """n-gram Jaccard near-dup with min-shingle blocking: candidates are
     documents sharing their MINIMUM shingle hash (one md5 per shingle,
@@ -426,10 +396,7 @@ def ngram_jaccard_pairs(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    return jaccard_verify(
-        df, pairs, id_col, text_col, shingle_n, min_jaccard,
-        corpus_bytes=corpus_bytes,
-    )
+    return jaccard_verify(df, pairs, id_col, text_col, shingle_n, min_jaccard)
 
 
 def simhash_bits(
@@ -784,7 +751,6 @@ def connected_components(
     right: str = "b",
     max_iter: int = 20,
     on_nonconvergence: str = "warn",
-    in_core_edges: int = 2_000_000,
 ) -> DataFrame:
     """Connected components over candidate pairs → (id, cluster) with
     cluster = the component's minimum id. The last stage of a dedup
@@ -812,18 +778,18 @@ def connected_components(
     label, which over a connected component forces all labels equal to
     the component min.
 
-    Hybrid finish (round-5 verdict Next-round #5): the edge count is
+    Hybrid finish: the edge count is
     measured anyway (it materializes the pair pipeline into the cache),
     and when the DISTINCT edge list fits one task
-    (``in_core_edges``, default 2M ≈ tens of MB) the components are
+    (``IN_CORE_EDGES``) the components are
     solved by a single-job in-partition union-find instead — identical
     output, and it removes the ~log(diameter) × (checkpoint job + probe
     job) round cost that dominates small graphs (measured at sf0.1:
     8.7 s → 3.6 s for embedding_dedup_clusters). Near-dup graphs are
     sparse by construction (banding bounds candidates), so even at
     100 TB most runs land under the threshold AFTER banding; truly giant
-    graphs take the distributed loop. ``in_core_edges=0`` forces the
-    distributed path (used by tests and available to operators).
+    graphs take the distributed loop (tests set ``IN_CORE_EDGES`` to 0
+    to force it).
     """
     # symmetrize via explode, NOT union-of-two-selects: a union would run
     # the (expensive) upstream candidate-pair pipeline once per branch,
@@ -846,7 +812,7 @@ def connected_components(
     # 1000+ partitions while a thousand-edge graph runs single-task
     # rounds (measured at sf0.1: 8.7 s → see BASELINE.md).
     n_edges = raw.count()
-    if n_edges <= in_core_edges:
+    if n_edges <= IN_CORE_EDGES:
         # one-task finish; localCheckpoint so the result survives the
         # unpersist of the (expensive) upstream pair pipeline
         labels = _union_find_labels(raw).localCheckpoint()

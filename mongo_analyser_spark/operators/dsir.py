@@ -41,9 +41,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mongo_analyser_spark.functions.text import shingles, tokens
+from mongo_analyser_spark.operators.fanout import fanout_for_python, input_bytes
 
-#: corpus size up to which the feature frame is materialized once
-#: (``_feats_ckpt_open``)
+#: corpus size up to which ``dsir_weights`` materializes its feature
+#: occurrence rows (~5× the text) once for both consumers: at sf0.1 that
+#: took dsir_weights 2.51 → 1.48 s, while at corpus scale writing 5× the
+#: text through local disks loses to recomputing the cheap projection.
 FEATS_CKPT_MAX_BYTES = 1 << 30
 
 
@@ -62,11 +65,9 @@ def _features(
 ) -> DataFrame:
     """(id, __t, b): one row per unigram/bigram occurrence, bucketed.
 
-    r16: adaptive fanout before the explode — the tokenize + bigram +
+    Adaptive fanout before the explode — the tokenize + bigram +
     md5-bucket map pass serialized on the one-row-group fixture scan
     task; auto-skipped when the scan splits (fanout_for_python)."""
-    from mongo_analyser_spark.operators.fanout import fanout_for_python
-
     docs = fanout_for_python(docs, id_col)
     c = F.col(text_col)
     return docs.select(
@@ -80,23 +81,6 @@ def _features(
     ).select(id_col, "__t", md5_bucket(F.col("g"), buckets).alias("b"))
 
 
-def _feats_ckpt_open(corpus_bytes: int | None) -> bool:
-    """Materialize-vs-recompute cost rule for the occurrence-level
-    feature frame (r16, guide §1.2 + the §8 metadata-vs-payload trade):
-    the (id, __t, b) rows are ~17 B per token/bigram occurrence — about
-    5× the source text bytes — and BOTH the bucket histogram and the
-    per-doc weights consume them. Below the threshold, one write+read
-    of that artifact (page-cache cheap) beats re-scanning and
-    re-tokenizing + re-hashing the corpus for the second consumer
-    (measured at sf0.1: dsir_weights 2.51 → 1.48 s min-of-7,
-    value-identical). Above it, pushing a 5×-corpus artifact through
-    local disks loses to recomputing the cheap projection — the
-    jaccard_verify corpus-sized-frame rule, so the default for unknown
-    or big corpora is RECOMPUTE (the 100 TB-safe path). The crossover
-    is ``FEATS_CKPT_MAX_BYTES``."""
-    return corpus_bytes is not None and corpus_bytes <= FEATS_CKPT_MAX_BYTES
-
-
 def dsir_weights(
     docs: DataFrame,
     target: Column,
@@ -104,16 +88,15 @@ def dsir_weights(
     text_col: str = "text",
     buckets: int = 4096,
     round_to: int = 6,
-    corpus_bytes: int | None = None,
 ) -> DataFrame:
     """(id, n_feats, dsir_logratio) for every RAW (non-target) document:
     the importance log-ratio of its hashed-n-gram profile under the
     target-vs-raw multinomials. ``target`` is a boolean Column over
-    ``docs`` (e.g. ``F.col("lang") == "en"``). ``corpus_bytes`` (r16):
-    the corpus table's on-disk size, arming the small-corpus
-    materialization rule — see ``_feats_ckpt_open``."""
+    ``docs`` (e.g. ``F.col("lang") == "en"``). Up to
+    ``FEATS_CKPT_MAX_BYTES`` of input (``input_bytes``) the feature
+    frame is materialized once; above it, recomputed."""
     feats = _features(docs, target, id_col, text_col, buckets)
-    if _feats_ckpt_open(corpus_bytes):
+    if input_bytes(docs) <= FEATS_CKPT_MAX_BYTES:
         # ONE feature explode total: the occurrence frame itself is
         # materialized and both consumers (bucket histogram + per-doc
         # weights) read it. The counts table needs no checkpoint of its
@@ -125,7 +108,7 @@ def dsir_weights(
             F.sum(F.when(~F.col("__t"), 1).otherwise(0)).alias("r_b"),
         )
     else:
-        # r15 (guide §1.2): the bucket-count table fed THREE consumers
+        # (guide §1.2) the bucket-count table fed THREE consumers
         # (totals, lam, and transitively the weights join), and each
         # consumer's subtree re-ran the corpus-wide feature explode +
         # md5 bucketing. Materialize the <= ``buckets``-row count table
@@ -169,13 +152,11 @@ def dsir_select(
     id_col: str = "doc_id",
     text_col: str = "text",
     buckets: int = 4096,
-    corpus_bytes: int | None = None,
 ) -> DataFrame:
     """Deterministic top-k raw documents by importance log-ratio
     (TakeOrdered; ties break on id so the cut is engine-stable)."""
     return (
-        dsir_weights(docs, target, id_col, text_col, buckets,
-                     corpus_bytes=corpus_bytes)
+        dsir_weights(docs, target, id_col, text_col, buckets)
         .orderBy(F.desc("dsir_logratio"), id_col)
         .limit(k)
     )

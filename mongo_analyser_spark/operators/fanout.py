@@ -14,6 +14,7 @@ parallelism gain.
 scale waste: it reads the OBSERVED scan partition count off the physical
 plan (no job — ``df.rdd`` materializes the plan, not the data) and skips
 the shuffle when the scan already saturates the executor parallelism.
+``input_bytes`` reads the input's size the same way, off the plan.
 
 ``python_rows`` is the one way to run a per-document Python function:
 fanout, then one Arrow-batched ``mapInPandas`` that emits the rows the
@@ -57,6 +58,14 @@ def fanout_for_python(df: DataFrame, *key_cols: str) -> DataFrame:
         return df
     n = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     return df.repartition(n, *keys)
+
+
+def input_bytes(df: DataFrame) -> int:
+    """Spark's size estimate of ``df`` from its analyzed plan, no job:
+    for a parquet scan it is the summed size of the listed files, and a
+    filter or ``fanout_for_python`` above the scan leaves it unchanged.
+    The curation operators' size gates read it off their own input."""
+    return int(df._jdf.queryExecution().analyzed().stats().sizeInBytes())
 
 
 def python_rows(

@@ -15,7 +15,7 @@ connected_components) so the plan doesn't grow with the iteration count,
 and — also like connected_components — the result is checkpointed and
 the cached inputs unpersisted before returning, so repeated calls don't
 accumulate dead cache entries.  Graphs whose DISTINCT edge list fits one
-task (``in_core_edges``) skip the multi-round loop for a single
+task (``dedup.IN_CORE_EDGES``) skip the multi-round loop for a single
 Arrow-batched power-iteration kernel — identical rounded output, none of
 the per-iteration job-scheduling cost that dominates small graphs.
 
@@ -42,6 +42,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from mongo_analyser_spark.operators import dedup
+
+#: iterations between lineage-truncating checkpoints of the distributed loop
+CHECKPOINT_EVERY = 3
 
 
 def _pagerank_in_core(
@@ -90,8 +95,6 @@ def pagerank(
     iterations: int = 5,
     damping: float = 0.85,
     round_to: int = 9,
-    checkpoint_every: int = 3,
-    in_core_edges: int = 2_000_000,
 ) -> DataFrame:
     """PageRank over a directed edge list, fixed iteration count.
 
@@ -100,10 +103,10 @@ def pagerank(
     dangling-mass redistribution is deliberately out of scope and
     documented, matching the exactly-unrollable oracle).
 
-    ``in_core_edges``: when the measured edge count fits one task
-    (default 2M ≈ tens of MB), the iterations run as a single
-    Arrow-batched kernel — identical quantized output, no per-round job
-    cost.  Pass 0 to force the distributed loop (tests do).
+    When the measured edge count fits one task (``dedup.IN_CORE_EDGES``),
+    the iterations run as a single Arrow-batched kernel — identical
+    quantized output, no per-round job cost.  Tests set it to 0 to force
+    the distributed loop.
 
     Returns (node, rank) with rank quantized to ``round_to`` decimals
     (floor(x*10^k + 0.5)/10^k — engine-agnostic half-up).  The result is
@@ -122,7 +125,7 @@ def pagerank(
         return e.sparkSession.createDataFrame(
             [], f"node {e.schema['src'].dataType.simpleString()}, rank double"
         )
-    if n_edges <= in_core_edges and in_core_edges > 0:
+    if n_edges <= dedup.IN_CORE_EDGES:
         # e is already materialized in the cache (count above), so
         # coalesce(1) reads cached blocks in one task — it does NOT
         # collapse the upstream pair pipeline's parallelism
@@ -159,7 +162,7 @@ def pagerank(
                 F.floor((F.lit(base) + damping * mass) * scale + 0.5) / scale
             ).alias("rank"),
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
+        if (i + 1) % CHECKPOINT_EVERY == 0 and i + 1 < iterations:
             ranks = ranks.localCheckpoint(eager=False)
     # materialize, then release the loop's caches (CC discipline:
     # dedup.py checkpoints its labels and unpersists raw/edges)

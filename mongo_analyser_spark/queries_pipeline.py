@@ -47,7 +47,6 @@ from mongo_analyser_spark.operators.field_stats import TS_FMT
 from mongo_analyser_spark.queries import ORACLE_GENERATORS, register
 from mongo_analyser_spark.sources.parquet import (
     load_table,
-    table_bytes,
     table_row_count,
 )
 
@@ -93,6 +92,13 @@ _BANDS_CTE = "bands AS (" + " UNION ALL ".join(
     f"SELECT doc_id, {b} AS band_id, md5(m{b * LSH_ROWS}||'|'||m{b * LSH_ROWS + 1}) AS bh FROM mins"
     for b in range(LSH_BANDS)
 ) + ")"
+# exact Jaccard of the shingle sets sa.s and sb.s: the twin of
+# operators.dedup.jaccard
+_JACCARD_SQL = (
+    "ROUND(CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)"
+    " / (CAST(len(sa.s) + len(sb.s) AS DOUBLE)"
+    " - CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)), 6)"
+)
 
 
 # --------------------------------------------------------------------------
@@ -469,9 +475,7 @@ pairs AS (
   WHERE a.doc_id < b.doc_id),
 sets AS (SELECT doc_id, list_distinct({_SHINGLES_SQL}) AS s FROM toks)
 SELECT doc_a, doc_b,
-  ROUND(CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)
-        / (CAST(len(sa.s) + len(sb.s) AS DOUBLE)
-           - CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)), 6) AS jaccard
+  {_JACCARD_SQL} AS jaccard
 FROM pairs JOIN sets sa ON sa.doc_id = doc_a JOIN sets sb ON sb.doc_id = doc_b
 ORDER BY doc_a, doc_b
 """,
@@ -484,10 +488,7 @@ def q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = minhash_signatures(docs, "doc_id", "text", NUM_MINHASH)
     bands = lsh_band_hashes(sigs, "doc_id", LSH_BANDS, LSH_ROWS)
     pairs = lsh_candidate_pairs(bands, "doc_id")
-    return jaccard_verify(
-        docs, pairs, "doc_id", "text",
-        corpus_bytes=table_bytes(sf_dir, "documents"),
-    ).orderBy("doc_a", "doc_b")
+    return jaccard_verify(docs, pairs, "doc_id", "text").orderBy("doc_a", "doc_b")
 
 
 @register(
@@ -502,9 +503,7 @@ cand AS (
 sets AS (SELECT doc_id, list_distinct({_SHINGLES_SQL}) AS s FROM toks)
 SELECT train_id, test_id, jaccard FROM (
   SELECT train_id, test_id,
-    ROUND(CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)
-          / (CAST(len(sa.s) + len(sb.s) AS DOUBLE)
-             - CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)), 6) AS jaccard
+    {_JACCARD_SQL} AS jaccard
   FROM cand JOIN sets sa ON sa.doc_id = train_id JOIN sets sb ON sb.doc_id = test_id
 ) WHERE jaccard >= 0.5 ORDER BY train_id, test_id
 """,
@@ -524,7 +523,6 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cross_corpus_contamination(
         train, test, "doc_id", "text",
         NUM_MINHASH, LSH_BANDS, LSH_ROWS, min_jaccard=0.5,
-        train_bytes=table_bytes(sf_dir, "documents"),
     ).transform(sort_after_python, "train_id", "test_id")
 
 
@@ -627,10 +625,7 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-file scan's ONE partition (the char_entropy/jpeg pattern)
     train = fanout_for_python(docs.filter(F.col("doc_id") % 10 != 0))
     return bloom_ngram_contamination(
-        train, test, "doc_id", "text", n=8, num_hashes=_BLOOM_K, num_bits=_BLOOM_BITS,
-        # whole-table size as the cost-gate upper bound for the 90%
-        # train split (operators/bloom._grams_ckpt_open)
-        train_bytes=table_bytes(sf_dir, "documents"),
+        train, test, "doc_id", "text", n=8, num_hashes=_BLOOM_K, num_bits=_BLOOM_BITS
     )
 
 
@@ -655,9 +650,7 @@ matches AS (
 sets AS (SELECT doc_id, list_distinct({_SHINGLES_SQL}) AS s FROM toks),
 ex AS (
   SELECT doc_a, doc_b, n_match,
-    ROUND(CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)
-          / (CAST(len(sa.s) + len(sb.s) AS DOUBLE)
-             - CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)), 6)
+    {_JACCARD_SQL}
       AS exact_jaccard
   FROM matches JOIN sets sa ON sa.doc_id = doc_a
                JOIN sets sb ON sb.doc_id = doc_b)
@@ -730,10 +723,7 @@ def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("n_match")
         )
     )
-    exact = jaccard_verify(
-        docs, pairs, "doc_id", "text", 3,
-        corpus_bytes=table_bytes(sf_dir, "documents"),
-    ).select(
+    exact = jaccard_verify(docs, pairs, "doc_id", "text", 3).select(
         "doc_a", "doc_b", F.col("jaccard").alias("exact_jaccard")
     )
     est = F.col("n_match").cast("double") / F.lit(NUM_MINHASH)
@@ -762,9 +752,7 @@ pairs AS (
 sets AS (SELECT doc_id, list_distinct({_SHINGLES_SQL}) AS s FROM toks)
 SELECT doc_a, doc_b, jaccard FROM (
   SELECT doc_a, doc_b,
-    ROUND(CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)
-          / (CAST(len(sa.s) + len(sb.s) AS DOUBLE)
-             - CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)), 6) AS jaccard
+    {_JACCARD_SQL} AS jaccard
   FROM pairs JOIN sets sa ON sa.doc_id = doc_a JOIN sets sb ON sb.doc_id = doc_b
 ) WHERE jaccard >= 0.1 ORDER BY doc_a, doc_b
 """,
@@ -773,10 +761,9 @@ def q_dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n-gram Jaccard near-dup (north-star): min-shingle-hash blocking
     (the 1-band degenerate of LSH) + exact shingle-set Jaccard ≥ 0.1."""
     docs = load_table(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(
-        docs, "doc_id", "text", min_jaccard=0.1,
-        corpus_bytes=table_bytes(sf_dir, "documents"),
-    ).orderBy("doc_a", "doc_b")
+    return ngram_jaccard_pairs(docs, "doc_id", "text", min_jaccard=0.1).orderBy(
+        "doc_a", "doc_b"
+    )
 
 
 @register(
@@ -791,9 +778,7 @@ sets AS (SELECT doc_id, list_distinct({_SHINGLES_SQL}) AS s FROM toks),
 jp AS (
   SELECT doc_a, doc_b FROM (
     SELECT doc_a, doc_b,
-      ROUND(CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)
-            / (CAST(len(sa.s) + len(sb.s) AS DOUBLE)
-               - CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)), 6) AS jaccard
+      {_JACCARD_SQL} AS jaccard
     FROM cand JOIN sets sa ON sa.doc_id = doc_a JOIN sets sb ON sb.doc_id = doc_b
   ) WHERE jaccard >= 0.1),
 edges AS (SELECT doc_a AS src, doc_b AS dst FROM jp
@@ -818,10 +803,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo_analyser_spark.operators.dedup import dedup_clusters
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(
-        docs, "doc_id", "text", min_jaccard=0.1,
-        corpus_bytes=table_bytes(sf_dir, "documents"),
-    ).select("doc_a", "doc_b")
+    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", min_jaccard=0.1).select(
+        "doc_a", "doc_b"
+    )
     return dedup_clusters(
         docs, pairs, "doc_id", left="doc_a", right="doc_b"
     ).orderBy("id")
@@ -2953,10 +2937,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo_analyser_spark.operators.dsir import dsir_weights
 
     docs = load_table(spark, sf_dir, "documents")
-    return dsir_weights(
-        docs, F.col("lang") == "en", buckets=_DSIR_B,
-        corpus_bytes=table_bytes(sf_dir, "documents"),
-    ).orderBy(
+    return dsir_weights(docs, F.col("lang") == "en", buckets=_DSIR_B).orderBy(
         "doc_id"
     )
 
@@ -2976,10 +2957,7 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo_analyser_spark.operators.dsir import dsir_select
 
     docs = load_table(spark, sf_dir, "documents")
-    return dsir_select(
-        docs, F.col("lang") == "en", k=200, buckets=_DSIR_B,
-        corpus_bytes=table_bytes(sf_dir, "documents"),
-    )
+    return dsir_select(docs, F.col("lang") == "en", k=200, buckets=_DSIR_B)
 
 
 @register("jpeg_pixel_stats_documents")

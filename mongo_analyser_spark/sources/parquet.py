@@ -165,21 +165,6 @@ def table_row_count(sf_dir: str, name: str) -> int:
     return n
 
 
-def table_bytes(sf_dir: str, name: str) -> int:
-    """On-disk size of a table's parquet file(s) in bytes — pure file
-    metadata (zero Spark jobs, zero reads), for scale-adaptive gates
-    like the Jaccard-verify candidate semi-filter (dedup.py r16)."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if f.endswith(".parquet"):
-                    total += os.path.getsize(os.path.join(root, f))
-        return total
-    return os.path.getsize(path)
-
-
 def list_collections(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted collection names (analyser.py:237 `sorted(...)`)."""
     names = sorted(

@@ -147,11 +147,15 @@ def test_bloom_fill_fraction_counts_set_bits(spark):
     assert row["fill"] == round(row["bits_set"] / 1024.0, 6)
 
 
-def test_grams_ckpt_branch_parity(spark):
-    """r16: the small-corpus materialization branch (train_bytes under
-    _grams_ckpt_open's threshold → one scan+shingle pass, probe and
-    exact join both read the checkpointed gram arrays) must produce
-    exactly the recompute branch's rows."""
+def test_grams_ckpt_branch_parity(spark, monkeypatch, optimized_plan):
+    """The materialization branch (train input under GRAMS_CKPT_MAX_BYTES
+    → one scan+shingle pass, probe and exact join both read the
+    checkpointed gram arrays) must produce exactly the recompute
+    branch's rows. Each side is forced by the threshold constant, and
+    the two plans must differ."""
+    from mongo_analyser_spark.operators import bloom
+    from mongo_analyser_spark.operators.fanout import unsorted
+
     rows = [
         (0, "one two three four five"),
         (1, "one two three four five"),
@@ -161,21 +165,16 @@ def test_grams_ckpt_branch_parity(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     test = docs.filter(F.col("doc_id") == 0)
     train = docs.filter(F.col("doc_id") > 0)
-    base = sorted(
-        map(
-            tuple,
-            bloom_ngram_contamination(
-                train, test, "doc_id", "text", n=3, num_hashes=K, num_bits=M
-            ).collect(),
+    out = {}
+    for branch, threshold in (("recompute", -1), ("ckpt", float("inf"))):
+        monkeypatch.setattr(bloom, "GRAMS_CKPT_MAX_BYTES", threshold)
+        c = bloom_ngram_contamination(
+            train, test, "doc_id", "text", n=3, num_hashes=K, num_bits=M
         )
-    )
-    ckpt = sorted(
-        map(
-            tuple,
-            bloom_ngram_contamination(
-                train, test, "doc_id", "text", n=3, num_hashes=K,
-                num_bits=M, train_bytes=1,
-            ).collect(),
+        # the plan below the output sort's checkpoint
+        out[branch] = (
+            optimized_plan(unsorted(c)),
+            sorted(map(tuple, c.collect())),
         )
-    )
-    assert ckpt == base and len(base) == 3
+    assert out["ckpt"][0] != out["recompute"][0]
+    assert out["ckpt"][1] == out["recompute"][1] and len(out["ckpt"][1]) == 3

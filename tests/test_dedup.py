@@ -92,26 +92,30 @@ def test_connected_components_transitive_chain(spark):
     ]
 
 
-def test_connected_components_long_path_converges(spark):
+def test_connected_components_long_path_converges(spark, monkeypatch):
     """A 12-vertex path needs multiple propagation rounds — exercises the
-    iteration + localCheckpoint loop (in_core_edges=0 forces the
+    iteration + localCheckpoint loop (IN_CORE_EDGES=0 forces the
     distributed path; the default would solve this in-task)."""
+    from mongo_analyser_spark.operators import dedup
     from mongo_analyser_spark.operators.dedup import connected_components
+
+    monkeypatch.setattr(dedup, "IN_CORE_EDGES", 0)
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 12)], "a long, b long"
     )
     comp = {
         r.id: r.cluster
-        for r in connected_components(pairs, in_core_edges=0).collect()
+        for r in connected_components(pairs).collect()
     }
     assert set(comp.values()) == {1} and len(comp) == 12
 
 
-def test_connected_components_in_core_matches_distributed(spark):
+def test_connected_components_in_core_matches_distributed(spark, monkeypatch):
     """The hybrid finish (one-task union-find) must produce exactly the
     distributed loop's (id, cluster) labels — chains, a star, and
     separate components."""
+    from mongo_analyser_spark.operators import dedup
     from mongo_analyser_spark.operators.dedup import connected_components
 
     edges = (
@@ -121,13 +125,12 @@ def test_connected_components_in_core_matches_distributed(spark):
     )
     pairs = spark.createDataFrame(edges, "a long, b long")
     fast = sorted(map(tuple, connected_components(pairs).collect()))
-    dist = sorted(
-        map(tuple, connected_components(pairs, in_core_edges=0).collect())
-    )
+    monkeypatch.setattr(dedup, "IN_CORE_EDGES", 0)
+    dist = sorted(map(tuple, connected_components(pairs).collect()))
     assert fast == dist
 
 
-def test_connected_components_nonconvergence_signal(spark, caplog):
+def test_connected_components_nonconvergence_signal(spark, caplog, monkeypatch):
     """Round-4 verdict What's-wrong #3: a path graph whose diameter
     exceeds max_iter must NOT exit silently — warn mode logs at WARNING,
     raise mode raises. At 100-TB corpus scale long near-dup chains are
@@ -136,27 +139,25 @@ def test_connected_components_nonconvergence_signal(spark, caplog):
 
     import pytest
 
+    from mongo_analyser_spark.operators import dedup
     from mongo_analyser_spark.operators.dedup import connected_components
 
+    monkeypatch.setattr(dedup, "IN_CORE_EDGES", 0)
     # diameter 11 > max_iter=3: cannot reach the fixpoint
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 12)], "a long, b long"
     )
     with caplog.at_level(logging.WARNING, "mongo_analyser_spark.operators.dedup"):
-        connected_components(pairs, max_iter=3, in_core_edges=0)
+        connected_components(pairs, max_iter=3)
     assert any("max_iter=3 exhausted" in r.message for r in caplog.records)
 
     with pytest.raises(RuntimeError, match="max_iter=3 exhausted"):
-        connected_components(
-            pairs, max_iter=3, on_nonconvergence="raise", in_core_edges=0
-        )
+        connected_components(pairs, max_iter=3, on_nonconvergence="raise")
 
     # and the signal must NOT fire when the fixpoint is reached
     caplog.clear()
     with caplog.at_level(logging.WARNING, "mongo_analyser_spark.operators.dedup"):
-        connected_components(
-            pairs, max_iter=20, on_nonconvergence="raise", in_core_edges=0
-        )
+        connected_components(pairs, max_iter=20, on_nonconvergence="raise")
     assert not any("exhausted" in r.message for r in caplog.records)
 
 
@@ -537,54 +538,32 @@ def test_merge_start_intervals_matches_python_union(spark):
         assert got[i] == py_union(c), (i, c)
 
 
-def test_jaccard_semi_filter_parity(spark, docs):
-    """r16 (verdict-r15 #5): the candidate semi-filter path (gate open —
-    pair list checkpointed, per-side ids broadcast-semi-joined onto the
-    corpus scan) must produce the exact rows of the ungated double-pass
-    form, including the threshold filter."""
-    from mongo_analyser_spark.operators.dedup import (
-        cross_corpus_contamination,
-        jaccard_verify,
-        lsh_band_hashes,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
+def test_jaccard_semi_filter_parity(spark, docs, monkeypatch, optimized_plan):
+    """The candidate semi-filter (gate open: pair list checkpointed,
+    per-side ids broadcast-semi-joined onto the corpus scan) must give
+    the exact rows of the closed form, threshold filter included, for
+    jaccard_verify and cross_corpus_contamination. Each side is forced by
+    the threshold constant, and the two plans must differ."""
+    from mongo_analyser_spark.operators import dedup
 
     sigs = minhash_signatures(docs, "doc_id", "text", num_hashes=8)
     bands = lsh_band_hashes(sigs, "doc_id", bands=4, rows_per_band=2)
     pairs = lsh_candidate_pairs(bands, "doc_id")
-
-    base = sorted(
-        map(tuple, jaccard_verify(docs, pairs, "doc_id", "text").collect())
-    )
-    # corpus_bytes far above the default 256 MiB threshold → gate open
-    semi = sorted(
-        map(
-            tuple,
-            jaccard_verify(
-                docs, pairs, "doc_id", "text", corpus_bytes=1 << 40
-            ).collect(),
-        )
-    )
-    assert semi == base and len(base) > 0
-
     train = docs.filter("doc_id % 2 = 1")
     test = docs.filter("doc_id % 2 = 0")
-    base_c = sorted(
-        map(
-            tuple,
-            cross_corpus_contamination(
-                train, test, "doc_id", "text", min_jaccard=0.0
-            ).collect(),
+
+    def sides(build):
+        out = {}
+        for gate, threshold in (("closed", float("inf")), ("open", 0)):
+            monkeypatch.setattr(dedup, "SEMI_FILTER_MIN_BYTES", threshold)
+            df = build()
+            out[gate] = (optimized_plan(df), sorted(map(tuple, df.collect())))
+        assert out["open"][0] != out["closed"][0]
+        assert out["open"][1] == out["closed"][1] and out["closed"][1]
+
+    sides(lambda: jaccard_verify(docs, pairs, "doc_id", "text"))
+    sides(
+        lambda: dedup.cross_corpus_contamination(
+            train, test, "doc_id", "text", min_jaccard=0.0
         )
     )
-    semi_c = sorted(
-        map(
-            tuple,
-            cross_corpus_contamination(
-                train, test, "doc_id", "text", min_jaccard=0.0,
-                train_bytes=1 << 40,
-            ).collect(),
-        )
-    )
-    assert semi_c == base_c and len(base_c) > 0

@@ -124,23 +124,20 @@ def test_null_target_label_counts_as_raw(spark):
     }
     assert with_null[3] != base[3][1]
 
-def test_feats_ckpt_branch_parity(spark):
-    """r16: the small-corpus materialization branch (corpus_bytes under
-    the _feats_ckpt_open threshold → ONE feature explode, consumers
-    read the checkpointed occurrence frame) must produce exactly the
-    recompute branch's rows."""
+def test_feats_ckpt_branch_parity(spark, monkeypatch, optimized_plan):
+    """The materialization branch (input under FEATS_CKPT_MAX_BYTES → ONE
+    feature explode, consumers read the checkpointed occurrence frame)
+    must produce exactly the recompute branch's rows. Each side is forced
+    by the threshold constant, and the two plans must differ."""
+    from mongo_analyser_spark.operators import dsir
+
     df = spark.createDataFrame(
         DOCS, "doc_id long, text string, is_t boolean"
     )
-    base = sorted(
-        map(tuple, dsir_weights(df, F.col("is_t"), buckets=B).collect())
-    )
-    ckpt = sorted(
-        map(
-            tuple,
-            dsir_weights(
-                df, F.col("is_t"), buckets=B, corpus_bytes=1
-            ).collect(),
-        )
-    )
-    assert ckpt == base and len(base) > 0
+    out = {}
+    for branch, threshold in (("recompute", -1), ("ckpt", float("inf"))):
+        monkeypatch.setattr(dsir, "FEATS_CKPT_MAX_BYTES", threshold)
+        w = dsir_weights(df, F.col("is_t"), buckets=B)
+        out[branch] = (optimized_plan(w), sorted(map(tuple, w.collect())))
+    assert out["ckpt"][0] != out["recompute"][0]
+    assert out["ckpt"][1] == out["recompute"][1] and out["ckpt"][1]

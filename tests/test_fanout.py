@@ -10,6 +10,7 @@ from __future__ import annotations
 from mongo_analyser_spark.operators.fanout import (
     ascii_codes,
     fanout_for_python,
+    input_bytes,
     python_rows,
 )
 from mongo_analyser_spark.plans.inspect import formatted_plan, num_exchanges
@@ -73,6 +74,39 @@ def test_fanout_follows_scan_layout(spark, tmp_path):
     assert runs["split"][0] >= par and runs["split"][1] == 0
     assert runs["one"][2] == runs["split"][2]
     assert len(runs["one"][2]) == table.num_rows
+
+
+def test_input_bytes_is_the_scanned_file_size(spark, tmp_path):
+    """input_bytes reads the summed .parquet file sizes off the plan, for
+    the one-file sf0.001 documents table and a multi-part table; a filter
+    and fanout_for_python above the scan leave it unchanged."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    table = pa.table({
+        "doc_id": pa.array(range(3000), pa.int64()),
+        "text": [f"doc {i} " * (i % 7 + 1) for i in range(3000)],
+    })
+    parts = tmp_path / "parts.parquet"
+    parts.mkdir()
+    for i in range(3):
+        pq.write_table(
+            table.slice(1000 * i, 1000), str(parts / f"part-{i}.parquet")
+        )
+    cases = [
+        (load_table(spark, SF, "documents"), [f"{SF}/documents.parquet"]),
+        (spark.read.parquet(str(parts)), list(parts.glob("*.parquet"))),
+    ]
+    for docs, files in cases:
+        want = sum(os.path.getsize(f) for f in files)
+        assert input_bytes(docs) == want
+        assert input_bytes(docs.filter(F.col("doc_id") % 10 != 0)) == want
+        fanned = fanout_for_python(docs)
+        assert fanned is not docs  # the repartition is in the plan
+        assert input_bytes(fanned) == want
 
 
 def test_fanout_preserves_rows(spark):

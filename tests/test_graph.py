@@ -24,16 +24,16 @@ def test_pagerank_star_ranks_hub_highest(spark):
     assert abs(sum(got.values()) - 1.0) < 1e-6
 
 
-def test_pagerank_in_core_matches_distributed(spark):
+def test_pagerank_in_core_matches_distributed(spark, monkeypatch):
     """The single-task kernel and the iterative DataFrame loop must agree
     exactly after per-iteration rounding — same contract as the CC
     hybrid (dedup.py)."""
+    from mongo_analyser_spark.operators import dedup
+
     e = _star_edges(spark)
     fast = {r.node: r.rank for r in pagerank(e, iterations=5).collect()}
-    slow = {
-        r.node: r.rank
-        for r in pagerank(e, iterations=5, in_core_edges=0).collect()
-    }
+    monkeypatch.setattr(dedup, "IN_CORE_EDGES", 0)
+    slow = {r.node: r.rank for r in pagerank(e, iterations=5).collect()}
     assert fast == slow
 
 

@@ -52,15 +52,14 @@ PYTHONPATH="$PWD" python tools/check_oracle.py "$SF_DIR"
 echo "== [3/4] foreign-session gate (bare SparkSession, non-UTC TZ) =="
 TZ=America/Chicago python tools/driver_sim.py "$SF_DIR"
 
-echo "== [4/4] bench completes under budget and prints one JSON line =="
-# MEASURED WALL BUDGET (round-10, after BENCH_r09 rc=124): the full bench
-# (warm-up + SPARK_GRAFT_BENCH_REPS timed reps of all ~146 queries) must
-# finish inside BENCH_BUDGET_S (default 1200 s — the healthy r10 full run
-# measured ~14 min wall for warm-up + 3 reps x 146 queries, matching the
-# r7/r8 rc=0 driver runs; the r9 failure mode was ~65 min) or the gate is RED — one per-row-expensive
-# registry row is exactly what this catches (char_entropy cost ~16 min/pass
-# in round 9 and the driver recorded no bench at all). `timeout` turns a
-# hang into rc=124 instead of a stuck gate.
+echo "== [4/4] bench completes under budget and prints its full, chunk and summary lines =="
+# MEASURED WALL BUDGET: the full bench (warm-up + SPARK_GRAFT_BENCH_REPS
+# timed reps of all 201 queries) must finish inside BENCH_BUDGET_S
+# (default 1200 s; a healthy run of the 201 rows at sf0.1 on 4 cores takes
+# 13-14 min wall) or the gate is RED — one per-row-expensive registry row
+# is exactly what this catches (char_entropy once cost ~16 min/pass and
+# the bench timed out). `timeout` turns a hang into rc=124 instead of a
+# stuck gate.
 # NB: capture into a variable — piping into `python - <<EOF` would let the
 # heredoc replace the piped stdin and json.loads('') always fails.
 BENCH_BUDGET_S="${BENCH_BUDGET_S:-1200}"
