@@ -41,9 +41,21 @@ import struct
 from typing import List, Tuple
 
 from mongo_analyser_spark.operators.fanout import q4
-from mongo_analyser_spark.operators.pixels import untrusted_decoder
+from mongo_analyser_spark.operators.pixels import riff_chunks, untrusted_decoder
 
 _PCM_FORMAT = 1  # WAVE_FORMAT_PCM
+
+
+def _wav(fmt: bytes, data: bytes, fact: bytes | None = None) -> bytes:
+    """RIFF/WAVE bytes from a 'fmt ' chunk body, the sample data and an
+    optional 'fact' chunk body. The data chunk comes last and gets no
+    pad byte when its size is odd (the bytes these writers have always
+    produced; ``riff_chunks`` stops cleanly at the missing pad)."""
+    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+    if fact is not None:
+        body += b"fact" + struct.pack("<I", len(fact)) + fact
+    body += b"data" + struct.pack("<I", len(data)) + bytes(data)
+    return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
 def encode_wav(sample_rate: int, samples: List[int]) -> bytes:
@@ -58,16 +70,7 @@ def encode_wav(sample_rate: int, samples: List[int]) -> bytes:
     fmt = struct.pack(
         "<HHIIHH", _PCM_FORMAT, 1, sample_rate, byte_rate, 2, 16
     )
-    body = (
-        b"WAVE"
-        + b"fmt "
-        + struct.pack("<I", len(fmt))
-        + fmt
-        + b"data"
-        + struct.pack("<I", len(data))
-        + data
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _wav(fmt, data)
 
 
 @untrusted_decoder
@@ -76,26 +79,18 @@ def decode_wav(payload: bytes) -> Tuple[int, List[int]]:
 
     Chunk-order tolerant (walks every chunk, honoring word alignment);
     anything that is not integer PCM 16-bit mono raises
-    NotImplementedError — compressed / float / multichannel audio is the
-    genuinely codec-bound remainder, the same narrow-gate discipline as
-    progressive JPEG in operators/pixels.py.
+    NotImplementedError (``decode_wav_ex`` takes the wider formats).
     """
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
-    pos = 12
     sample_rate = None
     bits = channels = fmt_tag = None
     data = None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (size,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-        body = payload[pos + 8 : pos + 8 + size]
+    for cid, start, size in riff_chunks(payload, 12, len(payload)):
+        body = payload[start : start + size]
         # declared sizes are untrusted: a fmt chunk shorter than the
-        # 16-byte PCM header or a data chunk overrunning the payload
-        # must fail as the documented ValueError gate, not a raw
-        # struct.error / silent truncation deep in an Arrow batch
-        if len(body) != size:
-            raise ValueError("truncated chunk")
+        # 16-byte PCM header must fail as the documented ValueError
+        # gate, not a raw struct.error deep in an Arrow batch
         if cid == b"fmt ":
             if size < 16:
                 raise ValueError("truncated chunk")
@@ -103,13 +98,12 @@ def decode_wav(payload: bytes) -> Tuple[int, List[int]]:
             (bits,) = struct.unpack("<H", body[14:16])
         elif cid == b"data":
             data = body
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
     if sample_rate is None or data is None:
         raise ValueError("missing fmt/data chunk")
     if fmt_tag != _PCM_FORMAT or bits != 16 or channels != 1:
         raise NotImplementedError(
             "only mono 16-bit integer PCM decodes here (float32 and "
-            "multichannel decode via decode_wav_ex since round 11); "
+            "multichannel decode via decode_wav_ex); "
             "compressed (MP3/AAC/Opus) audio needs a codec library "
             "this container does not ship"
         )
@@ -148,14 +142,12 @@ def encode_wav_ex(
     sample lists (equal lengths), interleaved frame-by-frame into one
     'data' chunk. fmt 3 writes IEEE float32 (float64 with
     ``bits64=True``); fmt 1 writes PCM16, or 3-byte-packed PCM24 with
-    ``bits24=True`` (values taken as ints, clamped to the width).
-    Round-10 verdict #7 / round-12 verdict #6: all struct-only
-    extensions of the RIFF walk."""
+    ``bits24=True`` (values taken as ints, clamped to the width)."""
     n_ch = len(channels)
     if n_ch == 0:
         raise ValueError("need at least one channel")
     if bits24 and fmt != _PCM_FORMAT:
-        # guard against silent misuse (ADVICE r12): 24-bit packing is a
+        # guard against silent misuse: 24-bit packing is a
         # PCM-only width; fmt 3 callers passing bits24 almost certainly
         # meant bits64 or fmt=1
         raise ValueError("bits24 is only meaningful for integer PCM (fmt 1)")
@@ -194,40 +186,25 @@ def encode_wav_ex(
     fmt_chunk = struct.pack(
         "<HHIIHH", fmt, n_ch, sample_rate, sample_rate * block, block, bits
     )
-    body = (
-        b"WAVE"
-        + b"fmt "
-        + struct.pack("<I", len(fmt_chunk))
-        + fmt_chunk
-        + b"data"
-        + struct.pack("<I", len(data))
-        + data
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _wav(fmt_chunk, data)
 
 
 @untrusted_decoder
 def decode_wav_ex(payload: bytes) -> Tuple[int, List[List[float]]]:
     """(sample_rate, per-channel sample lists) from integer PCM16,
-    3-byte-packed PCM24 (round 12), or IEEE float32/float64 WAV bytes,
-    ANY channel count (de-interleaved) — the round-11/12 widening of
-    ``decode_wav``'s mono-PCM16 gate. The NotImplementedError gate now
-    covers ONLY genuinely compressed audio (MP3/AAC/Opus). Same
+    3-byte-packed PCM24, IEEE float32/float64, G.711 or IMA/MS ADPCM WAV
+    bytes, ANY channel count (de-interleaved). The NotImplementedError
+    gate covers ONLY genuinely compressed audio (MP3/AAC/Opus). Same
     untrusted-size validation as decode_wav."""
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
-    pos = 12
     sample_rate = None
     bits = n_ch = fmt_tag = None
     block_align = fact_n = None
     fmt_body = b""
     data = None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (size,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-        body = payload[pos + 8 : pos + 8 + size]
-        if len(body) != size:
-            raise ValueError("truncated chunk")
+    for cid, start, size in riff_chunks(payload, 12, len(payload)):
+        body = payload[start : start + size]
         if cid == b"fmt ":
             if size < 16:
                 raise ValueError("truncated chunk")
@@ -241,7 +218,6 @@ def decode_wav_ex(payload: bytes) -> Tuple[int, List[List[float]]]:
             (fact_n,) = struct.unpack("<I", body[:4])
         elif cid == b"data":
             data = body
-        pos += 8 + size + (size & 1)
     if sample_rate is None or data is None or not n_ch:
         raise ValueError("missing fmt/data chunk")
     if fmt_tag == _PCM_FORMAT and bits == 16:
@@ -264,7 +240,7 @@ def decode_wav_ex(payload: bytes) -> Tuple[int, List[List[float]]]:
     elif fmt_tag == _MULAW_FORMAT and bits == 8:
         flat = [float(mulaw_expand(c)) for c in data]
     elif fmt_tag == _IMA_FORMAT and bits == 4:
-        # round 14: IMA/DVI ADPCM — the first lossy predictive family
+        # IMA/DVI ADPCM — the first lossy predictive family
         # decoding for real (pure-integer recurrence, hash-oracle-able).
         # Multichannel uses the spec's 4-byte-word interleave: one
         # header per channel, then 4-byte nibble words round-robin.
@@ -275,7 +251,7 @@ def decode_wav_ex(payload: bytes) -> Tuple[int, List[List[float]]]:
                 "multichannel IMA ADPCM data area must be whole 4-byte "
                 "words per channel"
             )
-        # honor wSamplesPerBlock from the fmt extension (ADVICE r14): a
+        # honor wSamplesPerBlock from the fmt extension: a
         # foreign file may pad the nibble area of EVERY block, not just
         # the last, and may omit 'fact' entirely — the per-block cap is
         # the only trim that handles both (and it keeps n_ch>=3 odd-
@@ -596,21 +572,15 @@ def parse_audio_header(payload: bytes) -> dict | None:
     containers raise ValueError."""
     b = payload
     if len(b) >= 12 and b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-        pos, fmt, data_len = 12, None, None
+        fmt, data_len = None, None
         (riff_size,) = struct.unpack("<I", b[4:8])
-        end = min(8 + riff_size, len(b))
-        while pos + 8 <= end:
-            tag = b[pos : pos + 4]
-            (size,) = struct.unpack("<I", b[pos + 4 : pos + 8])
-            if pos + 8 + size > end:
-                raise ValueError("WAV chunk overruns the payload")
+        for tag, start, size in riff_chunks(b, 12, min(8 + riff_size, len(b))):
             if tag == b"fmt ":
                 if size < 16:
                     raise ValueError("WAV fmt chunk too short")
-                fmt = struct.unpack("<HHIIHH", b[pos + 8 : pos + 24])
+                fmt = struct.unpack("<HHIIHH", b[start : start + 16])
             elif tag == b"data":
                 data_len = size
-            pos += 8 + size + (size & 1)
         if fmt is None or data_len is None:
             raise ValueError("WAV missing fmt/data chunk")
         audio_fmt, channels, rate, _br, block_align, bits = fmt
@@ -804,16 +774,7 @@ def encode_wav_g711(
     fmt_chunk = struct.pack(
         "<HHIIHH", fmt_tag, n_ch, sample_rate, sample_rate * n_ch, n_ch, 8
     )
-    body = (
-        b"WAVE"
-        + b"fmt "
-        + struct.pack("<I", len(fmt_chunk))
-        + fmt_chunk
-        + b"data"
-        + struct.pack("<I", len(data))
-        + bytes(data)
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _wav(fmt_chunk, data)
 
 
 # --------------------------------------------------------------- ADPCM
@@ -964,14 +925,7 @@ def encode_wav_ima_adpcm(
         "<HHIIHHHH", _IMA_FORMAT, 1, sample_rate, byte_rate, block_align,
         4, 2, spb,
     )
-    fact = struct.pack("<I", total)
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt_chunk)) + fmt_chunk
-        + b"fact" + struct.pack("<I", len(fact)) + fact
-        + b"data" + struct.pack("<I", len(data)) + bytes(data)
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _wav(fmt_chunk, data, struct.pack("<I", total))
 
 
 def ms_adpcm_decode_block(block: bytes, coefs=None) -> List[int]:
@@ -1055,14 +1009,7 @@ def encode_wav_ms_adpcm(
         )
         + ext
     )
-    fact = struct.pack("<I", total)
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt_chunk)) + fmt_chunk
-        + b"fact" + struct.pack("<I", len(fact)) + fact
-        + b"data" + struct.pack("<I", len(data)) + bytes(data)
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _wav(fmt_chunk, data, struct.pack("<I", total))
 
 
 def encode_wav_ima_adpcm_stream(
@@ -1090,14 +1037,7 @@ def encode_wav_ima_adpcm_stream(
         (sample_rate * block_align + spb - 1) // spb, block_align, 4, 2,
         spb,
     )
-    fact = struct.pack("<I", spb)
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt_chunk)) + fmt_chunk
-        + b"fact" + struct.pack("<I", len(fact)) + fact
-        + b"data" + struct.pack("<I", block_align) + bytes(block)
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _wav(fmt_chunk, block, struct.pack("<I", spb))
 
 
 def encode_wav_ima_adpcm_multi(
@@ -1105,7 +1045,7 @@ def encode_wav_ima_adpcm_multi(
     channels: List[List[int]],
     block_align: int | None = None,
 ) -> bytes:
-    """Multichannel WAV fmt 0x11 writer (round 14): per-channel 4-byte
+    """Multichannel WAV fmt 0x11 writer: per-channel 4-byte
     block headers, then nibble data interleaved as 4-byte words
     round-robin across channels — the spec layout real stereo IMA files
     use. One block per payload by default (block_align sized to fit);
@@ -1166,14 +1106,7 @@ def encode_wav_ima_adpcm_multi(
         "<HHIIHHHH", _IMA_FORMAT, n_ch, sample_rate, byte_rate,
         block_align, 4, 2, spb,
     )
-    fact = struct.pack("<I", total)
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt_chunk)) + fmt_chunk
-        + b"fact" + struct.pack("<I", len(fact)) + fact
-        + b"data" + struct.pack("<I", len(data)) + bytes(data)
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _wav(fmt_chunk, data, struct.pack("<I", total))
 
 
 def ms_adpcm_decode_block_multi(
@@ -1304,14 +1237,7 @@ def encode_wav_ms_adpcm_multi(
         )
         + ext
     )
-    fact = struct.pack("<I", total)
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt_chunk)) + fmt_chunk
-        + b"fact" + struct.pack("<I", len(fact)) + fact
-        + b"data" + struct.pack("<I", len(data)) + bytes(data)
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _wav(fmt_chunk, data, struct.pack("<I", total))
 
 
 # ---------------------------------------------------------------------------

@@ -40,6 +40,16 @@ SEMI_FILTER_MIN_BYTES = 4 << 20
 IN_CORE_EDGES = 2_000_000
 
 
+def _semi_filter(df: DataFrame) -> bool:
+    """The semi-filter gate: open only for a KNOWN input size of at
+    least ``SEMI_FILTER_MIN_BYTES``. For an input Spark cannot size,
+    such as a ``createDataFrame`` or other RDD-backed frame, it reports
+    ``spark.sql.defaultSizeInBytes`` (or more, above a join or union),
+    and a candidate-id broadcast must not rest on that."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    return SEMI_FILTER_MIN_BYTES <= input_bytes(df) < conf.defaultSizeInBytes()
+
+
 def exact_dedup(df: DataFrame, key: Column, id_col: str) -> DataFrame:
     """Exact dedup by hash-groupBy on ``key``: one row per group with the
     minimum id as keeper and the group size."""
@@ -180,10 +190,10 @@ def jaccard_verify(
     projection twice beats storing it once — the opposite call from the
     fixed-width fingerprint/band tables above.
 
-    From ``SEMI_FILTER_MIN_BYTES`` of input (``input_bytes``) the pair
-    list is materialized once and each side's scan is broadcast-semi-
-    joined to that side's distinct pair ids, so the shingle projection
-    runs only for pair members (guide §3.2). The per-doc expression is
+    When ``_semi_filter`` opens on the input, the pair list is
+    materialized once and each side's scan is broadcast-semi-joined to
+    that side's distinct pair ids, so the shingle projection runs only
+    for pair members (guide §3.2). The per-doc expression is
     the same on both sides of the gate, so each pair's Jaccard is
     bit-identical.
 
@@ -197,7 +207,7 @@ def jaccard_verify(
     one-row-group scan task; both join sides read the SAME fanout
     exchange (ReuseExchange), and the auto probe skips it when the
     scan already splits (fanout_for_python docstring)."""
-    semi = input_bytes(df) >= SEMI_FILTER_MIN_BYTES
+    semi = _semi_filter(df)
     df = fanout_for_python(df, id_col)
     if semi:
         pairs = pairs.localCheckpoint()
@@ -248,9 +258,9 @@ def cross_corpus_contamination(
     ever shuffles the training corpus — its only shuffles are the two
     skinny signature/band aggregations (id + fixed-width hashes, not
     text). The train side's verify scan is semi-filtered to the
-    candidates from ``SEMI_FILTER_MIN_BYTES`` of train input, as in
+    candidates when ``_semi_filter`` opens on the train input, as in
     ``jaccard_verify``."""
-    semi = input_bytes(train_df) >= SEMI_FILTER_MIN_BYTES
+    semi = _semi_filter(train_df)
     sig_tr = minhash_signatures(train_df, id_col, text_col, num_hashes, shingle_n)
     sig_te = minhash_signatures(test_df, id_col, text_col, num_hashes, shingle_n)
     b_tr = lsh_band_hashes(sig_tr, id_col, bands, rows_per_band)

@@ -43,10 +43,11 @@ from mongo_analyser_spark.operators.fanout import q4
 from mongo_analyser_spark.operators.pixels import (
     _PNG_CHANNELS,
     _PNG_SIG,
-    _paeth,
+    _defilter_rows,
     _png_chunk,
     bounded_decompress,
     check_dims,
+    riff_chunks,
     untrusted_decoder,
 )
 
@@ -56,38 +57,13 @@ from mongo_analyser_spark.operators.pixels import (
 
 
 def _unfilter(raw: bytes, w: int, h: int, ch: int) -> bytearray:
-    """Reverse the five PNG scanline filters over a decompressed stream
-    of ``h`` rows of ``1 + w*ch`` bytes (same loop as
-    pixels.decode_png, factored out so APNG frame regions reuse it)."""
+    """Reverse the PNG scanline filters over a decompressed stream of
+    exactly ``h`` rows of ``1 + w*ch`` bytes (8-bit samples, so the
+    filter distance is ``ch`` bytes)."""
     stride = w * ch
     if len(raw) != h * (stride + 1):
         raise ValueError("PNG pixel data length mismatch")
-    out = bytearray(h * stride)
-    prev = bytearray(stride)
-    for row in range(h):
-        base = row * (stride + 1)
-        ftype = raw[base]
-        line = bytearray(raw[base + 1 : base + 1 + stride])
-        if ftype == 1:  # Sub
-            for i in range(ch, stride):
-                line[i] = (line[i] + line[i - ch]) & 0xFF
-        elif ftype == 2:  # Up
-            for i in range(stride):
-                line[i] = (line[i] + prev[i]) & 0xFF
-        elif ftype == 3:  # Average
-            for i in range(stride):
-                left = line[i - ch] if i >= ch else 0
-                line[i] = (line[i] + ((left + prev[i]) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth
-            for i in range(stride):
-                left = line[i - ch] if i >= ch else 0
-                ul = prev[i - ch] if i >= ch else 0
-                line[i] = (line[i] + _paeth(left, prev[i], ul)) & 0xFF
-        elif ftype != 0:
-            raise ValueError(f"unknown PNG filter {ftype}")
-        out[row * stride : (row + 1) * stride] = line
-        prev = line
-    return out
+    return _defilter_rows(raw, 0, h, stride, ch)[0]
 
 
 def _filter0(w: int, h: int, ch: int, pixels: bytes) -> bytes:
@@ -544,30 +520,14 @@ def decode_gif(b: bytes) -> tuple[int, int, list[bytearray]]:
 # AVI (RIFF) — MJPEG and uncompressed-DIB video streams
 # ---------------------------------------------------------------------------
 #
-# AVI is the third RIFF container here (after WAV in operators/audio.py):
-# the chunk grammar is public (Microsoft AVI RIFF spec / OpenDML), and an
-# MJPEG stream is just one baseline JPEG per '00dc' chunk — fully
-# decodable by operators/jpeg.py. Uncompressed 'DIB ' streams are BMP
+# AVI is the third RIFF container here (after WAV in operators/audio.py
+# and WebP in operators/vp8l.py; all three walk chunks with
+# pixels.riff_chunks): the chunk grammar is public (Microsoft AVI RIFF
+# spec / OpenDML), and an MJPEG stream is just one baseline JPEG per
+# '00dc' chunk — fully decodable by operators/jpeg.py. Uncompressed 'DIB ' streams are BMP
 # pixel arrays (bottom-up BGR, 4-byte row padding — operators/pixels.py's
 # decode_bmp layout) per '00db' chunk. Real inter-frame codecs (H.264,
 # VP9, …) remain the honest NotImplementedError gate.
-
-
-def _avi_chunks(b: bytes, pos: int, end: int):
-    """Yield (fourcc, data_start, size) over a RIFF chunk run, enforcing
-    in-bounds sizes and even-byte padding (untrusted input: a size that
-    overruns its parent is malformed, not a seek hint)."""
-    while pos + 8 <= end:
-        tag = b[pos : pos + 4]
-        (size,) = struct.unpack("<I", b[pos + 4 : pos + 8])
-        start = pos + 8
-        if start + size > end:
-            raise ValueError(
-                f"AVI chunk {tag!r} overruns its container "
-                f"({size} bytes at {pos}, parent ends {end})"
-            )
-        yield tag, start, size
-        pos = start + size + (size & 1)
 
 
 def encode_avi_mjpeg(
@@ -691,18 +651,18 @@ def decode_avi(payload: bytes) -> tuple[int, int, int, list[bytearray]]:
     streams: list[dict] = []
     movi_ranges: list[tuple[int, int]] = []
     idx1: bytes | None = None
-    for tag, start, size in _avi_chunks(payload, 12, end):
+    for tag, start, size in riff_chunks(payload, 12, end):
         if tag == b"LIST":
             ltype = payload[start : start + 4]
             if ltype == b"hdrl":
-                for t2, s2, z2 in _avi_chunks(payload, start + 4, start + size):
+                for t2, s2, z2 in riff_chunks(payload, start + 4, start + size):
                     if t2 == b"avih":
                         if z2 < 56:
                             raise ValueError("AVI avih header too short")
                         avih = struct.unpack("<14I", payload[s2 : s2 + 56])
                     elif t2 == b"LIST" and payload[s2 : s2 + 4] == b"strl":
                         st: dict = {}
-                        for t3, s3, z3 in _avi_chunks(
+                        for t3, s3, z3 in riff_chunks(
                             payload, s2 + 4, s2 + z2
                         ):
                             if t3 == b"strh" and z3 >= 48:
@@ -763,14 +723,14 @@ def decode_avi(payload: bytes) -> tuple[int, int, int, list[bytearray]]:
         # attacker ~12 bytes per level, so payload-driven recursion would
         # turn a ~12 KB crafted AVI into a RecursionError that escapes the
         # ValueError quarantine contract of untrusted_decoder.
-        stack = [_avi_chunks(payload, pos, stop)]
+        stack = [riff_chunks(payload, pos, stop)]
         while stack:
             descended = False
             for t, s, z in stack[-1]:
                 if t == b"LIST" and payload[s : s + 4] == b"rec ":
                     if len(stack) >= 64:
                         raise ValueError("AVI 'rec ' LIST nesting too deep")
-                    stack.append(_avi_chunks(payload, s + 4, s + z))
+                    stack.append(riff_chunks(payload, s + 4, s + z))
                     descended = True
                     break
                 elif t in (vtag, vtag_alt):
@@ -1195,7 +1155,7 @@ def decode_y4m(payload: bytes) -> tuple[int, int, int, list[bytearray]]:
     """(width, height, channels, composed frames) from a YUV4MPEG2
     stream: C420*/C444 frames upsample chroma by pixel replication and
     convert full-range YCbCr->RGB with the JPEG integer convention
-    (the _compose_pixels math); Cmono frames stay single-channel.
+    (the jpeg._render math); Cmono frames stay single-channel.
     Unknown colourspaces raise NotImplementedError by name; framing
     lies raise ValueError."""
     if payload[:10] != _Y4M_MAGIC:

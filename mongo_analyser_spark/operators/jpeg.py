@@ -1,4 +1,4 @@
-"""Pure-stdlib JPEG codec [EXT — closes the JPEG-pixels gate].
+"""Pure-stdlib JPEG codec.
 
 The reference renders no pixels at all (its TUI shows metadata only), so
 this is north-star multimodal surface, not parity: DCT JPEG (ITU-T
@@ -7,23 +7,21 @@ nothing beyond integer/float math — huffman tables and quantizers ship
 INSIDE the file, so a self-contained decoder is public knowledge
 end-to-end.
 
-Decoder (`decode_jpeg`): baseline sequential (SOF0/1) AND progressive
-(SOF2, since round 11: spectral selection + successive approximation —
-DC/AC first scans, DC bit refinement, AC correction-bit refinement with
-EOB runs; coefficients accumulate across scans and dequant+IDCT run
-once at EOI) — 8-bit precision, grayscale or YCbCr with arbitrary h×v
-sampling factors (4:4:4 / 4:2:2 / 4:2:0 via pixel-replication
-upsample), byte-stuffing, DRI/RSTn restart intervals. `decode_jpeg_ex`
-(since round 13, the decode_wav/decode_wav_ex split) additionally
-decodes 12-BIT streams (level shift 2048, 16-bit DQT, grayscale or
-YCbCr with arbitrary h×v sampling factors — subsampled since
-round 15) returning integer samples with maxval 4095 — both
-extended-sequential (SOF1) and, since round 15, PROGRESSIVE (SOF2:
-the 8-bit coefficient-store accumulation is precision-agnostic, only
-the render shift/clamp differ). Only arithmetic coding raises
-NotImplementedError — the genuinely codec-library-bound residue (the
-QM-coder conditioning tables, see the permanent-gates note in
-SURVEY.md).
+Decoder: one marker walk, one scan decoder and one renderer serve every
+supported frame — sequential (SOF0/1) and progressive (SOF2: spectral
+selection and successive approximation with EOB runs) huffman DCT, at
+precision 8 or 12, grayscale or YCbCr with any h×v sampling factors,
+byte stuffing and DRI/RSTn restart intervals. Every scan decodes into
+one zigzag coefficient store; after a sequential frame's scan, or at
+EOI of a progressive frame, the store is dequantized and inverse-DCT'd
+with the level shift 2^(P-1) and clamp 2^P - 1 of the SOF precision P,
+upsampled by pixel replication and colour-converted about the same
+2^(P-1) chroma centre. ``decode_jpeg_ex`` returns the samples at either
+precision with their maxval; ``decode_jpeg`` is its precision-8 gate
+with the byte contract (a bytearray out, NotImplementedError for 12-bit
+streams). Lossless, hierarchical and arithmetic-coded frames raise
+NotImplementedError — the codec-library-bound residue (the QM-coder
+conditioning tables, see the permanent-gates note in SURVEY.md).
 
 Encoders: `encode_jpeg` (baseline, 4:4:4 or 4:2:0 with 2×2-average
 chroma downsample), `encode_jpeg12` (12-bit SOF1, 4:4:4 or 4:2:0,
@@ -54,7 +52,7 @@ import struct
 
 import numpy as _np
 
-from mongo_analyser_spark.operators.pixels import untrusted_decoder
+from mongo_analyser_spark.operators.pixels import check_dims, untrusted_decoder
 
 #: zigzag scan order: position k in the scan -> natural row-major index
 ZIGZAG = [
@@ -77,7 +75,7 @@ def _idct8x8(coef: list[float], shift: int = 128, maxv: int = 255) -> list[int]:
     ``shift``/``maxv`` default to 8-bit precision; 12-bit scans pass
     2048/4095 (T.81 table 6: level shift is 2^(P-1)).
 
-    r15 (guide §1.2): the C[u]·row[u] products are hoisted out of the
+    The C[u]·row[u] products are hoisted out of the
     inner x loop (they were recomputed 8× each) and the u fold is
     unrolled. Bit-identical: every term keeps the exact two-step
     rounding ((C[u]*row[u])*COS[x][u]) and the exact left-fold
@@ -137,7 +135,7 @@ def _idct8x8(coef: list[float], shift: int = 128, maxv: int = 255) -> list[int]:
 def _fdct8x8(block: list[int], shift: float = 128.0) -> list[float]:
     """Separable 2-D forward DCT over level-shifted samples.
 
-    r15: same hoist/unroll treatment as ``_idct8x8``; term grouping and
+    Same hoist/unroll treatment as ``_idct8x8``; term grouping and
     fold order are unchanged, so output doubles are bit-identical."""
     C = _C
     COS = _COS
@@ -189,21 +187,21 @@ def _fdct8x8(block: list[int], shift: float = 128.0) -> list[float]:
 
 
 
-#: numpy mirrors of the DCT constant tables (r15 batch kernels)
+#: numpy mirrors of the DCT constant tables (batch kernels)
 _COS_NP = _np.array(_COS)
 _C_NP = _np.array(_C)
 
 
-def _idct_batch(coefs: list[list[float]], shift: int = 128, maxv: int = 255) -> list[list[int]]:
+def _idct_batch(coefs, shift: int = 128, maxv: int = 255) -> list[list[int]]:
     """``[_idct8x8(c, shift, maxv) for c in coefs]``, vectorized across
-    the batch (r15, guide §4.2 "hand whole batches to vectorized native
-    libraries"). Bit-identical by construction: the u-accumulation
-    loop, term grouping ((C[u]*coef)*COS) and /2.0 steps are the exact
+    the batch of natural-order blocks (a list of lists or an (n, 64)
+    array). Bit-identical by construction: the u-accumulation loop,
+    term grouping ((C[u]*coef)*COS) and /2.0 steps are the exact
     per-element op sequence of the scalar form (numpy float64 mul/add
     are the same IEEE ops), and ``np.rint`` is the same round-half-even
     as Python ``round``. Fuzz-pinned against the scalar in
     tests/test_codec_kernels.py."""
-    if not coefs:
+    if len(coefs) == 0:
         return []
     m = _np.array(coefs, dtype=_np.float64).reshape(-1, 8, 8)
     a = m * _C_NP  # a[n,y,u] = C[u]*coef[n,y,u]
@@ -244,16 +242,7 @@ def _fdct_quant_batch(
     return zz.astype(_np.int64).tolist()
 
 
-def _check_jpeg_dims(w: int, h: int) -> None:
-    """Untrusted-SOF guard: a mutated frame header must not make the
-    decoder allocate gigabyte planes before the entropy data runs out
-    (pixels.MAX_PIXELS, the shared in-container decode cap)."""
-    from mongo_analyser_spark.operators.pixels import check_dims
-
-    check_dims(w, h, "JPEG")
-
-
-#: pure-function memo (bits, vals) -> decode table (r15). The in-code
+#: pure-function memo (bits, vals) -> decode table. The in-code
 #: encoders emit a fixed DHT set, so the memo stabilizes at a handful
 #: of entries; it is derived data rebuilt in every process, capped so
 #: foreign streams with many distinct tables stay bounded.
@@ -264,7 +253,7 @@ _HUFF_MEMO_CAP = 1024
 def _build_huff_decode(bits: list[int], vals: bytes) -> dict:
     """Canonical huffman (length, code) -> symbol map from DHT data.
 
-    r15 (guide §1.2): also fills a one-level LUT over the next
+    Also fills a one-level LUT over the next
     ``maxlen`` bits (``__lut__`` key) and memoizes on the DHT payload —
     the per-symbol decode becomes one peek + one list index. JPEG codes
     may be INCOMPLETE, so unmatched patterns stay None and fall back to
@@ -308,7 +297,7 @@ class _BitReader:
     """MSB-first reader over one entropy-coded segment (already
     de-stuffed and split at restart markers).
 
-    r15 (guide §1.2 per-task work): the segment folds into ONE
+    The segment folds into ONE
     big-endian int up front so every read is a shift+mask — the per-bit
     byte-indexed form was ~30% of the baseline-decode profile. Same
     bits (bit p of the stream is bit nbits-1-p of the int), same
@@ -339,7 +328,7 @@ class _BitReader:
         return (self._val >> (nbits - pos - n)) & ((1 << n) - 1)
 
     def decode(self, table: dict) -> int:
-        # r15: one-level LUT peek over the next maxlen bits (zero-padded
+        # one-level LUT peek over the next maxlen bits (zero-padded
         # at the stream tail); any miss — no LUT, unmatched pattern, or
         # a matched code longer than the remaining bits — falls back to
         # the exact bit-walk so error semantics are unchanged
@@ -414,27 +403,47 @@ def _split_entropy(b: bytes, pos: int) -> tuple[list[bytes], int]:
 
 @untrusted_decoder
 def decode_jpeg(b: bytes) -> tuple[int, int, int, bytearray]:
-    """(width, height, channels, flat row-major pixel bytes) from a
-    baseline-sequential OR progressive JPEG. channels is 1 (grayscale)
+    """(width, height, channels, flat row-major pixel bytes) from an
+    8-bit sequential or progressive JPEG. channels is 1 (grayscale)
     or 3 (RGB, converted from YCbCr). Raises NotImplementedError for
     arithmetic / 12-bit streams, ValueError for malformed bytes."""
+    w, h, ch, _maxv, px = _decode(b, (8,))
+    return w, h, ch, bytearray(px.astype(_np.uint8).tobytes())
+
+
+@untrusted_decoder
+def decode_jpeg_ex(b: bytes) -> tuple[int, int, int, int, list[int]]:
+    """(width, height, channels, maxval, flat row-major samples) from a
+    sequential or progressive JPEG at precision 8 (maxval 255) or 12
+    (maxval 4095). Only lossless, hierarchical and arithmetic-coded
+    streams raise NotImplementedError."""
+    w, h, ch, maxv, px = _decode(b, (8, 12))
+    return w, h, ch, maxv, px.reshape(-1).tolist()
+
+
+def _decode(b: bytes, precisions: tuple[int, ...]):
+    """Walk the markers of a JPEG whose SOF precision is one of
+    ``precisions``: (width, height, channels, maxval, samples as an
+    (h, w) or (h, w, 3) int64 array). A sequential frame renders after
+    its one scan; a progressive frame accumulates every scan into the
+    coefficient store and renders at EOI."""
     if b[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload")
     pos = 2
     qt: dict[int, list[int]] = {}
     huff_dc: dict[int, dict] = {}
     huff_ac: dict[int, dict] = {}
-    sof = None
+    sof = store = None
+    precision = 8
     restart_interval = 0
     progressive = False
-    store = None
     saw_scan = False
     while pos < len(b):
         if b[pos] != 0xFF:
             raise ValueError("JPEG marker expected")
         # T.81 B.1.1.2: any number of 0xFF fill bytes may pad before a
         # marker — skip them instead of reading a bogus 0xFF "marker"
-        # and unpacking garbage as a segment length (advice r8 #3)
+        # and unpacking garbage as a segment length
         while pos + 1 < len(b) and b[pos + 1] == 0xFF:
             pos += 1
         if pos + 1 >= len(b):
@@ -471,37 +480,31 @@ def decode_jpeg(b: bytes) -> tuple[int, int, int, bytearray]:
                 vals = data[i + 17:i + 17 + nvals]
                 (huff_dc if tc == 0 else huff_ac)[th] = _build_huff_decode(bits, vals)
                 i += 17 + nvals
-        elif marker == 0xC0 or marker == 0xC1:  # SOF0/1: baseline ok
+        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 sequential, SOF2 progressive
             precision = data[0]
-            if precision != 8:
-                raise NotImplementedError(f"JPEG precision {precision} (need 8)")
+            if precision not in precisions:
+                raise NotImplementedError(
+                    f"JPEG precision {precision} "
+                    f"(need {' or '.join(map(str, precisions))})"
+                )
             h, w = struct.unpack(">HH", data[1:5])
-            _check_jpeg_dims(w, h)
-            ncomp = data[5]
+            check_dims(w, h, "JPEG")
             comps = []
-            for c in range(ncomp):
+            for c in range(data[5]):
                 cid, hv, tq = data[6 + 3 * c:9 + 3 * c]
                 comps.append({"id": cid, "h": hv >> 4, "v": hv & 15, "tq": tq})
+            if len(comps) == 1:
+                # a lone component is never interleaved: its MCU is one block
+                comps[0]["h"] = comps[0]["v"] = 1
             sof = (w, h, comps)
-        elif marker == 0xC2:  # SOF2: progressive DCT (round 11)
-            precision = data[0]
-            if precision != 8:
-                raise NotImplementedError(f"JPEG precision {precision} (need 8)")
-            h, w = struct.unpack(">HH", data[1:5])
-            _check_jpeg_dims(w, h)
-            ncomp = data[5]
-            comps = []
-            for c in range(ncomp):
-                cid, hv, tq = data[6 + 3 * c:9 + 3 * c]
-                comps.append({"id": cid, "h": hv >> 4, "v": hv & 15, "tq": tq})
-            sof = (w, h, comps)
-            progressive = True
+            progressive = marker == 0xC2
             store = _init_coef_store(sof)
         elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             raise NotImplementedError(
-                "extended/lossless/arithmetic JPEG is outside the stdlib "
-                "decoder (baseline AND progressive DCT are supported); "
-                "plug a codec library via decoder= callables"
+                "lossless, hierarchical and arithmetic-coded JPEG are "
+                "outside the stdlib decoder (sequential and progressive "
+                "huffman DCT decode); plug a codec library via decoder= "
+                "callables"
             )
         elif marker == 0xDD:  # DRI
             (restart_interval,) = struct.unpack(">H", data[:2])
@@ -518,36 +521,42 @@ def decode_jpeg(b: bytes) -> tuple[int, int, int, bytearray]:
                     cs, td_ta = data[1 + 2 * c:3 + 2 * c]
                     scan_list.append((by_id[cs], td_ta >> 4, td_ta & 15))
                 ss, se, ahal = data[1 + 2 * ns:4 + 2 * ns]
+                if ss == 0 and se != 0:
+                    raise ValueError("JPEG progressive DC scan with Se != 0")
+                if ss and ns != 1:
+                    raise ValueError(
+                        "JPEG progressive AC scan must be single-component"
+                    )
                 segs, pos = _split_entropy(b, pos)
-                _progressive_scan(
+                _decode_scan(
                     sof, scan_list, ss, se, ahal >> 4, ahal & 15,
                     huff_dc, huff_ac, segs, restart_interval, store,
                 )
                 saw_scan = True
                 continue
             if ns < len(sof[2]):
-                # a spec-legal BASELINE stream may split components
-                # across several scans; the baseline path handles the
+                # a spec-legal sequential stream may split components
+                # across several scans; this decoder handles the
                 # (dominant) single interleaved scan only — fail loudly
                 # instead of decoding partial planes as if complete
-                # (advice r8 #3)
                 raise NotImplementedError(
-                    "multi-scan (non-interleaved) baseline JPEG: SOS "
+                    "multi-scan (non-interleaved) sequential JPEG: SOS "
                     f"covers {ns} of {len(sof[2])} SOF components; plug "
                     "a codec library via decoder= callables"
                 )
-            scan_tables = {}
+            tables = {}
             for c in range(ns):
                 cs, td_ta = data[1 + 2 * c:3 + 2 * c]
-                scan_tables[cs] = (td_ta >> 4, td_ta & 15)
+                tables[cs] = (td_ta >> 4, td_ta & 15)
+            scan_list = [(c, *tables[c["id"]]) for c in sof[2]]
             segs, pos = _split_entropy(b, pos)
-            return _decode_scan(sof, scan_tables, qt, huff_dc, huff_ac, segs,
-                                restart_interval)
-    if progressive and store is not None and saw_scan:
-        for c in sof[2]:
-            if c["tq"] not in qt:
-                raise ValueError("JPEG progressive stream missing DQT")
-        return _render_coef_store(sof, qt, store)
+            _decode_scan(
+                sof, scan_list, 0, 63, 0, 0,
+                huff_dc, huff_ac, segs, restart_interval, store,
+            )
+            return _render(sof, qt, store, precision)
+    if progressive and saw_scan:
+        return _render(sof, qt, store, precision)
     raise ValueError("JPEG has no scan data")
 
 
@@ -569,8 +578,8 @@ def _comp_geometry(sof):
 
 def _init_coef_store(sof):
     """Per-component zigzag-order coefficient blocks over the padded
-    MCU grid — progressive scans accumulate into these across the whole
-    file; dequant + IDCT happen once at EOI."""
+    MCU grid: every scan of the frame decodes into these, and
+    ``_render`` dequantizes and inverse-DCTs them once."""
     _comp_geometry(sof)
     return {
         c["id"]: [[0] * 64 for _ in range(c["bw_pad"] * c["bh_pad"])]
@@ -643,216 +652,125 @@ def _ac_refine_block(reader, table, coef, ss, se, al, eobrun):
     return eobrun
 
 
-def _progressive_scan(sof, scan_list, ss, se, ah, al,
-                      huff_dc, huff_ac, segs, ri, store):
-    """Accumulate one progressive scan into the coefficient store.
-    DC scans (Ss=0) may interleave components; AC scans are always
-    single-component per T.81. Restart intervals reset DC predictors
-    and the EOB run at each entropy segment boundary."""
-    w, h, comps = sof
-    hmax, vmax, mcux, mcuy = _comp_geometry(sof)
+def _decode_scan(sof, scan_list, ss, se, ah, al,
+                 huff_dc, huff_ac, segs, ri, store):
+    """Entropy-decode one scan into the coefficient store.
+
+    The spectral band Ss..Se and the approximation bits Ah/Al name the
+    scan (T.81 G.1.2): Ss=0 with Se>0 codes whole blocks (a sequential
+    scan, passed as 0..63 with Ah=Al=0); a progressive scan codes the DC
+    band, first or refinement, or one AC band, first or refinement. An
+    interleaved scan walks the MCU grid, each MCU holding every listed
+    component's h×v blocks; a one-component scan walks that component's
+    own block grid. Each restart interval starts a new entropy segment
+    and resets the DC predictors and the EOB run."""
+    _hmax, _vmax, mcux, mcuy = _comp_geometry(sof)
+    if len(scan_list) > 1:
+        units = [
+            [
+                (c, td, ta, (my * c["v"] + by) * c["bw_pad"] + mx * c["h"] + bx)
+                for c, td, ta in scan_list
+                for by in range(c["v"])
+                for bx in range(c["h"])
+            ]
+            for my in range(mcuy)
+            for mx in range(mcux)
+        ]
+    else:
+        c, td, ta = scan_list[0]
+        units = [
+            [(c, td, ta, by * c["bw_pad"] + bx)]
+            for by in range(c["nby"])
+            for bx in range(c["nbx"])
+        ]
+    ac_band = _ac_first_block if ah == 0 else _ac_refine_block
     seg_i = 0
     reader = _BitReader(segs[0])
-    if ss == 0:
-        if se != 0:
-            raise ValueError("JPEG progressive DC scan with Se != 0")
-        preds = {c["id"]: 0 for c, _, _ in scan_list}
-        interleaved = len(scan_list) > 1
-        if interleaved:
-            units = mcux * mcuy
-        else:
-            c0 = scan_list[0][0]
-            units = c0["nbx"] * c0["nby"]
-        for m in range(units):
-            if ri and m and m % ri == 0:
-                seg_i += 1
-                if seg_i >= len(segs):
-                    raise ValueError("JPEG restart marker count mismatch")
-                reader = _BitReader(segs[seg_i])
-                preds = {c["id"]: 0 for c, _, _ in scan_list}
-            if interleaved:
-                my, mx = divmod(m, mcux)
-                unit_blocks = [
-                    (c, td, (my * c["v"] + by) * c["bw_pad"] + mx * c["h"] + bx)
-                    for c, td, _ta in scan_list
-                    for by in range(c["v"])
-                    for bx in range(c["h"])
-                ]
-            else:
-                c, td, _ta = scan_list[0]
-                by, bx = divmod(m, c["nbx"])
-                unit_blocks = [(c, td, by * c["bw_pad"] + bx)]
-            for c, td, bidx in unit_blocks:
-                coef = store[c["id"]][bidx]
-                if ah == 0:
-                    t = reader.decode(huff_dc[td])
-                    diff = _extend(reader.receive(t), t) if t else 0
-                    preds[c["id"]] += diff
-                    coef[0] = preds[c["id"]] << al
-                else:  # DC refinement: one raw bit per block
-                    if reader.bit():
-                        coef[0] |= 1 << al
-        return
-    if len(scan_list) != 1:
-        raise ValueError("JPEG progressive AC scan must be single-component")
-    c, _td, ta = scan_list[0]
-    table = huff_ac[ta]
+    preds: dict[int, int] = {}
     eobrun = 0
-    for m in range(c["nbx"] * c["nby"]):
+    for m, unit in enumerate(units):
         if ri and m and m % ri == 0:
             seg_i += 1
             if seg_i >= len(segs):
                 raise ValueError("JPEG restart marker count mismatch")
             reader = _BitReader(segs[seg_i])
+            preds = {}
             eobrun = 0
-        by, bx = divmod(m, c["nbx"])
-        coef = store[c["id"]][by * c["bw_pad"] + bx]
-        if ah == 0:
-            eobrun = _ac_first_block(reader, table, coef, ss, se, al, eobrun)
-        else:
-            eobrun = _ac_refine_block(reader, table, coef, ss, se, al, eobrun)
+        for c, td, ta, bidx in unit:
+            coef = store[c["id"]][bidx]
+            if ss:
+                eobrun = ac_band(reader, huff_ac[ta], coef, ss, se, al, eobrun)
+            elif ah:  # DC refinement: one raw bit per block
+                if reader.bit():
+                    coef[0] |= 1 << al
+            else:
+                t = reader.decode(huff_dc[td])
+                pred = preds.get(c["id"], 0)
+                if t:
+                    pred += _extend(reader.receive(t), t)
+                preds[c["id"]] = pred
+                coef[0] = pred << al
+                if se:
+                    _ac_sequential_block(reader, huff_ac[ta], coef)
 
 
-def _render_coef_store(sof, qt, store):
-    """Dequantize + IDCT every accumulated block, then the same
-    upsample/color path as the baseline scan decoder."""
+def _ac_sequential_block(reader, table, coef):
+    """T.81 F.2.2.2: the AC run/size codes of one sequential block up
+    to EOB (every run-0 symbol but ZRL ends the block)."""
+    k = 0
+    while k < 63:
+        rs = reader.decode(table)
+        r, s = rs >> 4, rs & 15
+        if s == 0:
+            if r == 15:  # ZRL
+                k += 16
+                continue
+            return
+        k += r + 1
+        if k > 63:
+            raise ValueError("JPEG AC index overflow")
+        coef[k] = _extend(reader.receive(s), s)
+
+
+def _render(sof, qt, store, precision: int):
+    """Dequantize and inverse-DCT every block of the store with the
+    T.81 level shift 2^(P-1) and clamp 2^P - 1 of the SOF precision P,
+    then crop, upsample (pixel replication) and colour-convert YCbCr
+    about the same 2^(P-1) chroma centre: (width, height, channels,
+    maxval, samples as an (h, w) or (h, w, 3) int64 array)."""
     w, h, comps = sof
-    hmax, vmax, mcux, mcuy = _comp_geometry(sof)
-    if len(comps) == 1:
-        hmax = vmax = 1
-    planes = {}
+    hmax, vmax, _mcux, _mcuy = _comp_geometry(sof)
+    shift, maxv = 1 << (precision - 1), (1 << precision) - 1
+    planes = []
     for c in comps:
-        pw, ph = c["bw_pad"] * 8, c["bh_pad"] * 8
-        c["pw"], c["ph"] = pw, ph
-        plane = bytearray(pw * ph)
-        q = qt[c["tq"]]
-        blocks = store[c["id"]]
-        nats = []
-        for zz in blocks:
-            nat = [0.0] * 64
-            for k in range(64):
-                if zz[k]:
-                    nat[ZIGZAG[k]] = zz[k] * q[k]
-            nats.append(nat)
-        # r15: one batched IDCT per component instead of a per-block
-        # call — bit-identical (see _idct_batch)
-        pxs = _idct_batch(nats)
-        for bi, px in enumerate(pxs):
-            by, bx = divmod(bi, c["bw_pad"])
-            ox, oy = bx * 8, by * 8
-            for yy in range(8):
-                row = (oy + yy) * pw + ox
-                plane[row:row + 8] = bytes(px[yy * 8:yy * 8 + 8])
-        planes[c["id"]] = plane
-    return _compose_pixels(w, h, comps, planes, hmax, vmax)
-
-
-def _decode_scan(sof, scan_tables, qt, huff_dc, huff_ac, segs, ri):
-    w, h, comps = sof
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
+        if c["tq"] not in qt:
+            raise ValueError("JPEG stream missing DQT")
+        zz = _np.array(store[c["id"]], dtype=_np.float64) * qt[c["tq"]]
+        nat = _np.zeros_like(zz)
+        nat[:, ZIGZAG] = zz
+        px = _np.array(_idct_batch(nat, shift, maxv))
+        planes.append(
+            px.reshape(c["bh_pad"], c["bw_pad"], 8, 8)
+            .transpose(0, 2, 1, 3)
+            .reshape(c["bh_pad"] * 8, c["bw_pad"] * 8)
+        )
     if len(comps) == 1:
-        # single-component scans are never interleaved: MCU = one block
-        hmax = vmax = comps[0]["h"] = comps[0]["v"] = 1
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    planes = {}
-    pws = {}
-    for c in comps:
-        c["pw"] = mcux * c["h"] * 8
-        c["ph"] = mcuy * c["v"] * 8
-        planes[c["id"]] = bytearray(c["pw"] * c["ph"])
-        pws[c["id"]] = c["pw"]
-    preds = {c["id"]: 0 for c in comps}
-    pending: list[tuple[int, int, int, list[float]]] = []
-    seg_i = 0
-    reader = _BitReader(segs[0])
-    for m in range(mcux * mcuy):
-        if ri and m and m % ri == 0:  # restart: next segment, reset DC
-            seg_i += 1
-            if seg_i >= len(segs):
-                raise ValueError("JPEG restart marker count mismatch")
-            reader = _BitReader(segs[seg_i])
-            preds = {c["id"]: 0 for c in comps}
-        my, mx = divmod(m, mcux)
-        for c in comps:
-            td, ta = scan_tables[c["id"]]
-            q = qt[c["tq"]]
-            for by in range(c["v"]):
-                for bx in range(c["h"]):
-                    coef = [0.0] * 64
-                    t = reader.decode(huff_dc[td])
-                    diff = _extend(reader.receive(t), t) if t else 0
-                    preds[c["id"]] += diff
-                    coef[0] = preds[c["id"]] * q[0]
-                    k = 0
-                    while k < 63:
-                        rs = reader.decode(huff_ac[ta])
-                        r, s = rs >> 4, rs & 15
-                        if s == 0:
-                            if r == 15:
-                                k += 16
-                                continue
-                            break  # EOB
-                        k += r + 1
-                        if k > 63:
-                            raise ValueError("JPEG AC index overflow")
-                        coef[ZIGZAG[k]] = _extend(reader.receive(s), s) * q[k]
-                    ox = (mx * c["h"] + bx) * 8
-                    oy = (my * c["v"] + by) * 8
-                    pending.append((c["id"], ox, oy, coef))
-    # r15: entropy decode above, ONE batched IDCT here, paste below —
-    # bit-identical (see _idct_batch); error paths unchanged (every
-    # raise happens before any IDCT ran, as before)
-    pxs = _idct_batch([p[3] for p in pending])
-    for (cid, ox, oy, _), px in zip(pending, pxs):
-        plane = planes[cid]
-        pw = pws[cid]
-        for yy in range(8):
-            row = (oy + yy) * pw + ox
-            plane[row:row + 8] = bytes(px[yy * 8:yy * 8 + 8])
-    return _compose_pixels(w, h, comps, planes, hmax, vmax)
-
-
-def _compose_pixels(w, h, comps, planes, hmax, vmax):
-    """Upsample (pixel replication) + color convert — shared by the
-    baseline scan decoder and the progressive renderer. Each comp dict
-    carries its plane stride in ``pw``."""
-    if len(comps) == 1:
-        c = comps[0]
-        plane, pw = planes[c["id"]], c["pw"]
-        out = bytearray(w * h)
-        for y in range(h):
-            out[y * w:(y + 1) * w] = plane[y * pw:y * pw + w]
-        return w, h, 1, out
-    # component order in SOF is Y, Cb, Cr for JFIF streams.
-    # r15: vectorized upsample (integer replication indexing) + color
-    # convert — per-cell op order identical to the scalar loop
-    # (int-exact index math; same IEEE mul/add sequence; np.rint ==
-    # round-half-even), pinned in tests/test_codec_kernels.py.
-    cy, cb, cr = comps[0], comps[1], comps[2]
-    yv = _upsampled(planes[cy["id"]], cy, w, h, hmax, vmax)
-    bv = _upsampled(planes[cb["id"]], cb, w, h, hmax, vmax) - 128
-    rv = _upsampled(planes[cr["id"]], cr, w, h, hmax, vmax) - 128
+        return w, h, 1, maxv, planes[0][:h, :w]
+    # component order in SOF is Y, Cb, Cr for JFIF streams; cell
+    # (y, x) of a component reads its plane at (y*v//vmax, x*h//hmax)
+    yv, bv, rv = (
+        p[(_np.arange(h) * c["v"] // vmax)[:, None],
+          (_np.arange(w) * c["h"] // hmax)[None, :]]
+        for p, c in zip(planes[:3], comps)
+    )
+    bv = bv - shift
+    rv = rv - shift
     r = _np.rint(yv + 1.402 * rv).astype(_np.int64)
     g = _np.rint(yv - 0.344136 * bv - 0.714136 * rv).astype(_np.int64)
     bl = _np.rint(yv + 1.772 * bv).astype(_np.int64)
     rgb = _np.stack([r, g, bl], axis=-1)
-    _np.clip(rgb, 0, 255, out=rgb)
-    return w, h, 3, bytearray(rgb.astype(_np.uint8).tobytes())
-
-
-def _upsampled(plane, c, w: int, h: int, hmax: int, vmax: int):
-    """Pixel-replication upsample of one component plane to (h, w) as
-    an int64 array — the vectorized form of the per-pixel
-    ``plane[(y*v//vmax)*pw + (x*h//hmax)]`` indexing (exact integer
-    index math, identical cell selection)."""
-    arr = _np.frombuffer(bytes(plane), dtype=_np.uint8).astype(_np.int64) if isinstance(
-        plane, (bytes, bytearray)
-    ) else _np.asarray(plane, dtype=_np.int64)
-    ys = (_np.arange(h, dtype=_np.int64) * c["v"] // vmax) * c["pw"]
-    xs = _np.arange(w, dtype=_np.int64) * c["h"] // hmax
-    return arr[ys[:, None] + xs[None, :]]
+    _np.clip(rgb, 0, maxv, out=rgb)
+    return w, h, 3, maxv, rgb
 
 
 # --- encoder ---------------------------------------------------------------
@@ -903,8 +821,7 @@ class _BitWriter:
         equivalent ``write`` sequence including byte stuffing (each
         emitted 0xFF is followed by 0x00; ``bytes.replace`` performs
         exactly the per-byte rule). Used by the block entropy encoder,
-        which folds a whole block's codes into one int first (r15,
-        guide §1.2)."""
+        which folds a whole block's codes into one int first."""
         acc = (self.acc << length) | code
         n = self.n + length
         rem = n & 7
@@ -929,21 +846,6 @@ def _category(v: int) -> int:
     return v.bit_length() if v >= 0 else (-v).bit_length()
 
 
-def _encode_block(
-    bw: _BitWriter,
-    block: list[int],
-    q: list[int],
-    pred: int,
-    dc_enc: dict | None = None,
-    ac_enc: dict | None = None,
-    shift: float = 128.0,
-) -> int:
-    dc_enc = _DC_ENC if dc_enc is None else dc_enc
-    ac_enc = _AC_ENC if ac_enc is None else ac_enc
-    zz = _fdct_quant_batch([block], q, shift)[0]
-    return _encode_zz(bw, zz, pred, dc_enc, ac_enc)
-
-
 def _encode_zz(
     bw: _BitWriter,
     zz: list[int],
@@ -951,10 +853,10 @@ def _encode_zz(
     dc_enc: dict,
     ac_enc: dict,
 ) -> int:
-    """Entropy-encode one quantized zigzag block (the back half of the
-    old ``_encode_block``; split in r15 so the FDCT+quantize runs
-    batched). The block's codes are folded into ONE int and emitted via
-    ``write_run`` — bit-identical to the per-code ``write`` calls."""
+    """Entropy-encode one quantized zigzag block (the FDCT+quantize runs
+    batched before, in ``_fdct_quant_batch``). The block's codes are
+    folded into ONE int and emitted via ``write_run`` — bit-identical to
+    the per-code ``write`` calls."""
     acc = 0
     nbits = 0
     diff = zz[0] - pred
@@ -1025,7 +927,7 @@ def encode_jpeg(
         planes = [list(pixels)]
         samp = [(1, 1)]
     else:
-        # r15: vectorized, bit-identical (see _rgb_to_ycbcr_planes)
+        # vectorized, bit-identical (see _rgb_to_ycbcr_planes)
         ys, cbs, crs = _rgb_to_ycbcr_planes(pixels, 128, 255)
         if subsample:
             planes = [ys, _down2x2(cbs, w, h), _down2x2(crs, w, h)]
@@ -1042,7 +944,7 @@ def encode_jpeg(
     for (sh, sv) in samp:
         dims.append((-(-w * sh // hmax), -(-h * sv // vmax)))
 
-    # r15: gather every block in scan order, run ONE batched
+    # gather every block in scan order, run ONE batched
     # FDCT+quantize, then entropy-encode — bit-identical (see
     # _fdct_quant_batch; predictors/restarts depend only on the
     # quantized DCs, which are unchanged)
@@ -1101,12 +1003,8 @@ def encode_jpeg(
 
 # --- 12-bit extended sequential (SOF1) -------------------------------------
 #
-# T.81's extended-sequential process at 12-bit precision: level shift is
-# 2^11, samples span 0..4095, DC difference categories reach 15 and AC
-# sizes 14, and DQT tables may be 16-bit (Pq=1). The entropy machinery is
-# IDENTICAL to baseline — only the sample width changes — so the decoder
-# below reuses the bit reader / huffman / zigzag / IDCT helpers with the
-# wider shift/clamp. Output is a list of ints (samples exceed a byte).
+# At precision 12 DC difference categories reach 15 and AC sizes 14, so
+# the 12-bit encoders carry wider fixed-length tables.
 
 _DC12_SYMS = list(range(16))
 _AC12_SYMS = sorted(
@@ -1115,283 +1013,9 @@ _AC12_SYMS = sorted(
 )
 
 
-@untrusted_decoder
-def decode_jpeg_ex(b: bytes) -> tuple[int, int, int, int, list[int]]:
-    """(width, height, channels, maxval, flat row-major samples) from a
-    JPEG at EITHER precision: 8-bit delegates to ``decode_jpeg``
-    (maxval 255); 12-bit (SOF0/SOF1 sequential or SOF2 progressive,
-    grayscale or YCbCr with arbitrary h×v sampling factors since
-    round 15) decodes here with level shift 2048 and maxval 4095 —
-    the ``decode_wav``/``decode_wav_ex`` split applied to JPEG. Only
-    arithmetic-coded streams raise NotImplementedError (the remaining
-    honest gate)."""
-    if b[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload")
-    pos = 2
-    qt: dict[int, list[int]] = {}
-    huff_dc: dict[int, dict] = {}
-    huff_ac: dict[int, dict] = {}
-    sof = None
-    restart_interval = 0
-    progressive = False
-    store = None
-    saw_scan = False
-    while pos < len(b):
-        if b[pos] != 0xFF:
-            raise ValueError("JPEG marker expected")
-        while pos + 1 < len(b) and b[pos + 1] == 0xFF:
-            pos += 1
-        if pos + 1 >= len(b):
-            break
-        marker = b[pos + 1]
-        if marker == 0xD9:
-            break
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        (seglen,) = struct.unpack(">H", b[pos + 2:pos + 4])
-        data = b[pos + 4:pos + 2 + seglen]
-        pos += 2 + seglen
-        if marker == 0xDB:
-            i = 0
-            while i < len(data):
-                pq, tq = data[i] >> 4, data[i] & 15
-                i += 1
-                if pq == 0:
-                    qt[tq] = list(data[i:i + 64])
-                    i += 64
-                else:
-                    qt[tq] = [
-                        struct.unpack(">H", data[i + 2 * k:i + 2 * k + 2])[0]
-                        for k in range(64)
-                    ]
-                    i += 128
-        elif marker == 0xC4:
-            i = 0
-            while i < len(data):
-                tc, th = data[i] >> 4, data[i] & 15
-                bits = list(data[i + 1:i + 17])
-                nvals = sum(bits)
-                vals = data[i + 17:i + 17 + nvals]
-                (huff_dc if tc == 0 else huff_ac)[th] = _build_huff_decode(
-                    bits, vals
-                )
-                i += 17 + nvals
-        elif marker in (0xC0, 0xC1):
-            precision = data[0]
-            if precision == 8:
-                w, h, ch, px = decode_jpeg(b)
-                return w, h, ch, 255, list(px)
-            if precision != 12:
-                raise NotImplementedError(
-                    f"JPEG precision {precision} (need 8 or 12)"
-                )
-            h, w = struct.unpack(">HH", data[1:5])
-            _check_jpeg_dims(w, h)
-            ncomp = data[5]
-            comps = []
-            for c in range(ncomp):
-                cid, hv, tq = data[6 + 3 * c:9 + 3 * c]
-                comps.append({"id": cid, "h": hv >> 4, "v": hv & 15, "tq": tq})
-            sof = (w, h, comps)
-        elif marker == 0xC2:
-            precision = data[0]
-            if precision == 8:
-                w, h, ch, px = decode_jpeg(b)
-                return w, h, ch, 255, list(px)
-            if precision != 12:
-                raise NotImplementedError(
-                    f"JPEG precision {precision} (need 8 or 12)"
-                )
-            # 12-bit PROGRESSIVE (round 15): the same coefficient-store
-            # accumulation as the 8-bit path — the scan grammar is
-            # precision-agnostic (magnitude sizes come from the DHT
-            # tables) — rendered with the 2048/4095 shift at EOI
-            h, w = struct.unpack(">HH", data[1:5])
-            _check_jpeg_dims(w, h)
-            ncomp = data[5]
-            comps = []
-            for c in range(ncomp):
-                cid, hv, tq = data[6 + 3 * c:9 + 3 * c]
-                comps.append({"id": cid, "h": hv >> 4, "v": hv & 15, "tq": tq})
-            sof = (w, h, comps)
-            progressive = True
-            store = _init_coef_store(sof)
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
-                        0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                "lossless/arithmetic JPEG is outside the stdlib decoder"
-            )
-        elif marker == 0xDD:
-            (restart_interval,) = struct.unpack(">H", data[:2])
-        elif marker == 0xDA:
-            if sof is None:
-                raise ValueError("JPEG SOS before SOF")
-            ns = data[0]
-            if progressive:
-                by_id = {c["id"]: c for c in sof[2]}
-                scan_list = []
-                for c in range(ns):
-                    cs, td_ta = data[1 + 2 * c:3 + 2 * c]
-                    scan_list.append((by_id[cs], td_ta >> 4, td_ta & 15))
-                ss, se, ahal = data[1 + 2 * ns:4 + 2 * ns]
-                segs, pos = _split_entropy(b, pos)
-                _progressive_scan(
-                    sof, scan_list, ss, se, ahal >> 4, ahal & 15,
-                    huff_dc, huff_ac, segs, restart_interval, store,
-                )
-                saw_scan = True
-                continue
-            if ns != len(sof[2]):
-                raise NotImplementedError(
-                    "multi-scan (non-interleaved) 12-bit JPEG"
-                )
-            scan_tables = {}
-            for c in range(ns):
-                cs, td_ta = data[1 + 2 * c:3 + 2 * c]
-                scan_tables[cs] = (td_ta >> 4, td_ta & 15)
-            segs, pos = _split_entropy(b, pos)
-            return _decode_scan12(
-                sof, scan_tables, qt, huff_dc, huff_ac, segs,
-                restart_interval,
-            )
-    if progressive and store is not None and saw_scan:
-        for c in sof[2]:
-            if c["tq"] not in qt:
-                raise ValueError("JPEG progressive stream missing DQT")
-        return _render_coef_store12(sof, qt, store)
-    raise ValueError("JPEG has no scan data")
-
-
-def _decode_scan12(sof, scan_tables, qt, huff_dc, huff_ac, segs, ri):
-    """12-bit twin of ``_decode_scan`` (subsampled since round 15):
-    full MCU interleave over arbitrary h×v sampling factors, int
-    planes, shift 2048 / clamp 4095."""
-    w, h, comps = sof
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    if len(comps) == 1:
-        hmax = vmax = comps[0]["h"] = comps[0]["v"] = 1
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    planes = {}
-    pws = {}
-    for c in comps:
-        c["pw"] = mcux * c["h"] * 8
-        c["ph"] = mcuy * c["v"] * 8
-        planes[c["id"]] = [0] * (c["pw"] * c["ph"])
-        pws[c["id"]] = c["pw"]
-    preds = {c["id"]: 0 for c in comps}
-    pending: list[tuple[int, int, int, list[float]]] = []
-    seg_i = 0
-    reader = _BitReader(segs[0])
-    for m in range(mcux * mcuy):
-        if ri and m and m % ri == 0:
-            seg_i += 1
-            if seg_i >= len(segs):
-                raise ValueError("JPEG restart marker count mismatch")
-            reader = _BitReader(segs[seg_i])
-            preds = {c["id"]: 0 for c in comps}
-        my, mx = divmod(m, mcux)
-        for c in comps:
-            td, ta = scan_tables[c["id"]]
-            q = qt[c["tq"]]
-            for by in range(c["v"]):
-                for bx in range(c["h"]):
-                    coef = [0.0] * 64
-                    t = reader.decode(huff_dc[td])
-                    diff = _extend(reader.receive(t), t) if t else 0
-                    preds[c["id"]] += diff
-                    coef[0] = preds[c["id"]] * q[0]
-                    k = 0
-                    while k < 63:
-                        rs = reader.decode(huff_ac[ta])
-                        r, s = rs >> 4, rs & 15
-                        if s == 0:
-                            if r == 15:
-                                k += 16
-                                continue
-                            break
-                        k += r + 1
-                        if k > 63:
-                            raise ValueError("JPEG AC index overflow")
-                        coef[ZIGZAG[k]] = _extend(reader.receive(s), s) * q[k]
-                    ox = (mx * c["h"] + bx) * 8
-                    oy = (my * c["v"] + by) * 8
-                    pending.append((c["id"], ox, oy, coef))
-    # r15: one batched IDCT (see _decode_scan / _idct_batch)
-    pxs = _idct_batch([p[3] for p in pending], shift=2048, maxv=4095)
-    for (cid, ox, oy, _), px in zip(pending, pxs):
-        plane = planes[cid]
-        pw = pws[cid]
-        for yy in range(8):
-            row = (oy + yy) * pw + ox
-            plane[row:row + 8] = px[yy * 8:yy * 8 + 8]
-    return _compose12(w, h, comps, planes, hmax, vmax)
-
-
-def _compose12(w, h, comps, planes, hmax, vmax):
-    """Crop + upsample (pixel replication) + YCbCr->RGB at 12-bit
-    precision — ``_compose_pixels`` with the 2048 chroma center and a
-    4095 clamp. Each comp dict carries its plane stride in ``pw``."""
-    if len(comps) == 1:
-        c = comps[0]
-        plane, pw = planes[c["id"]], c["pw"]
-        out: list[int] = []
-        for y in range(h):
-            out.extend(plane[y * pw:y * pw + w])
-        return w, h, 1, 4095, out
-    # r15: vectorized like _compose_pixels (2048 center, 4095 clamp)
-    cy, cb, cr = comps
-    yv = _upsampled(planes[cy["id"]], cy, w, h, hmax, vmax)
-    bv = _upsampled(planes[cb["id"]], cb, w, h, hmax, vmax) - 2048
-    rv = _upsampled(planes[cr["id"]], cr, w, h, hmax, vmax) - 2048
-    r = _np.rint(yv + 1.402 * rv).astype(_np.int64)
-    g = _np.rint(yv - 0.344136 * bv - 0.714136 * rv).astype(_np.int64)
-    bl = _np.rint(yv + 1.772 * bv).astype(_np.int64)
-    rgb = _np.stack([r, g, bl], axis=-1)
-    _np.clip(rgb, 0, 4095, out=rgb)
-    return w, h, 3, 4095, rgb.reshape(-1).tolist()
-
-
-def _render_coef_store12(sof, qt, store):
-    """12-bit twin of ``_render_coef_store`` (round 15, subsampled
-    since the same round): dequantize + IDCT with the T.81 2^(P-1)
-    level shift (2048, clamp 4095) into integer planes over each
-    component's padded grid, then the shared 12-bit
-    crop/upsample/color path."""
-    w, h, comps = sof
-    hmax, vmax, mcux, mcuy = _comp_geometry(sof)
-    if len(comps) == 1:
-        hmax = vmax = 1
-    planes = {}
-    for c in comps:
-        pw, ph = c["bw_pad"] * 8, c["bh_pad"] * 8
-        c["pw"], c["ph"] = pw, ph
-        plane = [0] * (pw * ph)
-        q = qt[c["tq"]]
-        nats = []
-        for zz in store[c["id"]]:
-            nat = [0.0] * 64
-            for k in range(64):
-                if zz[k]:
-                    nat[ZIGZAG[k]] = zz[k] * q[k]
-            nats.append(nat)
-        # r15: one batched IDCT per component (see _idct_batch)
-        pxs = _idct_batch(nats, shift=2048, maxv=4095)
-        for bi, px in enumerate(pxs):
-            by, bx = divmod(bi, c["bw_pad"])
-            ox, oy = bx * 8, by * 8
-            for yy in range(8):
-                row = (oy + yy) * pw + ox
-                plane[row:row + 8] = px[yy * 8:yy * 8 + 8]
-        planes[c["id"]] = plane
-    return _compose12(w, h, comps, planes, hmax, vmax)
-
-
 def _clamp_round(v, maxv: int) -> list[int]:
     """int(round(·)) + [0, maxv] clamp, vectorized — np.rint is the
-    same round-half-even as Python round (r15)."""
+    same round-half-even as Python round."""
     x = _np.rint(v).astype(_np.int64)
     _np.clip(x, 0, maxv, out=x)
     return x.tolist()
@@ -1402,7 +1026,7 @@ def _rgb_to_ycbcr_planes(
 ) -> tuple[list[int], list[int], list[int]]:
     """RGB -> (Y, Cb, Cr) integer planes about ``center`` with a
     ``maxv`` clamp — the shared color-convert of the 8-bit (128/255)
-    and 12-bit (2048/4095) encoders, vectorized (r15, guide §4.2) with
+    and 12-bit (2048/4095) encoders, vectorized with
     the scalar form's exact left-associated op order per component;
     bit-identical (pinned in tests/test_codec_kernels.py)."""
     if isinstance(samples, (bytes, bytearray)):
@@ -1421,15 +1045,10 @@ def _rgb_to_ycbcr_planes(
     return ys, cbs, crs
 
 
-def _rgb12_to_ycbcr_planes(samples: list[int]) -> list[list[int]]:
-    """12-bit RGB -> [Y, Cb, Cr] integer planes about the 2048 center."""
-    return list(_rgb_to_ycbcr_planes(samples, 2048, 4095))
-
-
 def _down2x2(plane: list[int], w: int, h: int) -> list[int]:
     """2x2-average downsample (border cells average the 1-2 in-image
-    samples) — shared by the 8- and 12-bit 4:2:0 encoders. Vectorized
-    (r15): the 4 cell sums are exact integer adds and the final
+    samples) — shared by the 8- and 12-bit 4:2:0 encoders. Vectorized:
+    the 4 cell sums are exact integer adds and the final
     acc/cnt + round is the same single IEEE divide + half-even round
     as the scalar form."""
     cw, ch = -(-w // 2), -(-h // 2)
@@ -1460,7 +1079,7 @@ def _plan12_planes(
         planes = [list(samples)]
         samp = [(1, 1)]
     else:
-        planes = _rgb12_to_ycbcr_planes(samples)
+        planes = list(_rgb_to_ycbcr_planes(samples, 2048, 4095))
         if subsample:
             cw, ch = -(-w // 2), -(-h // 2)
             planes = [
@@ -1491,7 +1110,7 @@ def encode_jpeg12(
     """Extended-sequential 12-bit JPEG writer (SOF1): grayscale
     (channels=1, samples 0..4095) or color (channels=3, 12-bit RGB in,
     YCbCr about the 2048 center; 4:4:4, or 4:2:0 with
-    ``subsample=True`` via 2x2-average chroma downsample — round 15).
+    ``subsample=True`` via 2x2-average chroma downsample).
     Level shift 2048; flat quantizer written as a 16-bit DQT (Pq=1 —
     exercising the decoder's wide-table branch); in-code fixed-length
     huffman tables wide enough for 12-bit categories (16 DC at 5 bits,
@@ -1505,7 +1124,7 @@ def encode_jpeg12(
     )
     mcux = -(-w // (8 * hmax))
     mcuy = -(-h // (8 * vmax))
-    # r15: batched FDCT+quantize, then entropy (see encode_jpeg)
+    # batched FDCT+quantize, then entropy (see encode_jpeg)
     metas: list[tuple[int, int]] = []
     blocks: list[list[int]] = []
     for m in range(mcux * mcuy):
@@ -1569,7 +1188,7 @@ def _enc_ac_first(bw: _BitWriter, zz: list[int], ss: int, se: int,
     """Progressive AC 'first' scan for one block: run/size over the
     point-transformed (toward-zero |v| >> Al) band, EOB0 at block end
     (this encoder never emits EOBn > 0 — less compact, always valid).
-    ``ac_enc`` swaps in the wider 12-bit table (round 15)."""
+    ``ac_enc`` swaps in the wider 12-bit table."""
     enc = _AC_ENC if ac_enc is None else ac_enc
     run = 0
     for k in range(ss, se + 1):
@@ -1598,7 +1217,7 @@ def _enc_ac_refine(bw: _BitWriter, zz: list[int], ss: int, se: int,
     sign, correction bits for already-nonzero coefficients emitted in
     the exact walk order the decoder consumes them (after the symbol's
     own sign bit / after ZRL / after EOB). ``ac_enc`` swaps in the
-    wider 12-bit table (round 15)."""
+    wider 12-bit table."""
     ah = al + 1
     enc = _AC_ENC if ac_enc is None else ac_enc
 
@@ -1670,13 +1289,13 @@ def encode_jpeg_progressive(
     if channels == 1:
         planes = [list(pixels)]
     else:
-        # r15: vectorized, bit-identical (see _rgb_to_ycbcr_planes)
+        # vectorized, bit-identical (see _rgb_to_ycbcr_planes)
         planes = list(_rgb_to_ycbcr_planes(pixels, 128, 255))
     ncomp = len(planes)
     mcux, mcuy = -(-w // 8), -(-h // 8)
     zz_blocks = []
     for plane in planes:
-        # r15: one batched FDCT+quantize per plane (see _fdct_quant_batch)
+        # one batched FDCT+quantize per plane (see _fdct_quant_batch)
         zz_blocks.append(_fdct_quant_batch(
             [
                 _block_at(plane, w, h, (m % mcux) * 8, (m // mcux) * 8)
@@ -1749,7 +1368,7 @@ def encode_jpeg12_progressive(
     successive: bool = True,
     subsample: bool = False,
 ) -> bytes:
-    """PROGRESSIVE 12-bit JPEG writer (SOF2 precision 12 — round 15):
+    """PROGRESSIVE 12-bit JPEG writer (SOF2 precision 12):
     ``encode_jpeg_progressive``'s scan structure (spectral selection +
     optional one-level successive approximation) over
     ``encode_jpeg12``'s sample domain — level shift 2048, 16-bit Pq=1
@@ -1781,7 +1400,7 @@ def encode_jpeg12_progressive(
         bw_pad, bh_pad = mcux * sh, mcuy * sv
         nbx, nby = -(-pw // 8), -(-ph // 8)
         geom.append((bw_pad, bh_pad, nbx, nby))
-        # r15: one batched FDCT+quantize per plane (see _fdct_quant_batch)
+        # one batched FDCT+quantize per plane (see _fdct_quant_batch)
         zz_blocks.append(_fdct_quant_batch(
             [
                 _block_at(plane, pw, ph, bx * 8, by * 8)

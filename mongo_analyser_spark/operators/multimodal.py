@@ -292,13 +292,13 @@ def parse_video_header(payload: bytes) -> dict[str, Any] | None:
 
     b = payload
     if len(b) >= 12 and b[:4] == b"RIFF" and b[8:12] == b"AVI ":
-        from mongo_analyser_spark.operators.frames import _avi_chunks
+        from mongo_analyser_spark.operators.pixels import riff_chunks
 
         (riff_size,) = struct.unpack("<I", b[4:8])
         end = min(8 + riff_size, len(b))
-        for tag, start, size in _avi_chunks(b, 12, end):
+        for tag, start, size in riff_chunks(b, 12, end):
             if tag == b"LIST" and b[start : start + 4] == b"hdrl":
-                for t2, s2, z2 in _avi_chunks(b, start + 4, start + size):
+                for t2, s2, z2 in riff_chunks(b, start + 4, start + size):
                     if t2 == b"avih" and z2 >= 56:
                         avih = struct.unpack("<14I", b[s2 : s2 + 56])
                         return {

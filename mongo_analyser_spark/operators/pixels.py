@@ -81,6 +81,24 @@ def check_dims(w: int, h: int, what: str) -> None:
         )
 
 
+def riff_chunks(b: bytes, pos: int, end: int):
+    """Yield (fourcc, data_start, size) over a RIFF chunk run ending at
+    ``end`` (WAV, AVI, WebP), stepping over the pad byte of odd-sized
+    chunks. Sizes are untrusted: a chunk that overruns ``end`` is
+    malformed, not a seek hint."""
+    while pos + 8 <= end:
+        tag = b[pos : pos + 4]
+        (size,) = struct.unpack("<I", b[pos + 4 : pos + 8])
+        start = pos + 8
+        if start + size > end:
+            raise ValueError(
+                f"RIFF chunk {tag!r} overruns its container "
+                f"({size} bytes at {pos}, container ends {end})"
+            )
+        yield tag, start, size
+        pos = start + size + (size & 1)
+
+
 def bounded_decompress(data: bytes, cap: int) -> bytes:
     """zlib decompress with an output ceiling: a deflate bomb (kilobytes
     expanding to gigabytes) must fail as ValueError once it exceeds what

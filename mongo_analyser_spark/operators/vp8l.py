@@ -33,6 +33,7 @@ import struct
 
 from mongo_analyser_spark.operators.pixels import (
     check_dims,
+    riff_chunks,
     untrusted_decoder,
 )
 
@@ -539,22 +540,16 @@ def decode_webp_lossless(payload: bytes) -> tuple[int, int, int, bytearray]:
     malformed bytes raise ValueError."""
     if len(payload) < 20 or payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
         raise ValueError("not a WebP payload")
-    pos = 12
     data = None
-    while pos + 8 <= len(payload):
-        tag = payload[pos : pos + 4]
-        (size,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-        if pos + 8 + size > len(payload):
-            raise ValueError("WebP chunk overruns the payload")
+    for tag, start, size in riff_chunks(payload, 12, len(payload)):
         if tag == b"VP8L":
-            data = payload[pos + 8 : pos + 8 + size]
+            data = payload[start : start + size]
             break
         if tag == b"VP8 ":
             raise NotImplementedError(
                 "lossy WebP (VP8 intra-DCT) requires a codec library; "
                 "lossless VP8L decodes natively"
             )
-        pos += 8 + size + (size & 1)
     if data is None:
         raise ValueError("WebP payload has no VP8L chunk")
     if not data or data[0] != 0x2F:

@@ -1162,3 +1162,46 @@ def test_audio_feature_dispatch_covers_all_containers():
         encode_flac(8000, [[50] * 32, [-50] * 32])
     )
     assert len(f) == 2 and f[0]["n_samples"] == 32
+
+
+def test_wav_writers_byte_pin():
+    """Every WAV writer's bytes on fixed inputs, pinned by sha256: the
+    shared RIFF/WAVE framing (fmt, optional fact, unpadded data) must
+    not move a byte. The odd-sized data chunks (59, 73 and 77-byte
+    files) pin that WAV writes no pad byte."""
+    import hashlib
+
+    from mongo_analyser_spark.operators import audio as A
+
+    def ramp(n, k=1):
+        return [((i * 7919 * k) % 4001) * 16 - 32000 for i in range(n)]
+
+    pins = {
+        "b3b7043fcbd94f38621a42b3f6e71d2d93f17e7dd10a5cc00410a28c99a7a6cf":
+            A.encode_wav(8000, ramp(33)),
+        "5482193fbf555f797fb7d6532435d78ce80717412fe63e6eee3f6f32634e46cd":
+            A.encode_wav_ex(
+                8000, [[0.5, -0.25, 0.125], [1.0, 0.0, -1.0]]
+            ),
+        "cfd7fad33ff2242db4b925a980f29d1b3813502101bfbd9fe363e0ccae942a46":
+            A.encode_wav_ex(8000, [ramp(5)], fmt=1, bits24=True),
+        "68f51cf631c4b806b3238afdf8cab4bedde57973f31339a8ffc459a5550c9c0f":
+            A.encode_wav_g711(8000, [ramp(33)], law="alaw"),
+        "69761abe7d171cfbbc901b61be47ce82143b2810df822bbc76ca162b292ea9da":
+            A.encode_wav_ima_adpcm(8000, ramp(101), block_align=32),
+        "5b5316f7d3629556454b12155fbc80732edec6dda641fbfb44a68df8c2e82aa9":
+            A.encode_wav_ms_adpcm(8000, ramp(101), block_align=32),
+        "88a6f1e28a5ab14a4829b62ca27191ad1bfdb383074a82e6f804c4f6c6f1fa03":
+            A.encode_wav_ima_adpcm_stream(
+                8000, 100, 7, [i % 16 for i in range(18)]
+            ),
+        "32d6c05568b4a53b26f03991eb7b9c183f721c31c4879c9831c89b87cf4dc394":
+            A.encode_wav_ima_adpcm_multi(8000, [ramp(41), ramp(41, 3)]),
+        "13f11ec808731a676b2709946449cb329d09ca676738c9730a9a452070b6ee45":
+            A.encode_wav_ms_adpcm_multi(
+                8000, [ramp(41), ramp(41, 3)], block_align=64
+            ),
+    }
+    for want, payload in pins.items():
+        assert hashlib.sha256(payload).hexdigest() == want
+    assert sorted(len(p) % 2 for p in pins.values()).count(1) == 3

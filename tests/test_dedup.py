@@ -538,12 +538,10 @@ def test_merge_start_intervals_matches_python_union(spark):
         assert got[i] == py_union(c), (i, c)
 
 
-def test_jaccard_semi_filter_parity(spark, docs, monkeypatch, optimized_plan):
-    """The candidate semi-filter (gate open: pair list checkpointed,
-    per-side ids broadcast-semi-joined onto the corpus scan) must give
-    the exact rows of the closed form, threshold filter included, for
-    jaccard_verify and cross_corpus_contamination. Each side is forced by
-    the threshold constant, and the two plans must differ."""
+def _semi_filter_sides(docs, monkeypatch, optimized_plan):
+    """(plan, sorted rows) of jaccard_verify and cross_corpus_contamination
+    over ``docs``, with the gate threshold set to +inf ("closed") and to
+    0 ("open")."""
     from mongo_analyser_spark.operators import dedup
 
     sigs = minhash_signatures(docs, "doc_id", "text", num_hashes=8)
@@ -551,19 +549,42 @@ def test_jaccard_semi_filter_parity(spark, docs, monkeypatch, optimized_plan):
     pairs = lsh_candidate_pairs(bands, "doc_id")
     train = docs.filter("doc_id % 2 = 1")
     test = docs.filter("doc_id % 2 = 0")
-
-    def sides(build):
+    builds = (
+        lambda: jaccard_verify(docs, pairs, "doc_id", "text"),
+        lambda: dedup.cross_corpus_contamination(
+            train, test, "doc_id", "text", min_jaccard=0.0
+        ),
+    )
+    for build in builds:
         out = {}
         for gate, threshold in (("closed", float("inf")), ("open", 0)):
             monkeypatch.setattr(dedup, "SEMI_FILTER_MIN_BYTES", threshold)
             df = build()
             out[gate] = (optimized_plan(df), sorted(map(tuple, df.collect())))
+        yield out
+
+
+def test_jaccard_semi_filter_parity(
+    spark, docs, tmp_path, monkeypatch, optimized_plan
+):
+    """The candidate semi-filter (gate open: pair list checkpointed,
+    per-side ids broadcast-semi-joined onto the corpus scan) must give
+    the exact rows of the closed form, threshold filter included, for
+    jaccard_verify and cross_corpus_contamination. The docs are read
+    from parquet, so Spark knows their size; each side is forced by the
+    threshold constant, and the two plans must differ."""
+    path = str(tmp_path / "docs")
+    docs.write.parquet(path)
+    for out in _semi_filter_sides(
+        spark.read.parquet(path), monkeypatch, optimized_plan
+    ):
         assert out["open"][0] != out["closed"][0]
         assert out["open"][1] == out["closed"][1] and out["closed"][1]
 
-    sides(lambda: jaccard_verify(docs, pairs, "doc_id", "text"))
-    sides(
-        lambda: dedup.cross_corpus_contamination(
-            train, test, "doc_id", "text", min_jaccard=0.0
-        )
-    )
+
+def test_semi_filter_closed_on_unknown_size(docs, monkeypatch, optimized_plan):
+    """Spark cannot size a createDataFrame input (it reports
+    spark.sql.defaultSizeInBytes), so even a zero threshold leaves the
+    gate closed: both operators plan exactly as the forced-closed side."""
+    for out in _semi_filter_sides(docs, monkeypatch, optimized_plan):
+        assert out["open"] == out["closed"]

@@ -827,6 +827,32 @@ def test_jpeg12_subsampled_restart_interval():
     assert out == wide
 
 
+
+def test_jpeg12_sos_listing_more_components_than_sof_raises():
+    """A 12-bit sequential SOS that lists more components than its SOF
+    is malformed (ValueError), exactly as at precision 8."""
+    import struct
+
+    from mongo_analyser_spark.operators import jpeg
+
+    for blob in (
+        jpeg.encode_jpeg(16, 16, 1, bytes(256)),
+        jpeg.encode_jpeg12(16, 16, 1, _blocks12((32, 2048, 4064, 1000))),
+    ):
+        i = blob.find(b"\xff\xda")
+        (seglen,) = struct.unpack(">H", blob[i + 2:i + 4])
+        assert blob[i + 4] == 1
+        # SOS for components 1 and 2 of a one-component frame
+        sos = b"\x02" + bytes(blob[i + 5:i + 7]) + b"\x02\x00" + bytes(
+            blob[i + 7:i + 2 + seglen]
+        )
+        mutated = (
+            blob[:i + 2] + struct.pack(">H", 2 + len(sos)) + sos
+            + blob[i + 2 + seglen:]
+        )
+        with pytest.raises(ValueError, match="more components than SOF"):
+            jpeg.decode_jpeg_ex(mutated)
+
 # --- untrusted-input hardening (round 13 fuzz sweep) -----------------------
 
 

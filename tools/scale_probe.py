@@ -939,6 +939,23 @@ def main_codec_throughput(reps_scale: float = 1.0) -> None:
         ("warc_gz_record_walk",
          warc_payload, lambda b: list(warc_src.parse_warc(b)), 10),
     ]
+    # the remaining JPEG frame kinds and the APNG unfilter path (drawn
+    # last so every payload above keeps its seeded bytes)
+    rgb12 = [rng.randrange(4096) for _ in range(w * h * 3)]
+    apng_frames = [
+        (0, 0, w, h, bytes(rng.randrange(256) for _ in range(w * h * 3)))
+        for _ in range(4)
+    ]
+    cases += [
+        ("jpeg12_ycc420_64x64",
+         jpeg.encode_jpeg12(w, h, 3, rgb12, subsample=True),
+         jpeg.decode_jpeg_ex, 20),
+        ("jpeg_progressive_64x64",
+         jpeg.encode_jpeg_progressive(w, h, 3, rgb, quant=16),
+         jpeg.decode_jpeg, 20),
+        ("apng_4f_64x64",
+         frames.encode_apng(w, h, 3, apng_frames), frames.decode_apng, 10),
+    ]
     print("| family | payload KB | docs/s/core | MB/s/core | "
           "core-h per TB |")
     print("|---|---|---|---|---|")
