@@ -44,6 +44,7 @@ from mongo_analyser_spark.operators.pixels import (
     _PNG_CHANNELS,
     _PNG_SIG,
     _defilter_rows,
+    _filter0,
     _png_chunk,
     bounded_decompress,
     check_dims,
@@ -64,14 +65,6 @@ def _unfilter(raw: bytes, w: int, h: int, ch: int) -> bytearray:
     if len(raw) != h * (stride + 1):
         raise ValueError("PNG pixel data length mismatch")
     return _defilter_rows(raw, 0, h, stride, ch)[0]
-
-
-def _filter0(w: int, h: int, ch: int, pixels: bytes) -> bytes:
-    stride = w * ch
-    return b"".join(
-        b"\x00" + bytes(pixels[r * stride : (r + 1) * stride])
-        for r in range(h)
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -23,21 +23,24 @@ streams). Lossless, hierarchical and arithmetic-coded frames raise
 NotImplementedError — the codec-library-bound residue (the QM-coder
 conditioning tables, see the permanent-gates note in SURVEY.md).
 
-Encoders: `encode_jpeg` (baseline, 4:4:4 or 4:2:0 with 2×2-average
-chroma downsample), `encode_jpeg12` (12-bit SOF1, 4:4:4 or 4:2:0,
-with its own wider fixed-length tables), `encode_jpeg12_progressive`
-(the same scan structure at precision 12, coefficient-identical to
-encode_jpeg12) and `encode_jpeg_progressive` (SOF2 4:4:4, spectral
-selection with optional one-level successive approximation) — the
-progressive fixtures exercise every progressive decode path, and their
-quantized coefficients are identical to the baseline encoder's, so the
-two containers MUST decode to the same pixels (the cross-codec test
-pin). Huffman tables are NOT the Annex-K suggestions: fixed-length
-canonical tables built in-code (12 DC categories at 4 bits,
-EOB+ZRL+all 160 run/size AC symbols at 9 bits — both fit under the
-all-ones-code ceiling), which any conformant decoder reads from the DHT
-segment like any other table. Compression ratio is sacrificed for
-having zero memorized constants.
+Encoders: one sequential writer (SOF0 at precision 8, SOF1 at 12)
+serves ``encode_jpeg`` and ``encode_jpeg12``; one progressive writer
+(SOF2: spectral selection with optional one-level successive
+approximation) serves ``encode_jpeg_progressive`` and
+``encode_jpeg12_progressive``. Both writers share one plane-prep step
+(RGB -> YCbCr about 2^(P-1), 4:4:4 or 4:2:0 with 2×2-average chroma)
+and one header writer; the level shift, clamp, DQT entry width and
+huffman tables follow from P. At equal precision, quant and
+subsampling the two writers quantize to the same coefficients, so a
+progressive stream MUST decode to the same samples as its sequential
+twin (the cross-codec test pin) — the progressive fixtures exercise
+every progressive decode path. Huffman tables are NOT the Annex-K
+suggestions: fixed-length canonical tables built in-code (DC
+categories 0..P+3 and EOB+ZRL+every run/size AC symbol, at 4/9 bits
+for P=8 and 5/10 bits for P=12, each under the all-ones-code
+ceiling), which any conformant decoder reads from the DHT segment like
+any other table. Compression ratio is sacrificed for having zero
+memorized constants.
 
 Like operators/pixels.py, the per-block loops are plain Python — sized
 for the fixture/thumbnail payloads these paths handle in-container; a
@@ -496,6 +499,8 @@ def _decode(b: bytes, precisions: tuple[int, ...]):
             if len(comps) == 1:
                 # a lone component is never interleaved: its MCU is one block
                 comps[0]["h"] = comps[0]["v"] = 1
+            elif any(not c["h"] or not c["v"] for c in comps):
+                raise ValueError("JPEG sampling factor 0")
             sof = (w, h, comps)
             progressive = marker == 0xC2
             store = _init_coef_store(sof)
@@ -775,15 +780,6 @@ def _render(sof, qt, store, precision: int):
 
 # --- encoder ---------------------------------------------------------------
 
-#: fixed-length canonical tables (see module doc): 12 DC categories at 4
-#: bits; EOB + ZRL + all 16x10 run/size pairs at 9 bits (171 symbols —
-#: 2^9-1=511 codes available, all-ones code unused)
-_DC_SYMS = list(range(12))
-_AC_SYMS = sorted(
-    {0x00, 0xF0}
-    | {(r << 4) | s for r in range(16) for s in range(1, 11)}
-)
-
 
 def _fixed_table(symbols: list[int], length: int):
     """(bits, vals, symbol->(code,length)) for an all-one-length
@@ -795,8 +791,22 @@ def _fixed_table(symbols: list[int], length: int):
     return bits, bytes(symbols), enc
 
 
-_DC_BITS, _DC_VALS, _DC_ENC = _fixed_table(_DC_SYMS, 4)
-_AC_BITS, _AC_VALS, _AC_ENC = _fixed_table(_AC_SYMS, 9)
+#: precision P -> (DC table, AC table), fixed-length canonical (see
+#: module doc): DC categories 0..P+3, and EOB + ZRL + every run/size
+#: pair with sizes 1..P+2, at 4/9 bits for P=8 and 5/10 bits for P=12 —
+#: each table leaves the all-ones code unused
+_TABLES = {
+    p: (
+        _fixed_table(list(range(p + 4)), dc_len),
+        _fixed_table(
+            sorted({0x00, 0xF0} | {
+                (r << 4) | s for r in range(16) for s in range(1, p + 3)
+            }),
+            ac_len,
+        ),
+    )
+    for p, dc_len, ac_len in ((8, 4, 9), (12, 5, 10))
+}
 
 
 class _BitWriter:
@@ -903,116 +913,6 @@ def _block_at(plane: list[int], pw: int, ph: int, ox: int, oy: int) -> list[int]
     return out
 
 
-def encode_jpeg(
-    w: int,
-    h: int,
-    channels: int,
-    pixels: bytes,
-    quant: int = 16,
-    subsample: bool = False,
-    restart_interval: int = 0,
-) -> bytes:
-    """Baseline JPEG writer: grayscale (channels=1) or color
-    (channels=3, RGB in; 4:4:4, or 4:2:0 with ``subsample=True`` via
-    2x2-average chroma downsample). Flat ``quant`` quantizer for every
-    coefficient; in-code fixed-length huffman tables (module doc).
-    ``restart_interval=N`` emits DRI + RSTn markers every N MCUs (used
-    to exercise the decoder's restart/resync path)."""
-    if channels not in (1, 3):
-        raise ValueError(f"unsupported channel count {channels}")
-    if len(pixels) != w * h * channels:
-        raise ValueError("pixel buffer does not match dimensions")
-    q = [max(1, min(255, quant))] * 64
-    if channels == 1:
-        planes = [list(pixels)]
-        samp = [(1, 1)]
-    else:
-        # vectorized, bit-identical (see _rgb_to_ycbcr_planes)
-        ys, cbs, crs = _rgb_to_ycbcr_planes(pixels, 128, 255)
-        if subsample:
-            planes = [ys, _down2x2(cbs, w, h), _down2x2(crs, w, h)]
-            samp = [(2, 2), (1, 1), (1, 1)]
-        else:
-            planes = [ys, cbs, crs]
-            samp = [(1, 1), (1, 1), (1, 1)]
-
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    dims = []
-    for (sh, sv) in samp:
-        dims.append((-(-w * sh // hmax), -(-h * sv // vmax)))
-
-    # gather every block in scan order, run ONE batched
-    # FDCT+quantize, then entropy-encode — bit-identical (see
-    # _fdct_quant_batch; predictors/restarts depend only on the
-    # quantized DCs, which are unchanged)
-    metas: list[tuple[int, int]] = []  # (mcu, component)
-    blocks: list[list[int]] = []
-    for m in range(mcux * mcuy):
-        my, mx = divmod(m, mcux)
-        for ci, plane in enumerate(planes):
-            sh, sv = samp[ci]
-            pw, ph = dims[ci]
-            for by in range(sv):
-                for bx in range(sh):
-                    metas.append((m, ci))
-                    blocks.append(_block_at(
-                        plane, pw, ph, (mx * sh + bx) * 8, (my * sv + by) * 8
-                    ))
-    zzs = _fdct_quant_batch(blocks, q)
-    bw = _BitWriter()
-    preds = [0] * len(planes)
-    parts: list[bytes] = []
-    prev_m = 0
-    for (m, ci), zz in zip(metas, zzs):
-        if restart_interval and m != prev_m and m % restart_interval == 0:
-            parts.append(bw.flush())
-            parts.append(bytes([0xFF, 0xD0 + ((m // restart_interval - 1) % 8)]))
-            bw = _BitWriter()
-            preds = [0] * len(planes)
-        prev_m = m
-        preds[ci] = _encode_zz(bw, zz, preds[ci], _DC_ENC, _AC_ENC)
-    parts.append(bw.flush())
-    scan = b"".join(parts)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0]) + bytes(q))
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-    ncomp = len(planes)
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    for ci, (sh, sv) in enumerate(samp):
-        sof += bytes([ci + 1, (sh << 4) | sv, 0])
-    out += seg(0xC0, sof)
-    out += seg(0xC4, bytes([0x00]) + bytes(_DC_BITS) + _DC_VALS)
-    out += seg(0xC4, bytes([0x10]) + bytes(_AC_BITS) + _AC_VALS)
-    sos = bytes([ncomp])
-    for ci in range(ncomp):
-        sos += bytes([ci + 1, 0x00])
-    sos += bytes([0, 63, 0])
-    out += seg(0xDA, sos)
-    out += scan
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-# --- 12-bit extended sequential (SOF1) -------------------------------------
-#
-# At precision 12 DC difference categories reach 15 and AC sizes 14, so
-# the 12-bit encoders carry wider fixed-length tables.
-
-_DC12_SYMS = list(range(16))
-_AC12_SYMS = sorted(
-    {0x00, 0xF0}
-    | {(r << 4) | s for r in range(16) for s in range(1, 15)}
-)
-
-
 def _clamp_round(v, maxv: int) -> list[int]:
     """int(round(·)) + [0, maxv] clamp, vectorized — np.rint is the
     same round-half-even as Python round."""
@@ -1025,10 +925,9 @@ def _rgb_to_ycbcr_planes(
     samples, center: int, maxv: int
 ) -> tuple[list[int], list[int], list[int]]:
     """RGB -> (Y, Cb, Cr) integer planes about ``center`` with a
-    ``maxv`` clamp — the shared color-convert of the 8-bit (128/255)
-    and 12-bit (2048/4095) encoders, vectorized with
-    the scalar form's exact left-associated op order per component;
-    bit-identical (pinned in tests/test_codec_kernels.py)."""
+    ``maxv`` clamp, vectorized with the scalar form's exact
+    left-associated op order per component; bit-identical (pinned in
+    tests/test_codec_kernels.py)."""
     if isinstance(samples, (bytes, bytearray)):
         s = _np.frombuffer(samples, dtype=_np.uint8).astype(_np.float64)
     else:
@@ -1047,10 +946,9 @@ def _rgb_to_ycbcr_planes(
 
 def _down2x2(plane: list[int], w: int, h: int) -> list[int]:
     """2x2-average downsample (border cells average the 1-2 in-image
-    samples) — shared by the 8- and 12-bit 4:2:0 encoders. Vectorized:
-    the 4 cell sums are exact integer adds and the final
-    acc/cnt + round is the same single IEEE divide + half-even round
-    as the scalar form."""
+    samples). Vectorized: the 4 cell sums are exact integer adds and
+    the final acc/cnt + round is the same single IEEE divide +
+    half-even round as the scalar form."""
     cw, ch = -(-w // 2), -(-h // 2)
     a = _np.zeros((ch * 2, cw * 2), dtype=_np.int64)
     a[:h, :w] = _np.asarray(plane, dtype=_np.int64).reshape(h, w)
@@ -1061,71 +959,94 @@ def _down2x2(plane: list[int], w: int, h: int) -> list[int]:
     return _np.rint(acc / cnt).astype(_np.int64).reshape(-1).tolist()
 
 
-def _plan12_planes(
-    w: int, h: int, channels: int, samples: list[int], subsample: bool
-):
-    """Validate + split 12-bit input into (planes, samp, dims) for the
-    two 12-bit encoders. ``subsample`` requires channels=3 (grayscale
-    has nothing to subsample)."""
+def _check_buffer(w: int, h: int, channels: int, samples) -> None:
     if channels not in (1, 3):
         raise ValueError(f"unsupported channel count {channels}")
     if len(samples) != w * h * channels:
         raise ValueError("sample buffer does not match dimensions")
+
+
+def _check12(w: int, h: int, channels: int, samples, subsample: bool) -> None:
+    """The 12-bit writers' input checks: samples in 0..4095, and
+    ``subsample`` only on 3-channel input."""
+    _check_buffer(w, h, channels, samples)
     if any(not 0 <= v <= 4095 for v in samples):
         raise ValueError("12-bit samples must be in 0..4095")
+    if channels == 1 and subsample:
+        raise ValueError("subsample requires 3-channel input")
+
+
+def _planes(w: int, h: int, channels: int, samples, subsample: bool,
+            precision: int):
+    """(planes, samp, dims, mcux, mcuy) of a checked input: grayscale
+    as given, or RGB converted to YCbCr about the 2^(P-1) centre, with
+    2x2-averaged chroma (4:2:0) when ``subsample`` — grayscale has
+    nothing to subsample and ignores it — plus each plane's size and
+    the MCU grid."""
     if channels == 1:
-        if subsample:
-            raise ValueError("subsample requires 3-channel input")
-        planes = [list(samples)]
-        samp = [(1, 1)]
+        planes, samp = [list(samples)], [(1, 1)]
     else:
-        planes = list(_rgb_to_ycbcr_planes(samples, 2048, 4095))
+        planes = list(_rgb_to_ycbcr_planes(
+            samples, 1 << (precision - 1), (1 << precision) - 1
+        ))
+        samp = [(1, 1)] * 3
         if subsample:
-            cw, ch = -(-w // 2), -(-h // 2)
-            planes = [
-                planes[0],
-                _down2x2(planes[1], w, h),
-                _down2x2(planes[2], w, h),
-            ]
+            planes[1:] = [_down2x2(p, w, h) for p in planes[1:]]
             samp = [(2, 2), (1, 1), (1, 1)]
-        else:
-            samp = [(1, 1)] * 3
     hmax = max(s[0] for s in samp)
     vmax = max(s[1] for s in samp)
-    dims = [
-        (-(-w * sh // hmax), -(-h * sv // vmax)) for (sh, sv) in samp
-    ]
-    return planes, samp, dims, hmax, vmax
+    dims = [(-(-w * sh // hmax), -(-h * sv // vmax)) for sh, sv in samp]
+    return planes, samp, dims, -(-w // (8 * hmax)), -(-h // (8 * vmax))
 
 
-def encode_jpeg12(
-    w: int,
-    h: int,
-    channels: int,
-    samples: list[int],
-    quant: int = 16,
-    restart_interval: int = 0,
-    subsample: bool = False,
-) -> bytes:
-    """Extended-sequential 12-bit JPEG writer (SOF1): grayscale
-    (channels=1, samples 0..4095) or color (channels=3, 12-bit RGB in,
-    YCbCr about the 2048 center; 4:4:4, or 4:2:0 with
-    ``subsample=True`` via 2x2-average chroma downsample).
-    Level shift 2048; flat quantizer written as a 16-bit DQT (Pq=1 —
-    exercising the decoder's wide-table branch); in-code fixed-length
-    huffman tables wide enough for 12-bit categories (16 DC at 5 bits,
-    EOB+ZRL+16×14 run/size AC at 10 bits, both under the all-ones
-    ceiling — the encode_jpeg discipline)."""
-    q = [max(1, min(65535, quant))] * 64
-    dc_bits, dc_vals, dc_enc = _fixed_table(_DC12_SYMS, 5)
-    ac_bits, ac_vals, ac_enc = _fixed_table(_AC12_SYMS, 10)
-    planes, samp, dims, hmax, vmax = _plan12_planes(
-        w, h, channels, samples, subsample
+def _quantizer(quant: int, precision: int) -> list[int]:
+    """The flat quantizer, clamped to the DQT entry width: 8-bit
+    entries (Pq=0) at precision 8, 16-bit (Pq=1) at precision 12."""
+    return [max(1, min(65535 if precision > 8 else 255, quant))] * 64
+
+
+def _seg(marker: int, payload: bytes) -> bytes:
+    return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
+
+
+def _headers(sof_marker: int, precision: int, w: int, h: int, samp,
+             q: list[int], restart_interval: int = 0) -> bytearray:
+    """SOI, DQT, DRI (when restarting), SOF and the two DHT segments of
+    the precision's fixed tables."""
+    (dc_bits, dc_vals, _), (ac_bits, ac_vals, _) = _TABLES[precision]
+    pq = int(precision > 8)
+    out = bytearray(b"\xff\xd8")
+    out += _seg(0xDB, bytes([pq << 4]) + struct.pack(">64" + "BH"[pq], *q))
+    if restart_interval:
+        out += _seg(0xDD, struct.pack(">H", restart_interval))
+    sof = struct.pack(">BHHB", precision, h, w, len(samp))
+    for ci, (sh, sv) in enumerate(samp):
+        sof += bytes([ci + 1, (sh << 4) | sv, 0])
+    out += _seg(sof_marker, sof)
+    out += _seg(0xC4, bytes([0x00]) + bytes(dc_bits) + dc_vals)
+    out += _seg(0xC4, bytes([0x10]) + bytes(ac_bits) + ac_vals)
+    return out
+
+
+def _sos(comp_ids, ss: int, se: int, ah: int, al: int) -> bytes:
+    sos = bytes([len(comp_ids)])
+    for ci in comp_ids:
+        sos += bytes([ci + 1, 0x00])
+    return _seg(0xDA, sos + bytes([ss, se, (ah << 4) | al]))
+
+
+def _write_sequential(w, h, channels, samples, precision, quant,
+                      subsample, restart_interval) -> bytes:
+    """The sequential writer: SOF0 at precision 8, SOF1 at 12. Every
+    block is gathered in scan order and run through ONE batched
+    FDCT+quantize, then entropy-coded; ``restart_interval=N`` emits
+    DRI + RSTn markers every N MCUs."""
+    q = _quantizer(quant, precision)
+    planes, samp, dims, mcux, mcuy = _planes(
+        w, h, channels, samples, subsample, precision
     )
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    # batched FDCT+quantize, then entropy (see encode_jpeg)
-    metas: list[tuple[int, int]] = []
+    (_, _, dc_enc), (_, _, ac_enc) = _TABLES[precision]
+    metas: list[tuple[int, int]] = []  # (mcu, component)
     blocks: list[list[int]] = []
     for m in range(mcux * mcuy):
         my, mx = divmod(m, mcux)
@@ -1138,58 +1059,31 @@ def encode_jpeg12(
                     blocks.append(_block_at(
                         plane, pw, ph, (mx * sh + bx) * 8, (my * sv + by) * 8
                     ))
-    zzs = _fdct_quant_batch(blocks, q, shift=2048.0)
+    zzs = _fdct_quant_batch(blocks, q, shift=float(1 << (precision - 1)))
     bw = _BitWriter()
     preds = [0] * len(planes)
-    parts: list[bytes] = []
+    out = _headers(0xC0 if precision == 8 else 0xC1, precision, w, h,
+                   samp, q, restart_interval)
+    out += _sos(range(len(planes)), 0, 63, 0, 0)
     prev_m = 0
     for (m, ci), zz in zip(metas, zzs):
         if restart_interval and m != prev_m and m % restart_interval == 0:
-            parts.append(bw.flush())
-            parts.append(
-                bytes([0xFF, 0xD0 + ((m // restart_interval - 1) % 8)])
-            )
+            out += bw.flush()
+            out += bytes([0xFF, 0xD0 + ((m // restart_interval - 1) % 8)])
             bw = _BitWriter()
             preds = [0] * len(planes)
         prev_m = m
         preds[ci] = _encode_zz(bw, zz, preds[ci], dc_enc, ac_enc)
-    parts.append(bw.flush())
-    scan = b"".join(parts)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(
-        0xDB,
-        bytes([0x10]) + b"".join(struct.pack(">H", v) for v in q),
-    )
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-    ncomp = len(planes)
-    sof = struct.pack(">BHHB", 12, h, w, ncomp)
-    for ci, (sh, sv) in enumerate(samp):
-        sof += bytes([ci + 1, (sh << 4) | sv, 0])
-    out += seg(0xC1, sof)
-    out += seg(0xC4, bytes([0x00]) + bytes(dc_bits) + dc_vals)
-    out += seg(0xC4, bytes([0x10]) + bytes(ac_bits) + ac_vals)
-    sos = bytes([ncomp])
-    for ci in range(ncomp):
-        sos += bytes([ci + 1, 0x00])
-    sos += bytes([0, 63, 0])
-    out += seg(0xDA, sos)
-    out += scan
+    out += bw.flush()
     out += b"\xff\xd9"
     return bytes(out)
 
 
 def _enc_ac_first(bw: _BitWriter, zz: list[int], ss: int, se: int,
-                  al: int, ac_enc=None) -> None:
+                  al: int, enc: dict) -> None:
     """Progressive AC 'first' scan for one block: run/size over the
     point-transformed (toward-zero |v| >> Al) band, EOB0 at block end
-    (this encoder never emits EOBn > 0 — less compact, always valid).
-    ``ac_enc`` swaps in the wider 12-bit table."""
-    enc = _AC_ENC if ac_enc is None else ac_enc
+    (this encoder never emits EOBn > 0 — less compact, always valid)."""
     run = 0
     for k in range(ss, se + 1):
         v = zz[k]
@@ -1211,15 +1105,13 @@ def _enc_ac_first(bw: _BitWriter, zz: list[int], ss: int, se: int,
 
 
 def _enc_ac_refine(bw: _BitWriter, zz: list[int], ss: int, se: int,
-                   al: int, ac_enc=None) -> None:
+                   al: int, enc: dict) -> None:
     """Progressive AC refinement scan for one block (Ah = Al + 1):
     newly-significant coefficients (|v| >> Al == 1) coded as (run, 1) +
     sign, correction bits for already-nonzero coefficients emitted in
     the exact walk order the decoder consumes them (after the symbol's
-    own sign bit / after ZRL / after EOB). ``ac_enc`` swaps in the
-    wider 12-bit table."""
+    own sign bit / after ZRL / after EOB)."""
     ah = al + 1
-    enc = _AC_ENC if ac_enc is None else ac_enc
 
     def hist(v: int) -> int:
         return abs(v) >> ah
@@ -1264,6 +1156,128 @@ def _enc_ac_refine(bw: _BitWriter, zz: list[int], ss: int, se: int,
         k = found + 1
 
 
+def _write_progressive(w, h, channels, samples, precision, quant,
+                       subsample, successive) -> bytes:
+    """The progressive writer (SOF2): spectral selection — one
+    interleaved DC scan, then one 1..63 AC scan per component — and,
+    with ``successive``, one level of successive approximation (DC and
+    AC first scans at Al=1, then refinement scans at Ah=1/Al=0).
+    Quantized coefficients are the sequential writer's at the same
+    precision, quant and subsampling.
+
+    Per T.81 the interleaved DC scan covers the PADDED MCU grid (edge
+    MCUs carry dummy blocks, encoded here from edge-replicated
+    content) while the non-interleaved AC scans cover only each
+    component's own nbx×nby block grid."""
+    q = _quantizer(quant, precision)
+    planes, samp, dims, mcux, mcuy = _planes(
+        w, h, channels, samples, subsample, precision
+    )
+    (_, _, dc_enc), (_, _, ac_enc) = _TABLES[precision]
+    ncomp = len(planes)
+    zz_blocks = []  # per comp: padded-grid raster-order zigzag blocks
+    ac_order = []  # per comp: padded-grid indices of its nbx×nby grid
+    dc_order = []  # (ci, padded-grid index) per block, T.81 MCU order
+    for ci, plane in enumerate(planes):
+        sh, sv = samp[ci]
+        pw, ph = dims[ci]
+        bw_pad, bh_pad = mcux * sh, mcuy * sv
+        # one batched FDCT+quantize per plane (see _fdct_quant_batch)
+        zz_blocks.append(_fdct_quant_batch(
+            [
+                _block_at(plane, pw, ph, bx * 8, by * 8)
+                for by in range(bh_pad)
+                for bx in range(bw_pad)
+            ],
+            q,
+            shift=float(1 << (precision - 1)),
+        ))
+        ac_order.append([
+            by * bw_pad + bx
+            for by in range(-(-ph // 8))
+            for bx in range(-(-pw // 8))
+        ])
+    for m in range(mcux * mcuy):
+        my, mx = divmod(m, mcux)
+        for ci, (sh, sv) in enumerate(samp):
+            for by in range(sv):
+                for bx in range(sh):
+                    dc_order.append(
+                        (ci, (my * sv + by) * mcux * sh + (mx * sh + bx))
+                    )
+
+    al = 1 if successive else 0
+    out = _headers(0xC2, precision, w, h, samp, q)
+    bw = _BitWriter()
+    preds = [0] * ncomp
+    for ci, bidx in dc_order:
+        v = zz_blocks[ci][bidx][0] >> al  # arithmetic shift, T.81 DC PT
+        diff = v - preds[ci]
+        preds[ci] = v
+        t = _category(diff)
+        bw.write(*dc_enc[t])
+        if t:
+            bw.write(diff if diff > 0 else diff + (1 << t) - 1, t)
+    out += _sos(range(ncomp), 0, 0, 0, al) + bw.flush()
+    if successive:  # DC refinement: one raw bit per block
+        bw = _BitWriter()
+        for ci, bidx in dc_order:
+            bw.write(zz_blocks[ci][bidx][0] & 1, 1)
+        out += _sos(range(ncomp), 0, 0, 1, 0) + bw.flush()
+    for ci in range(ncomp):  # AC first scans, one component each
+        bw = _BitWriter()
+        for bidx in ac_order[ci]:
+            _enc_ac_first(bw, zz_blocks[ci][bidx], 1, 63, al, ac_enc)
+        out += _sos([ci], 1, 63, 0, al) + bw.flush()
+    if successive:  # AC refinement scans
+        for ci in range(ncomp):
+            bw = _BitWriter()
+            for bidx in ac_order[ci]:
+                _enc_ac_refine(bw, zz_blocks[ci][bidx], 1, 63, 0, ac_enc)
+            out += _sos([ci], 1, 63, 1, 0) + bw.flush()
+    out += b"\xff\xd9"
+    return bytes(out)
+
+
+def encode_jpeg(
+    w: int,
+    h: int,
+    channels: int,
+    pixels: bytes,
+    quant: int = 16,
+    subsample: bool = False,
+    restart_interval: int = 0,
+) -> bytes:
+    """Baseline JPEG writer (SOF0): grayscale (channels=1) or color
+    (channels=3, RGB in; 4:4:4, or 4:2:0 with ``subsample=True``, which
+    grayscale ignores). ``restart_interval=N`` emits DRI + RSTn markers
+    every N MCUs (used to exercise the decoder's restart/resync path)."""
+    _check_buffer(w, h, channels, pixels)
+    return _write_sequential(
+        w, h, channels, pixels, 8, quant, subsample, restart_interval
+    )
+
+
+def encode_jpeg12(
+    w: int,
+    h: int,
+    channels: int,
+    samples: list[int],
+    quant: int = 16,
+    restart_interval: int = 0,
+    subsample: bool = False,
+) -> bytes:
+    """Extended-sequential 12-bit JPEG writer (SOF1): grayscale
+    (channels=1, samples 0..4095) or color (channels=3, 12-bit RGB in;
+    4:4:4, or 4:2:0 with ``subsample=True``). The flat quantizer is
+    written as a 16-bit DQT (Pq=1 — exercising the decoder's wide-table
+    branch)."""
+    _check12(w, h, channels, samples, subsample)
+    return _write_sequential(
+        w, h, channels, samples, 12, quant, subsample, restart_interval
+    )
+
+
 def encode_jpeg_progressive(
     w: int,
     h: int,
@@ -1272,91 +1286,14 @@ def encode_jpeg_progressive(
     quant: int = 16,
     successive: bool = True,
 ) -> bytes:
-    """PROGRESSIVE JPEG writer (SOF2, 4:4:4): spectral selection (DC
-    scan + one 1..63 AC scan per component) and, with
-    ``successive=True``, one level of successive approximation (DC and
-    AC first scans at Al=1 followed by refinement scans at Ah=1/Al=0 —
-    exercising every progressive decode path: DC/AC first, DC bit
-    refinement, AC correction-bit refinement, ZRL and EOB handling).
-    Quantized coefficients are identical to ``encode_jpeg``'s at the
-    same ``quant``, so the decoded pixels must match the baseline
-    stream's decode EXACTLY — the cross-codec test contract."""
-    if channels not in (1, 3):
-        raise ValueError(f"unsupported channel count {channels}")
-    if len(pixels) != w * h * channels:
-        raise ValueError("pixel buffer does not match dimensions")
-    q = [max(1, min(255, quant))] * 64
-    if channels == 1:
-        planes = [list(pixels)]
-    else:
-        # vectorized, bit-identical (see _rgb_to_ycbcr_planes)
-        planes = list(_rgb_to_ycbcr_planes(pixels, 128, 255))
-    ncomp = len(planes)
-    mcux, mcuy = -(-w // 8), -(-h // 8)
-    zz_blocks = []
-    for plane in planes:
-        # one batched FDCT+quantize per plane (see _fdct_quant_batch)
-        zz_blocks.append(_fdct_quant_batch(
-            [
-                _block_at(plane, w, h, (m % mcux) * 8, (m // mcux) * 8)
-                for m in range(mcux * mcuy)
-            ],
-            q,
-        ))
-
-    al = 1 if successive else 0
-    scans: list[tuple[list[int], int, int, int, int, bytes]] = []
-    # DC first scan: interleaved over all components (4:4:4 => MCU=block)
-    bw = _BitWriter()
-    preds = [0] * ncomp
-    for m in range(mcux * mcuy):
-        for ci in range(ncomp):
-            v = zz_blocks[ci][m][0] >> al  # arithmetic shift, T.81 DC PT
-            diff = v - preds[ci]
-            preds[ci] = v
-            t = _category(diff)
-            bw.write(*_DC_ENC[t])
-            if t:
-                bw.write(diff if diff > 0 else diff + (1 << t) - 1, t)
-    scans.append((list(range(ncomp)), 0, 0, 0, al, bw.flush()))
-    if successive:  # DC refinement: one raw bit per block
-        bw = _BitWriter()
-        for m in range(mcux * mcuy):
-            for ci in range(ncomp):
-                bw.write(zz_blocks[ci][m][0] & 1, 1)
-        scans.append((list(range(ncomp)), 0, 0, 1, 0, bw.flush()))
-    for ci in range(ncomp):  # AC first scans, one component each
-        bw = _BitWriter()
-        for zz in zz_blocks[ci]:
-            _enc_ac_first(bw, zz, 1, 63, al)
-        scans.append(([ci], 1, 63, 0, al, bw.flush()))
-    if successive:  # AC refinement scans
-        for ci in range(ncomp):
-            bw = _BitWriter()
-            for zz in zz_blocks[ci]:
-                _enc_ac_refine(bw, zz, 1, 63, 0)
-            scans.append(([ci], 1, 63, 1, 0, bw.flush()))
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0]) + bytes(q))
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    for ci in range(ncomp):
-        sof += bytes([ci + 1, 0x11, 0])
-    out += seg(0xC2, sof)
-    out += seg(0xC4, bytes([0x00]) + bytes(_DC_BITS) + _DC_VALS)
-    out += seg(0xC4, bytes([0x10]) + bytes(_AC_BITS) + _AC_VALS)
-    for comp_ids, ss, se, ah, a_l, entropy in scans:
-        sos = bytes([len(comp_ids)])
-        for ci in comp_ids:
-            sos += bytes([ci + 1, 0x00])
-        sos += bytes([ss, se, (ah << 4) | a_l])
-        out += seg(0xDA, sos)
-        out += entropy
-    out += b"\xff\xd9"
-    return bytes(out)
+    """Progressive 8-bit JPEG writer (SOF2, 4:4:4). Quantized
+    coefficients are identical to ``encode_jpeg``'s at the same
+    ``quant``, so the decoded pixels must match the baseline stream's
+    decode EXACTLY — the cross-codec test contract."""
+    _check_buffer(w, h, channels, pixels)
+    return _write_progressive(
+        w, h, channels, pixels, 8, quant, False, successive
+    )
 
 
 def encode_jpeg12_progressive(
@@ -1368,121 +1305,12 @@ def encode_jpeg12_progressive(
     successive: bool = True,
     subsample: bool = False,
 ) -> bytes:
-    """PROGRESSIVE 12-bit JPEG writer (SOF2 precision 12):
-    ``encode_jpeg_progressive``'s scan structure (spectral selection +
-    optional one-level successive approximation) over
-    ``encode_jpeg12``'s sample domain — level shift 2048, 16-bit Pq=1
-    DQT, the wider 12-bit fixed-length tables; 4:4:4, or 4:2:0 with
-    ``subsample=True``. Quantized coefficients are IDENTICAL to
-    ``encode_jpeg12``'s at the same ``quant``/``subsample``, so the
-    progressive container must decode (via decode_jpeg_ex) to the same
-    samples as the extended-sequential one — the cross-codec contract
-    the 8-bit pair pins, now at 12 bits.
-
-    Per T.81 the interleaved DC scan covers the PADDED MCU grid (edge
-    MCUs carry dummy blocks, encoded here from edge-replicated
-    content) while the non-interleaved AC scans cover only each
-    component's own nbx×nby block grid."""
-    q = [max(1, min(65535, quant))] * 64
-    dc_bits, dc_vals, dc_enc = _fixed_table(_DC12_SYMS, 5)
-    ac_bits, ac_vals, ac_enc = _fixed_table(_AC12_SYMS, 10)
-    planes, samp, dims, hmax, vmax = _plan12_planes(
-        w, h, channels, samples, subsample
+    """Progressive 12-bit JPEG writer (SOF2 precision 12; 4:4:4, or
+    4:2:0 with ``subsample=True``). Quantized coefficients are
+    identical to ``encode_jpeg12``'s at the same ``quant``/``subsample``,
+    so both containers must decode (via decode_jpeg_ex) to the same
+    samples."""
+    _check12(w, h, channels, samples, subsample)
+    return _write_progressive(
+        w, h, channels, samples, 12, quant, subsample, successive
     )
-    ncomp = len(planes)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    geom = []  # per comp: (bw_pad, bh_pad, nbx, nby)
-    zz_blocks = []  # per comp: padded-grid raster-order zigzag blocks
-    for ci, plane in enumerate(planes):
-        sh, sv = samp[ci]
-        pw, ph = dims[ci]
-        bw_pad, bh_pad = mcux * sh, mcuy * sv
-        nbx, nby = -(-pw // 8), -(-ph // 8)
-        geom.append((bw_pad, bh_pad, nbx, nby))
-        # one batched FDCT+quantize per plane (see _fdct_quant_batch)
-        zz_blocks.append(_fdct_quant_batch(
-            [
-                _block_at(plane, pw, ph, bx * 8, by * 8)
-                for by in range(bh_pad)
-                for bx in range(bw_pad)
-            ],
-            q,
-            shift=2048.0,
-        ))
-
-    def mcu_block_indices(m: int):
-        """(ci, padded-grid index) pairs for MCU m, T.81 order."""
-        my, mx = divmod(m, mcux)
-        for ci in range(ncomp):
-            sh, sv = samp[ci]
-            bw_pad = geom[ci][0]
-            for by in range(sv):
-                for bx in range(sh):
-                    yield ci, (my * sv + by) * bw_pad + (mx * sh + bx)
-
-    al = 1 if successive else 0
-    scans: list[tuple[list[int], int, int, int, int, bytes]] = []
-    bw = _BitWriter()
-    preds = [0] * ncomp
-    for m in range(mcux * mcuy):
-        for ci, bidx in mcu_block_indices(m):
-            v = zz_blocks[ci][bidx][0] >> al
-            diff = v - preds[ci]
-            preds[ci] = v
-            t = _category(diff)
-            bw.write(*dc_enc[t])
-            if t:
-                bw.write(diff if diff > 0 else diff + (1 << t) - 1, t)
-    scans.append((list(range(ncomp)), 0, 0, 0, al, bw.flush()))
-    if successive:
-        bw = _BitWriter()
-        for m in range(mcux * mcuy):
-            for ci, bidx in mcu_block_indices(m):
-                bw.write(zz_blocks[ci][bidx][0] & 1, 1)
-        scans.append((list(range(ncomp)), 0, 0, 1, 0, bw.flush()))
-    for ci in range(ncomp):
-        bw_pad, _bh, nbx, nby = geom[ci]
-        bw = _BitWriter()
-        for by in range(nby):
-            for bx in range(nbx):
-                _enc_ac_first(
-                    bw, zz_blocks[ci][by * bw_pad + bx], 1, 63, al,
-                    ac_enc=ac_enc,
-                )
-        scans.append(([ci], 1, 63, 0, al, bw.flush()))
-    if successive:
-        for ci in range(ncomp):
-            bw_pad, _bh, nbx, nby = geom[ci]
-            bw = _BitWriter()
-            for by in range(nby):
-                for bx in range(nbx):
-                    _enc_ac_refine(
-                        bw, zz_blocks[ci][by * bw_pad + bx], 1, 63, 0,
-                        ac_enc=ac_enc,
-                    )
-            scans.append(([ci], 1, 63, 1, 0, bw.flush()))
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(
-        0xDB,
-        bytes([0x10]) + b"".join(struct.pack(">H", v) for v in q),
-    )
-    sof = struct.pack(">BHHB", 12, h, w, ncomp)
-    for ci, (sh, sv) in enumerate(samp):
-        sof += bytes([ci + 1, (sh << 4) | sv, 0])
-    out += seg(0xC2, sof)
-    out += seg(0xC4, bytes([0x00]) + bytes(dc_bits) + dc_vals)
-    out += seg(0xC4, bytes([0x10]) + bytes(ac_bits) + ac_vals)
-    for comp_ids, ss, se, ah, a_l, entropy in scans:
-        sos = bytes([len(comp_ids)])
-        for ci in comp_ids:
-            sos += bytes([ci + 1, 0x00])
-        sos += bytes([ss, se, (ah << 4) | a_l])
-        out += seg(0xDA, sos)
-        out += entropy
-    out += b"\xff\xd9"
-    return bytes(out)

@@ -169,6 +169,16 @@ def _defilter_rows(raw, off, ph, stride, fdist):
     return out, off
 
 
+def _filter0(w: int, h: int, ch: int, pixels: bytes) -> bytes:
+    """PNG scanlines for ``h`` rows of ``w*ch`` bytes, each behind a
+    filter-0 (None) byte — the writers' side of ``_defilter_rows``."""
+    stride = w * ch
+    return b"".join(
+        b"\x00" + bytes(pixels[r * stride : (r + 1) * stride])
+        for r in range(h)
+    )
+
+
 def _unpack_row(line: bytes, pw: int, nch: int, depth: int) -> list[int]:
     """Per-pixel raw channel values from one defiltered scanline."""
     if depth == 8:
@@ -331,9 +341,7 @@ def encode_png(w: int, h: int, channels: int, pixels: bytes) -> bytes:
     stride = w * channels
     if len(pixels) != h * stride:
         raise ValueError("pixel buffer does not match dimensions")
-    raw = b"".join(
-        b"\x00" + bytes(pixels[r * stride:(r + 1) * stride]) for r in range(h)
-    )
+    raw = _filter0(w, h, channels, pixels)
     ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
     return (
         _PNG_SIG

@@ -1205,3 +1205,35 @@ def test_wav_writers_byte_pin():
     for want, payload in pins.items():
         assert hashlib.sha256(payload).hexdigest() == want
     assert sorted(len(p) % 2 for p in pins.values()).count(1) == 3
+
+    # the mono ADPCM writers are the one-channel case of the _multi
+    # writers (default block aligns 256 and 512 here), a 3-channel IMA
+    # block, an MS ADPCM stream whose last block holds one sample
+    # (52 samples per block at block_align 32), and the PNG/APNG
+    # writers' shared filter-0 scanlines
+    from mongo_analyser_spark.operators import frames as F
+    from mongo_analyser_spark.operators import pixels as P
+
+    more = {
+        "6fabfc20ef28e68bac49be7674b6a6ef356972414cdb9750f11265b57e291f18":
+            A.encode_wav_ima_adpcm_multi(8000, [ramp(300)]),
+        "012ecd9e761687c9a63c787b46017faa5521c89fa9fe9113b6ba87d113549609":
+            A.encode_wav_ms_adpcm_multi(8000, [ramp(300)]),
+        "d9413c7c994ce1cfa796c139146d0081dd99dbdbf344d2acd61040e506588e5d":
+            A.encode_wav_ima_adpcm_multi(
+                8000, [ramp(41), ramp(41, 3), ramp(41, 5)]
+            ),
+        "efef77d687c1d706fe0cf64cd7b46f2a5e11a73c4bde73d5cd98f87eee602474":
+            A.encode_wav_ms_adpcm(8000, ramp(105), block_align=32),
+        "076fbc9c8b8becd621cbc707a504bb68be2a3012c386ff95a1358893cdf5733c":
+            P.encode_png(5, 3, 3, bytes(range(0, 225, 5))),
+        "2cbdf8c3c516fac783a7f411c4ce8d2036d8ad6f6df64319cf7fa7dd790c24f2":
+            F.encode_apng(
+                5, 3, 4,
+                [(0, 0, 5, 3, bytes(range(0, 240, 4))),
+                 (1, 1, 3, 2, bytes(range(100, 124)))],
+                dispose=1, blend=[0, 1],
+            ),
+    }
+    for want, payload in more.items():
+        assert hashlib.sha256(payload).hexdigest() == want

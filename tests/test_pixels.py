@@ -438,17 +438,16 @@ def test_progressive_rejects_bad_refinement_symbol():
 
     from mongo_analyser_spark.operators.jpeg import (
         _ac_refine_block,
-        _AC_ENC,
         _BitReader,
         _BitWriter,
         _build_huff_decode,
-        _AC_BITS,
-        _AC_VALS,
+        _TABLES,
     )
 
-    table = _build_huff_decode(list(_AC_BITS), _AC_VALS)
+    ac_bits, ac_vals, ac_enc = _TABLES[8][1]
+    table = _build_huff_decode(list(ac_bits), ac_vals)
     bw = _BitWriter()
-    bw.write(*_AC_ENC[(0 << 4) | 3])  # s=3 invalid in refinement
+    bw.write(*ac_enc[(0 << 4) | 3])  # s=3 invalid in refinement
     bw.write(5, 3)
     with pytest.raises(ValueError):
         _ac_refine_block(_BitReader(bw.flush()), table, [0] * 64, 1, 63, 0, 0)
@@ -852,6 +851,77 @@ def test_jpeg12_sos_listing_more_components_than_sof_raises():
         )
         with pytest.raises(ValueError, match="more components than SOF"):
             jpeg.decode_jpeg_ex(mutated)
+
+
+def test_jpeg_zero_sampling_factor_raises_valueerror():
+    """A multi-component SOF with an H or V sampling factor of 0 is
+    malformed: ValueError, not a ZeroDivisionError or a numpy
+    broadcast error from the block geometry. A lone component is still
+    forced to 1x1, so a zeroed grayscale factor keeps decoding."""
+    from mongo_analyser_spark.operators import jpeg
+
+    blob = jpeg.encode_jpeg(16, 16, 3, bytes(range(256)) * 3)
+    i = blob.find(b"\xff\xc0")
+    for zeroed in ((0, 1, 2), (0,), (2,)):
+        b = bytearray(blob)
+        for c in zeroed:
+            b[i + 11 + 3 * c] = 0  # component c's H<<4|V byte
+        with pytest.raises(ValueError, match="sampling factor 0"):
+            jpeg.decode_jpeg(bytes(b))
+    gray = jpeg.encode_jpeg(16, 16, 1, bytes(range(256)))
+    i = gray.find(b"\xff\xc0")
+    b = bytearray(gray)
+    b[i + 11] = 0
+    assert jpeg.decode_jpeg(bytes(b)) == jpeg.decode_jpeg(gray)
+
+
+def test_jpeg_writers_byte_pin():
+    """Every JPEG writer's bytes on fixed inputs, pinned by sha256: the
+    one sequential and the one progressive writer must reproduce each
+    8- and 12-bit stream byte for byte (odd sizes, 4:2:0, restarts,
+    quant above the 8-bit DQT clamp, both progressive modes)."""
+    import hashlib
+
+    from mongo_analyser_spark.operators import jpeg as J
+
+    def img(w, h, ch, maxv):
+        # a gradient with sparse spikes: long zero runs and large
+        # coefficients in the same blocks
+        out = []
+        for y in range(h):
+            for x in range(w):
+                for c in range(ch):
+                    i = (y * w + x) * ch + c
+                    spike = maxv // 5 if (i * 7919) % 11 == 0 else 0
+                    v = x * 9 + y * 5 + c * 40 + spike
+                    out.append(v * (maxv + 1) // 256 % (maxv + 1))
+        return out
+
+    pins = {
+        "b5bf40e0598a95ab14444b11570a06502cfad0c20a081f20b79ec6551e6a8dd3":
+            J.encode_jpeg(17, 13, 1, bytes(img(17, 13, 1, 255))),
+        "0d7df4e31362d0236014dd5f31c45305c3a80e5de2829f9f62cadea9fff1df13":
+            J.encode_jpeg(16, 16, 3, bytes(img(16, 16, 3, 255))),
+        "5c2ff4f9c90cfafedf1bc66723000ffb28eafe2927e978dbd786cb2fb47e9dac":
+            J.encode_jpeg(19, 11, 3, bytes(img(19, 11, 3, 255)), quant=300,
+                          subsample=True, restart_interval=2),
+        "bfc280de1b51f51532ec4e55d8a3b21a4b3993b57d8898d872ceef308e9c7d48":
+            J.encode_jpeg12(17, 13, 1, img(17, 13, 1, 4095),
+                            restart_interval=1),
+        "c495ab922227be37b006c8ba57b1b3e33e79f9b34fbe5baea2dd140231ce9cce":
+            J.encode_jpeg12(19, 11, 3, img(19, 11, 3, 4095), quant=40,
+                            subsample=True),
+        "5e21ee2c3844c06cacc14b9b3c8f2175ef1b4d980ce7161a337ca74675a8e0e0":
+            J.encode_jpeg_progressive(17, 13, 3, bytes(img(17, 13, 3, 255))),
+        "b7ea797edaa3652ad7d3e79b129ea3164f095096aced0a75895116bcd515b876":
+            J.encode_jpeg_progressive(17, 13, 1, bytes(img(17, 13, 1, 255)),
+                                      quant=8, successive=False),
+        "98a18a9816b32ad3fecd91529664b18061078c1bf00213e21fa475dcb56e522c":
+            J.encode_jpeg12_progressive(19, 11, 3, img(19, 11, 3, 4095),
+                                        subsample=True),
+    }
+    for want, payload in pins.items():
+        assert hashlib.sha256(payload).hexdigest() == want
 
 # --- untrusted-input hardening (round 13 fuzz sweep) -----------------------
 

@@ -77,3 +77,23 @@ def test_load_bench_queries_reads_summary_line(tmp_path):
     assert "321.9" in note and "vs_baseline=0.93" in note and "xq" in note
     # none of the summary's own scalars leaked in as queries
     assert "value" not in qs and "n" not in qs
+
+
+def test_codec_throughput_probe_reports_every_family(capsys):
+    """``scale_probe.py --codec-throughput`` at its minimum reps (3 per
+    family, a few seconds): every decoder and writer family reports a positive
+    CPU-time-derived rate, with min <= median."""
+    spec = importlib.util.spec_from_file_location(
+        "scale_probe",
+        os.path.join(os.path.dirname(__file__), "..", "tools", "scale_probe.py"),
+    )
+    scale_probe = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(scale_probe)
+    scale_probe.main_codec_throughput(0)
+    families = json.loads(capsys.readouterr().out.splitlines()[-1])["families"]
+    assert len(families) == 28
+    assert sum(name.startswith("enc_") for name in families) == 8
+    for fam in families.values():
+        assert fam["reps"] == 3
+        assert fam["docs_per_s_core"] > 0
+        assert 0 < fam["cpu_ms_min"] <= fam["cpu_ms_median"]

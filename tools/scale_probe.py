@@ -838,15 +838,20 @@ def main_zipfvocab(sizes: list[int] | None = None) -> None:
 
 
 def main_codec_throughput(reps_scale: float = 1.0) -> None:
-    """Per-codec decode throughput constants (round 15, verdict-r14 #5):
-    the 100-TB story for the media rows is 'embarrassingly parallel
-    Arrow stages' — true but unpriced. This measures the per-core
-    decode constant directly (the Spark stage adds only scan + Arrow
-    batch overhead around this loop): docs/sec/core and MB/sec/core per
-    codec family at a fixed representative payload, plus the
-    core-hours-per-TB a capacity planner actually needs. Pure Python
-    timing — no Spark session; payloads are deterministic (seeded)."""
+    """Per-codec throughput constants: the 100-TB story for the media
+    rows is 'embarrassingly parallel Arrow stages', and this prices
+    it. Each family is one decode (or, for the ``enc_`` families, one
+    write) at a fixed representative payload; every call is timed
+    alone in process CPU time, one call per family per round, and the
+    median and min CPU ms per call are reported (a wall-clock mean over
+    one block of reps drifts with host load). docs/sec/core,
+    MB/sec/core (MB of the decoded or written payload) and the
+    core-hours-per-TB a capacity planner needs all derive from the
+    median. Pure Python — no Spark session; payloads are deterministic
+    (seeded). ``reps_scale`` scales every family's rep count (3 at
+    least)."""
     import random
+    import statistics
     import time as _time
 
     from mongo_analyser_spark.operators import audio, flac, frames, jpeg
@@ -956,28 +961,62 @@ def main_codec_throughput(reps_scale: float = 1.0) -> None:
         ("apng_4f_64x64",
          frames.encode_apng(w, h, 3, apng_frames), frames.decode_apng, 10),
     ]
-    print("| family | payload KB | docs/s/core | MB/s/core | "
-          "core-h per TB |")
-    print("|---|---|---|---|---|")
+    # writer families, drawn after every payload above so those keep
+    # their seeded bytes: the timed call writes, the KB column is the
+    # written size
+    stereo = [pcm, [rng.randrange(-2000, 2000) for _ in range(16000)]]
+    writers = [
+        ("enc_jpeg_ycc420_64x64", jpeg.encode_jpeg,
+         (w, h, 3, rgb, 16, True), 10),
+        ("enc_jpeg12_ycc420_64x64", jpeg.encode_jpeg12,
+         (w, h, 3, rgb12, 16, 0, True), 10),
+        ("enc_jpeg_progressive_64x64", jpeg.encode_jpeg_progressive,
+         (w, h, 3, rgb), 10),
+        ("enc_jpeg12_progressive_64x64", jpeg.encode_jpeg12_progressive,
+         (w, h, 3, rgb12), 10),
+        ("enc_ima_adpcm_16k", audio.encode_wav_ima_adpcm, (16000, pcm), 10),
+        ("enc_ima_adpcm_stereo_16k", audio.encode_wav_ima_adpcm_multi,
+         (16000, stereo, 1024), 10),
+        ("enc_ms_adpcm_16k", audio.encode_wav_ms_adpcm, (16000, pcm), 10),
+        ("enc_ms_adpcm_stereo_16k", audio.encode_wav_ms_adpcm_multi,
+         (16000, stereo), 10),
+    ]
+    cases += [
+        (name, enc(*args), lambda _p, enc=enc, args=args: enc(*args), reps)
+        for name, enc, args, reps in writers
+    ]
+    print("| family | payload KB | CPU ms median | CPU ms min | "
+          "docs/s/core | MB/s/core | core-h per TB |")
+    print("|---|---|---|---|---|---|---|")
+    reps = {name: max(3, int(r * reps_scale)) for name, _, _, r in cases}
+    cpu: dict[str, list[float]] = {name: [] for name in reps}
+    for name, payload, fn, _ in cases:
+        fn(payload)  # warm (bytecode/caches)
+    # round-robin over the families, one call each per round, so a burst
+    # of host load lands on every family instead of on one family's reps
+    for rnd in range(max(reps.values())):
+        for name, payload, fn, _ in cases:
+            if rnd < reps[name]:
+                t0 = _time.process_time()
+                fn(payload)
+                cpu[name].append(_time.process_time() - t0)
     out = {}
-    for name, payload, dec, reps in cases:
-        reps = max(3, int(reps * reps_scale))
-        dec(payload)  # warm (bytecode/caches)
-        t0 = _time.perf_counter()
-        for _ in range(reps):
-            dec(payload)
-        dt = _time.perf_counter() - t0
-        dps = reps / dt
-        mbps = len(payload) * reps / dt / 1e6
+    for name, payload, _, _ in cases:
+        med = statistics.median(cpu[name])
+        mbps = len(payload) / med / 1e6
         core_h_tb = 1e6 / mbps / 3600  # 1 TB = 1e6 MB
         out[name] = {
             "payload_bytes": len(payload),
-            "docs_per_s_core": round(dps, 2),
+            "reps": reps[name],
+            "cpu_ms_median": round(med * 1e3, 4),
+            "cpu_ms_min": round(min(cpu[name]) * 1e3, 4),
+            "docs_per_s_core": round(1 / med, 2),
             "mb_per_s_core": round(mbps, 3),
             "core_hours_per_tb": round(core_h_tb, 1),
         }
-        print(f"| {name} | {len(payload)/1024:.1f} | {dps:.1f} | "
-              f"{mbps:.3f} | {core_h_tb:.1f} |")
+        print(f"| {name} | {len(payload)/1024:.1f} | {med * 1e3:.2f} | "
+              f"{min(cpu[name]) * 1e3:.2f} | {1 / med:.1f} | {mbps:.3f} | "
+              f"{core_h_tb:.1f} |")
     print(json.dumps({"metric": "codec_throughput", "families": out}))
 
 
