@@ -943,7 +943,9 @@ def encode_wav_ima_adpcm_multi(
     recurrence; a trailing partial block pads with 0 codes, and the
     fact chunk carries the true sample count (plus cbSize=2
     wSamplesPerBlock in fmt). ``block_align`` defaults to 256 at one
-    channel, and otherwise to one block sized to fit the payload."""
+    channel, and otherwise to one block sized to fit the payload, capped
+    at the largest value the 16-bit nBlockAlign field holds (a longer
+    payload spans several blocks)."""
     n_ch = len(channels)
     if n_ch == 0 or not channels[0]:
         raise ValueError("need at least one channel with samples")
@@ -952,7 +954,8 @@ def encode_wav_ima_adpcm_multi(
         raise ValueError("channels must have equal lengths")
     if block_align is None:
         # whole 8-sample words per channel beyond the header sample
-        block_align = 256 if n_ch == 1 else 4 * n_ch * (1 + (n + 6) // 8)
+        words = min((n + 6) // 8, 0xFFFF // (4 * n_ch) - 1)
+        block_align = 256 if n_ch == 1 else 4 * n_ch * (1 + words)
     data_words = (block_align - 4 * n_ch) // (4 * n_ch)
     if block_align < 4 * n_ch + 4 * n_ch or (
         block_align - 4 * n_ch
@@ -961,6 +964,8 @@ def encode_wav_ima_adpcm_multi(
             "block_align must leave whole 4-byte words per channel"
         )
     spb = 1 + 8 * data_words
+    if block_align > 0xFFFF or spb > 0xFFFF:
+        raise ValueError("block_align too large for the 16-bit WAV fields")
     data = bytearray()
     idxs = [0] * n_ch
     i = 0

@@ -17,18 +17,15 @@ per-cell instead of corpus-wide.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _fold_dot(a: Column, b: Column) -> Column:
-    """Left-fold dot product — sequential accumulation, bit-identical to
-    an unrolled ``a[1]*b[1] + ... + a[n]*b[n]`` SQL chain."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+from mongo_analyser_spark.operators.similarity import (
+    _scores_arrow,
+    dot,
+    fold_norms_np,
+    fold_scores_np,
+)
 
 
 def normalized_vectors(
@@ -38,22 +35,13 @@ def normalized_vectors(
     projection every spherical-k-means stage shares. Pure projection,
     no shuffle.
 
-    Round-13 fix (found by tools/scale_probe.py --wide-vectors): the
-    first form computed the norm fold INSIDE the transform lambda —
-    interpreted HOFs have no CSE across element probes, so the O(d)
-    fold re-ran per element, O(d²) per row (the hof-inline-producer
-    class, plans/lint.py; invisible at the 64-dim fixture, 124 s for
-    2,000 rows of 768 dims in the k-means SEED path alone). A staged
-    projection does NOT survive here: CollapseProject re-inlines any
-    once-referenced producer into the lambda regardless of cost (the
-    char_entropy staging works only because its producers are consumed
-    >= 2 times per projection). The collapse-proof form pins the
-    evaluation count STRUCTURALLY: array_repeat(norm, d) evaluates its
-    argument exactly once per row, and zip_with divides element-wise —
-    same IEEE ops per element, O(d) per row, one extra O(d) array. The
-    768-dim probe: 124 s -> sub-second."""
+    The norm is passed as array_repeat(norm, d), which evaluates it
+    exactly once per row: a norm fold inside the transform lambda re-ran
+    per element (interpreted HOFs have no CSE), O(d²) per row — 124 s
+    for 2,000 rows of 768 dims, sub-second in this form — and a staged
+    projection gets re-inlined into the lambda by CollapseProject."""
     vec = F.col(vec_col)
-    nrm = F.sqrt(_fold_dot(vec, vec))
+    nrm = F.sqrt(dot(vec, vec))
     return df.select(
         F.col(id_col).alias("id"),
         F.zip_with(
@@ -90,7 +78,7 @@ def assign_cells(nv: DataFrame, cents_row: DataFrame) -> DataFrame:
     lowest cid (array_position finds the FIRST max in cid order). One
     projection over a broadcast one-row cross join — no shuffle, no
     per-(vector,centroid) row explosion."""
-    scores = F.transform(F.col("cents"), lambda c: _fold_dot(F.col("v"), c["v"]))
+    scores = F.transform(F.col("cents"), lambda c: dot(F.col("v"), c["v"]))
     return (
         nv.crossJoin(F.broadcast(cents_row))
         .select(
@@ -121,18 +109,16 @@ def assign_cells_arrow(
     ``assign_cells`` — one vectorized normalize+assign per batch against
     the driver-collected centroids. BIT-identical to the fold forms
     (pytest-pinned, tests/test_clustering.py): the norm and every dot
-    accumulate per COMPONENT IN INDEX ORDER (the operators/pq.py Arrow
-    contract — same IEEE double ops in the same order as the left
-    folds), the per-component division x/||x|| is the same single IEEE
-    op, and np.argmax takes the FIRST maximum = array_position's
-    first-equal rule with centroids in ascending-cid order. Kills the
-    interpreted k×dim lambda cost per vector (the round-9/10 per-row
-    constant lesson) without touching the oracle contract."""
+    are ``fold_norms_np``/``fold_scores_np`` left folds, the
+    per-component division x/||x|| is the same single IEEE op, and
+    np.argmax takes the FIRST maximum = array_position's first-equal
+    rule with centroids in ascending-cid order. Kills the interpreted
+    k×dim lambda cost per vector without touching the oracle
+    contract."""
     import numpy as np
     import pandas as pd
 
     cids, C = collect_cents(cents_row)
-    k, dim = C.shape
 
     def kern(batches):
         for pdf in batches:
@@ -141,14 +127,8 @@ def assign_cells_arrow(
             X = np.stack(
                 [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
             )
-            acc = np.zeros(len(X), dtype=np.float64)
-            for j in range(dim):
-                acc = acc + X[:, j] * X[:, j]
-            V = X / np.sqrt(acc)[:, None]
-            S = np.zeros((len(X), k), dtype=np.float64)
-            for j in range(dim):
-                S = S + V[:, j : j + 1] * C[None, :, j]
-            cell = cids[np.argmax(S, axis=1)]
+            V = X / fold_norms_np(X)[:, None]
+            cell = cids[np.argmax(fold_scores_np(V, C), axis=1)]
             yield pd.DataFrame(
                 {
                     "id": pdf[id_col].to_numpy(),
@@ -253,7 +233,7 @@ def kmeans_fit(
         prev = cents_row.select(F.explode("cents").alias("c")).select(
             F.col("c.cid").alias("pcid"), F.col("c.v").alias("pv")
         )
-        nrm = F.sqrt(_fold_dot(F.col("m"), F.col("m")))
+        nrm = F.sqrt(dot(F.col("m"), F.col("m")))
         merged = prev.join(new_cents, F.col("pcid") == F.col("cid"), "left").select(
             F.col("pcid").alias("cid"),
             F.coalesce(
@@ -272,89 +252,21 @@ def kmeans_fit(
     return out
 
 
-def _assign_full_arrow(
+def _cell_vectors(
     df: DataFrame, id_col: str, vec_col: str, centroids: list[list[float]]
 ) -> DataFrame:
-    """(id, v array<double>, nrm, cell) — the Arrow twin of
-    semantic_dedup's broadcast-data assignment projection: v is the
-    exact float→double cast of the input vector (Arrow-level cast,
-    nulls preserved), nrm the left-fold norm, cell the 1-based
-    first-max centroid (np.argmax == array_position-of-array_max,
-    including the all-NaN row both resolve to cell 1). Rows the
-    expression form could not score keep its outputs: NULL vector →
-    all-NULL; null element → v keeps the hole, nrm/cell NULL; ragged
-    length → real nrm over the vector's own length, cell NULL."""
-    import numpy as np
-    import pyarrow as pa
-
-    Cn = np.asarray(centroids, dtype=np.float64)
-    k, dim = Cn.shape
-    id_t = df.schema[id_col].dataType.simpleString()
-    src = df.select(id_col, vec_col)
-
-    def kern(batches):
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            idc, vc = b.column(0), b.column(1)
-            flat = vc.flatten()
-            n = b.num_rows
-            lens = (
-                np.diff(vc.offsets.to_numpy(zero_copy_only=False))
-                if vc.null_count == 0
-                else None
-            )
-            v_out = vc.cast(pa.list_(pa.float64()))
-            if (
-                lens is not None
-                and (lens == dim).all()
-                and flat.null_count == 0
-            ):
-                X = flat.to_numpy(zero_copy_only=False).astype(
-                    np.float64, copy=False
-                ).reshape(n, dim)
-                nacc = np.zeros(n, dtype=np.float64)
-                for j in range(dim):
-                    nacc = nacc + X[:, j] * X[:, j]
-                nrm_arr = pa.array(np.sqrt(nacc), type=pa.float64())
-                from mongo_analyser_spark.operators.similarity import (
-                    fold_scores_np,
-                )
-
-                S = fold_scores_np(X, Cn)
-                cell_arr = pa.array(
-                    (np.argmax(S, axis=1) + 1).astype(np.int32)
-                )
-            else:
-                from mongo_analyser_spark.operators.similarity import (
-                    fold_scores_np,
-                )
-
-                nrm, cell = [], []
-                for v in vc.to_pylist():
-                    if v is None or any(e is None for e in v):
-                        nrm.append(None)
-                        cell.append(None)
-                        continue
-                    x = np.asarray(v, dtype=np.float64)
-                    a = 0.0
-                    for xx in x:
-                        a = a + xx * xx
-                    nrm.append(float(np.sqrt(a)))
-                    if len(x) != dim:
-                        cell.append(None)
-                    else:
-                        s = fold_scores_np(x[None, :], Cn)[0]
-                        cell.append(int(np.argmax(s)) + 1)
-                nrm_arr = pa.array(nrm, type=pa.float64())
-                cell_arr = pa.array(cell, type=pa.int32())
-            yield pa.RecordBatch.from_arrays(
-                [idc, v_out, nrm_arr, cell_arr],
-                names=["id", "v", "nrm", "cell"],
-            )
-
-    return src.mapInArrow(
-        kern, f"id {id_t}, v array<double>, nrm double, cell int"
+    """(id, v, nrm, cell): semantic_dedup's assignment. The k×dim score
+    and norm folds run in the ``_scores_arrow`` kernel (bit-identical
+    left folds, NULL/ragged/NaN rows included), the cell is the 1-based
+    first max, and ``v`` is cast to double so the self-join folds read
+    doubles."""
+    return _scores_arrow(df, id_col, vec_col, centroids).select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).cast("array<double>").alias("v"),
+        F.col("vnorm").alias("nrm"),
+        F.array_position("__scores", F.array_max("__scores"))
+        .cast("int")
+        .alias("cell"),
     )
 
 
@@ -389,30 +301,19 @@ def semantic_dedup(
     division uses the same raw-vector norm the oracle's SQL chain
     computes, so the rounded cosine stays bit-identical.
 
-    Centroids ship as ONE broadcast row of data, never as plan
+    Centroids ride in the Arrow kernel's closure, never as plan
     literals: with cell count scaling as n/target_cell_size, a literal
-    unroll (k×dim terms, the similarity.ivf_cell style) makes plan
-    analysis itself the bottleneck as the corpus grows — measured flat
-    3.8 s at sf0.1/32 cells with literals, where the data-borne
-    assignment stays proportional to actual work. The fold dots consume
-    the same double values in the same order as the oracle's literal
-    SQL chain, so assignments are still bit-identical."""
+    unroll (k×dim terms, the similarity.ivf_cell style) made plan
+    analysis itself the bottleneck (flat 3.8 s at sf0.1/32 cells). The
+    kernel's dots consume the same doubles in the same order as the
+    oracle's literal SQL chain, so assignments are bit-identical."""
     if not centroids:
         raise ValueError("semantic_dedup requires a non-empty centroid list")
-    # r15 (guide §4.2, the ivf_topk/with_srp_sig move): the k×dim
-    # assignment + norm folds per vector ran interpreted under the
-    # broadcast-data cross join — the Arrow kernel computes the same
-    # doubles in left-fold order (parity pinned in
-    # tests/test_clustering.py, incl. NULL/ragged/NaN rows), so cells,
-    # norms, and every downstream cosine are bit-identical.
-    # Referenced three ways below (both self-join sides + the final
-    # flag join): without materialization the assignment re-runs per
-    # reference (the triangle_counts lesson — measured 3.66 s -> 2.46 s
-    # solo at sf0.1). This checkpoints vectors too, the simple
-    # fixture-scale call; a 100-TB run would checkpoint only
-    # (id, nrm, cell) and re-join vectors from the scan, the
-    # cosine_near_dup_pairs fingerprint discipline.
-    vecs = _assign_full_arrow(df, id_col, vec_col, centroids).localCheckpoint()
+    # Materialized because it is read three ways (both self-join sides
+    # and the flag join): 3.66 s -> 2.46 s solo at sf0.1. A 100-TB run
+    # would checkpoint only (id, nrm, cell) and re-join vectors from
+    # the scan, the cosine_near_dup_pairs fingerprint discipline.
+    vecs = _cell_vectors(df, id_col, vec_col, centroids).localCheckpoint()
     a = vecs.select(
         F.col("id").alias("id_a"),
         F.col("v").alias("va"),
@@ -426,7 +327,7 @@ def semantic_dedup(
         F.col("cell").alias("cb"),
     )
     cos = F.round(
-        _fold_dot(F.col("va"), F.col("vb")) / (F.col("nrm_a") * F.col("nrm_b")), 6
+        dot(F.col("va"), F.col("vb")) / (F.col("nrm_a") * F.col("nrm_b")), 6
     )
     dropped = (
         a.join(b, (F.col("ca") == F.col("cb")) & (F.col("id_a") < F.col("id_b")))

@@ -94,6 +94,8 @@ def encode_apng(
     x0, y0, fw0, fh0, px0 = frames[0]
     if (x0, y0, fw0, fh0) != (0, 0, w, h):
         raise ValueError("first APNG frame must cover the full canvas")
+    if any(len(px) != fw * fh * ch for _, _, fw, fh, px in frames):
+        raise ValueError("frame pixel buffer does not match its rect")
     disposes = (
         list(dispose) if isinstance(dispose, list) else [dispose] * len(frames)
     )
@@ -118,8 +120,6 @@ def encode_apng(
     out += fctl(0, 0, w, h, 0)
     out += _png_chunk(b"IDAT", zlib.compress(_filter0(w, h, ch, px0), 6))
     for k, (fx, fy, fw, fh, px) in enumerate(frames[1:], start=1):
-        if len(px) != fw * fh * ch:
-            raise ValueError("frame pixel buffer does not match its rect")
         out += fctl(fx, fy, fw, fh, k)
         body = struct.pack(">I", seq) + zlib.compress(
             _filter0(fw, fh, ch, px), 6

@@ -32,18 +32,11 @@ from __future__ import annotations
 import hashlib
 import struct
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mongo_analyser_spark.operators.fanout import sort_after_python
-
-
-def _fold_dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+from mongo_analyser_spark.operators.similarity import dot
 
 
 def covariance_upper(
@@ -176,7 +169,7 @@ def pca_project(
     the projections against numpy directly.
 
     ``final_sort=False`` skips the deterministic output sort for
-    consumers that re-shape and sort themselves (the r15
+    consumers that re-shape and sort themselves (the
     tfidf_cosine_pairs(final_sort=False) pattern) — the wide registry
     row explodes to long form first, and a dead inner sort would cost
     a range exchange plus a resample of the projection."""
@@ -185,17 +178,17 @@ def pca_project(
     comp_row = spark.createDataFrame(
         [(comps,)], "comps array<array<double>>"
     )
-    # raw column, NOT transform(cast): _fold_dot casts per element inside
-    # its zip_with lambda (exact float→double widening, bit-identical),
-    # while a pre-cast transform gets CollapseProject-inlined INSIDE the
+    # raw column, NOT transform(cast): dot casts per element inside its
+    # zip_with lambda (exact float→double widening, bit-identical), while
+    # a pre-cast transform gets CollapseProject-inlined INSIDE the
     # per-component lambda and re-builds the O(d) cast array once per
-    # component probe (the hof-loop-invariant-producer class, round 15)
+    # component probe (the hof-loop-invariant-producer class)
     vec = F.col(vec_col)
     out = df.crossJoin(F.broadcast(comp_row)).select(
         F.col(id_col),
         F.transform(
             F.col("comps"),
-            lambda c: F.round(_fold_dot(vec, c), round_to),
+            lambda c: F.round(dot(vec, c), round_to),
         ).alias("proj"),
     )
     return out.orderBy(id_col) if final_sort else out
@@ -298,7 +291,7 @@ def pca_power_project(
     comp_row = spark.createDataFrame(
         [(comps,)], "comps array<array<double>>"
     )
-    # raw column — _fold_dot casts per element (see pca_project note)
+    # raw column — dot casts per element (see pca_project note)
     vec = F.col(vec_col)
     return (
         df.crossJoin(F.broadcast(comp_row))
@@ -308,7 +301,7 @@ def pca_power_project(
                 F.transform(
                     F.col("comps"),
                     lambda c: F.floor(
-                        _fold_dot(vec, c) * F.lit(1000000.0) + F.lit(0.5)
+                        dot(vec, c) * F.lit(1000000.0) + F.lit(0.5)
                     ).cast("double")
                     / F.lit(1000000.0),
                 )
@@ -319,10 +312,10 @@ def pca_power_project(
             (F.col("pos") + 1).cast("int").alias("pos"),
             "val",
         )
-        # r15: materialize the skinny (id, pos, val) rows before the
+        # materialize the skinny (id, pos, val) rows before the
         # deterministic sort — a bare orderBy makes the range sampler
         # re-run the k x d projection fold (and, on the wide path, the
-        # Arrow JL stage below it) a second time (guide §2.4)
+        # Arrow JL stage below it) a second time
         .transform(sort_after_python, id_col, "pos")
     )
 
@@ -351,7 +344,7 @@ def widen_vectors(
     """Deterministic production-width derivation of a narrow embedding
     column: tile ``tiles`` copies with the per-tile integer-grid
     perturbation tile t, coord i gets +0.001*(((t*31+i)%17)-8) — the
-    recipe of tools/scale_probe.build_wide (verdict-r13 #3), so
+    recipe of tools/scale_probe.build_wide, so
     registry rows exercise the same vector geometry the wide probe
     measured (same up to the probe's final float32 STORAGE cast, which
     this in-query form skips — do not hash-oracle one against the
@@ -381,7 +374,7 @@ def jl_project_arrow(
     """Arrow-batched twin of ``jl_project`` for production widths: the
     fold form is an interpreted HOF whose cost is O(in_dim*out_dim) per
     row Python-side of codegen — fine at d=64, wrong at d>=768 (the
-    kmeans_step HOF lesson, SCALE.md round-13). Here the seeded planes
+    kmeans_step HOF lesson in SCALE.md). Here the seeded planes
     collapse to ONE numpy matmul per batch; np.round (half-even) differs
     from SQL ROUND (HALF_UP) at the boundary, which is why the wide path
     is DECLARED rows-only — the hash-oracled 64-dim rows stay the
@@ -417,7 +410,7 @@ def pca_project_wide(
     k: int = 4,
     round_to: int = 6,
 ) -> DataFrame:
-    """(id, proj): the PRODUCTION-WIDTH PCA path (verdict-r13 #2) —
+    """(id, proj): the PRODUCTION-WIDTH PCA path —
     JL-project to ``jl_dim`` <= 768 first (one Arrow matmul pass, flat
     in d), then exact covariance Gram + driver eigh in the REDUCED
     space. Replaces the O(d^2*k*T) pure-Python power iteration and the
@@ -439,8 +432,7 @@ def pca_project_wide(
     rows-only — eigh has no SQL twin; the quantization-synced 64-dim
     power-iteration row remains the hash-oracled exactness witness."""
     jdf = jl_project_arrow(df, id_col, vec_col, in_dim, jl_dim)
-    # r16 (guide §1.2 — don't compute things twice): the JL frame feeds
-    # THREE executions per run — the covariance collect inside
+    # The JL frame feeds THREE executions per run — the covariance collect inside
     # pca_components, the projection pass, and (when a sort sits on
     # top) the range sampler's re-read of the un-materialized pipeline.
     # One lazy localCheckpoint of the skinny (id, jvec[jl_dim]) rows:
@@ -486,7 +478,7 @@ def jl_project(
     plane_row = spark.createDataFrame(
         [(jl_planes(out_dim, in_dim),)], "planes array<array<double>>"
     )
-    # raw column — _fold_dot casts per element (see pca_project note)
+    # raw column — dot casts per element (see pca_project note)
     vec = F.col(vec_col)
     return (
         df.crossJoin(F.broadcast(plane_row))
@@ -494,10 +486,10 @@ def jl_project(
             F.col(id_col),
             F.transform(
                 F.col("planes"),
-                lambda p: F.round(_fold_dot(vec, p), round_to),
+                lambda p: F.round(dot(vec, p), round_to),
             ).alias("proj"),
         )
-        # r15: no output sort — the projection is shuffle-free as the
+        # no output sort — the projection is shuffle-free as the
         # docstring claims (the old orderBy added a range exchange whose
         # sampler re-ran the fold); callers that need an order sort their
         # own (skinnier) final form

@@ -23,7 +23,8 @@ broken on code/vector id.
 similarity.py SRP-plane lesson — never k x d plan literals); encoding
 is a shuffle-free projection against that row; the ADC scan is one
 pass over (id, codes) rows — m bytes each — with the query's distance
-table folded per row from the same broadcast; top-k is TakeOrdered.
+table folded per row from the same broadcast; top-k is one per-query
+window (similarity.rank_topk).
 Training on real corpora swaps the seeded init for kmeans_fit per
 subspace behind the same row shape (pq_refine below); the registry
 pins the seeded form because Lloyd means are float-summation-order
@@ -36,7 +37,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from mongo_analyser_spark.operators import similarity
 from mongo_analyser_spark.operators.fanout import sort_plain, unsorted
+from mongo_analyser_spark.operators.relational import top_k_per_group
+from mongo_analyser_spark.operators.similarity import (
+    fold_scores_np,
+    ivf_cell,
+    rank_topk,
+)
 
 
 def _sub_l2(a: Column, b: Column) -> Column:
@@ -231,17 +239,15 @@ def pq_encode(
 
 
 # ---------------------------------------------------------------------------
-# Arrow kernel path (round 10): same math, vectorized per batch.
+# Arrow kernel path: same math, vectorized per batch.
 #
-# The interpreted-HOF encode/ADC folds cost ~3 ms/vector (m*k*sub_dim = 1024
+# The interpreted-HOF encode/ADC folds cost ~3 ms/vector (m*k*sub_dim
 # lambda evals each) — 8 s for 2,000 vectors; at 1e9 vectors the per-row
-# constant, not the shuffle shape, is the scale-killer. The kernels below are
-# the covariance partial-Gram / brute_force_topk_arrow precedent: one
-# vectorized numpy stage per batch. CRITICALLY they preserve the exactness
-# contract BIT-FOR-BIT, not just approximately: every accumulation below is
-# an elementwise `acc = acc + d*d` loop over components IN INDEX ORDER —
-# the same IEEE double ops, in the same order, as _sub_l2's left fold and
-# the unrolled SQL chain — so assignments, codes and raw ADC sums are
+# constant, not the shuffle shape, is the scale-killer. The kernels below
+# keep the exactness contract BIT-FOR-BIT: every accumulation is an
+# elementwise `acc = acc + d*d` loop over components IN INDEX ORDER — the
+# same IEEE double ops, in the same order, as _sub_l2's left fold and the
+# unrolled SQL chain — so assignments, codes and raw ADC sums are
 # engine-EXACT and the registry rows keep hash-matching their DuckDB twins
 # (np.argmin returns the FIRST min = lowest cid, the array_position tie
 # rule; ROUND stays in Spark for HALF_UP parity). tests/test_pq.py pins the
@@ -265,24 +271,66 @@ def collect_codebook(cents_row: DataFrame, dim: int, m: int):
     return cb
 
 
-def _assign_codes_np(X, cb):
-    """(n, m) int32 1-based nearest-sub-centroid codes for row-major
-    vectors ``X`` (n, dim) against codebook ``cb`` (m, k, sub_dim).
-    Accumulates (x_j - c_j)^2 per component IN ORDER — bit-identical to
-    _sub_l2's left fold; argmin takes the first (lowest-cid) minimum."""
+def _sub_l2_np(X, cb):
+    """(n, m, k) squared L2 from every row-major vector of ``X`` (n, dim)
+    to every sub-centroid of ``cb`` (m, k, sub_dim), accumulated
+    (x_j - c_j)^2 per component IN ORDER — bit-identical to _sub_l2's
+    left fold. Serves both the corpus encode and the query LUT."""
     import numpy as np
 
     m, k, sub_dim = cb.shape
-    n = X.shape[0]
-    codes = np.empty((n, m), dtype=np.int32)
+    out = np.empty((X.shape[0], m, k), dtype=np.float64)
     for s in range(m):
-        xs = X[:, s * sub_dim:(s + 1) * sub_dim]
-        acc = np.zeros((n, k), dtype=np.float64)
+        acc = np.zeros((X.shape[0], k), dtype=np.float64)
         for j in range(sub_dim):
-            d = xs[:, j:j + 1] - cb[s, :, j][None, :]
+            d = X[:, s * sub_dim + j][:, None] - cb[s, :, j][None, :]
             acc = acc + d * d
-        codes[:, s] = np.argmin(acc, axis=1).astype(np.int32) + 1
-    return codes
+        out[:, s] = acc
+    return out
+
+
+def _assign_codes_np(X, cb):
+    """(n, m) int32 1-based nearest-sub-centroid codes; argmin takes the
+    first (lowest-cid) minimum."""
+    import numpy as np
+
+    return (np.argmin(_sub_l2_np(X, cb), axis=2) + 1).astype(np.int32)
+
+
+def _encode_arrow(
+    src: DataFrame, id_col: str, vec_col: str, cb, cents=None
+) -> DataFrame:
+    """(id, codes[, cell]) for every row of ``src`` against codebook
+    ``cb``. ``cell`` is passed through when ``src`` carries one, or
+    computed as the first-max ``fold_scores_np`` centroid of ``cents``
+    (bit-identical to ``similarity.ivf_cell``)."""
+    import numpy as np
+    import pandas as pd
+
+    has_cell = cents is not None or "cell" in src.columns
+
+    def kern(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            X = np.stack(
+                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+            )
+            out = {
+                "id": pdf[id_col].to_numpy(),
+                "codes": list(_assign_codes_np(X, cb)),
+            }
+            if cents is not None:
+                out["cell"] = (
+                    fold_scores_np(X, cents).argmax(axis=1) + 1
+                ).astype(np.int32)
+            elif has_cell:
+                out["cell"] = pdf["cell"].to_numpy()
+            yield pd.DataFrame(out)
+
+    return src.mapInPandas(
+        kern, "id long, codes array<int>" + (", cell int" if has_cell else "")
+    )
 
 
 def pq_encode_arrow(
@@ -297,24 +345,7 @@ def pq_encode_arrow(
     assignment per batch against the driver-collected codebook ``cb``
     (numpy (m, k, sub_dim)). Codes are bit-identical to the fold form
     (see the Arrow-kernel block comment)."""
-    import numpy as np
-    import pandas as pd
-
-    def kern(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            codes = _assign_codes_np(X, cb)
-            yield pd.DataFrame(
-                {"id": pdf[id_col].to_numpy(), "codes": list(codes)}
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(
-        kern, "id long, codes array<int>"
-    )
+    return _encode_arrow(df.select(id_col, vec_col), id_col, vec_col, cb)
 
 
 def train_codebook(
@@ -387,6 +418,107 @@ def train_codebook(
     return cb
 
 
+def _query_lut(df: DataFrame, id_col: str, vec_col: str, query_ids, cb):
+    """(qids, Q, lut): the query rows sorted by id, their vectors (n_q,
+    dim) and the (n_q, m, k) ADC distance table in exact fold order —
+    a bounded driver artifact (|queries| * m * k doubles)."""
+    import numpy as np
+
+    qrows = sorted(
+        df.where(F.col(id_col).isin(query_ids))
+        .select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
+        .collect(),
+        key=lambda r: r["qid"],
+    )
+    qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
+    Q = np.array([r["qv"] for r in qrows], dtype=np.float64).reshape(
+        len(qrows), cb.shape[0] * cb.shape[2]
+    )
+    return qids, Q, _sub_l2_np(Q, cb)
+
+
+def _adc_scan(
+    encoded: DataFrame, qids, lut, round_to: int, qcells=None
+) -> DataFrame:
+    """(qid, vid, adc_dist) for every query against every encoded row —
+    the LUT entries of each code row summed in subspace order
+    (bit-identical raw sums), ROUNDed in Spark for HALF_UP parity. With
+    ``qcells`` only rows in the query's cell are scored (the IVF gate,
+    nprobe=1)."""
+    import numpy as np
+    import pandas as pd
+
+    def kern(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            codes = np.stack(pdf["codes"].to_numpy()) - 1  # (n, m) 0-based
+            vids = pdf["id"].to_numpy()
+            cells = None if qcells is None else pdf["cell"].to_numpy()
+            for qi, qid in enumerate(qids):
+                mc, mv = codes, vids
+                if cells is not None:
+                    keep = cells == qcells[qi]
+                    if not keep.any():
+                        continue
+                    mc, mv = codes[keep], vids[keep]
+                acc = lut[qi, 0, mc[:, 0]]
+                for s in range(1, lut.shape[1]):
+                    acc = acc + lut[qi, s, mc[:, s]]
+                yield pd.DataFrame(
+                    {"qid": np.full(len(mv), qid), "vid": mv, "adc_raw": acc}
+                )
+
+    return (
+        encoded.mapInPandas(kern, "qid long, vid long, adc_raw double")
+        .where(F.col("vid") != F.col("qid"))
+        .select("qid", "vid", F.round("adc_raw", round_to).alias("adc_dist"))
+    )
+
+
+def _exact_sides(df: DataFrame, id_col: str, vec_col: str, query_ids):
+    """(vecs (vid, v), queries (qid, qv)) with double vectors — the two
+    sides every exact-L2 ranking joins."""
+    vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    vecs = df.select(F.col(id_col).alias("vid"), vec.alias("v"))
+    queries = df.where(F.col(id_col).isin(query_ids)).select(
+        F.col(id_col).alias("qid"), vec.alias("qv")
+    )
+    return vecs, queries
+
+
+def _l2_topk(pairs: DataFrame, k: int, round_to: int) -> DataFrame:
+    """(qid, vid, l2, rnk): the exact squared-L2 top-k over (qid, vid,
+    v, qv) pair rows."""
+    return rank_topk(
+        pairs.select(
+            "qid",
+            "vid",
+            F.round(_sub_l2(F.col("v"), F.col("qv")), round_to).alias("l2"),
+        ),
+        k,
+        F.col("l2"),
+        F.col("vid"),
+    )
+
+
+def _rerank(
+    short: DataFrame,
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    query_ids: list[int],
+    k: int,
+    round_to: int,
+) -> DataFrame:
+    """Exact-L2 rerank of a (qid, vid) shortlist: only |queries| x
+    shortlist raw vectors are fetched, by a keyed join on vid."""
+    vecs, queries = _exact_sides(df, id_col, vec_col, query_ids)
+    return _l2_topk(
+        short.join(vecs, "vid").join(F.broadcast(queries), "qid"), k, round_to
+    )
+
+
 def pq_adc_topk_arrow(
     df: DataFrame,
     id_col: str,
@@ -401,68 +533,19 @@ def pq_adc_topk_arrow(
     cb=None,
 ) -> DataFrame:
     """Arrow-batched twin of ``pq_adc_topk``: the query-side m x k
-    distance LUT is computed ONCE driver-side in exact fold order
-    (bounded: |queries| * m * k doubles), the corpus scan gathers+sums
-    LUT entries per code row in subspace order — bit-identical raw
-    sums; ROUND stays in Spark for HALF_UP parity."""
-    import numpy as np
-    import pandas as pd
-
-    sub_dim = dim // m
+    distance LUT is computed ONCE driver-side in exact fold order, the
+    corpus scan gathers+sums LUT entries per code row in subspace order
+    — bit-identical raw sums; ROUND stays in Spark for HALF_UP
+    parity."""
     if cb is None:
         cb = train_codebook(
             df, id_col, vec_col, dim, m, k_cent, refine_steps, round_to
         )
-    encoded = pq_encode_arrow(df, id_col, vec_col, cb, dim, m)
-    qrows = sorted(
-        df.where(F.col(id_col).isin(query_ids))
-        .select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
-        .collect(),
-        key=lambda r: r["qid"],
+    qids, _, lut = _query_lut(df, id_col, vec_col, query_ids, cb)
+    scored = _adc_scan(
+        pq_encode_arrow(df, id_col, vec_col, cb, dim, m), qids, lut, round_to
     )
-    qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
-    n_q, n_k = len(qrows), cb.shape[1]
-    lut = np.zeros((n_q, m, n_k), dtype=np.float64)
-    for qi, r in enumerate(qrows):
-        qv = np.asarray(r["qv"], dtype=np.float64)
-        for s in range(m):
-            acc = np.zeros(n_k, dtype=np.float64)
-            for j in range(sub_dim):
-                d = qv[s * sub_dim + j] - cb[s, :, j]
-                acc = acc + d * d
-            lut[qi, s] = acc
-
-    def kern(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.stack(pdf["codes"].to_numpy()) - 1  # (n, m) 0-based
-            vids = pdf["id"].to_numpy()
-            for qi in range(n_q):
-                acc = lut[qi, 0, codes[:, 0]]
-                for s in range(1, m):
-                    acc = acc + lut[qi, s, codes[:, s]]
-                yield pd.DataFrame(
-                    {
-                        "qid": np.full(len(vids), qids[qi]),
-                        "vid": vids,
-                        "adc_raw": acc,
-                    }
-                )
-
-    scored = (
-        encoded.mapInPandas(kern, "qid long, vid long, adc_raw double")
-        .where(F.col("vid") != F.col("qid"))
-        .select(
-            "qid", "vid", F.round("adc_raw", round_to).alias("adc_dist")
-        )
-    )
-    win = Window.partitionBy("qid").orderBy("adc_dist", "vid")
-    return (
-        scored.withColumn("rnk", F.row_number().over(win).cast("int"))
-        .where(F.col("rnk") <= k)
-        .transform(sort_plain, "qid", "rnk")
-    )
+    return rank_topk(scored, k, F.col("adc_dist"), F.col("vid"))
 
 
 def pq_adc_rerank_topk_arrow(
@@ -482,33 +565,11 @@ def pq_adc_rerank_topk_arrow(
     """Arrow-batched twin of ``pq_adc_rerank_topk``: ADC shortlist from
     the kernel scan, exact-L2 rerank over only |queries| x shortlist
     fetched vectors (the fold form is fine at that bounded size)."""
-    short = pq_adc_topk_arrow(
+    short = unsorted(pq_adc_topk_arrow(
         df, id_col, vec_col, query_ids, dim, m, k_cent,
         k=shortlist, round_to=round_to, refine_steps=refine_steps, cb=cb,
-    ).select("qid", "vid")
-    vecs = df.select(
-        F.col(id_col).alias("vid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    )
-    queries = df.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("qid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("qv"),
-    )
-    rer = (
-        short.join(vecs, "vid")
-        .join(F.broadcast(queries), "qid")
-        .select(
-            "qid",
-            "vid",
-            F.round(_sub_l2(F.col("v"), F.col("qv")), round_to).alias("l2"),
-        )
-    )
-    win = Window.partitionBy("qid").orderBy("l2", "vid")
-    return (
-        rer.withColumn("rnk", F.row_number().over(win).cast("int"))
-        .where(F.col("rnk") <= k)
-        .transform(sort_plain, "qid", "rnk")
-    )
+    )).select("qid", "vid")
+    return _rerank(short, df, id_col, vec_col, query_ids, k, round_to)
 
 
 def pq_adc_topk(
@@ -541,13 +602,7 @@ def pq_adc_topk(
             df, id_col, vec_col, cents_row, dim, m, refine_steps, round_to
         )
     encoded = pq_encode(df, id_col, vec_col, cents_row, dim, m)
-    queries = (
-        df.where(F.col(id_col).isin(query_ids))
-        .select(
-            F.col(id_col).alias("qid"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("qv"),
-        )
-    )
+    _, queries = _exact_sides(df, id_col, vec_col, query_ids)
     scored = (
         encoded.crossJoin(F.broadcast(queries))
         .crossJoin(F.broadcast(_by_sub(cents_row, m)))
@@ -572,12 +627,7 @@ def pq_adc_topk(
             ).alias("adc_dist"),
         )
     )
-    win = Window.partitionBy("qid").orderBy("adc_dist", "vid")
-    return (
-        scored.withColumn("rnk", F.row_number().over(win).cast("int"))
-        .where(F.col("rnk") <= k)
-        .transform(sort_plain, "qid", "rnk")
-    )
+    return rank_topk(scored, k, F.col("adc_dist"), F.col("vid"))
 
 
 def pq_adc_rerank_topk(
@@ -601,33 +651,11 @@ def pq_adc_rerank_topk(
     shortlist cut (data-dependent: near-uniform corpora need a larger
     shortlist because ADC's quantization error rivals the
     inter-neighbor gaps)."""
-    short = pq_adc_topk(
+    short = unsorted(pq_adc_topk(
         df, id_col, vec_col, query_ids, dim, m, k_cent,
         k=shortlist, round_to=round_to, refine_steps=refine_steps,
-    ).select("qid", "vid")
-    vecs = df.select(
-        F.col(id_col).alias("vid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    )
-    queries = df.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("qid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("qv"),
-    )
-    rer = (
-        short.join(vecs, "vid")
-        .join(F.broadcast(queries), "qid")
-        .select(
-            "qid",
-            "vid",
-            F.round(_sub_l2(F.col("v"), F.col("qv")), round_to).alias("l2"),
-        )
-    )
-    win = Window.partitionBy("qid").orderBy("l2", "vid")
-    return (
-        rer.withColumn("rnk", F.row_number().over(win).cast("int"))
-        .where(F.col("rnk") <= k)
-        .transform(sort_plain, "qid", "rnk")
-    )
+    )).select("qid", "vid")
+    return _rerank(short, df, id_col, vec_col, query_ids, k, round_to)
 
 
 def pq_exact_topk(
@@ -641,37 +669,20 @@ def pq_exact_topk(
     """Ground truth for the recall gate: exact squared-L2 top-k over the
     raw vectors (one corpus scan, queries broadcast — the brute-force
     baseline shape)."""
-    vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    queries = df.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("qid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("qv"),
-    )
-    scored = (
-        df.select(F.col(id_col).alias("vid"), vec.alias("v"))
-        .crossJoin(F.broadcast(queries))
-        .where(F.col("vid") != F.col("qid"))
-        .select(
-            "qid",
-            "vid",
-            F.round(_sub_l2(F.col("v"), F.col("qv")), round_to).alias("l2"),
-        )
-    )
-    win = Window.partitionBy("qid").orderBy("l2", "vid")
-    return (
-        scored.withColumn("rnk", F.row_number().over(win).cast("int"))
-        .where(F.col("rnk") <= k)
-        .transform(sort_plain, "qid", "rnk")
+    vecs, queries = _exact_sides(df, id_col, vec_col, query_ids)
+    return _l2_topk(
+        vecs.crossJoin(F.broadcast(queries)).where(F.col("vid") != F.col("qid")),
+        k,
+        round_to,
     )
 
 
 def _overlap_report(exact: DataFrame, approx: DataFrame) -> DataFrame:
     """(qid, hits, recall_at_k) from two (qid, vid, ...) top-k frames:
-    ONE left join + ONE aggregation (r15 — replaces the semi-join +
-    separate per-qid k-count, which consumed the exact subtree twice).
-    Both frames carry row_number-filtered top-k rows, so (qid, vid) is
+    ONE left join + ONE aggregation, so the exact subtree is consumed
+    once. Both frames carry rank-filtered top-k rows, so (qid, vid) is
     unique per side, the join never fans out, and count(marker) equals
-    the semi-join hit count; a qid with zero hits counts 0 naturally
-    (the old shape's COALESCE case)."""
+    the semi-join hit count; a qid with zero hits counts 0 naturally."""
     marked = approx.select("qid", "vid", F.lit(1).alias("__hit"))
     return (
         exact.select("qid", "vid")
@@ -731,15 +742,9 @@ def pq_recall_report(
             df, id_col, vec_col, query_ids, dim, m, k_cent, k,
             refine_steps=refine_steps,
         )
-    # r15: the report only counts overlaps — consume the top-k frames
-    # BELOW their deterministic output sorts (identical rows; the inner
-    # sort/checkpoint is dead weight under joins and aggregates), and
-    # count hits and k in ONE aggregation over a single left join (the
-    # ann_recall_report shape): the old semi-join + separate k-count
-    # consumed the exact-top-k subtree twice, leaning on runtime
-    # exchange reuse to dedupe it. (qid, vid) is unique per side by
-    # construction (row_number-filtered top-k), so the left join never
-    # fans out and count(marker) IS the semi-join hit count.
+    # the report only counts overlaps: consume both top-k frames BELOW
+    # their output sorts (identical rows; the sort is dead weight under
+    # a join and an aggregate)
     adc = unsorted(adc)
     exact = unsorted(pq_exact_topk(df, id_col, vec_col, query_ids, k))
     return _overlap_report(exact, adc)
@@ -759,192 +764,50 @@ def ivfpq_topk_arrow(
     refine_steps: int = 1,
     round_to: int = 6,
     cb=None,
-    arrow_cells: bool = False,
 ) -> DataFrame:
     """IVFADC, the full production ANN shape (Jégou et al. 2011): IVF
     coarse cells GATE the scan (nprobe=1 — only same-cell codes are
     scored), PQ/ADC ranks the gated candidates from m-byte codes, exact
-    L2 reranks the bounded shortlist. Composes the two oracle-proven
-    stages: the cell id is the SAME Column expression the ann_ivf row
-    hash-verifies (fold dots over literal planes, first-max ties), and
-    the ADC LUT kernel is the SAME index-order gather pq_adc uses —
-    the composition stays engine-exact.
+    L2 reranks the bounded shortlist — the same encode, LUT, scan and
+    rerank parts as the PQ rows, so the composition stays engine-exact.
 
-    ``arrow_cells=True`` (round 14, the production-width path): the
-    cell fold is an interpreted HOF costing |cells|×dim lambda probes
-    per row — invisible at d=64, ~45%% of the wide row's wall at d=768.
-    This moves the assignment INTO the existing Arrow encode kernel as
-    a left-fold-ordered numpy accumulation (one vectorized add per
-    dim, so the double-precision sums are BIT-IDENTICAL to the fold
-    expression, first-max ties preserved by argmax; parity pinned in
-    tests/test_pq.py). The hash-oracled 64-dim registry row keeps the
-    default expression path so its oracle claim stays textual.
+    The cell follows the IVF size rule: quantizers up to
+    ``similarity.LITERAL_MAX_VALUES`` (cells × dim) use the literal
+    ``ivf_cell`` expression the ann_ivf row hash-verifies; larger ones
+    are assigned inside the encode kernel by ``fold_scores_np`` (the
+    interpreted fold is cells×dim lambda probes per row — ~45% of the
+    wall at d=768). Both give bit-identical cells, first-max ties
+    included; query cells always come from ``fold_scores_np``.
 
     100-TB shape: the corpus-side scan touches (id, codes, cell) — m
     small ints + one int per vector, never a float; the cell gate cuts
     scored candidates by ~|cells| before any ranking; the rerank
     fetches |queries| × shortlist raw vectors by key."""
     import numpy as np
-    import pandas as pd
 
-    from mongo_analyser_spark.operators.similarity import ivf_cell
-
-    sub_dim = dim // m
     if cb is None:
         cb = train_codebook(
             df, id_col, vec_col, dim, m, k_cent, refine_steps, round_to
         )
-    if arrow_cells:
-        Cn = np.asarray(centroids, dtype=np.float64)
-
-        def _cells_np(X):
-            # left-fold summation order: one vectorized add per dim, so
-            # every per-cell dot is the SAME double the HOF fold builds
-            acc = np.zeros((X.shape[0], Cn.shape[0]))
-            for j in range(Cn.shape[1]):
-                acc = acc + X[:, j : j + 1] * Cn[:, j][None, :]
-            return (acc.argmax(axis=1) + 1).astype(np.int32)
-
-        src = df.select(id_col, vec_col)
-
-        def enc(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                )
-                codes = _assign_codes_np(X, cb)
-                yield pd.DataFrame(
-                    {
-                        "id": pdf[id_col].to_numpy(),
-                        "codes": list(codes),
-                        "cell": _cells_np(X),
-                    }
-                )
-
-        encoded = src.mapInPandas(
-            enc, "id long, codes array<int>, cell int"
-        )
-        qrows = sorted(
-            df.where(F.col(id_col).isin(query_ids))
-            .select(
-                F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-            )
-            .collect(),
-            key=lambda r: r["qid"],
-        )
-        qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
-        qcells = _cells_np(
-            np.stack(
-                [np.asarray(r["qv"], dtype=np.float64) for r in qrows]
-            )
+    C = np.asarray(centroids, dtype=np.float64)
+    if len(centroids) * dim <= similarity.LITERAL_MAX_VALUES:
+        cell = ivf_cell(F.col(vec_col), centroids).alias("cell")
+        encoded = _encode_arrow(
+            df.select(id_col, vec_col, cell), id_col, vec_col, cb
         )
     else:
-        cell_col = ivf_cell(F.col(vec_col), centroids)
-        src = df.select(id_col, vec_col, cell_col.alias("cell"))
-
-        def enc(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                )
-                codes = _assign_codes_np(X, cb)
-                yield pd.DataFrame(
-                    {
-                        "id": pdf[id_col].to_numpy(),
-                        "codes": list(codes),
-                        "cell": pdf["cell"].to_numpy(),
-                    }
-                )
-
-        encoded = src.mapInPandas(
-            enc, "id long, codes array<int>, cell int"
+        encoded = _encode_arrow(
+            df.select(id_col, vec_col), id_col, vec_col, cb, cents=C
         )
-        qrows = sorted(
-            src.where(F.col(id_col).isin(query_ids))
-            .select(
-                F.col(id_col).alias("qid"),
-                F.col(vec_col).alias("qv"),
-                "cell",
-            )
-            .collect(),
-            key=lambda r: r["qid"],
-        )
-        qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
-        qcells = np.array([r["cell"] for r in qrows], dtype=np.int32)
-    n_q, n_k = len(qrows), cb.shape[1]
-    lut = np.zeros((n_q, m, n_k), dtype=np.float64)
-    for qi, r in enumerate(qrows):
-        qv = np.asarray(r["qv"], dtype=np.float64)
-        for s in range(m):
-            acc = np.zeros(n_k, dtype=np.float64)
-            for j in range(sub_dim):
-                d = qv[s * sub_dim + j] - cb[s, :, j]
-                acc = acc + d * d
-            lut[qi, s] = acc
-
-    def kern(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.stack(pdf["codes"].to_numpy()) - 1
-            vids = pdf["id"].to_numpy()
-            cells = pdf["cell"].to_numpy()
-            for qi in range(n_q):
-                mask = cells == qcells[qi]
-                if not mask.any():
-                    continue
-                mc = codes[mask]
-                acc = lut[qi, 0, mc[:, 0]]
-                for s in range(1, m):
-                    acc = acc + lut[qi, s, mc[:, s]]
-                yield pd.DataFrame(
-                    {
-                        "qid": np.full(int(mask.sum()), qids[qi]),
-                        "vid": vids[mask],
-                        "adc_raw": acc,
-                    }
-                )
-
-    scored = (
-        encoded.mapInPandas(kern, "qid long, vid long, adc_raw double")
-        .where(F.col("vid") != F.col("qid"))
-        .select(
-            "qid", "vid", F.round("adc_raw", round_to).alias("adc_dist")
-        )
-    )
-    win = Window.partitionBy("qid").orderBy("adc_dist", "vid")
-    short = (
-        scored.withColumn("rn", F.row_number().over(win))
-        .where(F.col("rn") <= shortlist)
-        .select("qid", "vid")
-    )
-    vecs = df.select(
-        F.col(id_col).alias("vid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    )
-    queries = df.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("qid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("qv"),
-    )
-    rer = (
-        short.join(vecs, "vid")
-        .join(F.broadcast(queries), "qid")
-        .select(
-            "qid",
-            "vid",
-            F.round(_sub_l2(F.col("v"), F.col("qv")), round_to).alias("l2"),
-        )
-    )
-    win2 = Window.partitionBy("qid").orderBy("l2", "vid")
-    return (
-        rer.withColumn("rnk", F.row_number().over(win2).cast("int"))
-        .where(F.col("rnk") <= k)
-        .transform(sort_plain, "qid", "rnk")
-    )
+    qids, Q, lut = _query_lut(df, id_col, vec_col, query_ids, cb)
+    qcells = fold_scores_np(Q, C).argmax(axis=1) + 1
+    short = top_k_per_group(
+        _adc_scan(encoded, qids, lut, round_to, qcells),
+        ["qid"],
+        [F.col("adc_dist"), F.col("vid")],
+        shortlist,
+    ).select("qid", "vid")
+    return _rerank(short, df, id_col, vec_col, query_ids, k, round_to)
 
 
 def ivfpq_recall_report(
@@ -971,8 +834,7 @@ def ivfpq_recall_report(
         df, id_col, vec_col, query_ids, dim, centroids, m, k_cent,
         shortlist=shortlist, k=k, refine_steps=refine_steps, cb=cb,
     )
-    # r15: count-only consumption below the output sorts, hits and k in
-    # one aggregation over a single left join (see pq_recall_report)
+    # count-only consumption below the output sorts (see pq_recall_report)
     approx = unsorted(approx)
     exact = unsorted(pq_exact_topk(df, id_col, vec_col, query_ids, k))
     return _overlap_report(exact, approx)

@@ -27,6 +27,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mongo_analyser_spark.operators.fanout import sort_plain
+from mongo_analyser_spark.operators.relational import top_k_per_group
+
+#: Largest quantizer (cells × dim, or planes × dim) that travels as plan
+#: literals; a larger one is scored in an Arrow kernel against the
+#: driver-side matrix, because every Catalyst rule walks each literal
+#: node and the interpreted per-row fold grows with it.
+LITERAL_MAX_VALUES = 1024
 
 
 def as_double_vec(col: Column | str) -> Column:
@@ -62,14 +69,29 @@ def q6(x: Column) -> Column:
     """Shared cross-engine cosine quantizer: FLOOR(x*1e6 + 0.5)/1e6 —
     half-up toward +infinity in BOTH engines and in numpy, unlike
     engine ROUND calls whose negative-half tie rules differ (Spark
-    HALF_UP away from zero vs np.floor toward +inf — ADVICE r12). One
-    tie semantics across the fold twin, the Arrow BLAS kernel, and
-    every DuckDB oracle."""
+    HALF_UP away from zero vs np.floor toward +inf). One tie semantics
+    across the fold twin, the Arrow BLAS kernel, and every DuckDB
+    oracle."""
     return F.floor(x * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
 
 
 def cosine(a: Column, b: Column) -> Column:
     return q6(dot(a, b) / (norm(a) * norm(b)))
+
+
+def rank_topk(scored: DataFrame, k: int, *order: Column) -> DataFrame:
+    """The per-query top-k tail of every vector search: rows of
+    ``scored`` ranked within each ``qid`` by the TOTAL ``order``
+    (score, then vid), cut at ``k``, with an int ``rnk`` and a
+    deterministic (qid, rnk) output sort. The sort stays bare (no
+    checkpoint): the window's qid exchange already bounds the range
+    sampler's re-read, and recall reports read below it via
+    ``unsorted``."""
+    return (
+        top_k_per_group(scored, ["qid"], list(order), k)
+        .withColumn("rnk", F.col("rnk").cast("int"))
+        .transform(sort_plain, "qid", "rnk")
+    )
 
 
 def quantize_int8(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -88,11 +110,11 @@ def quantize_int8(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     ``transform(q, c -> c * scale)``; reconstruction error is bounded by
     scale/2 per element (pytest-pinned).
 
-    Plan note (round 14): ``scale`` is materialized in its OWN
+    Plan note: ``scale`` is materialized in its OWN
     projection before the quantizing transform references it — inlining
     the array_max expression inside the lambda re-evaluates it per
     element (no CSE inside HOF lambdas: the kmeans_step O(d^2)-per-row
-    lesson, SCALE.md round-13), which read 2.6× slower at sf0.1 and
+    lesson in SCALE.md), which read 2.6× slower at sf0.1 and
     would scale with d^2. A column REFERENCE in the lambda is a slot
     read; CollapseProject keeps the two projections apart because the
     alias is referenced more than once and is non-cheap."""
@@ -127,8 +149,6 @@ def brute_force_topk(
     corpus, rank per query with a total tie-break (cos DESC, id ASC).
     Norms are computed once per vector BEFORE the join (at N queries the
     naive form recomputes each corpus norm N times)."""
-    from pyspark.sql import Window
-
     emb = emb.withColumn(vec_col, as_double_vec(vec_col))
     queries = emb.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("qid"),
@@ -144,24 +164,13 @@ def brute_force_topk(
     scored = pairs.select(
         "qid",
         "vid",
-        # q6 FLOOR quantization — one tie semantics with the Arrow BLAS
-        # twin and the DuckDB oracle (ADVICE r12: F.round's negative-half
-        # rule diverged from np.floor on exact half-grid points)
+        # q6 FLOOR quantization: F.round's negative-half rule diverges
+        # from the Arrow twin's np.floor on exact half-grid points
         q6(
             dot(F.col("qvec"), F.col("vvec")) / (F.col("qnorm") * F.col("vnorm"))
         ).alias("cos_sim"),
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("vid"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "vid", "cos_sim", F.col("rnk").cast("int").alias("rnk"))
-        # r15: the window's qid exchange bounds the range sampler's
-        # re-read (checkpoint measured neutral solo) and the bare tail
-        # skips the checkpoint's build-time planning pass — the recall
-        # reports consume this frame via unsorted() (guide §2.4)
-        .transform(sort_plain, "qid", "rnk")
-    )
+    return rank_topk(scored, k, F.desc("cos_sim"), F.asc("vid"))
 
 
 def srp_planes(num_planes: int, dim: int) -> list[list[float]]:
@@ -179,24 +188,15 @@ def srp_planes(num_planes: int, dim: int) -> list[list[float]]:
 
 def _srp_bits(vec: Column, plane_arr: Column) -> Column:
     """Sign bitstring of <vec, plane> for every plane in ``plane_arr``
-    (array<array<double>>). Left-associative zip_with fold — the SAME
-    evaluation order as an explicit `v[1]*p1 + v[2]*p2 + ...` chain, so
-    the SQL oracle's unrolled form produces bit-identical signs. The fold
-    form matters: the unrolled num_planes×dim expression tree (384 nodes
-    at 6×64) blew past whole-stage-codegen limits and cost ~6 s of
-    compile time per cold run vs ~0.9 s for this form (measured at
-    sf0.1, identical results)."""
+    (array<array<double>>), each a ``dot`` fold, so the SQL oracle's
+    unrolled chain produces bit-identical signs. The fold form matters:
+    the unrolled num_planes×dim expression tree (384 nodes at 6×64)
+    blew past whole-stage-codegen limits and cost ~6 s of compile time
+    per cold run vs ~0.9 s for this form (measured at sf0.1, identical
+    results)."""
     bits = F.transform(
         plane_arr,
-        lambda row: F.when(
-            F.aggregate(
-                F.zip_with(vec, row, lambda x, p: x.cast("double") * p),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-            >= 0,
-            F.lit("1"),
-        ).otherwise(F.lit("0")),
+        lambda row: F.when(dot(vec, row) >= 0, F.lit("1")).otherwise(F.lit("0")),
     )
     return F.array_join(bits, "")
 
@@ -213,24 +213,15 @@ def srp_bucket(vec: Column, planes: list[list[float]]) -> Column:
 def with_srp_sig(
     df: DataFrame, vec_col: str, planes: list[list[float]], out: str = "sig"
 ) -> DataFrame:
-    """Attach the SRP signature as column ``out``, choosing how the
-    planes reach the executors (same split as ivf_topk's centroids):
-    small sets inline as literals and stay inside the scan's codegen
-    span; data-scaled sets (r,b grow with the corpus — thousands of
-    values) ride as a one-row broadcast array<array<double>>, keeping
-    the plan a few fixed-size nodes instead of making every Catalyst
-    rule walk num_planes × dim literal nodes. Signs are bit-identical
-    either way (same fold order)."""
+    """Attach the SRP signature as column ``out``. Plane sets up to
+    ``LITERAL_MAX_VALUES`` inline as literals and stay inside the scan's
+    codegen span; data-scaled sets (r,b grow with the corpus) are
+    scored in the Arrow kernel ``_srp_sig_arrow``, whose left-fold sums
+    give every sign (and the banded pairs downstream) bit-identically."""
     if not planes or not planes[0]:
         raise ValueError("with_srp_sig requires a non-empty plane matrix")
-    if len(planes) * len(planes[0]) <= 1024:
+    if len(planes) * len(planes[0]) <= LITERAL_MAX_VALUES:
         return df.withColumn(out, srp_bucket(F.col(vec_col), planes))
-    # Data-scaled plane tier (r15): same Arrow-kernel move as ivf_topk's
-    # broadcast-data branch — the interpreted num_planes×dim fold per
-    # row was the fingerprint stage's cost; the kernel's left-fold
-    # accumulation makes every dot the same double, so every sign (and
-    # the banded pairs downstream) is bit-identical. The ≤1024-value
-    # literal tier above keeps the textual expression form.
     return _srp_sig_arrow(df, vec_col, planes, out)
 
 
@@ -238,16 +229,16 @@ def _srp_sig_arrow(
     df: DataFrame, vec_col: str, planes: list[list[float]], out: str
 ) -> DataFrame:
     """All input columns + ``out``: '0'/'1' sign string of <vec, plane>
-    per plane — the Arrow twin of _srp_bits over broadcast plane DATA.
-    Sign rule matches the expression form exactly: fold >= 0 → '1'
-    (where Spark's comparison counts NaN as greatest, so a NaN fold is
-    also '1'), and '0' only for negatives and folds poisoned by a
-    NULL/ragged vector (when(...).otherwise('0'))."""
+    per plane — the Arrow twin of _srp_bits. Sign rule matches the
+    expression form exactly: fold >= 0 → '1' (Spark's comparison counts
+    NaN as greatest, so a NaN fold is also '1'), and '0' for negatives
+    and for folds poisoned by a NULL/ragged vector
+    (when(...).otherwise('0'))."""
     import numpy as np
     import pyarrow as pa
 
-    Cn = np.asarray(planes, dtype=np.float64)
-    m, dim = Cn.shape
+    P = np.asarray(planes, dtype=np.float64)
+    m = P.shape[0]
     in_fields = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     )
@@ -258,50 +249,16 @@ def _srp_sig_arrow(
         for b in batches:
             if b.num_rows == 0:
                 continue
-            vc = b.column(vec_idx)
-            flat = vc.flatten()
-            n = b.num_rows
-            lens = (
-                np.diff(vc.offsets.to_numpy(zero_copy_only=False))
-                if vc.null_count == 0
-                else None
-            )
-            if (
-                lens is not None
-                and (lens == dim).all()
-                and flat.null_count == 0
-            ):
-                X = flat.to_numpy(zero_copy_only=False).astype(
-                    np.float64, copy=False
-                ).reshape(n, dim)
-                S = fold_scores_np(X, Cn)
-                # Spark's `>= 0` is TRUE for NaN (SQL NaN sorts greatest,
-                # not IEEE unordered) — OR in isnan to match
-                bits = np.where(
-                    (S >= 0) | np.isnan(S), 49, 48
-                ).astype(np.uint8)
-                buf = bits.tobytes()
-                sigs = [
-                    buf[i * m : (i + 1) * m].decode("ascii") for i in range(n)
-                ]
-            else:
-                sigs = []
-                for v in vc.to_pylist():
-                    if v is None or any(e is None for e in v) or len(v) != dim:
-                        sigs.append("0" * m)
-                        continue
-                    s = fold_scores_np(
-                        np.asarray(v, dtype=np.float64)[None, :], Cn
-                    )[0]
-                    sigs.append(
-                        "".join(
-                            "1" if (x >= 0 or np.isnan(x)) else "0" for x in s
-                        )
-                    )
+            _, S, ok = _fold_batch(b.column(vec_idx), P)
+            buf = np.where(
+                ((S >= 0) | np.isnan(S)) & ok[:, None], 49, 48
+            ).astype(np.uint8).tobytes()
+            sigs = [
+                buf[i * m : (i + 1) * m].decode("ascii")
+                for i in range(b.num_rows)
+            ]
             yield pa.RecordBatch.from_arrays(
-                [b.column(i) for i in range(b.num_columns)]
-                + [pa.array(sigs, type=pa.string())],
-                names=names,
+                b.columns + [pa.array(sigs, type=pa.string())], names=names
             )
 
     return df.mapInArrow(kern, f"{in_fields}, {out} string")
@@ -362,11 +319,11 @@ def quantizer_sample(
     for quantizer training — shared by the adaptive IVF coarse quantizer
     and the PQ codebook trainer so both train on the identical row set.
 
-    Scale contract (round-8 rebuild of the round-7 driver-OOM path): the
-    DRIVER never materializes the corpus. n comes from the parquet FOOTER
-    (metadata only, zero data pages); the quantizer sample is the
-    deterministic id-modular stride set {vec_id % stride == 0}, smallest
-    ``max_sample`` ids — a pushed-down scan filter, so with an active
+    Scale contract: the DRIVER never materializes the corpus. n comes
+    from the parquet FOOTER (metadata only, zero data pages); the
+    quantizer sample is the deterministic id-modular stride set
+    {vec_id % stride == 0}, smallest ``max_sample`` ids — a
+    pushed-down scan filter, so with an active
     SparkSession the executors evaluate it and a TakeOrdered ships at
     most max_sample (id, vec) rows to the driver. Without a session
     (import-time oracle generation in a bare process) a pyarrow BATCH
@@ -429,24 +386,13 @@ def adaptive_ivf_params(
 
 
 def ivf_cell_scores(vec: Column, centroids: list[list[float]]) -> Column:
-    """Array of <vec, ĉ_i> scores (centroids pre-normalized driver-side,
-    embedded as literals; left-fold dots — same order as an unrolled SQL
-    chain, bit-identical doubles).
-
-    SMALL-FIXED-QUANTIZER tier only (≤ ~1k values): the literal unroll
-    puts num_cells × dim nodes in the plan, which every Catalyst rule
-    walks. Data-scaled quantizers (√n cells) must go through
-    ``ivf_topk``'s broadcast-DATA branch instead — one
-    array<array<double>> row joined in, plan size independent of n."""
+    """Array of <vec, ĉ_i> ``dot`` folds against centroids embedded as
+    literals (pre-normalized driver-side) — the same order as an
+    unrolled SQL chain, bit-identical doubles. For quantizers up to
+    ``LITERAL_MAX_VALUES`` only: the literal unroll puts cells × dim
+    nodes in the plan, which every Catalyst rule walks."""
     cent_arr = F.array(*[F.array(*[F.lit(v) for v in row]) for row in centroids])
-    return F.transform(
-        cent_arr,
-        lambda row: F.aggregate(
-            F.zip_with(vec, row, lambda x, c: x.cast("double") * c),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        ),
-    )
+    return F.transform(cent_arr, lambda row: dot(vec, row))
 
 
 def ivf_cell(vec: Column, centroids: list[list[float]]) -> Column:
@@ -459,9 +405,9 @@ def ivf_cell(vec: Column, centroids: list[list[float]]) -> Column:
 def fold_scores_np(X, C):
     """<X_i, C_j> for every (row, plane/centroid) pair with the
     interpreted left folds' exact IEEE sequence: one vectorized
-    multiply-add per dimension (the operators/pq.py Arrow contract —
-    each element accumulates ((0 + x0*c0) + x1*c1) + ... in index
-    order), so every double equals the zip_with/aggregate fold's."""
+    multiply-add per dimension, so each element accumulates
+    ((0 + x0*c0) + x1*c1) + ... in index order and every double equals
+    the ``dot`` fold's."""
     import numpy as np
 
     acc = np.zeros((X.shape[0], C.shape[0]), dtype=np.float64)
@@ -470,86 +416,96 @@ def fold_scores_np(X, C):
     return acc
 
 
-def _scores_arrow(
-    emb: DataFrame, id_col: str, vec_col: str,
-    centroids: list[list[float]], dim: int,
-) -> DataFrame:
-    """(id, vec, vnorm, __scores) — the Arrow twin of ivf_topk's
-    broadcast-data score projection (see ivf_topk body). Rows that the
-    expression form could not score (NULL vector, length ≠ dim) get the
-    same outputs it produces: vnorm is NULL only for NULL vectors (the
-    norm fold runs on the vector's own length), __scores is an all-NULL
-    array (zip_with pads with nulls, poisoning each fold)."""
+def fold_norms_np(X):
+    """||X_i|| per row with the ``norm`` fold's IEEE sequence (squares
+    summed in index order, then one sqrt)."""
     import numpy as np
 
+    acc = np.zeros(X.shape[0], dtype=np.float64)
+    for j in range(X.shape[1]):
+        acc = acc + X[:, j] * X[:, j]
+    return np.sqrt(acc)
+
+
+def _fold_batch(vc, C):
+    """Score one Arrow list column ``vc`` against the rows of ``C``
+    exactly as the expression folds do. Returns ``(nrm, S, ok)``:
+
+    * ``nrm`` — Arrow double array of ``norm`` folds; NULL where a NULL
+      vector or element poisons the fold, a ragged vector's norm runs
+      over its own length, NaN stays a value;
+    * ``S`` — (n, len(C)) ``dot`` folds, meaningful only where ``ok``;
+    * ``ok`` — rows the expression form scores (no NULL, width = C's;
+      ``zip_with`` pads any other length with nulls).
+
+    Clean batches (the normal case) take one vectorized pass; a batch
+    holding any NULL or ragged row is scored row-aware."""
+    import numpy as np
     import pyarrow as pa
 
-    Cn = np.asarray(centroids, dtype=np.float64)
-    m = Cn.shape[0]
+    n, dim = len(vc), C.shape[1]
+    flat = vc.flatten()
+    if (
+        vc.null_count == 0
+        and flat.null_count == 0
+        and (np.diff(vc.offsets.to_numpy(zero_copy_only=False)) == dim).all()
+    ):
+        X = flat.to_numpy(zero_copy_only=False).astype(
+            np.float64, copy=False
+        ).reshape(n, dim)
+        return (
+            pa.array(fold_norms_np(X), type=pa.float64()),
+            fold_scores_np(X, C),
+            np.ones(n, dtype=bool),
+        )
+    rows = [
+        None if v is None or None in v else np.asarray(v, dtype=np.float64)
+        for v in vc.to_pylist()
+    ]
+    nrm = [
+        None if x is None else float(fold_norms_np(x[None, :])[0])
+        for x in rows
+    ]
+    ok = np.array([x is not None and len(x) == dim for x in rows], dtype=bool)
+    S = np.zeros((n, C.shape[0]), dtype=np.float64)
+    if ok.any():
+        S[ok] = fold_scores_np(np.stack([x for x, o in zip(rows, ok) if o]), C)
+    return pa.array(nrm, type=pa.float64()), S, ok
+
+
+def _scores_arrow(
+    emb: DataFrame, id_col: str, vec_col: str, centroids: list[list[float]]
+) -> DataFrame:
+    """(id, vec, vnorm, __scores) — the Arrow twin of the
+    ``norm``/``ivf_cell_scores`` projection for quantizers above
+    ``LITERAL_MAX_VALUES``. Rows the expression form cannot score keep
+    its outputs: vnorm is NULL only where a NULL poisons the norm fold,
+    and __scores is an all-NULL array for NULL or ragged vectors.
+
+    mapInArrow, NOT mapInPandas: the pandas hop folds NaN into null,
+    while the expression form keeps NaN a VALUE; pyarrow keeps the
+    distinction, and the input vec array passes through zero-copy."""
+    import numpy as np
+    import pyarrow as pa
+
+    C = np.asarray(centroids, dtype=np.float64)
+    m = C.shape[0]
     sch = emb.schema
     id_t = sch[id_col].dataType.simpleString()
     vec_t = sch[vec_col].dataType.simpleString()
 
-    # mapInArrow, NOT mapInPandas: the pandas hop folds NaN into null
-    # (both in float columns and inside list cells), while the
-    # expression form keeps NaN a VALUE (a NaN vector element flows
-    # through the folds) and NULL only where a fold saw a null. pyarrow
-    # arrays keep the distinction, and the untouched input vec array is
-    # passed through zero-copy.
     def kern(batches):
         for b in batches:
             if b.num_rows == 0:
                 continue
-            idc, vc = b.column(0), b.column(1)
-            flat = vc.flatten()
-            n = b.num_rows
-            lens = (
-                np.diff(vc.offsets.to_numpy(zero_copy_only=False))
-                if vc.null_count == 0
-                else None
+            vc = b.column(1)
+            nrm, S, ok = _fold_batch(vc, C)
+            scores = pa.ListArray.from_arrays(
+                pa.array(np.arange(0, (b.num_rows + 1) * m, m, dtype=np.int32)),
+                pa.array(S.reshape(-1), mask=np.repeat(~ok, m)),
             )
-            if (
-                lens is not None
-                and (lens == dim).all()
-                and flat.null_count == 0
-            ):
-                X = flat.to_numpy(zero_copy_only=False).astype(
-                    np.float64, copy=False
-                ).reshape(n, dim)
-                nacc = np.zeros(n, dtype=np.float64)
-                for j in range(dim):
-                    nacc = nacc + X[:, j] * X[:, j]
-                vn_arr = pa.array(np.sqrt(nacc), type=pa.float64())
-                S = fold_scores_np(X, Cn)
-                sc_arr = pa.ListArray.from_arrays(
-                    pa.array(
-                        np.arange(0, (n + 1) * m, m, dtype=np.int32)
-                    ),
-                    pa.array(S.reshape(-1), type=pa.float64()),
-                )
-            else:
-                vn, sc = [], []
-                for v in vc.to_pylist():
-                    # a NULL vector, or a null ELEMENT inside one,
-                    # poisons every fold in the expression form: NULL
-                    # norm and all-NULL scores
-                    if v is None or any(e is None for e in v):
-                        vn.append(None)
-                        sc.append([None] * m)
-                        continue
-                    x = np.asarray(v, dtype=np.float64)
-                    a = 0.0
-                    for xx in x:
-                        a = a + xx * xx
-                    vn.append(float(np.sqrt(a)))
-                    if len(x) != dim:
-                        sc.append([None] * m)
-                    else:
-                        sc.append(list(fold_scores_np(x[None, :], Cn)[0]))
-                vn_arr = pa.array(vn, type=pa.float64())
-                sc_arr = pa.array(sc, type=pa.list_(pa.float64()))
             yield pa.RecordBatch.from_arrays(
-                [idc, vc, vn_arr, sc_arr],
+                [b.column(0), vc, nrm, scores],
                 names=[id_col, vec_col, "vnorm", "__scores"],
             )
 
@@ -580,9 +536,18 @@ def ivf_topk(
     ``nprobe`` (probe the n best cells per query — query-side-only
     expansion, corpus untouched, same trade as SRP multi-probe).
     Pass ``centroids`` (e.g. from ``adaptive_ivf_params``) to swap the
-    fixed md5 quantizer for a data-trained one behind the same plan."""
-    from pyspark.sql import Window
+    fixed md5 quantizer for a data-trained one behind the same plan.
 
+    Quantizers up to ``LITERAL_MAX_VALUES`` inline as literals (zero
+    extra stages, inside the scan's codegen span); larger (√n-cell)
+    ones are scored in the ``_scores_arrow`` kernel, since literals
+    made driver-side planning dominate the query (4.2 s → 2.4 s at
+    sf0.1 on broadcast data) and the interpreted cells×dim fold per row
+    then dominated the scan. The vector is NOT pre-cast: each fold
+    casts per element, while a materialized cast column gets inlined
+    into the per-centroid lambda and rebuilt per probe (2× at √n
+    cells). The score array is computed once and serves both cell
+    assignment and nprobe ranking."""
     if centroids is None:
         centroids = ivf_centroids(num_cells, dim)
     else:
@@ -590,26 +555,7 @@ def ivf_topk(
         num_cells = len(centroids)
     if not centroids or not centroids[0]:
         raise ValueError("ivf_topk requires a non-empty centroid matrix")
-    # NO pre-cast projection here: every consumer below (ivf_cell_scores'
-    # zip_with, norm, the final dot) casts per ELEMENT inside its own
-    # lambda — exact float→double widening, bit-identical. A materialized
-    # as_double_vec column gets CollapseProject-inlined INSIDE the
-    # per-centroid scores lambda, re-building the O(d) cast array once
-    # per centroid probe (the hof-loop-invariant-producer class,
-    # plans/lint.py round 15) — 2× the dominant stage at √n cells.
-    # How the centroids reach the executors is a scale decision:
-    #  * tiny quantizers (≤ ~1k values) inline as expression literals —
-    #    zero extra stages, stays inside the scan's codegen span;
-    #  * real quantizers ride as broadcast DATA (a one-row
-    #    array<array<double>> joined to every row). A √n quantizer embeds
-    #    num_cells × dim literal NODES in the plan otherwise (2,880 at
-    #    sf0.1 already, 10⁵+ at cluster scale) and every Catalyst
-    #    analysis/optimizer rule walks all of them — driver-side planning
-    #    dominated the query before this split (measured 4.2 s → 2.4 s at
-    #    sf0.1). The score arithmetic (left-fold zip_with dot) is
-    #    bit-identical either way, and the score array is computed ONCE
-    #    and reused for cell assignment and nprobe ranking.
-    if len(centroids) * dim <= 1024:
+    if len(centroids) * dim <= LITERAL_MAX_VALUES:
         assigned = emb.select(
             F.col(id_col),
             F.col(vec_col),
@@ -617,17 +563,7 @@ def ivf_topk(
             ivf_cell_scores(F.col(vec_col), centroids).alias("__scores"),
         )
     else:
-        # Data-scaled quantizer tier (r15, guide §4.2, the round-14
-        # pq.py arrow_cells precedent): the broadcast-DATA expression
-        # form evaluated an interpreted |cells|×dim lambda fold per
-        # corpus row — THE scan cost once cells scale as √n. The Arrow
-        # kernel computes the same score matrix with one vectorized
-        # multiply-add per dimension (left-fold order, so every double
-        # is bit-identical to the zip_with fold; parity pinned in
-        # tests/test_similarity.py) and the same norm fold. The
-        # small-literal tier above keeps the textual expression form the
-        # hash-oracled d=64 rows' claims are read against.
-        assigned = _scores_arrow(emb, id_col, vec_col, centroids, dim)
+        assigned = _scores_arrow(emb, id_col, vec_col, centroids)
     assigned = assigned.withColumn(
         "cell",
         F.array_position(F.col("__scores"), F.array_max("__scores")).cast("int"),
@@ -659,17 +595,7 @@ def ivf_topk(
             dot(F.col("qvec"), F.col(vec_col)) / (F.col("qnorm") * F.col("vnorm")), 6
         ).alias("cos_sim"),
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("vid"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "vid", "cos_sim", F.col("rnk").cast("int").alias("rnk"))
-        # r15: the window's qid exchange bounds the range sampler's
-        # re-read (checkpoint measured neutral solo) and the bare tail
-        # skips the checkpoint's build-time planning pass — the recall
-        # reports consume this frame via unsorted() (guide §2.4)
-        .transform(sort_plain, "qid", "rnk")
-    )
+    return rank_topk(scored, k, F.desc("cos_sim"), F.asc("vid"))
 
 
 def probe_buckets(bucket: Column, num_planes: int, radius: int = 1) -> Column:
@@ -715,8 +641,6 @@ def ann_srp_topk(
     planes an ε-near neighbor flips each sign with prob ~θ/π; at 8+
     planes the chance that NO bit differs collapses, so exact-bucket
     recall decays — one-bit probing covers the dominant failure mode)."""
-    from pyspark.sql import Window
-
     planes = srp_planes(num_planes, dim)
     emb = emb.withColumn(vec_col, as_double_vec(vec_col))
     bucketed = emb.select(
@@ -746,17 +670,7 @@ def ann_srp_topk(
             dot(F.col("qvec"), F.col(vec_col)) / (F.col("qnorm") * F.col("vnorm")), 6
         ).alias("cos_sim"),
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("vid"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "vid", "cos_sim", F.col("rnk").cast("int").alias("rnk"))
-        # r15: the window's qid exchange bounds the range sampler's
-        # re-read (checkpoint measured neutral solo) and the bare tail
-        # skips the checkpoint's build-time planning pass — the recall
-        # reports consume this frame via unsorted() (guide §2.4)
-        .transform(sort_plain, "qid", "rnk")
-    )
+    return rank_topk(scored, k, F.desc("cos_sim"), F.asc("vid"))
 
 
 def brute_force_topk_arrow(
@@ -774,7 +688,7 @@ def brute_force_topk_arrow(
     The global rank is then a window over partitions × q × k skinny
     rows. Ranking uses the QUANTIZED cosine — FLOOR(x*1e6+0.5)/1e6,
     the gopher/PCA discipline — with a vid tie-break, so the kernel is
-    hash-oracled against DuckDB since round 12 (BLAS summation order
+    hash-oracled against DuckDB (BLAS summation order
     shifts the raw cosine by ~1e-16, five orders below the 1e-6
     quantization grid) and returns the same rows as the fold-based
     twin away from exact rounding ties (pytest pins parity on the
@@ -790,7 +704,6 @@ def brute_force_topk_arrow(
     from typing import Iterator
 
     import pandas as pd
-    from pyspark.sql import Window
 
     emb = emb.withColumn(vec_col, as_double_vec(vec_col))
     qrows = (
@@ -815,11 +728,9 @@ def brute_force_topk_arrow(
             V = np.vstack(pdf[vec_col].to_numpy())
             Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
             sims = Vn @ Qn.T  # (batch, q)
-            # FLOOR(x*1e6+0.5)/1e6 — the gopher/PCA quantization
-            # discipline instead of np.round: floor of the scaled value
-            # is bit-identical across engines, so BLAS summation order
-            # (|Δ| ~ 1e-16, grid 1e-6) can no longer move the hash and
-            # the row graduates from rows-only to hash-oracled (r12)
+            # FLOOR(x*1e6+0.5)/1e6 instead of np.round: floor of the
+            # scaled value is bit-identical across engines, so BLAS
+            # summation order (|Δ| ~ 1e-16, grid 1e-6) cannot move the hash
             sims = np.floor(sims * 1e6 + 0.5) / 1e6
             outs = []
             for j in range(len(qid_arr)):
@@ -846,12 +757,4 @@ def brute_force_topk_arrow(
     scored = emb.select(F.col(id_col), F.col(vec_col)).mapInPandas(
         score, schema=out_schema
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("vid"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "vid", "cos_sim", F.col("rnk").cast("int").alias("rnk"))
-        # r15 session-3 A/B: the window's qid exchange bounds the
-        # sampler's re-read — the bare sort wins here (guide §2.4)
-        .transform(sort_plain, "qid", "rnk")
-    )
+    return rank_topk(scored, k, F.desc("cos_sim"), F.asc("vid"))

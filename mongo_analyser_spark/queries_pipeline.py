@@ -3891,7 +3891,9 @@ def q_ivfpq_wide_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     row, driven end-to-end at d=768 so the driver contract — not just
     tools/scale_probe — exercises a production vector width. The scan
     still reads m=8 code bytes + one cell int per vector (96-float
-    subspaces change the LUT build, not the scan width). DECLARED
+    subspaces change the LUT build, not the scan width; the 4×768
+    quantizer is above similarity.LITERAL_MAX_VALUES, so cells are
+    assigned in the Arrow encode kernel). DECLARED
     rows-only; tests/test_pq.py gates recall@5 vs the exact L2 top-5
     over the SAME widened vectors."""
     from mongo_analyser_spark.operators.pq import ivfpq_topk_arrow
@@ -3902,11 +3904,6 @@ def q_ivfpq_wide_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _WIDE_DIM, ivf_centroids(IVF_CELLS, _WIDE_DIM), _PQ_M, _PQ_K,
         shortlist=_PQ_SHORTLIST, k=_PQ_TOPK, refine_steps=1,
         cb=_pq_wide_cb(spark, sf_dir),
-        # round 14: the interpreted cell fold is |cells|x768 lambda
-        # probes per row at this width — assign cells inside the Arrow
-        # encode kernel instead (bit-identical left-fold sums; parity
-        # pinned in tests/test_pq.py)
-        arrow_cells=True,
     )
 
 

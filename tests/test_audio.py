@@ -583,6 +583,27 @@ def test_ima_adpcm_stereo_channels_not_swapped():
     assert int(chans[1][-1]) > 2000
 
 
+def test_ima_adpcm_multi_long_payload_spans_blocks():
+    """A payload whose one-block default would overflow the 16-bit
+    nBlockAlign field gets the largest block that fits and spans
+    several; an explicit block_align above 65535 raises ValueError."""
+    import pytest
+
+    from mongo_analyser_spark.operators.audio import (
+        decode_wav_ex,
+        encode_wav_ima_adpcm_multi,
+    )
+
+    n = 70000
+    a = [(i * 37) % 2001 - 1000 for i in range(n)]
+    b = [0] * n
+    _r, chans = decode_wav_ex(encode_wav_ima_adpcm_multi(8000, [a, b]))
+    assert [len(c) for c in chans] == [n, n]
+    assert all(int(v) == 0 for v in chans[1])
+    with pytest.raises(ValueError, match="16-bit"):
+        encode_wav_ima_adpcm_multi(8000, [b, b], 4 * 2 * 8192)
+
+
 def test_ima_adpcm_stereo_malformed_raises():
     import struct
 

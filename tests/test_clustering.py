@@ -181,23 +181,23 @@ def test_kmeans_step_arrow_flag_same_output(spark):
     )
 
 
-def test_assign_full_arrow_matches_expression_fold(spark):
-    """r15: semantic_dedup's assignment projection is an Arrow kernel;
-    (v, nrm, cell) must match the broadcast-data expression form
-    exactly on clean rows AND the edge rows it half-scores (NULL
-    vector, null element, ragged length, NaN element — where Spark's
-    array_max/array_position resolve the all-NaN score row to cell 1)."""
+def test_semantic_dedup_assignment_matches_expression_fold(spark):
+    """semantic_dedup's assignment (the ``_scores_arrow`` kernel plus
+    Spark's cast and first-max cell) must match the broadcast-data
+    expression form exactly on clean rows AND the edge rows it
+    half-scores (NULL vector, null element, ragged length, NaN element,
+    all-NaN vector — where Spark's array_max/array_position resolve the
+    all-NaN score row to cell 1), for array<double> and array<float>
+    input alike."""
     import math
     import random
 
     from pyspark.sql import functions as F
 
-    from mongo_analyser_spark.operators.clustering import (
-        _assign_full_arrow,
-        _fold_dot,
-    )
+    from mongo_analyser_spark.operators.clustering import _cell_vectors
     from mongo_analyser_spark.operators.similarity import (
         as_double_vec,
+        dot,
         srp_planes,
     )
 
@@ -214,7 +214,7 @@ def test_assign_full_arrow_matches_expression_fold(spark):
     null_el = [rng.uniform(-1, 1) for _ in range(dim)]
     null_el[5] = None
     rows.append((104, null_el))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    rows.append((105, [float("nan")] * dim))
 
     cents_row = (
         spark.createDataFrame(
@@ -224,24 +224,7 @@ def test_assign_full_arrow_matches_expression_fold(spark):
         .agg(F.sort_array(F.collect_list(F.struct("cid", "v"))).alias("cents"))
     )
     vec = as_double_vec("embedding")
-    scores = F.transform(F.col("cents"), lambda c: _fold_dot(vec, c["v"]))
-    expr = (
-        df.crossJoin(F.broadcast(cents_row))
-        .select(
-            F.col("vec_id").alias("id"),
-            vec.alias("v"),
-            F.sqrt(_fold_dot(vec, vec)).alias("nrm"),
-            F.array_position(scores, F.array_max(scores)).cast("int").alias("cell"),
-        )
-        .orderBy("id")
-        .collect()
-    )
-    got = (
-        _assign_full_arrow(df, "vec_id", "embedding", cents)
-        .orderBy("id")
-        .collect()
-    )
-    assert len(expr) == len(got) == len(rows)
+    scores = F.transform(F.col("cents"), lambda c: dot(vec, c["v"]))
 
     def eq(a, b):
         if a is None or b is None:
@@ -250,13 +233,36 @@ def test_assign_full_arrow_matches_expression_fold(spark):
             return math.isnan(a) and math.isnan(b)
         return a == b
 
-    for e, g in zip(expr, got):
-        assert e["id"] == g["id"]
-        assert e["cell"] == g["cell"], (e["id"], e["cell"], g["cell"])
-        assert eq(e["nrm"], g["nrm"]), (e["id"], e["nrm"], g["nrm"])
-        if e["v"] is None:
-            assert g["v"] is None
-        else:
-            assert len(e["v"]) == len(g["v"])
-            for x, y in zip(e["v"], g["v"]):
-                assert eq(x, y), (e["id"], x, y)
+    for elem in ("double", "float"):
+        df = spark.createDataFrame(
+            rows, f"vec_id long, embedding array<{elem}>"
+        )
+        expr = (
+            df.crossJoin(F.broadcast(cents_row))
+            .select(
+                F.col("vec_id").alias("id"),
+                vec.alias("v"),
+                F.sqrt(dot(vec, vec)).alias("nrm"),
+                F.array_position(scores, F.array_max(scores))
+                .cast("int")
+                .alias("cell"),
+            )
+            .orderBy("id")
+            .collect()
+        )
+        got = (
+            _cell_vectors(df, "vec_id", "embedding", cents)
+            .orderBy("id")
+            .collect()
+        )
+        assert len(expr) == len(got) == len(rows)
+        for e, g in zip(expr, got):
+            assert e["id"] == g["id"]
+            assert e["cell"] == g["cell"], (elem, e["id"], e["cell"], g["cell"])
+            assert eq(e["nrm"], g["nrm"]), (elem, e["id"], e["nrm"], g["nrm"])
+            if e["v"] is None:
+                assert g["v"] is None
+            else:
+                assert len(e["v"]) == len(g["v"])
+                for x, y in zip(e["v"], g["v"]):
+                    assert eq(x, y), (elem, e["id"], x, y)

@@ -288,6 +288,9 @@ def test_frame_mean_luma_conventions():
 def test_apng_first_frame_must_be_full_canvas():
     with pytest.raises(ValueError):
         encode_apng(4, 4, 1, [(1, 1, 2, 2, bytes(4))])
+    # the first frame's pixel buffer is checked like every later one
+    with pytest.raises(ValueError, match="pixel buffer"):
+        encode_apng(2, 2, 3, [(0, 0, 2, 2, bytes(5))])
 
 
 def test_lzw_decode_mid_stream_clear():

@@ -339,58 +339,3 @@ def test_ivfpq_wide_recall_gate(spark):
     # every query returns exactly k ranked rows
     for q in ANN_QUERY_IDS:
         assert len(got.get(q, set())) == _PQ_TOPK
-
-
-def test_ivfpq_arrow_cells_parity_and_cell_assignment(spark):
-    """arrow_cells=True must be result-identical to the expression cell
-    path: the numpy accumulation adds one vectorized term per dim (the
-    HOF fold's left-to-right order), so every per-cell dot is the same
-    double and argmax reproduces first-max ties. Checked two ways: the
-    full composed result at 64 dims on the fixture, and the raw cell
-    assignment column against ivf_cell."""
-    from pyspark.sql import functions as F
-
-    from mongo_analyser_spark.operators.pq import ivfpq_topk_arrow
-    from mongo_analyser_spark.operators.similarity import (
-        ivf_cell,
-        ivf_centroids,
-    )
-    from mongo_analyser_spark.queries_pipeline import (
-        ANN_QUERY_IDS,
-        EMB_DIM,
-        IVF_CELLS,
-        _pq_trained_cb,
-    )
-    from mongo_analyser_spark.sources.parquet import load_table
-
-    sf = "/root/testdata/sf0.001"
-    emb = load_table(spark, sf, "embeddings")
-    cents = ivf_centroids(IVF_CELLS, EMB_DIM)
-    cb = _pq_trained_cb(spark, sf)
-    a = ivfpq_topk_arrow(
-        emb, "vec_id", "embedding", ANN_QUERY_IDS, EMB_DIM, cents,
-        cb=cb,
-    ).collect()
-    b = ivfpq_topk_arrow(
-        emb, "vec_id", "embedding", ANN_QUERY_IDS, EMB_DIM, cents,
-        cb=cb, arrow_cells=True,
-    ).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    # raw cell ids: expression vs the numpy kernel, every fixture vector
-    import numpy as np
-
-    expr = {
-        r["vec_id"]: r["cell"]
-        for r in emb.select(
-            "vec_id", ivf_cell(F.col("embedding"), cents).alias("cell")
-        ).collect()
-    }
-    rows = emb.select("vec_id", "embedding").collect()
-    X = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
-    Cn = np.asarray(cents, dtype=np.float64)
-    acc = np.zeros((X.shape[0], Cn.shape[0]))
-    for j in range(Cn.shape[1]):
-        acc = acc + X[:, j : j + 1] * Cn[:, j][None, :]
-    got = acc.argmax(axis=1) + 1
-    for r, g in zip(rows, got):
-        assert expr[r["vec_id"]] == g, r["vec_id"]

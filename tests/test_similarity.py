@@ -318,7 +318,7 @@ def test_scores_arrow_matches_expression_fold(spark):
         .collect()
     )
     got = (
-        _scores_arrow(df, "vec_id", "embedding", cents, dim)
+        _scores_arrow(df, "vec_id", "embedding", cents)
         .orderBy("vec_id")
         .collect()
     )
@@ -388,3 +388,44 @@ def test_srp_sig_arrow_matches_expression_bits(spark):
         assert e["vec_id"] == g["vec_id"] and e["label"] == g["label"]
         assert e["sig"] == g["sig"], (e["vec_id"], e["sig"], g["sig"])
         assert (e["__vec"] is None) == (g["__vec"] is None)
+
+
+@pytest.mark.parametrize("op", ["with_srp_sig", "ivf_topk", "ivfpq_topk_arrow"])
+def test_literal_size_rule_sides_agree(spark, monkeypatch, op):
+    """``LITERAL_MAX_VALUES`` only picks how a quantizer reaches the
+    executors: forcing the literal side and then the Arrow side must
+    return identical rows for every operator that reads the rule."""
+    from mongo_analyser_spark.operators import similarity
+    from mongo_analyser_spark.operators.pq import ivfpq_topk_arrow
+    from mongo_analyser_spark.queries_pipeline import (
+        ANN_QUERY_IDS,
+        EMB_DIM,
+        IVF_CELLS,
+        _pq_trained_cb,
+    )
+    from mongo_analyser_spark.sources.parquet import load_table
+
+    sf = "/root/testdata/sf0.001"
+    emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
+    cents = similarity.ivf_centroids(IVF_CELLS, EMB_DIM)
+
+    def run():
+        if op == "with_srp_sig":
+            planes = similarity.srp_planes(6, EMB_DIM)
+            out = similarity.with_srp_sig(emb, "embedding", planes)
+            return out.orderBy("vec_id").collect()
+        if op == "ivf_topk":
+            return similarity.ivf_topk(
+                emb, "vec_id", "embedding", list(range(8)), IVF_CELLS,
+                EMB_DIM, k=3, nprobe=2,
+            ).collect()
+        return ivfpq_topk_arrow(
+            emb, "vec_id", "embedding", ANN_QUERY_IDS, EMB_DIM, cents,
+            cb=_pq_trained_cb(spark, sf),
+        ).collect()
+
+    monkeypatch.setattr(similarity, "LITERAL_MAX_VALUES", 10**9)
+    literal = [tuple(r) for r in run()]
+    monkeypatch.setattr(similarity, "LITERAL_MAX_VALUES", 0)
+    arrow = [tuple(r) for r in run()]
+    assert literal and literal == arrow
