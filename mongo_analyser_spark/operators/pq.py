@@ -37,14 +37,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from mongo_analyser_spark.operators import similarity
 from mongo_analyser_spark.operators.fanout import sort_plain, unsorted
 from mongo_analyser_spark.operators.relational import top_k_per_group
-from mongo_analyser_spark.operators.similarity import (
-    fold_scores_np,
-    ivf_cell,
-    rank_topk,
-)
+from mongo_analyser_spark.operators.similarity import fold_scores_np, rank_topk
 
 
 def _sub_l2(a: Column, b: Column) -> Column:
@@ -301,13 +296,10 @@ def _encode_arrow(
     src: DataFrame, id_col: str, vec_col: str, cb, cents=None
 ) -> DataFrame:
     """(id, codes[, cell]) for every row of ``src`` against codebook
-    ``cb``. ``cell`` is passed through when ``src`` carries one, or
-    computed as the first-max ``fold_scores_np`` centroid of ``cents``
-    (bit-identical to ``similarity.ivf_cell``)."""
+    ``cb``; with ``cents`` the cell is the first-max ``fold_scores_np``
+    centroid (bit-identical to ``similarity.ivf_cell``)."""
     import numpy as np
     import pandas as pd
-
-    has_cell = cents is not None or "cell" in src.columns
 
     def kern(batches):
         for pdf in batches:
@@ -324,13 +316,10 @@ def _encode_arrow(
                 out["cell"] = (
                     fold_scores_np(X, cents).argmax(axis=1) + 1
                 ).astype(np.int32)
-            elif has_cell:
-                out["cell"] = pdf["cell"].to_numpy()
             yield pd.DataFrame(out)
 
-    return src.mapInPandas(
-        kern, "id long, codes array<int>" + (", cell int" if has_cell else "")
-    )
+    cell = "" if cents is None else ", cell int"
+    return src.mapInPandas(kern, "id long, codes array<int>" + cell)
 
 
 def pq_encode_arrow(
@@ -771,13 +760,9 @@ def ivfpq_topk_arrow(
     L2 reranks the bounded shortlist — the same encode, LUT, scan and
     rerank parts as the PQ rows, so the composition stays engine-exact.
 
-    The cell follows the IVF size rule: quantizers up to
-    ``similarity.LITERAL_MAX_VALUES`` (cells × dim) use the literal
-    ``ivf_cell`` expression the ann_ivf row hash-verifies; larger ones
-    are assigned inside the encode kernel by ``fold_scores_np`` (the
-    interpreted fold is cells×dim lambda probes per row — ~45% of the
-    wall at d=768). Both give bit-identical cells, first-max ties
-    included; query cells always come from ``fold_scores_np``.
+    Corpus and query cells both come from ``fold_scores_np``, corpus
+    cells inside the encode kernel that already holds every vector —
+    bit-identical to ``similarity.ivf_cell``, first-max ties included.
 
     100-TB shape: the corpus-side scan touches (id, codes, cell) — m
     small ints + one int per vector, never a float; the cell gate cuts
@@ -790,15 +775,9 @@ def ivfpq_topk_arrow(
             df, id_col, vec_col, dim, m, k_cent, refine_steps, round_to
         )
     C = np.asarray(centroids, dtype=np.float64)
-    if len(centroids) * dim <= similarity.LITERAL_MAX_VALUES:
-        cell = ivf_cell(F.col(vec_col), centroids).alias("cell")
-        encoded = _encode_arrow(
-            df.select(id_col, vec_col, cell), id_col, vec_col, cb
-        )
-    else:
-        encoded = _encode_arrow(
-            df.select(id_col, vec_col), id_col, vec_col, cb, cents=C
-        )
+    encoded = _encode_arrow(
+        df.select(id_col, vec_col), id_col, vec_col, cb, cents=C
+    )
     qids, Q, lut = _query_lut(df, id_col, vec_col, query_ids, cb)
     qcells = fold_scores_np(Q, C).argmax(axis=1) + 1
     short = top_k_per_group(

@@ -3891,8 +3891,7 @@ def q_ivfpq_wide_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     row, driven end-to-end at d=768 so the driver contract — not just
     tools/scale_probe — exercises a production vector width. The scan
     still reads m=8 code bytes + one cell int per vector (96-float
-    subspaces change the LUT build, not the scan width; the 4×768
-    quantizer is above similarity.LITERAL_MAX_VALUES, so cells are
+    subspaces change the LUT build, not the scan width; cells are
     assigned in the Arrow encode kernel). DECLARED
     rows-only; tests/test_pq.py gates recall@5 vs the exact L2 top-5
     over the SAME widened vectors."""

@@ -136,26 +136,20 @@ def test_pq_adc_rerank_recall_on_planted_clusters(corpus):
     assert r >= 0.95, r  # measured 1.000
 
 
-def test_ivfpq_recall_on_planted_clusters(corpus, monkeypatch):
-    """The gate runs on both sides of the cell size rule: literal
-    ``ivf_cell`` cells and cells assigned in the Arrow encode kernel
-    (bit-identical cells are parity-pinned in test_similarity.py; this
-    asserts QUALITY through each path)."""
+def test_ivfpq_recall_on_planted_clusters(corpus):
     from mongo_analyser_spark.operators import similarity
     from mongo_analyser_spark.operators.pq import ivfpq_topk_arrow
 
     X, df = corpus
     truth = _truth(X, "l2")
     cents = similarity.kmeans_centroids([list(r) for r in X], N_CLUSTERS)
-    for limit in (10**9, 0):  # literal side, then Arrow side
-        monkeypatch.setattr(similarity, "LITERAL_MAX_VALUES", limit)
-        r = _recall(
-            ivfpq_topk_arrow(df, "vec_id", "embedding", QIDS, DIM, cents,
-                             m=8, k_cent=16, shortlist=PER, k=K,
-                             refine_steps=1),
-            truth,
-        )
-        assert r >= 0.95, (limit, r)  # measured 1.000
+    r = _recall(
+        ivfpq_topk_arrow(df, "vec_id", "embedding", QIDS, DIM, cents,
+                         m=8, k_cent=16, shortlist=PER, k=K,
+                         refine_steps=1),
+        truth,
+    )
+    assert r >= 0.95, r  # measured 1.000
 
 
 def test_pq_adc_no_rerank_is_tie_dominated_on_clusters(corpus):

@@ -262,6 +262,44 @@ def test_encode_matches_python_on_random_vectors(spark):
             assert got[vid][s] == want
 
 
+def test_ivfpq_encode_cells_match_ivf_cell(spark):
+    """IVFADC assigns corpus cells inside the encode kernel: every
+    fixture vector's cell must equal the ``ivf_cell`` expression's,
+    first-max ties included."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from mongo_analyser_spark.operators.pq import _encode_arrow
+    from mongo_analyser_spark.operators.similarity import (
+        ivf_cell,
+        ivf_centroids,
+    )
+    from mongo_analyser_spark.queries_pipeline import (
+        EMB_DIM,
+        IVF_CELLS,
+        _pq_trained_cb,
+    )
+    from mongo_analyser_spark.sources.parquet import load_table
+
+    sf = "/root/testdata/sf0.001"
+    emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
+    cents = ivf_centroids(IVF_CELLS, EMB_DIM)
+    expr = {
+        r["vec_id"]: r["cell"]
+        for r in emb.select(
+            "vec_id", ivf_cell(F.col("embedding"), cents).alias("cell")
+        ).collect()
+    }
+    got = {
+        r["id"]: r["cell"]
+        for r in _encode_arrow(
+            emb, "vec_id", "embedding", _pq_trained_cb(spark, sf),
+            cents=np.asarray(cents, dtype=np.float64),
+        ).collect()
+    }
+    assert expr and got == expr
+
+
 def test_ivfpq_returns_only_same_cell_neighbors(spark):
     """IVFADC composition: with nprobe=1 every returned neighbor must
     share the query's IVF cell, and the rerank keeps (l2, vid) order."""

@@ -390,38 +390,26 @@ def test_srp_sig_arrow_matches_expression_bits(spark):
         assert (e["__vec"] is None) == (g["__vec"] is None)
 
 
-@pytest.mark.parametrize("op", ["with_srp_sig", "ivf_topk", "ivfpq_topk_arrow"])
+@pytest.mark.parametrize("op", ["with_srp_sig", "ivf_topk"])
 def test_literal_size_rule_sides_agree(spark, monkeypatch, op):
     """``LITERAL_MAX_VALUES`` only picks how a quantizer reaches the
     executors: forcing the literal side and then the Arrow side must
     return identical rows for every operator that reads the rule."""
     from mongo_analyser_spark.operators import similarity
-    from mongo_analyser_spark.operators.pq import ivfpq_topk_arrow
-    from mongo_analyser_spark.queries_pipeline import (
-        ANN_QUERY_IDS,
-        EMB_DIM,
-        IVF_CELLS,
-        _pq_trained_cb,
-    )
+    from mongo_analyser_spark.queries_pipeline import EMB_DIM, IVF_CELLS
     from mongo_analyser_spark.sources.parquet import load_table
 
     sf = "/root/testdata/sf0.001"
     emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
-    cents = similarity.ivf_centroids(IVF_CELLS, EMB_DIM)
 
     def run():
         if op == "with_srp_sig":
             planes = similarity.srp_planes(6, EMB_DIM)
             out = similarity.with_srp_sig(emb, "embedding", planes)
             return out.orderBy("vec_id").collect()
-        if op == "ivf_topk":
-            return similarity.ivf_topk(
-                emb, "vec_id", "embedding", list(range(8)), IVF_CELLS,
-                EMB_DIM, k=3, nprobe=2,
-            ).collect()
-        return ivfpq_topk_arrow(
-            emb, "vec_id", "embedding", ANN_QUERY_IDS, EMB_DIM, cents,
-            cb=_pq_trained_cb(spark, sf),
+        return similarity.ivf_topk(
+            emb, "vec_id", "embedding", list(range(8)), IVF_CELLS,
+            EMB_DIM, k=3, nprobe=2,
         ).collect()
 
     monkeypatch.setattr(similarity, "LITERAL_MAX_VALUES", 10**9)
