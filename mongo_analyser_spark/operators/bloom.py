@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mongo_analyser_spark.operators.fanout import input_bytes, sort_after_python
+from mongo_analyser_spark.operators.fanout import input_bytes, sort_output
 
 from mongo_analyser_spark.functions.text import shingles
 from mongo_analyser_spark.operators.dsir import md5_bucket
@@ -280,8 +280,5 @@ def bloom_ngram_contamination(
             (F.col("n_bloom_hits") - F.col("n_exact_hits")).alias("n_false_pos"),
             (F.col("n_bloom_hits") > 0).alias("bloom_flag"),
         )
-        # r15: checkpoint before the sort — the bloom-probe segment sits
-        # under a broadcast join with no exchange, so the bare orderBy
-        # re-ran every per-gram probe in the range sampler (guide §2.4)
-        .transform(sort_after_python, "train_id")
+        .transform(sort_output, "train_id")
     )

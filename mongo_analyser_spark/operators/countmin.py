@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mongo_analyser_spark.operators.fanout import sort_after_python
+from mongo_analyser_spark.operators.fanout import sort_output
 
 from mongo_analyser_spark.operators.dsir import md5_bucket
 
@@ -146,7 +146,5 @@ def countmin_estimates(
             "cm_est",
             (F.col("cm_est") - F.col("exact_cnt")).alias("overestimate"),
         )
-        # r15: checkpoint before the sort — the probe explode below the
-        # broadcast join re-ran in the range sampler (guide §2.4)
-        .transform(sort_after_python, key_name)
+        .transform(sort_output, key_name)
     )

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from mongo_analyser_spark.operators.fanout import (
     fanout_for_python,
     input_bytes,
-    sort_plain,
+    sort_output,
 )
 
 from mongo_analyser_spark.functions.text import shingles, tokens
@@ -552,11 +552,7 @@ def hamming_pairs(
         .select("id_a", "id_b", hamming.alias("hamming"))
         .distinct()  # a close pair can collide in several bands
         .filter(F.col("hamming") <= max_hamming)
-        # r15 session-4 A/B: the distinct's exchange already bounds the
-        # range sampler's re-read (merge + filter over shuffle output),
-        # so the checkpoint was pure loss — bare sort (guide §2.4;
-        # dhash_pairs same-session 2.22 s ckpt vs 2.11 s bare)
-        .transform(sort_plain, "id_a", "id_b")
+        .transform(sort_output, "id_a", "id_b")
     )
 
 

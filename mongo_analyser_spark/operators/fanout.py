@@ -18,9 +18,10 @@ the shuffle when the scan already saturates the executor parallelism.
 
 ``python_rows`` is the one way to run a per-document Python function:
 fanout, then one Arrow-batched ``mapInPandas`` that emits the rows the
-function returns for each (id, payload) pair. ``ascii_codes`` and ``q4``
-are the payload source and the float quantizer the codec rows share
-with their DuckDB twins.
+function returns for each (id, payload) pair. ``sort_output`` is
+the one deterministic output sort. ``ascii_codes`` and ``q4`` are the
+payload source and the float quantizer the codec rows share with their
+DuckDB twins.
 """
 
 from __future__ import annotations
@@ -79,7 +80,7 @@ def python_rows(
     of the DDL ``schema``. The frame is fanned out on the id column
     (``fanout_for_python``) and every row is produced inside ONE
     Arrow-batched ``mapInPandas``. Callers finish with
-    ``.transform(sort_after_python, ...)`` for a deterministic order."""
+    ``.transform(sort_output, ...)`` for a deterministic order."""
     import pandas as pd
     from pyspark.sql.types import StructType
 
@@ -116,63 +117,15 @@ def q4(x: float) -> float:
     return math.floor(x * 10000.0 + 0.5) / 10000.0
 
 
-def sort_after_python(df: DataFrame, *cols: str) -> DataFrame:
-    """Deterministic output sort for a per-row Python stage (r15,
-    guide §2.4 "an orderBy used only to make output deterministic").
+def sort_output(df: DataFrame, *cols: str) -> DataFrame:
+    """The deterministic output sort of a query: a keyed exchange on the
+    sort columns, then ``orderBy`` on them.
 
-    A bare ``.orderBy`` directly on a MapInPandas output executes the
-    whole Python subtree TWICE: range partitioning first SAMPLES its
-    child to compute the partition bounds, then shuffles it — and with
-    no exchange between the codec stage and the sort, the sample pass
-    re-runs every encode/decode (measured on the webp row at sf0.1:
-    4.0 s with the bare orderBy, 2.4 s with this helper, output
-    identical including row order). Materializing the stage's output
-    first (``localCheckpoint``) bounds the re-read to the skinny
-    feature rows — orders of magnitude smaller than the decoded payload
-    input, the same artifact discipline as the dedup fingerprints.
-
-    The checkpoint hides the Python stage from the final visible plan,
-    so the pre-checkpoint frame is attached as ``_pre_sort_child`` for
-    the plan-pinning tests (tests/test_plans.py) to assert the fanout
-    exchange + MapInPandas shape on.
-
-    The checkpoint is NOT free: on a row whose under-sort segment is
-    already bounded by a shuffle or broadcast artifact the resample is
-    cheap and the extra materialization job is pure loss (the r15
-    finding on the recall-report family) — those rows use
-    ``sort_plain``."""
-    # eager=False: the eager form also ran the checkpointed segment itself
-    # at BUILD time, so composite consumers that take ``unsorted(...)``
-    # (the recall reports) paid that job for a frame they never execute.
-    # Lazily, the sort's range-sampling job is what materializes the
-    # partitions and the shuffle reuses them — same one-materialization
-    # guarantee for sorted consumers. The lazy call is not free either:
-    # under AQE it still runs every query stage upstream of the
-    # checkpoint (shuffles, broadcasts) when it is called (measured:
-    # bloom_decontaminate_documents fires 5 jobs at this call).
-    out = df.localCheckpoint(eager=False).orderBy(*cols)
-    out._pre_sort_child = df
-    return out
-
-
-def sort_plain(df: DataFrame, *cols: str) -> DataFrame:
-    """Deterministic output sort WITHOUT the checkpoint — the right tail
-    when the segment under the sort is already bounded by a shuffle or
-    broadcast artifact, so the range sampler's re-read is cheap and the
-    checkpoint's extra materialization job is pure loss (r15 session-3
-    same-session A/B: the recall-report / ADC top-k family reads
-    0.03-0.43 s FASTER bare per row). Still attaches the pre-sort child
-    so plan pins and ``unsorted`` work identically on both tails."""
-    out = df.orderBy(*cols)
-    out._pre_sort_child = df
-    return out
-
-
-def unsorted(df: DataFrame) -> DataFrame:
-    """The frame BELOW a deterministic output sort (either tail form).
-    Composite consumers (recall reports) join/aggregate the top-k
-    frames, where the inner sort is dead weight — Catalyst does not
-    reliably eliminate it, and in the checkpointed form it costs a
-    materialization job plus a range exchange. Identical rows, order
-    dropped — safe exactly where consumption is order-insensitive."""
-    return getattr(df, "_pre_sort_child", df)
+    A bare ``orderBy`` directly on a Python stage runs that stage twice:
+    range partitioning first samples its child for the partition bounds,
+    then shuffles it. With the hash exchange in between, the sampler
+    re-reads the exchange's shuffle files, so the stage runs once, and a
+    lost executor's blocks are rebuilt from lineage. A consumer that
+    joins or aggregates the sorted frame needs no other form: Catalyst
+    removes the Sort there and only the hash exchange stays."""
+    return df.repartition(*cols).orderBy(*cols)

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mongo_analyser_spark.operators.fanout import sort_after_python
+from mongo_analyser_spark.operators.fanout import sort_output
 
 from mongo_analyser_spark.operators.melt import melt, melt_array_elements
 
@@ -122,9 +122,7 @@ def _top_values_agg(melted: DataFrame, k: int = 5, max_len: int = 256) -> DataFr
         counted.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("field", "value", "cnt", "rnk")
-        # r15: checkpoint before the sort — the bare orderBy re-ran the
-        # per-field ranking window in the range sampler (guide §2.4)
-        .transform(sort_after_python, "field", "rnk")
+        .transform(sort_output, "field", "rnk")
     )
 
 

@@ -35,7 +35,7 @@ import struct
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mongo_analyser_spark.operators.fanout import sort_after_python
+from mongo_analyser_spark.operators.fanout import sort_output
 from mongo_analyser_spark.operators.similarity import dot
 
 
@@ -160,19 +160,13 @@ def pca_project(
     dim: int,
     k: int = 4,
     round_to: int = 6,
-    final_sort: bool = True,
 ) -> DataFrame:
     """(id, proj): each vector's coordinates on the top-k principal
-    components. The components travel as ONE broadcast DATA row;
-    projection is k sequential fold-dots, shuffle-free. DECLARED
+    components, unordered. The components travel as ONE broadcast DATA
+    row; projection is k sequential fold-dots, shuffle-free. DECLARED
     rows-only in the registry (no SQL eigendecomposition); pytest pins
-    the projections against numpy directly.
-
-    ``final_sort=False`` skips the deterministic output sort for
-    consumers that re-shape and sort themselves (the
-    tfidf_cosine_pairs(final_sort=False) pattern) — the wide registry
-    row explodes to long form first, and a dead inner sort would cost
-    a range exchange plus a resample of the projection."""
+    the projections against numpy directly. Its consumer (the wide
+    registry row) explodes to long form and sorts that itself."""
     comps, _ = pca_components(df, id_col, vec_col, dim, k)
     spark = df.sparkSession
     comp_row = spark.createDataFrame(
@@ -184,14 +178,13 @@ def pca_project(
     # per-component lambda and re-builds the O(d) cast array once per
     # component probe (the hof-loop-invariant-producer class)
     vec = F.col(vec_col)
-    out = df.crossJoin(F.broadcast(comp_row)).select(
+    return df.crossJoin(F.broadcast(comp_row)).select(
         F.col(id_col),
         F.transform(
             F.col("comps"),
             lambda c: F.round(dot(vec, c), round_to),
         ).alias("proj"),
     )
-    return out.orderBy(id_col) if final_sort else out
 
 
 def _qfloor(x: float, scale: float = 1e9) -> float:
@@ -312,11 +305,7 @@ def pca_power_project(
             (F.col("pos") + 1).cast("int").alias("pos"),
             "val",
         )
-        # materialize the skinny (id, pos, val) rows before the
-        # deterministic sort — a bare orderBy makes the range sampler
-        # re-run the k x d projection fold (and, on the wide path, the
-        # Arrow JL stage below it) a second time
-        .transform(sort_after_python, id_col, "pos")
+        .transform(sort_output, id_col, "pos")
     )
 
 
@@ -432,16 +421,14 @@ def pca_project_wide(
     rows-only — eigh has no SQL twin; the quantization-synced 64-dim
     power-iteration row remains the hash-oracled exactness witness."""
     jdf = jl_project_arrow(df, id_col, vec_col, in_dim, jl_dim)
-    # The JL frame feeds THREE executions per run — the covariance collect inside
-    # pca_components, the projection pass, and (when a sort sits on
-    # top) the range sampler's re-read of the un-materialized pipeline.
+    # The JL frame feeds TWO executions per run — the covariance collect
+    # inside pca_components and the projection pass.
     # One lazy localCheckpoint of the skinny (id, jvec[jl_dim]) rows:
     # the covariance pass materializes it, everything downstream reads
     # the materialized partitions instead of re-running widen+JL.
     # Within-query artifact, same discipline as the dedup fingerprints.
     jdf = jdf.localCheckpoint(eager=False)
-    return pca_project(jdf, id_col, "jvec", jl_dim, k, round_to,
-                       final_sort=False)
+    return pca_project(jdf, id_col, "jvec", jl_dim, k, round_to)
 
 
 def jl_planes(out_dim: int, in_dim: int) -> list[list[float]]:

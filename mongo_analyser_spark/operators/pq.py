@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from mongo_analyser_spark.operators.fanout import sort_plain, unsorted
+from mongo_analyser_spark.operators.fanout import sort_output
 from mongo_analyser_spark.operators.relational import top_k_per_group
 from mongo_analyser_spark.operators.similarity import fold_scores_np, rank_topk
 
@@ -554,10 +554,10 @@ def pq_adc_rerank_topk_arrow(
     """Arrow-batched twin of ``pq_adc_rerank_topk``: ADC shortlist from
     the kernel scan, exact-L2 rerank over only |queries| x shortlist
     fetched vectors (the fold form is fine at that bounded size)."""
-    short = unsorted(pq_adc_topk_arrow(
+    short = pq_adc_topk_arrow(
         df, id_col, vec_col, query_ids, dim, m, k_cent,
         k=shortlist, round_to=round_to, refine_steps=refine_steps, cb=cb,
-    )).select("qid", "vid")
+    ).select("qid", "vid")
     return _rerank(short, df, id_col, vec_col, query_ids, k, round_to)
 
 
@@ -640,10 +640,10 @@ def pq_adc_rerank_topk(
     shortlist cut (data-dependent: near-uniform corpora need a larger
     shortlist because ADC's quantization error rivals the
     inter-neighbor gaps)."""
-    short = unsorted(pq_adc_topk(
+    short = pq_adc_topk(
         df, id_col, vec_col, query_ids, dim, m, k_cent,
         k=shortlist, round_to=round_to, refine_steps=refine_steps,
-    )).select("qid", "vid")
+    ).select("qid", "vid")
     return _rerank(short, df, id_col, vec_col, query_ids, k, round_to)
 
 
@@ -688,7 +688,7 @@ def _overlap_report(exact: DataFrame, approx: DataFrame) -> DataFrame:
                 F.col("hits").cast("double") / F.col("k"), 6
             ).alias("recall_at_k"),
         )
-        .transform(sort_plain, "qid")
+        .transform(sort_output, "qid")
     )
 
 
@@ -731,11 +731,9 @@ def pq_recall_report(
             df, id_col, vec_col, query_ids, dim, m, k_cent, k,
             refine_steps=refine_steps,
         )
-    # the report only counts overlaps: consume both top-k frames BELOW
-    # their output sorts (identical rows; the sort is dead weight under
-    # a join and an aggregate)
-    adc = unsorted(adc)
-    exact = unsorted(pq_exact_topk(df, id_col, vec_col, query_ids, k))
+    # the report only counts overlaps: Catalyst drops both top-k output
+    # sorts under its join and aggregate
+    exact = pq_exact_topk(df, id_col, vec_col, query_ids, k)
     return _overlap_report(exact, adc)
 
 
@@ -813,7 +811,6 @@ def ivfpq_recall_report(
         df, id_col, vec_col, query_ids, dim, centroids, m, k_cent,
         shortlist=shortlist, k=k, refine_steps=refine_steps, cb=cb,
     )
-    # count-only consumption below the output sorts (see pq_recall_report)
-    approx = unsorted(approx)
-    exact = unsorted(pq_exact_topk(df, id_col, vec_col, query_ids, k))
+    # count-only consumption (see pq_recall_report)
+    exact = pq_exact_topk(df, id_col, vec_col, query_ids, k)
     return _overlap_report(exact, approx)

@@ -26,7 +26,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mongo_analyser_spark.operators.fanout import sort_plain
+from mongo_analyser_spark.operators.fanout import sort_output
 from mongo_analyser_spark.operators.relational import top_k_per_group
 
 #: Largest quantizer (cells × dim, or planes × dim) that travels as plan
@@ -82,15 +82,13 @@ def cosine(a: Column, b: Column) -> Column:
 def rank_topk(scored: DataFrame, k: int, *order: Column) -> DataFrame:
     """The per-query top-k tail of every vector search: rows of
     ``scored`` ranked within each ``qid`` by the TOTAL ``order``
-    (score, then vid), cut at ``k``, with an int ``rnk`` and a
-    deterministic (qid, rnk) output sort. The sort stays bare (no
-    checkpoint): the window's qid exchange already bounds the range
-    sampler's re-read, and recall reports read below it via
-    ``unsorted``."""
+    (score, then vid), cut at ``k``, with an int ``rnk`` and the
+    (qid, rnk) ``sort_output`` tail. Recall reports join the result
+    as it is: Catalyst drops the sort under their join."""
     return (
         top_k_per_group(scored, ["qid"], list(order), k)
         .withColumn("rnk", F.col("rnk").cast("int"))
-        .transform(sort_plain, "qid", "rnk")
+        .transform(sort_output, "qid", "rnk")
     )
 
 

@@ -37,7 +37,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from mongo_analyser_spark.operators.fanout import sort_after_python
+from mongo_analyser_spark.operators.fanout import sort_output
 
 from mongo_analyser_spark.functions.text import tokens
 
@@ -153,15 +153,10 @@ def tfidf_cosine_pairs(
     text_col: str = "text",
     tokenizer: Callable[[Column], Column] = tokens,
     round_to: int = 6,
-    final_sort: bool = True,
 ) -> DataFrame:
     """(id_a, id_b, cosine): candidate pairs from rare-term prefix
     blocking, then EXACT TF-IDF cosine verification, kept when the
-    ROUNDED cosine >= threshold. ``final_sort=False`` returns the
-    unsorted pair frame — order-insensitive consumers (the recall
-    report) skip not just the sort but the checkpoint tail's
-    build-time Catalyst planning pass, which is what the r15 A/B
-    actually measured as the report's overhead.
+    ROUNDED cosine >= threshold.
 
     Verification joins each candidate pair to the a-side postings
     (fanout |cand| x doc vocab), matches the b-side weight by
@@ -183,7 +178,7 @@ def tfidf_cosine_pairs(
         .agg(F.sum(F.col("wa") * F.col("wb")).alias("dot"))
     )
     norms = _doc_norms(post, id_col)
-    out = (
+    return (
         dots.join(norms.select(F.col(id_col).alias("id_a"), F.col("n2").alias("na")), "id_a")
         .join(norms.select(F.col(id_col).alias("id_b"), F.col("n2").alias("nb")), "id_b")
         .select(
@@ -194,13 +189,8 @@ def tfidf_cosine_pairs(
             ).alias("cosine"),
         )
         .where(F.col("cosine") >= threshold)
+        .transform(sort_output, "id_a", "id_b")
     )
-    if not final_sort:
-        return out
-    # r15: checkpoint the skinny pair rows before the deterministic
-    # sort — the bare orderBy re-ran the verify join segment in the
-    # range sampler (guide §2.4; solo A/B 1.32 s ckpt vs 1.71 s bare)
-    return out.transform(sort_after_python, "id_a", "id_b")
 
 
 def tfidf_exact_pairs(
@@ -259,13 +249,10 @@ def tfidf_pairs_recall_report(
     true_pairs = tfidf_exact_pairs(
         docs, threshold, id_col, text_col, tokenizer
     ).select("id_a", "id_b")
-    # r15: the report only counts pairs — build the blocked-pairs frame
-    # WITHOUT its deterministic output sort (identical rows; the
-    # checkpoint tail costs a full Catalyst planning pass at build time
-    # plus a range exchange that counting never needs)
+    # the report only counts pairs: Catalyst drops the pair frame's
+    # output sort under the full-outer join
     found = tfidf_cosine_pairs(
-        docs, threshold, prefix, id_col, text_col, tokenizer,
-        final_sort=False,
+        docs, threshold, prefix, id_col, text_col, tokenizer
     ).select("id_a", "id_b")
     # r15: all three counts in ONE aggregation over a full-outer join of
     # the two (unique-keyed) pair sets — the old shape consumed each

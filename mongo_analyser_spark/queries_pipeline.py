@@ -39,9 +39,7 @@ from mongo_analyser_spark.operators.fanout import (
     fanout_for_python,
     python_rows,
     q4,
-    sort_after_python,
-    sort_plain,
-    unsorted,
+    sort_output,
 )
 from mongo_analyser_spark.operators.field_stats import TS_FMT
 from mongo_analyser_spark.queries import ORACLE_GENERATORS, register
@@ -278,7 +276,7 @@ def q_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo_analyser_spark.operators.quality import char_entropy
 
     docs = fanout_for_python(load_table(spark, sf_dir, "documents"))
-    return char_entropy(docs).transform(sort_after_python, "doc_id")
+    return char_entropy(docs).transform(sort_output, "doc_id")
 
 
 @register(
@@ -458,10 +456,8 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures (north-star MinHash dedup, stage 1): k min-
     aggregates in one pass over exploded shingles."""
     docs = load_table(spark, sf_dir, "documents")
-    # r15 session-3 A/B: the min-aggregate's exchange bounds the range
-    # sampler's re-read — the bare sort wins (sort_plain, guide §2.4)
     return minhash_signatures(docs, "doc_id", "text", NUM_MINHASH).transform(
-        sort_plain, "doc_id", "hash_idx"
+        sort_output, "doc_id", "hash_idx"
     )
 
 
@@ -523,7 +519,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cross_corpus_contamination(
         train, test, "doc_id", "text",
         NUM_MINHASH, LSH_BANDS, LSH_ROWS, min_jaccard=0.5,
-    ).transform(sort_after_python, "train_id", "test_id")
+    ).transform(sort_output, "train_id", "test_id")
 
 
 def _ngram_list_sql(n: int) -> str:
@@ -1510,16 +1506,13 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # r15: count-only consumption — take both top-k frames BELOW their
-    # deterministic output sorts (identical rows, inner sort dead under
-    # the join/aggregate; measured -0.2 s same-session A/B)
-    exact = unsorted(
-        brute_force_topk(emb, "vec_id", "embedding", ANN_QUERY_IDS, k=3)
+    # count-only consumption: Catalyst drops both top-k output sorts
+    # under the join/aggregate
+    exact = brute_force_topk(
+        emb, "vec_id", "embedding", ANN_QUERY_IDS, k=3
     ).select("qid", "vid")
-    approx = unsorted(
-        ann_srp_topk(
-            emb, "vec_id", "embedding", ANN_QUERY_IDS, SRP_PLANES, EMB_DIM, k=3
-        )
+    approx = ann_srp_topk(
+        emb, "vec_id", "embedding", ANN_QUERY_IDS, SRP_PLANES, EMB_DIM, k=3
     ).select("qid", F.col("vid").alias("a_vid"))
     hits = (
         exact.join(
@@ -1600,15 +1593,12 @@ def q_ann_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # r15: count-only consumption — frames below their output sorts
-    # (see q_ann_recall_report)
-    exact = unsorted(
-        brute_force_topk(emb, "vec_id", "embedding", ANN_QUERY_IDS, k=3)
+    # count-only consumption (see q_ann_recall_report)
+    exact = brute_force_topk(
+        emb, "vec_id", "embedding", ANN_QUERY_IDS, k=3
     ).select("qid", "vid")
-    approx = unsorted(
-        ivf_topk(
-            emb, "vec_id", "embedding", ANN_QUERY_IDS, IVF_CELLS, EMB_DIM, k=3
-        )
+    approx = ivf_topk(
+        emb, "vec_id", "embedding", ANN_QUERY_IDS, IVF_CELLS, EMB_DIM, k=3
     ).select("qid", F.col("vid").alias("a_vid"))
     hits = (
         exact.join(
@@ -1763,7 +1753,7 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sp.off").alias("off"),
             F.col("sp.chunk").alias("chunk"),
         )
-        .transform(sort_after_python, "doc_id", "chunk_idx")
+        .transform(sort_output, "doc_id", "chunk_idx")
     )
 
 
@@ -1807,7 +1797,7 @@ def q_chunk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sp.tok_off").alias("tok_off"),
             F.col("sp.chunk").alias("chunk"),
         )
-        .transform(sort_after_python, "doc_id", "chunk_idx")
+        .transform(sort_output, "doc_id", "chunk_idx")
     )
 
 
@@ -1843,7 +1833,7 @@ def q_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
             "scale",
             F.array_join(F.col("q").cast("array<string>"), ",").alias("q_csv"),
         )
-        .transform(sort_after_python, "vec_id")
+        .transform(sort_output, "vec_id")
     )
 
 
@@ -1988,7 +1978,7 @@ def q_multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.octet_length(payload).cast("long").alias("media_len"),
         F.md5(payload).alias("media_md5"),
         F.lit("text/plain").alias("mime"),
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 # --------------------------------------------------------------------------
@@ -2571,7 +2561,7 @@ def q_pixel_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return python_rows(
         docs, rows_of,
         "doc_id long, width int, height int, channels int, mean_luma double",
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 @register(
@@ -2604,7 +2594,7 @@ def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo_analyser_spark.operators.quality import gopher_rules
 
     docs = load_table(spark, sf_dir, "documents")
-    return gopher_rules(docs).transform(sort_after_python, "doc_id")
+    return gopher_rules(docs).transform(sort_output, "doc_id")
 
 
 @register(
@@ -2735,7 +2725,7 @@ def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         with_bpe_token_count(base, "text", load_fixture_merges(), "n_bpe")
         .select("doc_id", "n_ws", "n_bpe")
-        .transform(sort_after_python, "doc_id")
+        .transform(sort_output, "doc_id")
     )
 
 
@@ -2798,7 +2788,7 @@ def q_pii_scrub_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id", *pii_counts("__s"), scrub_pii("__s").alias("scrubbed")
         )
-        .transform(sort_after_python, "doc_id")
+        .transform(sort_output, "doc_id")
     )
 
 
@@ -2840,7 +2830,7 @@ def q_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         docs.select("doc_id", ascii_codes("text").alias("codes"))
         .select("doc_id", dhash_bits_expr(F.col("codes")).alias("dhash"))
-        .transform(sort_after_python, "doc_id")
+        .transform(sort_output, "doc_id")
     )
 
 
@@ -3002,7 +2992,7 @@ def q_jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, rows_of,
         "doc_id long, width int, height int, channels int, "
         "mean_luma double, mean_delta double",
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 def _bpe_pretok_counts_sql() -> str:
@@ -3054,7 +3044,7 @@ def q_bpe_token_counts_pretok(spark: SparkSession, sf_dir: str) -> DataFrame:
             base, "__t", load_fixture_merges(), "n_bpe", pretokenize=True
         )
         .select("doc_id", "n_bpe")
-        .transform(sort_after_python, "doc_id")
+        .transform(sort_output, "doc_id")
     )
 
 
@@ -3095,7 +3085,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         with_bpe_tokens(docs.select("doc_id", "text"), "text", load_fixture_merges())
         .select("doc_id", "bpe_tokens", "n_bpe")
-        .transform(sort_after_python, "doc_id")
+        .transform(sort_output, "doc_id")
     )
 
 
@@ -3147,7 +3137,7 @@ def q_token_budget_select_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "quality", "n_tokens")
     return token_budget_select(
         scored, "doc_id", "quality", "n_tokens", 1, 2
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 # --------------------------------------------------------------------------
@@ -3473,7 +3463,7 @@ def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "codes_csv"
             ),
         )
-        .transform(sort_after_python, "vec_id")
+        .transform(sort_output, "vec_id")
     )
 
 
@@ -3843,11 +3833,6 @@ def q_pca_project_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     like the hash-oracled 64-dim sibling — the r15 driver canonicalizer
     crashed on the array column (pandas sort_values: unhashable list),
     so the row must be scalar-only for its external record to land.
-    The output sort is a bare range sort (sort_plain): the under-sort
-    segment is a 4-way explode over the operator's checkpointed JL
-    frame plus the broadcast fold — the materialized artifact already
-    bounds the sampler's re-read (the r15 decision rule).
-
     posexplode_OUTER, deliberately (r16, guide §4.4 duplicate
     evaluation): plain posexplode makes InferFiltersFromGenerate add
     ``size(proj)>0 AND isnotnull(proj)`` below the Generate, and
@@ -3856,7 +3841,6 @@ def q_pca_project_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     per row (twice in the condition, once in the projection).
     ``proj`` is a transform over the non-null broadcast comps row, so
     it is never null/empty and OUTER emits the identical rows."""
-    from mongo_analyser_spark.operators.fanout import sort_plain
     from mongo_analyser_spark.operators.pca import pca_project_wide
 
     proj = pca_project_wide(
@@ -3867,7 +3851,7 @@ def q_pca_project_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.posexplode_outer("proj").alias("pos", "val")
     ).select(
         "vec_id", (F.col("pos") + 1).cast("int").alias("pos"), "val"
-    ).transform(sort_plain, "vec_id", "pos")
+    ).transform(sort_output, "vec_id", "pos")
 
 
 _WIDE_CB_CACHE: dict[str, object] = {}
@@ -3949,7 +3933,7 @@ def q_jl_project(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.posexplode_outer("proj").alias("pos", "val")
     ).select(
         "vec_id", (F.col("pos") + 1).cast("int").alias("pos"), "val"
-    ).transform(sort_after_python, "vec_id", "pos")
+    ).transform(sort_output, "vec_id", "pos")
 
 
 # --------------------------------------------------------------------------
@@ -4328,9 +4312,7 @@ def q_theta_sketch_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("group").alias("grp"), "n_sketch", "theta", "est_distinct"
         )
-        # r15 session-3 A/B: the sketch aggregate's exchange bounds the
-        # sampler's re-read — the bare sort wins (guide §2.4)
-        .transform(sort_plain, "grp")
+        .transform(sort_output, "grp")
     )
 
 
@@ -4584,7 +4566,7 @@ def q_wav_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, rows_of,
         "doc_id long, sample_rate int, n_samples int, duration_s double,"
         " rms double, peak int, zero_crossings int",
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 @register(
@@ -4623,7 +4605,7 @@ def q_ewma_smooth_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ewma_smooth(ev, "user_id", ["ts", "event_id"], "value", k=16)
         .select("event_id", "user_id", "value", "ewma", "residual")
-        .transform(sort_after_python, "event_id")
+        .transform(sort_output, "event_id")
     )
 
 
@@ -4686,7 +4668,7 @@ def q_scd2_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("__vt").isNull().alias("is_current"),
             "n_events",
         )
-        .transform(sort_after_python, "user_id", "version")
+        .transform(sort_output, "user_id", "version")
     )
 
 
@@ -4868,8 +4850,8 @@ def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             "media"
         ),
     )
-    return frame_sample(docs, "doc_id", "media", k=4).transform(sort_after_python, 
-        "doc_id", "frame_idx"
+    return frame_sample(docs, "doc_id", "media", k=4).transform(
+        sort_output, "doc_id", "frame_idx"
     )
 
 
@@ -4941,7 +4923,7 @@ def q_wav_resample_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, rows_of,
         "doc_id long, sample_rate int, n_samples int, duration_s double,"
         " rms double, peak int, zero_crossings int",
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 @register(
@@ -4999,7 +4981,7 @@ def q_wav_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, rows_of,
         "doc_id long, frame_idx int, n_samples int, rms double,"
         " peak int, zero_crossings int",
-    ).transform(sort_after_python, "doc_id", "frame_idx")
+    ).transform(sort_output, "doc_id", "frame_idx")
 
 
 @register("wav_multichannel_features_documents", _STEREO_CLIP_SQL)
@@ -5034,7 +5016,7 @@ def q_wav_multichannel_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, rows_of,
         "doc_id long, channel int, n_samples int, mean double, rms double,"
         " peak double, zero_crossings int",
-    ).transform(sort_after_python, "doc_id", "channel")
+    ).transform(sort_output, "doc_id", "channel")
 
 
 @register(
@@ -5076,7 +5058,7 @@ def q_wav_pcm24_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, rows_of,
         "doc_id long, n_samples int, mean double, rms double, peak int,"
         " zero_crossings int",
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 def _deep_melt_sql(depth: int = 8) -> str:
@@ -5154,7 +5136,7 @@ def q_deep_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("type_tag") != "dict", F.col("value_json")).alias(
             "leaf_json"
         ),
-    ).transform(sort_after_python, "doc_id", "path")
+    ).transform(sort_output, "doc_id", "path")
 
 
 @register("deep_melt_arrow_documents", _deep_melt_sql(8))
@@ -5191,7 +5173,7 @@ def q_deep_melt_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("type_tag") != "dict", F.col("value_json")).alias(
             "leaf_json"
         ),
-    ).transform(sort_after_python, "doc_id", "path")
+    ).transform(sort_output, "doc_id", "path")
 
 
 def _sampled_frames_sql(max_frames: int) -> str:
@@ -5296,7 +5278,7 @@ def q_frame_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return python_rows(
         docs, rows_of,
         "doc_id long, n_frames int, frame_idx int, frame_luma double",
-    ).transform(sort_after_python, "doc_id", "frame_idx")
+    ).transform(sort_output, "doc_id", "frame_idx")
 
 
 @register(
@@ -5351,7 +5333,7 @@ def q_gif_frame_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     return python_rows(
         docs, rows_of,
         "doc_id long, n_frames int, frame_idx int, frame_luma double",
-    ).transform(sort_after_python, "doc_id", "frame_idx")
+    ).transform(sort_output, "doc_id", "frame_idx")
 
 
 @register("avi_mjpeg_frames_documents", _mjpeg_frames_sql(4))
@@ -5396,7 +5378,7 @@ def q_avi_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     return python_rows(
         docs, rows_of,
         "doc_id long, n_frames int, frame_idx int, frame_luma double",
-    ).transform(sort_after_python, "doc_id", "frame_idx")
+    ).transform(sort_output, "doc_id", "frame_idx")
 
 
 #: the three 12-bit JPEG rows' oracle: four constant blocks valued
@@ -5463,7 +5445,7 @@ def q_jpeg12_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return python_rows(
         docs, rows_of, "doc_id long, mean_val double, max_val int"
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 @register("jpeg12p_pixel_stats_documents", _JPEG12_SQL)
@@ -5500,7 +5482,7 @@ def q_jpeg12p_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return python_rows(
         docs, rows_of, "doc_id long, mean_val double, max_val int"
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 @register("jpeg12s_pixel_stats_documents", _JPEG12_SQL)
@@ -5538,7 +5520,7 @@ def q_jpeg12s_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return python_rows(
         docs, rows_of, "doc_id long, mean_val double, max_val int"
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 @register("tiff_pixel_stats_documents", _gradient_sql())
@@ -5582,7 +5564,7 @@ def q_tiff_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return python_rows(
         docs, rows_of, "doc_id long, mean_val double, max_val int"
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 @register(
@@ -5644,7 +5626,7 @@ def q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     return python_rows(
         docs, rows_of,
         "doc_id long, n_chars int, n_lines int, first_line string",
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 @register(
@@ -5728,7 +5710,7 @@ def q_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, rows_of,
         "doc_id long, n_records int, http_status int, n_chars int, "
         "first_line string",
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 @register(
@@ -5792,7 +5774,7 @@ def q_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     return python_rows(
         docs, rows_of,
         "doc_id long, canonical string, host string, path_depth int",
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 @register("au_audio_features_documents", _MULAW_CLIP_SQL)
@@ -5829,7 +5811,7 @@ def q_au_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, rows_of,
         "doc_id long, sample_rate int, n_samples int, duration_s double, "
         "rms double, peak int, zero_crossings int",
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 @register(
@@ -5913,7 +5895,7 @@ def q_media_header_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return python_rows(
         docs, rows_of,
         "doc_id long, mime string, width int, height int, n_frames int",
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 @register("ico_pixel_stats_documents", _gradient_sql("\n  2 AS n_members,"))
@@ -5951,7 +5933,7 @@ def q_ico_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return python_rows(
         docs, rows_of,
         "doc_id long, n_members int, mean_val double, max_val int",
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 @register("aiff_audio_features_documents", _STEREO_CLIP_SQL)
@@ -5985,7 +5967,7 @@ def q_aiff_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, rows_of,
         "doc_id long, channel int, n_samples int, mean double, "
         "rms double, peak double, zero_crossings int",
-    ).transform(sort_after_python, "doc_id", "channel")
+    ).transform(sort_output, "doc_id", "channel")
 
 
 @register(
@@ -6051,7 +6033,7 @@ def q_id3_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, rows_of,
         "doc_id long, version string, title string, artist string, "
         "year string, track string",
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 @register(
@@ -6121,7 +6103,7 @@ def q_exif_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, rows_of,
         "doc_id long, make string, orientation int, iso int, "
         "exposure_den int, exif_after_strip boolean",
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 @register(
@@ -6206,7 +6188,7 @@ def q_webdataset_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, rows_of,
         "doc_id long, n_samples int, n_files int, cls0 string, "
         "txt_len int, ppm_mean double",
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 @register("pnm_pixel_stats_documents", _gradient_sql())
@@ -6246,7 +6228,7 @@ def q_pnm_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return python_rows(
         docs, rows_of, "doc_id long, mean_val double, max_val int"
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 @register(
@@ -6376,7 +6358,7 @@ def q_web_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, rows_of,
         "doc_id long, canonical string, encoding string, n_chars int, "
         "keep boolean",
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 @register(
@@ -6448,7 +6430,7 @@ def q_sitemap_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, rows_of,
         "doc_id long, n_urls int, first_loc string, "
         "mean_priority double",
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 @register(
@@ -6511,7 +6493,7 @@ def q_charset_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return python_rows(
         docs, rows_of,
         "doc_id long, encoding string, certain boolean, n_chars int",
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 @register(
@@ -6579,7 +6561,7 @@ def q_robots_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, rows_of,
         "doc_id long, allowed_private boolean, allowed_pub boolean, "
         "crawl_delay int, n_sitemaps int",
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 @register(
@@ -6628,7 +6610,7 @@ def q_y4m_frame_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     return python_rows(
         docs, rows_of,
         "doc_id long, n_frames int, frame_idx int, frame_luma double",
-    ).transform(sort_after_python, "doc_id", "frame_idx")
+    ).transform(sort_output, "doc_id", "frame_idx")
 
 
 @register("mp4_jpeg_frames_documents", _mjpeg_frames_sql(5))
@@ -6671,7 +6653,7 @@ def q_mp4_jpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     return python_rows(
         docs, rows_of,
         "doc_id long, n_frames int, frame_idx int, frame_luma double",
-    ).transform(sort_after_python, "doc_id", "frame_idx")
+    ).transform(sort_output, "doc_id", "frame_idx")
 
 
 @register("flac_audio_features_documents", _PCM16_CLIP_SQL)
@@ -6710,7 +6692,7 @@ def q_flac_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, rows_of,
         "doc_id long, sample_rate int, n_samples int, duration_s double, "
         "rms double, peak int, zero_crossings int",
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 @register("g711_audio_features_documents", _MULAW_CLIP_SQL)
@@ -6751,7 +6733,7 @@ def q_g711_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, rows_of,
         "doc_id long, sample_rate int, n_samples int, duration_s double, "
         "rms double, peak int, zero_crossings int",
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 @register(
@@ -6819,7 +6801,7 @@ def q_webp_lossless_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, rows_of,
         "doc_id long, n_px int, mean_r double, mean_g double, "
         "mean_b double, peak int",
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 _ADPCM_N = 24  # nibbles per doc — fixed so the oracle can unroll exactly
@@ -6933,7 +6915,7 @@ def q_adpcm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, rows_of,
         "doc_id long, sample_rate int, n_samples int, duration_s double, "
         "rms double, peak int, zero_crossings int",
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 def _mp1_sql() -> str:
@@ -7060,7 +7042,7 @@ def q_mp1_subband_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, rows_of,
         "doc_id long, sample_rate int, n_samples int, rms double, "
         "peak double, sb0_mean double",
-    ).transform(sort_after_python, "doc_id")
+    ).transform(sort_output, "doc_id")
 
 
 # re-run tail curation so the registry order is import-order-robust (this

@@ -154,7 +154,6 @@ def test_grams_ckpt_branch_parity(spark, monkeypatch, optimized_plan):
     branch's rows. Each side is forced by the threshold constant, and
     the two plans must differ."""
     from mongo_analyser_spark.operators import bloom
-    from mongo_analyser_spark.operators.fanout import unsorted
 
     rows = [
         (0, "one two three four five"),
@@ -171,9 +170,8 @@ def test_grams_ckpt_branch_parity(spark, monkeypatch, optimized_plan):
         c = bloom_ngram_contamination(
             train, test, "doc_id", "text", n=3, num_hashes=K, num_bits=M
         )
-        # the plan below the output sort's checkpoint
         out[branch] = (
-            optimized_plan(unsorted(c)),
+            optimized_plan(c),
             sorted(map(tuple, c.collect())),
         )
     assert out["ckpt"][0] != out["recompute"][0]

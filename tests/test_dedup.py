@@ -356,9 +356,7 @@ def test_decontaminate_query_broadcasts_heldout_side(spark):
     from mongo_analyser_spark.queries import QUERIES
 
     q = QUERIES["decontaminate_documents"](spark, "/root/testdata/sf0.001")
-    # r15: the deterministic sort is applied via sort_after_python, so
-    # the join shape is pinned on the pre-checkpoint child plan
-    plan = formatted_plan(getattr(q, "_pre_sort_child", q))
+    plan = formatted_plan(q)
     assert len(re.findall(r"BroadcastHashJoin", plan)) >= 2
     assert "SortMergeJoin" not in plan
 

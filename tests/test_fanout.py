@@ -12,6 +12,7 @@ from mongo_analyser_spark.operators.fanout import (
     fanout_for_python,
     input_bytes,
     python_rows,
+    sort_output,
 )
 from mongo_analyser_spark.plans.inspect import formatted_plan, num_exchanges
 from mongo_analyser_spark.sources.parquet import load_table
@@ -133,6 +134,28 @@ def test_python_rows_emits_zero_one_or_many_rows_per_document(spark):
     assert sorted(tuple(r) for r in out.collect()) == [
         (1, 0, "A"), (3, 0, "A"), (3, 1, "B"), (3, 2, "C"),
     ]
+
+
+def test_sort_output_runs_the_python_stage_once_per_row(spark):
+    """The output sort's range sampler must read the keyed exchange's
+    shuffle files, not re-run the Python stage below it: an accumulator
+    counts the calls to rows_of, one per input row. A bare orderBy on
+    the stage samples its child and doubles the count."""
+    n = 400
+    calls = spark.sparkContext.accumulator(0)
+    df = spark.range(0, n, 1, 1).selectExpr(
+        "id AS rid", "CAST(id % 7 AS STRING) AS payload"
+    )
+
+    def rows_of(rid, payload):
+        calls.add(1)
+        yield (rid, payload)
+
+    out = python_rows(df, rows_of, "rid long, payload string").transform(
+        sort_output, "rid"
+    )
+    assert [r.rid for r in out.collect()] == list(range(n))
+    assert calls.value == n
 
 
 def test_ascii_codes_keeps_code_points_1_to_127():

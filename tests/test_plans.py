@@ -21,14 +21,6 @@ from mongo_analyser_spark.sources.parquet import load_table
 SF = "/root/testdata/sf0.001"
 
 
-def pre_sort(q):
-    """The r15 deterministic-output-sort fix checkpoints a query's
-    compute before its final orderBy (operators/fanout.sort_after_python),
-    which hides the compute subtree from the visible plan. Shape pins on
-    such rows read the attached pre-checkpoint child instead."""
-    return getattr(q, "_pre_sort_child", q)
-
-
 def test_filter_pushdown_and_column_pruning(spark):
     ev = load_table(spark, SF, "events")
     q = ev.filter(F.col("value") > 100).select("event_id", "value")
@@ -97,7 +89,7 @@ def test_topk_join_is_broadcast(spark):
     """similarity top-k broadcasts the tiny query side — a shuffle join
     would repartition the whole corpus per lookup batch."""
     q = QUERIES["similarity_topk_embeddings"](spark, SF)
-    plan = formatted_plan(pre_sort(q))
+    plan = formatted_plan(q)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
@@ -138,7 +130,7 @@ def test_ivf_topk_broadcasts_query_side(spark):
     """IVF candidate join: the probed-queries side is broadcast — a
     shuffle join would repartition the whole corpus per lookup batch."""
     q = QUERIES["ann_ivf_topk_embeddings"](spark, SF)
-    plan = formatted_plan(pre_sort(q))
+    plan = formatted_plan(q)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -233,11 +225,11 @@ def test_chunk_documents_fuses_into_scan(spark):
     one source scan, no join, no aggregation — at corpus scale it fuses
     into the scan feeding the embedding stage."""
     q = QUERIES["chunk_documents"](spark, SF)
-    child = pre_sort(q)
-    plan = formatted_plan(child)
-    assert num_exchanges(child) == 0  # pure scan-fused compute
+    plan = formatted_plan(q)
+    # scan-fused compute; the two exchanges are the output sort's
+    assert num_exchanges(q, plan) == 2
     assert "Generate" in plan and "Join" not in plan and "Aggregate" not in plan
-    assert "Sort" in formatted_plan(q)  # deterministic output sort
+    assert "Sort" in plan  # deterministic output sort
 
 
 def test_q8_broadcast_hints_only_on_fixed_dims(spark):
@@ -351,9 +343,9 @@ def test_q20_semi_join_and_pushed_date_range(spark):
 
 def test_gopher_rules_single_projection(spark):
     """All five rule signals + verdict must fuse into the document scan:
-    the only exchange is the output sort — no joins, no aggregates."""
+    the only exchanges are the output sort's — no joins, no aggregates."""
     q = QUERIES["gopher_rules_documents"](spark, SF)
-    assert num_exchanges(q) == 1  # the doc_id output sort only
+    assert num_exchanges(q) == 2  # the doc_id output sort only
     plan = formatted_plan(q)
     assert "Join" not in plan
 
@@ -408,15 +400,15 @@ def test_remove_repeated_spans_no_window_no_per_position_rows(spark):
 
 def test_bpe_counts_arrow_stage_zero_join_shuffles(spark):
     """The BPE count is a map-side Arrow stage fused over the scan: no
-    joins, no aggregates — the only exchange is the doc_id output sort.
-    Must be MapInPandas (broadcast merge table), never BatchEvalPython."""
+    joins, no aggregates — the only exchanges are the doc_id output
+    sort's. Must be MapInPandas (broadcast merge table), never
+    BatchEvalPython."""
     q = QUERIES["bpe_token_counts_documents"](spark, SF)
-    child = pre_sort(q)
-    plan = formatted_plan(child)
+    plan = formatted_plan(q)
     assert "MapInPandas" in plan
     assert "BatchEvalPython" not in plan
     assert "Join" not in plan
-    assert num_exchanges(child) == 0  # map-side only; sort is checkpoint-fed
+    assert num_exchanges(q, plan) == 2  # map-side only, then the sort
 
 
 def test_tfidf_pairs_keyed_joins_and_hashed_prefix_keys(spark):
@@ -426,15 +418,12 @@ def test_tfidf_pairs_keyed_joins_and_hashed_prefix_keys(spark):
     re-derivation budget (runtime exchange reuse dedupes the shared
     subtrees — see test below)."""
     q = QUERIES["tfidf_cosine_pairs_documents"](spark, SF)
-    child = pre_sort(q)
-    plan = formatted_plan(child)
+    plan = formatted_plan(q)
     assert "CartesianProduct" not in plan
     assert "xxhash64" in plan
-    # r15: the budget is now measured on the full pre-checkpoint
-    # pipeline (the final sort used to truncate nothing, but the
-    # checkpoint moved it out of this plan); 35 static exchanges at r15,
-    # runtime-deduped via ReusedExchange (see test below).
-    assert num_exchanges(child) <= 35
+    # static exchanges, output sort included; runtime-deduped via
+    # ReusedExchange (see test below)
+    assert num_exchanges(q, plan) <= 35
 
 
 def test_tfidf_recall_report_runtime_reuses_postings_subtree(spark):
@@ -461,12 +450,12 @@ def test_pq_encode_is_broadcast_projection(spark):
     ONE Arrow stage over the scan — no join of any kind, and the only
     exchange is the output sort."""
     q = QUERIES["pq_encode_embeddings"](spark, SF)
-    child = pre_sort(q)
-    plan = formatted_plan(child)
+    plan = formatted_plan(q)
     assert "CartesianProduct" not in plan
     assert "MapInPandas" in plan
     assert "Join" not in plan
-    assert num_exchanges(child) == 0  # one Arrow stage over the scan
+    # one Arrow stage over the scan, then the output sort's two
+    assert num_exchanges(q, plan) == 2
 
 
 def test_pq_rerank_joins_stay_keyed_and_bounded(spark):
@@ -485,7 +474,7 @@ def test_token_budget_bpe_keeps_two_level_prefix_shape(spark):
     window over the corpus — the only partition-less window runs over
     the bounded per-level histogram)."""
     q = QUERIES["token_budget_select_bpe_documents"](spark, SF)
-    plan = formatted_plan(pre_sort(q))
+    plan = formatted_plan(q)
     assert "MapInPandas" in plan
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
@@ -514,11 +503,11 @@ def test_scd2_reuses_one_user_exchange(spark):
 
 def test_ewma_single_series_exchange(spark):
     """Both trailing frames share the (user) partition: one hash
-    exchange + the output sort, nothing else."""
+    exchange + the output sort's two, nothing else."""
     q = QUERIES["ewma_smooth_events"](spark, SF)
     plan = formatted_plan(q)
     assert "CartesianProduct" not in plan
-    assert num_exchanges(q) <= 2
+    assert num_exchanges(q, plan) == 3
 
 
 def test_mg_heavy_hitters_bounded_plan(spark):
@@ -540,7 +529,7 @@ def test_ivfpq_scan_reads_codes_not_floats(spark):
     codebook and LUT ship in kernel closures), and the rerank join is
     keyed, not cartesian."""
     q = QUERIES["ivfpq_topk_embeddings"](spark, SF)
-    plan = formatted_plan(pre_sort(q))
+    plan = formatted_plan(q)
     assert "CartesianProduct" not in plan
     assert plan.count("MapInPandas") >= 2  # encode stage + ADC kernel
 
@@ -558,15 +547,11 @@ def test_wav_rows_fan_out_before_python(spark):
         "gif_frame_pixels_documents",
     ):
         q = QUERIES[name](spark, SF)
-        # r15: the skinny feature output is checkpointed before the
-        # deterministic sort (sort_after_python — a bare orderBy would
-        # re-execute the Python stage in the range sampler), so the
-        # Python-stage shape is pinned on the pre-checkpoint child.
-        child = getattr(q, "_pre_sort_child", q)
-        plan = formatted_plan(child)
+        plan = formatted_plan(q)
         assert "MapInPandas" in plan
-        assert num_exchanges(child) >= 1, name  # explicit fanout
-        assert "Sort" in formatted_plan(q)  # deterministic output sort
+        # the explicit fanout, then the output sort's two
+        assert num_exchanges(q, plan) == 3, name
+        assert "Sort" in plan  # deterministic output sort
 
 
 def test_scd2_pit_join_is_joinless(spark):

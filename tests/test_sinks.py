@@ -104,7 +104,7 @@ def test_export_parquet_partitioned_roundtrip(spark, tmp_path):
 def test_export_parquet_sorted_produces_disjoint_zone_maps(spark, tmp_path):
     """Range-clustered export: per-file value ranges must be disjoint so
     parquet zone maps (describe_indexes) can skip row groups on a
-    sort_col predicate; an unsorted write interleaves ranges and defeats
+    sort_col predicate; an unordered write interleaves ranges and defeats
     skipping."""
     import os
 

@@ -1,9 +1,6 @@
 """Dump .explain("formatted") for the named queries into plans/<tag>/
-as <query>_<suffix>.txt — the committed evidence format the judge
-checks plan claims against. When the final frame carries a
-``_pre_sort_child`` attribute (the sort_after_python / sort_plain
-tails), the child's plan is appended under the same separator the
-round-15 files use, so checkpoint-hidden pipelines stay visible.
+as <query>_<suffix>.txt — the committed evidence format plan claims
+are checked against.
 
 Usage: python tools/dump_plans.py <query>[,query...] [--tag r15] [--suffix after]
 """
@@ -35,20 +32,12 @@ def main() -> int:
     from mongo_analyser_spark import get_spark
     from mongo_analyser_spark.queries import QUERIES
 
-    spark = get_spark("dump_plans", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("dump_plans")
     outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag)
     os.makedirs(outdir, exist_ok=True)
     for name in names:
         df = QUERIES[name](spark, sf_dir)
         text = _formatted(df)
-        child = getattr(df, "_pre_sort_child", None)
-        # only the checkpointed tail HIDES its child behind a Scan
-        # ExistingRDD; a sort_plain tail already shows the full pipeline
-        if child is not None and "ExistingRDD" in text:
-            text += (
-                "\n-- pre-checkpoint child (the stage below "
-                "sort_after_python) --\n" + _formatted(child)
-            )
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(text)

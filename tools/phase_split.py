@@ -34,7 +34,7 @@ def main() -> int:
     else:
         names = list(QUERIES)
 
-    spark = get_spark("phase_split", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("phase_split")
 
     rows = []
     for name in names:

@@ -322,9 +322,7 @@ def main_wide(dims: list[int] | None = None) -> None:
 
     dims = dims or [64, 768, 1536]
     qids = list(range(8))
-    spark = get_spark(
-        "scale_probe_wide", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("scale_probe_wide")
 
     # (name, d-bound exponent for normalization, runner)
     def steps(df, d):
@@ -475,9 +473,7 @@ def main_zipf(names: list[str]) -> None:
     base_sf = "/root/testdata/sf0.1"
     uni = build_sf1(base_sf)
     zipf = build_sf1_zipf(base_sf)
-    spark = get_spark(
-        "scale_probe_zipf", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("scale_probe_zipf")
     names = names or ZIPF_QUERIES
     for n in names:
         QUERIES[n](spark, base_sf).collect()  # warm-up
@@ -551,9 +547,7 @@ def main_manyfiles(names: list[str]) -> None:
     from mongo_analyser_spark import get_spark
     from mongo_analyser_spark.queries import QUERIES
 
-    spark = get_spark(
-        "scale_probe_files", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("scale_probe_files")
     many = build_manyfiles(spark)
     # split-count regime: one split per file (open cost off, tiny cap)
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(256 * 1024))
@@ -599,9 +593,7 @@ def main_depth(depths: list[int] | None = None) -> None:
     from mongo_analyser_spark.sources.parquet import load_table
 
     depths = depths or [2, 4, 6, 8, 10]
-    spark = get_spark(
-        "scale_probe_depth", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("scale_probe_depth")
     base = load_table(spark, "/root/testdata/sf0.1", "documents").select(
         "doc_id", F.coalesce(F.col("lang"), F.lit("xx")).alias("lang"),
         F.coalesce(F.col("n_chars"), F.lit(0)).alias("n_chars"),
@@ -647,9 +639,7 @@ def main_sf1(names: list[str]) -> None:
 
     base_sf = "/root/testdata/sf0.1"
     sf1 = build_sf1(base_sf)
-    spark = get_spark(
-        "scale_probe_sf1", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("scale_probe_sf1")
     names = names or SF1_QUERIES
     for n in names:
         QUERIES[n](spark, base_sf).collect()  # warm-up
@@ -685,9 +675,7 @@ def main_longdocs(names: list[str]) -> None:
             f"read_parquet('{base_sf}/documents.parquet')"
         ).fetchone()[0]
     )
-    spark = get_spark(
-        "scale_probe_L", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("scale_probe_L")
     names = names or LONGDOC_QUERIES
     for n in names:  # warm-up: codegen + Arrow init at the small scale
         QUERIES[n](spark, base_sf).collect()
@@ -800,10 +788,7 @@ def main_zipfvocab(sizes: list[int] | None = None) -> None:
     from mongo_analyser_spark.sources.parquet import load_table
 
     sizes = sizes or [2500, 5000, 10000, 20000]
-    spark = get_spark(
-        "scale_probe_zipfvocab",
-        cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-    )
+    spark = get_spark("scale_probe_zipfvocab")
     rows = []
     for n in sizes:
         sf_dir = build_zipfvocab(n)
@@ -1050,7 +1035,7 @@ def main() -> None:
         main_depth([int(a) for a in argv[1:]] or None)
         return
     names = argv or HEADLINE
-    spark = get_spark("scale_probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("scale_probe")
 
     # warm-up at the largest sf so codegen/classloading is paid up front
     for n in names:

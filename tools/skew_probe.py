@@ -57,7 +57,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    spark = get_spark("skew_probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("skew_probe")
 
     cust = load_table(spark, SF, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_name"

@@ -37,7 +37,7 @@ def main() -> int:
     from mongo_analyser_spark import get_spark
     from mongo_analyser_spark.queries import QUERIES
 
-    spark = get_spark("solo_median", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("solo_median")
     out = {}
     for name in names:
         fn = QUERIES[name]
