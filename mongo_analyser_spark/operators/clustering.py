@@ -258,8 +258,9 @@ def _cell_vectors(
     """(id, v, nrm, cell): semantic_dedup's assignment. The k×dim score
     and norm folds run in the ``_scores_arrow`` kernel (bit-identical
     left folds, NULL/ragged/NaN rows included), the cell is the 1-based
-    first max, and ``v`` is cast to double so the self-join folds read
-    doubles."""
+    first max, and ``v`` is cast to double. A row the folds cannot score
+    (NULL vector or element, or not the centroids' width) gets a NULL
+    cell, so every row of a non-NULL cell is a full-width vector."""
     return _scores_arrow(df, id_col, vec_col, centroids).select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
@@ -267,6 +268,59 @@ def _cell_vectors(
         F.array_position("__scores", F.array_max("__scores"))
         .cast("int")
         .alias("cell"),
+    )
+
+
+def _max_cos_to_lower_ids(ids, X, nrm):
+    """Per row b, the largest ``dot(a, b) / (nrm_a * nrm_b)`` over the
+    rows a with a lower id and a nonzero divisor: NaN if any such cosine
+    is NaN, NULL (None in the returned mask) if there is none. The dots
+    are ``fold_scores_np`` left folds, scored in blocks of ``dim``
+    columns so a block's matrices are the size of ``X``."""
+    import numpy as np
+
+    n, dim = X.shape
+    step = max(dim, 1)
+    best = np.full(n, -np.inf)
+    found = np.zeros(n, dtype=bool)
+    for lo in range(0, n, step):
+        b = slice(lo, lo + step)
+        with np.errstate(over="ignore", invalid="ignore", divide="ignore"):
+            den = nrm[:, None] * nrm[None, b]
+            cos = fold_scores_np(X, X[b]) / den
+        pair = (ids[:, None] < ids[None, b]) & (den != 0.0)
+        best[b] = np.where(pair, cos, -np.inf).max(axis=0, initial=-np.inf)
+        found[b] = pair.any(axis=0)
+    return best, found
+
+
+def _verify_cell(cell):
+    """SemDeDup's per-cell verify: (id, cell, max_cos) for one cell's
+    (id, v, nrm, cell) rows, max_cos being each row's largest cosine to a
+    lower-id vector of the cell. Rows with a NULL id, and every row of
+    the NULL cell, are not scored and get NULL."""
+    import numpy as np
+    import pyarrow as pa
+
+    n = cell.num_rows
+    ids = cell.column("id")
+    best = np.zeros(n)
+    found = np.zeros(n, dtype=bool)
+    scored = np.flatnonzero(ids.is_valid().to_numpy(zero_copy_only=False))
+    if len(scored) and cell.column("cell").null_count == 0:
+        v = cell.column("v").combine_chunks().take(scored)
+        X = v.flatten().to_numpy(zero_copy_only=False).reshape(len(scored), -1)
+        best[scored], found[scored] = _max_cos_to_lower_ids(
+            ids.take(scored).to_numpy(),
+            X,
+            cell.column("nrm").take(scored).to_numpy(zero_copy_only=False),
+        )
+    return pa.table(
+        {
+            "id": ids,
+            "cell": cell.column("cell"),
+            "max_cos": pa.array(best, mask=~found),
+        }
     )
 
 
@@ -282,63 +336,35 @@ def semantic_dedup(
     to an EARLIER (lower-id) same-cell vector meets the threshold.
     Output (id, cell, is_kept) — one row per input vector.
 
-    Unlike connected-component dedup (transitive closure over banded
-    pairs, operators/dedup.py), the cluster boundary here is a hard
-    blocking key: the quadratic exact verify is per-cell, so cell count
-    k is the knob that bounds worst-case work (k ~ n/target_cell_size
-    at scale). The within-cell self-join is an equi-join on cell with
-    id_a < id_b; cosine is ROUNDed before the threshold test so both
-    engines agree on boundary pairs; the drop set is applied as a left
-    join + flag (not anti-join) to keep the one-row-per-vector
-    contract. Fixed centroid literals keep the oracle twin exact —
-    kmeans_fit supplies data-adaptive cells when recall matters more
-    than oracle exactness.
+    The cell is a hard blocking key, so the quadratic verify is per cell
+    and the cell count k bounds the worst-case work (k ~ n/target cell
+    size at scale). One Arrow kernel per cell (``_verify_cell``) emits
+    each row's largest cosine to a lower-id vector of its cell; the flag
+    is ``round(max_cos, 6) >= threshold``. This is exactly the pairwise
+    rule "some earlier pair's ROUNDed cosine meets the threshold" of the
+    oracle's self-join: the dots are the ``dot`` fold's IEEE twin divided
+    by the same raw-vector norms, a zero divisor makes no pair (DuckDB's
+    ``x / 0.0`` is NULL), Spark's ``round`` is monotone, so
+    round(max) = max(round), and a NaN cosine is the max on both sides
+    (NaN orders above every value). A vector is dropped by id, as the
+    oracle joins its drop set on id.
 
-    Norms are computed ONCE per vector before the self-join (a
-    higher-order-function fold is interpreted, not codegen'd, so
-    per-pair norm recomputation would triple the dominant cost: 3×
-    measured at sf0.1); the per-pair work is exactly one dot fold. The
-    division uses the same raw-vector norm the oracle's SQL chain
-    computes, so the rounded cosine stays bit-identical.
+    Centroids ride in the assignment kernel's closure, never as plan
+    literals: with the cell count growing as n/target cell size, a
+    literal unroll made plan analysis the bottleneck (3.8 s at
+    sf0.1/32 cells)."""
+    from pyspark.sql import Window
 
-    Centroids ride in the Arrow kernel's closure, never as plan
-    literals: with cell count scaling as n/target_cell_size, a literal
-    unroll (k×dim terms, the similarity.ivf_cell style) made plan
-    analysis itself the bottleneck (flat 3.8 s at sf0.1/32 cells). The
-    kernel's dots consume the same doubles in the same order as the
-    oracle's literal SQL chain, so assignments are bit-identical."""
     if not centroids:
         raise ValueError("semantic_dedup requires a non-empty centroid list")
-    # Materialized because it is read three ways (both self-join sides
-    # and the flag join): 3.66 s -> 2.46 s solo at sf0.1. A 100-TB run
-    # would checkpoint only (id, nrm, cell) and re-join vectors from
-    # the scan, the cosine_near_dup_pairs fingerprint discipline.
-    vecs = _cell_vectors(df, id_col, vec_col, centroids).localCheckpoint()
-    a = vecs.select(
-        F.col("id").alias("id_a"),
-        F.col("v").alias("va"),
-        F.col("nrm").alias("nrm_a"),
-        F.col("cell").alias("ca"),
+    vecs = _cell_vectors(df, id_col, vec_col, centroids)
+    id_t = vecs.schema["id"].dataType.simpleString()
+    verified = vecs.groupBy("cell").applyInArrow(
+        _verify_cell, f"id {id_t}, cell int, max_cos double"
     )
-    b = vecs.select(
-        F.col("id").alias("id_b"),
-        F.col("v").alias("vb"),
-        F.col("nrm").alias("nrm_b"),
-        F.col("cell").alias("cb"),
-    )
-    cos = F.round(
-        dot(F.col("va"), F.col("vb")) / (F.col("nrm_a") * F.col("nrm_b")), 6
-    )
-    dropped = (
-        a.join(b, (F.col("ca") == F.col("cb")) & (F.col("id_a") < F.col("id_b")))
-        .filter(cos >= threshold)
-        .select(F.col("id_b").alias("dropped_id"))
-        .distinct()
-    )
-    return vecs.join(
-        dropped, F.col("id") == F.col("dropped_id"), "left"
-    ).select(
+    dropped = F.coalesce(F.round("max_cos", 6) >= threshold, F.lit(False))
+    return verified.select(
         "id",
         "cell",
-        F.col("dropped_id").isNull().alias("is_kept"),
+        (~F.max(dropped).over(Window.partitionBy("id"))).alias("is_kept"),
     )

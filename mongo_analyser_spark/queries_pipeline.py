@@ -1946,7 +1946,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         ivf_centroids(semantic_cells(_emb_rows(sf_dir)), EMB_DIM),
         threshold=SEMANTIC_DEDUP_THRESHOLD,
-    ).orderBy("id")
+    ).transform(sort_output, "id")
 
 
 ORACLE_GENERATORS["semantic_dedup_embeddings"] = _semantic_dedup_sql

@@ -32,6 +32,8 @@ def get_spark(app_name: str = "mongo_analyser_spark", cpus: int | None = None) -
     * UTC session timezone — reference parity for datetime stats/export.
     * A generated-class cache that holds the registry's classes, so a
       repeated query reuses compiled code (CODEGEN_CACHE_ENTRIES).
+    * A Python worker daemon that re-reads a zip archive only when it
+      changed (mongo_analyser_spark.worker_daemon).
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
@@ -60,6 +62,9 @@ def get_spark(app_name: str = "mongo_analyser_spark", cpus: int | None = None) -
         # plans are unaffected. Scale-independent: a cluster session
         # would set the same.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Python workers keep pyspark.zip's directory across tasks instead
+        # of re-reading it before each one (~0.15 s per task; worker_daemon)
+        .config("spark.python.daemon.module", "mongo_analyser_spark.worker_daemon")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

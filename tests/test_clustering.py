@@ -266,3 +266,116 @@ def test_semantic_dedup_assignment_matches_expression_fold(spark):
                 assert len(e["v"]) == len(g["v"])
                 for x, y in zip(e["v"], g["v"]):
                     assert eq(x, y), (elem, e["id"], x, y)
+
+
+def _fold_form_dedup(df, centroids, threshold, divide):
+    """The self-join SemDeDup reference: every same-cell pair with
+    id_a < id_b is scored with the ``dot`` fold over the raw-vector
+    norms, ROUNDed, and the later id is dropped if any pair meets the
+    threshold. ``divide`` is the cosine's division."""
+    from mongo_analyser_spark.operators.clustering import _cell_vectors
+    from mongo_analyser_spark.operators.similarity import dot
+
+    vecs = _cell_vectors(df, "id", "vec", centroids)
+    a = vecs.select(*(F.col(c).alias(f"{c}_a") for c in vecs.columns))
+    b = vecs.select(*(F.col(c).alias(f"{c}_b") for c in vecs.columns))
+    cos = F.round(
+        divide(dot(F.col("v_a"), F.col("v_b")), F.col("nrm_a") * F.col("nrm_b")), 6
+    )
+    dropped = (
+        a.join(b, (F.col("cell_a") == F.col("cell_b")) & (F.col("id_a") < F.col("id_b")))
+        .filter(cos >= threshold)
+        .select(F.col("id_b").alias("dropped_id"))
+        .distinct()
+    )
+    return vecs.join(dropped, F.col("id") == F.col("dropped_id"), "left").select(
+        "id", "cell", F.col("dropped_id").isNull().alias("is_kept")
+    )
+
+
+def _adversarial_rows():
+    """Clean rows whose cosines straddle the thresholds, then every row
+    shape the folds half-score (NULL vector, NULL element, ragged
+    lengths, NaN, all-NaN, inf, overflowing values, a NULL id) at the
+    highest ids, so their NaN cosines drop only rows after them, and
+    repeated ids in one cell and across cells."""
+    nan, inf = float("nan"), float("inf")
+    rows = [(i, [1.0, a, 0.0, 0.0]) for i, a in enumerate((0.0, 0.05, 0.3, 0.6, 0.9, 0.04))]
+    rows += [(20 + i, [0.1, 0.8 + 0.02 * i, -0.3, 0.2]) for i in range(3)]
+    rows += [
+        (3, [1.0, -0.2, 0.1, 0.0]),
+        (5, [0.0, 0.0, 0.0, 1.0]),
+        (21, [-0.9, -0.1, 0.3, 0.0]),
+        (30, [-0.5, -0.5, 0.5, 0.5]),
+        (40, None),
+        (41, [0.9, None, 0.2, 0.0]),
+        (42, [0.9, 0.1]),
+        (43, [0.9, 0.1, 0.2, 0.0, 0.5]),
+        (44, [0.9, nan, 0.2, 0.0]),
+        (45, [nan] * 4),
+        (46, [inf, 0.1, 0.2, 0.0]),
+        (47, [1e200, 1e200, 0.0, 0.0]),
+        (48, [0.3, 0.9, 0.1, 0.0]),
+        (None, [0.9, 0.1, 0.2, 0.0]),
+    ]
+    return rows
+
+
+_CENTS = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0], [0.0, 0.0, 0.0, 1.0]]
+
+# (case, rows, threshold, divide): the adversarial frame against the
+# parent's self-join (``/``: no zero divisor in it), and a zero vector in
+# a cell against the DuckDB twin's rule (``x / 0.0`` is NULL: no pair).
+_PARITY_CASES = [
+    ("adversarial", _adversarial_rows(), t, lambda x, y: x / y)
+    for t in (0.4, 0.95, 0.999)
+] + [
+    (
+        "zero_vector",
+        [(1, [0.0, 0.0]), (2, [1.0, 0.0]), (3, [1.0, 0.0])],
+        0.5,
+        lambda x, y: F.try_divide(x, y),
+    )
+]
+
+
+def test_semantic_dedup_matches_fold_form(spark):
+    def key(r):
+        return (r["id"] is None, r["id"] or 0, r["cell"] is None, r["cell"] or 0, r["is_kept"])
+
+    for case, rows, threshold, divide in _PARITY_CASES:
+        df = spark.createDataFrame(rows, "id long, vec array<double>")
+        cents = _CENTS if case == "adversarial" else [[1.0, 0.0]]
+        got = sorted(semantic_dedup(df, "id", "vec", cents, threshold).collect(), key=key)
+        want = sorted(_fold_form_dedup(df, cents, threshold, divide).collect(), key=key)
+        assert [tuple(r) for r in got] == [tuple(r) for r in want], (case, threshold)
+        assert len(got) == len(rows)
+
+
+def test_semantic_dedup_zero_vector_is_no_duplicate(spark):
+    """A zero vector sharing a cell makes no pair (its cosine divides by
+    zero, which the oracle reads as NULL) instead of failing the query."""
+    df = spark.createDataFrame([(1, [0.0, 0.0]), (2, [1.0, 0.0])], "id long, vec array<double>")
+    out = {r.id: r.is_kept for r in semantic_dedup(df, "id", "vec", [[1.0, 0.0]], 0.5).collect()}
+    assert out == {1: True, 2: True}
+
+
+def test_semantic_dedup_verifies_each_cell_once(spark, monkeypatch):
+    """Under the registry row's output sort, the verify kernel runs once
+    per cell (the NULL cell of an unscored row included)."""
+    from mongo_analyser_spark.operators import clustering
+    from mongo_analyser_spark.operators.fanout import sort_output
+
+    calls = spark.sparkContext.accumulator(0)
+    verify = clustering._verify_cell
+
+    def counting(cell):
+        calls.add(1)
+        return verify(cell)
+
+    monkeypatch.setattr(clustering, "_verify_cell", counting)
+    rows = _adversarial_rows()
+    df = spark.createDataFrame(rows, "id long, vec array<double>")
+    out = semantic_dedup(df, "id", "vec", _CENTS, 0.95).transform(sort_output, "id").collect()
+    assert len(out) == len(rows)
+    assert calls.value == len({r.cell for r in out})

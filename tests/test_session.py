@@ -37,6 +37,7 @@ def test_fixed_settings(spark):
     assert conf.get("spark.sql.adaptive.enabled") == "true"
     assert conf.get("spark.sql.session.timeZone") == "UTC"
     assert conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert conf.get("spark.python.daemon.module") == "mongo_analyser_spark.worker_daemon"
 
 
 def test_repeated_queries_compile_no_class(spark):
