@@ -1,6 +1,7 @@
 """Benchmark harness: runs every registered query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line {"metric", "value", "unit", "queries", "sf"}.
+JSON line {"metric", "value", "unit", "queries", "sf"}, then a compact
+positional line of every time, then a summary line.
 """
 
 from __future__ import annotations
@@ -64,55 +65,42 @@ def main() -> None:
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    print(
-        json.dumps(
-            {
-                "metric": "total_query_wall_clock",
-                "value": round(sum(timings.values()), 3),
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf_val,
-            }
-        )
-    )
-    # Per-query results AGAIN as chunked <=50-row lines (verdict-r15 #2):
-    # the driver keeps only the TAIL of stdout and the single 201-row
-    # line above front-truncates past ~170 rows, which left PERF_r15
-    # with per_query {} and a null geomean. Chunks are short enough that
-    # all of them + the summary fit in any plausible tail window.
-    # Additions only: the full line above and the bench_summary line
-    # below are byte-compatible with every earlier round.
+    for line in output_lines(timings, sf_val):
+        print(line)
+
+
+def output_lines(timings: dict[str, float], sf_val) -> list[str]:
+    """The bench's three stdout lines: the full per-query line, the
+    compact positional line, and the summary line last."""
+    root = os.path.dirname(os.path.abspath(__file__))
+    sys.path.insert(0, os.path.join(root, "tools"))
+    from bench_compare import baseline_rows, order_hash
+
+    full = {
+        "metric": "total_query_wall_clock",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf_val,
+    }
+    # A consumer that keeps only the last 2,000 characters of stdout loses
+    # the front of the full line past ~170 rows. This line holds every
+    # time in registry order, in integer ms (~1 KB for 201 rows);
+    # tools/bench_compare.py maps the positions back to names when
+    # ``order`` matches the registry's name order.
     names = list(timings)
-    chunk = 50
-    nparts = (len(names) + chunk - 1) // chunk
-    for part in range(nparts):
-        sub = names[part * chunk : (part + 1) * chunk]
-        print(
-            json.dumps(
-                {
-                    "metric": "bench_queries",
-                    "part": part + 1,
-                    "nparts": nparts,
-                    "sf": sf_val,
-                    "queries": {q: timings[q] for q in sub},
-                }
-            )
-        )
-    # Compact summary as the LAST line: the driver keeps only the tail of
-    # stdout, and the full per-query line above front-truncates past ~170
-    # registry rows, losing the headline numbers. The summary line always
-    # survives truncation and is schema-compatible (metric/value/unit/sf)
-    # if a consumer parses only the final line. vs_baseline is best-effort
-    # (needs BASELINE.md next to this file).
+    compact = {
+        "metric": "bench_times",
+        "unit": "ms",
+        "n": len(names),
+        "order": order_hash(names),
+        "sf": sf_val,
+        "ms": [round(timings[q] * 1000) for q in names],
+    }
+    # vs_baseline is best-effort (needs BASELINE.md next to this file)
     worst_name, worst_ratio, agg = None, None, None
     try:
-        sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
-        from bench_compare import baseline_rows
-
-        base = baseline_rows(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "BASELINE.md"),
-            quiet=True,
-        )
+        base = baseline_rows(os.path.join(root, "BASELINE.md"), quiet=True)
         common = [q for q in timings if q in base and base[q] > 0]
         if common:
             agg = round(
@@ -122,21 +110,21 @@ def main() -> None:
             worst_ratio = round(timings[worst_name] / base[worst_name], 2)
     except Exception:
         pass
-    print(
-        json.dumps(
-            {
-                "metric": "bench_summary",
-                "value": round(sum(timings.values()), 3),
-                "unit": "sec",
-                "n": len(timings),
-                "sf": sf_val,
-                "vs_baseline": agg,
-                "worst_query": worst_name,
-                "worst_ratio": worst_ratio,
-            }
-        )
-    )
-
+    summary = {
+        "metric": "bench_summary",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "n": len(timings),
+        "sf": sf_val,
+        "vs_baseline": agg,
+        "worst_query": worst_name,
+        "worst_ratio": worst_ratio,
+    }
+    return [
+        json.dumps(full),
+        json.dumps(compact, separators=(",", ":")),
+        json.dumps(summary),
+    ]
 
 if __name__ == "__main__":
     main()

@@ -18,11 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mongo_analyser_spark.operators.fanout import (
-    fanout_for_python,
-    input_bytes,
-    sort_output,
-)
+from mongo_analyser_spark.operators.fanout import fanout_for_python, input_bytes
 
 from mongo_analyser_spark.functions.text import shingles, tokens
 
@@ -72,8 +68,8 @@ def vocab_key(col: Column | str) -> Column:
 def hashed_shingles(
     col: Column | str, n: int, distinct: bool = False
 ) -> Column:
-    """Word n-gram shingles as xxhash64 LONGS — the round-7 keying rule
-    in one place: shingle/gram values that only ever serve as join,
+    """Word n-gram shingles as xxhash64 LONGS — the keying rule in one
+    place: shingle/gram values that only ever serve as join,
     groupBy, or set-intersection keys ship as 8 bytes, not ~n words of
     text; every consumer's OUTPUT is invariant to the injective keying
     (a 64-bit collision needs ~2^32 distinct grams on one side for
@@ -94,11 +90,10 @@ def minhash_signatures(
     document length. Lexicographic min over md5 hex == min over the
     128-bit integer, so string ordering is portable.
 
-    r16: adaptive fanout before the explode — the k md5-per-gram
-    map-side pass is the operator's dominant cost and serialized on
-    the fixture's one-row-group scan task (fanout_for_python docstring;
-    A/B 2.80 → 1.27 s at sf0.1, signatures identical). Auto-skipped
-    when the scan already splits."""
+    Adaptive fanout before the explode: the dominant k md5-per-gram pass
+    ran serialized on the fixture's one-row-group scan task (2.80 →
+    1.27 s at sf0.1, signatures identical); skipped when the scan
+    already splits."""
     df = fanout_for_python(df, id_col)
     sh = df.select(
         F.col(id_col), F.explode(shingles(F.col(text_col), shingle_n)).alias("sh")
@@ -143,22 +138,64 @@ def lsh_band_hashes(
     )
 
 
-def lsh_candidate_pairs(band_df: DataFrame, id_col: str) -> DataFrame:
-    """Distinct candidate pairs (a < b) sharing at least one band bucket —
-    the equi-join that replaces the cross product at scale. The band
-    table (num_bands fixed-width rows per doc) is materialized once so
-    the self-join doesn't re-run the signature aggregation per side."""
-    band_df = band_df.localCheckpoint()
-    a = band_df.select(
-        F.col(id_col).alias("doc_a"), "band_id", "band_hash"
-    )
-    b = band_df.select(
-        F.col(id_col).alias("doc_b"), "band_id", "band_hash"
-    )
+def band_pairs(
+    fp: DataFrame,
+    id_col: str,
+    band_keys: str | list[Column],
+    block: list[str] | tuple[str, ...] = (),
+    carry: dict[str, Column] | None = None,
+    pair_cols: list[Column] | tuple[Column, ...] = (),
+    names: tuple[str, str] = ("id_a", "id_b"),
+) -> DataFrame:
+    """Distinct pairs (a < b) of ``fp`` rows that share a bucket: equal
+    ``block`` columns and an equal key in at least one band — the
+    candidate equi-join of every near-dup family, never the cross product.
+
+    ``band_keys`` is the name of ONE key column of ``fp``, joined as it
+    is, or one Column over ``fp`` per band, which cuts ``fp`` into
+    (band, band_key) rows; then ``carry`` maps names to Columns over
+    ``fp`` that ride on each band row as ``<name>_a`` / ``<name>_b``, for
+    ``pair_cols`` to read before the ``distinct`` (a pair can collide in
+    several bands). Output: ``names``, then ``pair_cols``, unsorted.
+
+    ``fp`` is materialized once, before the bands are cut: both join
+    sides read it, and without it each side re-runs the fingerprint
+    pipeline (SimHash 7.1 → 3.9 s at sf0.1). It is fixed-width per row;
+    corpus-sized shingle sets and vectors stay with each family's verify."""
+    fp = fp.localCheckpoint()
+    block, carry = list(block), carry or {}
+    if isinstance(band_keys, str):
+        keys = [band_keys]
+        banded = fp
+    else:
+        keys = ["band", "band_key"]
+        bk = F.array(
+            *[
+                F.struct(F.lit(i).alias("band"), key.alias("band_key"))
+                for i, key in enumerate(band_keys)
+            ]
+        )
+        banded = fp.select(
+            F.col(id_col),
+            *block,
+            *[c.alias(n) for n, c in carry.items()],
+            F.explode(bk).alias("bk"),
+        ).select(id_col, *block, *carry, "bk.band", "bk.band_key")
+
+    def side(name: str, sfx: str) -> DataFrame:
+        return banded.select(
+            F.col(id_col).alias(name),
+            *block,
+            *keys,
+            *[F.col(c).alias(c + sfx) for c in carry],
+        )
+
+    a, b = names
     return (
-        a.join(b, ["band_id", "band_hash"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
+        side(a, "_a")
+        .join(side(b, "_b"), block + keys)
+        .filter(F.col(a) < F.col(b))
+        .select(a, b, *pair_cols)
         .distinct()
     )
 
@@ -390,22 +427,14 @@ def ngram_jaccard_pairs(
     the block join, never the cross product."""
     from mongo_analyser_spark.functions.text import fingerprint
 
-    # materialized once: both sides of the block self-join read it, and
-    # without this each side re-runs the md5-per-shingle fingerprint
-    # pass. The block key ships as xxhash64 of the fingerprint (8 bytes,
-    # not the 32-char hex) — it only ever equi-joins, and blocking
-    # equality is preserved
+    # The block key ships as xxhash64 of the fingerprint (8 bytes, not
+    # the 32-char hex): it only ever equi-joins, and blocking equality is
+    # preserved
     fp = fanout_for_python(df, id_col).select(
         F.col(id_col),
         F.xxhash64(fingerprint(F.col(text_col), shingle_n)).alias("block_key"),
-    ).localCheckpoint()
-    pairs = (
-        fp.select(F.col(id_col).alias("doc_a"), "block_key")
-        .join(fp.select(F.col(id_col).alias("doc_b"), "block_key"), "block_key")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
     )
+    pairs = band_pairs(fp, id_col, "block_key", names=("doc_a", "doc_b"))
     return jaccard_verify(df, pairs, id_col, text_col, shingle_n, min_jaccard)
 
 
@@ -419,23 +448,19 @@ def simhash_bits(
     Single explode + one groupBy with num_bits conditional sums —
     one shuffle, fixed-width state. Output (id, simhash string of '0'/'1').
 
-    r16: adaptive fanout before the explode — the md5-per-token + conv
-    map-side pass serialized on the one-row-group fixture scan task;
-    auto-skipped when the scan splits (fanout_for_python docstring).
+    Adaptive fanout before the explode: the md5-per-token + conv pass
+    ran serialized on the one-row-group fixture scan task; skipped when
+    the scan splits.
     """
     df = fanout_for_python(df, id_col)
     tok = df.select(
         F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok")
     ).withColumn("h", F.md5("tok"))
-    # parse the hex ONCE into 32-bit integer words (r15, guide §1.2
-    # per-task work): the per-digit form ran 16 conv(substring) per
-    # token row — the conv parse dominated the scan stage (0.89 s of
-    # the 1.20 s simhash_bits at sf0.1). Two 8-hex-char conv words plus
-    # shift/mask bit extraction inside the aggregates reads the same
-    # bits (digit b//4's bit 3-b%4 is word bit 31 - b%32) for 2 convs
-    # per row; measured 1.20 s → 0.70 s, output bit-identical. 32-bit
-    # words so conv()'s unsigned string value always casts into BIGINT
-    # (same guard as hamming_pairs).
+    # parse the hex ONCE into 32-bit integer words: 2 conv() per token
+    # row instead of 16 per-digit ones read the same bits (digit b//4's
+    # bit 3-b%4 is word bit 31 - b%32), 1.20 → 0.70 s at sf0.1,
+    # bit-identical. 32-bit words so conv()'s unsigned string value
+    # always casts into BIGINT (same guard as hamming_pairs).
     n_words = (num_bits + 31) // 32
     wrd = tok.select(
         id_col,
@@ -480,14 +505,9 @@ def simhash_pairs(
     two bitstrings. Set ``max_hamming <= num_bands - 1`` for exact recall
     (the pigeonhole guarantee); larger values trade recall for fewer
     bands. Output: (id_a, id_b, hamming), id_a < id_b, deduped across
-    bands.
+    bands, unsorted.
     """
-    # materialize the fingerprints once: both sides of the band self-join
-    # read them, and without this each side re-runs the full token
-    # explode + 64-bit-sum aggregation (measured 7.1 s → 3.9 s at sf0.1).
-    # The fingerprint table is #docs × (num_bits+8) bytes — the artifact
-    # any production dedup persists anyway.
-    sim = simhash_bits(df, id_col, text_col, num_bits).localCheckpoint()
+    sim = simhash_bits(df, id_col, text_col, num_bits)
     return hamming_pairs(sim, id_col, "simhash", num_bits, num_bands, max_hamming)
 
 
@@ -499,61 +519,34 @@ def hamming_pairs(
     num_bands: int = 4,
     max_hamming: int = 3,
 ) -> DataFrame:
-    """Banded Hamming near-dup join over ANY precomputed bitstring
-    fingerprint column (SimHash text prints, dHash image prints, ...):
-    the pigeonhole band equi-join + packed-word bit-count verify
-    documented in ``simhash_pairs``. The caller materializes ``bits_df``
-    (localCheckpoint/persist) if the fingerprints are expensive — both
-    sides of the self-join read it."""
+    """Banded Hamming near-dup join over ANY bitstring fingerprint column
+    (SimHash text prints, dHash image prints, ...): the pigeonhole band
+    equi-join + packed-word bit-count verify documented in
+    ``simhash_pairs``. ``band_pairs`` materializes ``bits_df`` once, so
+    the caller passes the fingerprint projection as it is. Output
+    (id_a, id_b, hamming), unsorted."""
     band_len = num_bits // num_bands
     # pack the bitstring into 32-bit integer words ONCE per doc: the pair
     # verify is then XOR + bit_count per word — constant-time integer ops
     # instead of a 64-element string-array fold per candidate pair
     # (32-bit words so conv()'s unsigned value always fits a BIGINT)
     n_words = (num_bits + 31) // 32
-    words = [
-        F.expr(
+    words = {
+        f"w{w}": F.expr(
             f"CAST(conv(substring({bits_col}, {w * 32 + 1}, 32), 2, 10) AS BIGINT)"
-        ).alias(f"w{w}")
+        )
         for w in range(n_words)
-    ]
-    banded = bits_df.select(
-        F.col(id_col),
-        *words,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.substring(bits_col, i * band_len + 1, band_len).alias("key"),
-                    )
-                    for i in range(num_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, *[f"w{w}" for w in range(n_words)], "bk.band", "bk.key")
-    a = banded.select(
-        F.col("band"), F.col("key"),
-        F.col(id_col).alias("id_a"),
-        *[F.col(f"w{w}").alias(f"wa{w}") for w in range(n_words)],
-    )
-    b = banded.select(
-        F.col("band"), F.col("key"),
-        F.col(id_col).alias("id_b"),
-        *[F.col(f"w{w}").alias(f"wb{w}") for w in range(n_words)],
-    )
+    }
     hamming = sum(
-        F.bit_count(F.col(f"wa{w}").bitwiseXOR(F.col(f"wb{w}")))
+        F.bit_count(F.col(f"w{w}_a").bitwiseXOR(F.col(f"w{w}_b")))
         for w in range(n_words)
     ).cast("int")
-    return (
-        a.join(b, ["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", hamming.alias("hamming"))
-        .distinct()  # a close pair can collide in several bands
-        .filter(F.col("hamming") <= max_hamming)
-        .transform(sort_output, "id_a", "id_b")
-    )
+    keys = [
+        F.substring(bits_col, i * band_len + 1, band_len) for i in range(num_bands)
+    ]
+    return band_pairs(
+        bits_df, id_col, keys, carry=words, pair_cols=[hamming.alias("hamming")]
+    ).filter(F.col("hamming") <= max_hamming)
 
 
 def srp_band_params(n_rows: int, target_block_rows: int = 125) -> tuple[int, int]:
@@ -598,9 +591,9 @@ def cosine_near_dup_pairs(
     1. one projection computes each vector's SRP bit signature
        (rows_per_band × num_bands md5-derived hyperplanes — literals, so
        a SQL oracle reproduces the exact same signs);
-    2. the skinny fingerprint table (id, block, sig) is materialized once
-       (localCheckpoint — fixed-width, NOT the corpus vectors) and
-       band-exploded; candidates = equi-join on
+    2. ``band_pairs`` materializes the skinny fingerprint table
+       (id, block, sig — fixed-width, NOT the corpus vectors) once and
+       band-explodes it; candidates = equi-join on
        (block?, band, band_key) with id_a < id_b, DISTINCT across bands;
     3. exact cosine verify ≥ threshold via a join back to the vector
        projection (recomputed from the parquet scan — corpus-sized frames
@@ -634,7 +627,7 @@ def cosine_near_dup_pairs(
     )
 
     if rows_per_band is None or num_bands is None:
-        # ``n_rows`` (r15): callers whose input is a WHOLE table pass
+        # ``n_rows``: callers whose input is a WHOLE table pass
         # the exact parquet-footer count (sources.parquet.table_row_count)
         # so the band-param sizing plans zero jobs; filtered inputs
         # still pay the one count job.
@@ -644,44 +637,18 @@ def cosine_near_dup_pairs(
     planes = srp_planes(rows_per_band * num_bands, dim)
     block = [block_col] if block_col else []
 
-    # r16: a fanout here was MEASURED BOTH WAYS and rejected — the bare
-    # operator call read 2.84 → 2.28 s with it, but the registry row
-    # (different band sizing via n_rows) read 1.31 → 2.10 s solo, so
-    # the exchange hurts the shapes that matter; left bare
+    # no fanout: it sped the bare operator call (2.84 → 2.28 s) but
+    # slowed the registry row, sized by n_rows, 1.31 → 2.10 s solo
     vecs = df.select(F.col(id_col), as_double_vec(vec_col).alias("__vec"), *block)
     # data-scaled (r, b) means the plane count grows with the corpus —
     # with_srp_sig ships big plane sets as broadcast data, not plan
     # literals (measured: the literal form put ~5k nodes in this plan)
-    fp = (
-        with_srp_sig(vecs, "__vec", planes, out="sig")
-        .select(id_col, *block, "sig")
-        .localCheckpoint()
-    )
-    banded = fp.select(
-        F.col(id_col),
-        *block,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.substring(
-                            "sig", i * rows_per_band + 1, rows_per_band
-                        ).alias("band_key"),
-                    )
-                    for i in range(num_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, *block, "bk.band", "bk.band_key")
-    join_keys = block + ["band", "band_key"]
-    cand = (
-        banded.select(F.col(id_col).alias("id_a"), *join_keys)
-        .join(banded.select(F.col(id_col).alias("id_b"), *join_keys), join_keys)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    fp = with_srp_sig(vecs, "__vec", planes, out="sig").select(id_col, *block, "sig")
+    keys = [
+        F.substring("sig", i * rows_per_band + 1, rows_per_band)
+        for i in range(num_bands)
+    ]
+    cand = band_pairs(fp, id_col, keys, block=block)
     v = vecs.select(F.col(id_col), "__vec", norm(F.col("__vec")).alias("__nrm"))
     a = v.select(
         F.col(id_col).alias("id_a"),
@@ -932,8 +899,8 @@ def remove_repeated_ngrams(
     formulation for FIXED n is a gram-keyed aggregation — same output,
     and every stage is a keyed shuffle that scales:
     * gram explode is linear in tokens and fuses into the scan; grams
-      shuffle as xxhash64 LONGS, not strings (verdict-r6 #3 — ~n-fold
-      fewer shuffle bytes; the REBUILT TEXT the oracle hashes is
+      shuffle as xxhash64 LONGS, not strings (~n-fold fewer
+      shuffle bytes; the REBUILT TEXT the oracle hashes is
       invariant to the keying, a 64-bit collision could only mark one
       extra gram repeated);
     * 'repeated' is one groupBy(gram-hash) with a distinct-doc count —
@@ -944,11 +911,9 @@ def remove_repeated_ngrams(
       covered positions expand to a flat array (O(hits·n)), survivors
       come from ONE hash-based `array_except` against the position
       sequence, and tokens are re-read by O(1) element_at probes on the
-      MATERIALIZED token column. Round-11 rewrite (long-doc probe): the
-      round-7 `exists`-over-starts probe per token was O(N·hits) per
-      doc — quadratic exactly on boilerplate-HEAVY docs, the operator's
-      own target input (a 100 KB doc of repeated text ran minutes);
-      this form is linear and byte-identical.
+      MATERIALIZED token column. An `exists`-over-starts probe per
+      token was O(N·hits) per doc (a 100 KB doc of repeated text ran
+      for minutes); this form is linear and byte-identical.
 
     Returns (id, cleaned_text, n_tokens, n_kept) for EVERY input doc —
     untouched docs round-trip their text; a fully-covered doc yields ''.
@@ -1008,17 +973,12 @@ def _repeated_gram_starts(
     hash (measured: sf0.1 fresh-plan median 2.86 -> 2.56 s)."""
     toks = tokens(F.col(text_col))
     hashed = hashed_shingles(F.col(text_col), n)
-    # r15 (guide §1.2 "remove unnecessary passes"): the repeated-gram
-    # branch and the position branch both consumed the raw docs, so the
-    # tokenize + zip_with-gram + xxhash64 chain — the dominant per-row
-    # cost of this probe (0.89 s of its 2.23 s at sf0.1) — ran TWICE,
-    # as two parquet scans in the physical plan. Materialize the
-    # per-doc hashed-gram array once (one skinny row per doc, the same
-    # fingerprint-artifact discipline as simhash_pairs/minhash) and
-    # derive both branches from it: measured 2.23 s → 1.41 s including
-    # the checkpoint build, byte-identical starts.
+    # the per-doc hashed-gram array (one skinny row per doc) is
+    # materialized once for the repeated-gram and the position branch:
+    # read from the docs, each branch re-ran the tokenize + gram +
+    # xxhash64 chain (2.23 → 1.41 s at sf0.1, byte-identical starts)
     per_doc = (
-        # r16: adaptive fanout — the tokenize + gram + xxhash64 chain
+        # adaptive fanout — the tokenize + gram + xxhash64 chain
         # (this probe's dominant cost) serialized on the one-row-group
         # fixture scan task; auto-skipped when the scan splits
         fanout_for_python(docs, id_col)
@@ -1050,7 +1010,7 @@ def merge_start_intervals(starts: Column, n: int) -> Column:
     extends the last span when it begins at or before span_end + 1
     (overlap or token-adjacency), else opens a new span.
 
-    Round-11 linear form: with sorted starts and FIXED n, a new span
+    Linear form: with sorted starts and FIXED n, a new span
     begins exactly where s[i] > s[i-1] + n, so the merged spans fall
     out of one boundary-position filter (the _boundaries pattern) plus
     a zip over consecutive boundaries — each span is
@@ -1064,7 +1024,7 @@ def merge_start_intervals(starts: Column, n: int) -> Column:
 
 def _span_boundaries(starts: Column, n: int) -> Column:
     """Boundary indices of ``merge_start_intervals``: positions i where
-    a new span opens (i == 1 or s[i] > s[i-1] + n). Split out (r15) so
+    a new span opens (i == 1 or s[i] > s[i-1] + n). Split out so
     ``remove_repeated_spans`` can MATERIALIZE it in its own projection:
     the composed expression references this filter three times (slice,
     size, zip head), and interpreted HOFs get no CSE — the filter ran
@@ -1127,16 +1087,16 @@ def remove_repeated_spans(
     O(1) element_at probes on the materialized token column. After the
     three keyed probe shuffles, span building and excision run entirely
     inside the row — no window, no per-position rows, no anti-join.
-    (Round-11 rewrite, long-doc probe: the round-7 `exists`-over-spans
-    probe per token was O(N·spans) per doc — quadratic on patchy
-    boilerplate; this form is linear and byte-identical.)
+    (An `exists`-over-spans probe per token was O(N·spans) per doc,
+    quadratic on patchy boilerplate; this form is linear and
+    byte-identical.)
 
     Returns (id, cleaned_text, n_tokens, n_spans, n_removed) for EVERY
     input doc; untouched docs round-trip their text."""
     toks = tokens(F.col(text_col))
     starts = _repeated_gram_starts(docs, id_col, text_col, n, min_docs)
     j = docs.select(id_col, F.col(text_col)).join(starts, id_col, "left")
-    # r15: stage the boundary-index filter in its own projection — the
+    # stage the boundary-index filter in its own projection — the
     # composed merge_start_intervals expression evaluates it 3x per row
     # (slice + size + zip head; interpreted HOFs get no CSE), the
     # _boundaries discipline this module already documents.

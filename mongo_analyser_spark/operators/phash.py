@@ -131,7 +131,7 @@ def dhash_pairs(
 ) -> DataFrame:
     """Near-dup image pairs over precomputed dHash fingerprints:
     ``operators.dedup.hamming_pairs`` (pigeonhole band equi-join +
-    packed-word verify). (id_a, id_b, hamming), id_a < id_b."""
+    packed-word verify). (id_a, id_b, hamming), id_a < id_b, unsorted."""
     return hamming_pairs(
         bits_df, id_col, bits_col,
         num_bits=GRID * GRID, num_bands=num_bands, max_hamming=max_hamming,

@@ -20,10 +20,10 @@ from mongo_analyser_spark.functions.text import (
     tokens,
 )
 from mongo_analyser_spark.operators.dedup import (
+    band_pairs,
     exact_dedup,
     jaccard_verify,
     lsh_band_hashes,
-    lsh_candidate_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
     simhash_bits,
@@ -483,7 +483,9 @@ def q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     sigs = minhash_signatures(docs, "doc_id", "text", NUM_MINHASH)
     bands = lsh_band_hashes(sigs, "doc_id", LSH_BANDS, LSH_ROWS)
-    pairs = lsh_candidate_pairs(bands, "doc_id")
+    pairs = band_pairs(
+        bands, "doc_id", "band_hash", block=["band_id"], names=("doc_a", "doc_b")
+    )
     return jaccard_verify(docs, pairs, "doc_id", "text").orderBy("doc_a", "doc_b")
 
 
@@ -675,13 +677,6 @@ def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant-sized above sf0.04, byte-identical at sf0.001/sf0.01. The
     production near-dup flagship (dedup_minhash_pairs_documents) stays
     corpus-wide; only this estimate-vs-exact evaluation row is capped."""
-    from mongo_analyser_spark.operators.dedup import (
-        jaccard_verify,
-        lsh_band_hashes,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
-
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") < 2000
     )
@@ -694,7 +689,9 @@ def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "doc_id", "text", NUM_MINHASH
     ).localCheckpoint()
     bands = lsh_band_hashes(sigs_c, "doc_id", LSH_BANDS, LSH_ROWS)
-    pairs = lsh_candidate_pairs(bands, "doc_id").localCheckpoint()
+    pairs = band_pairs(
+        bands, "doc_id", "band_hash", block=["band_id"], names=("doc_a", "doc_b")
+    ).localCheckpoint()
     n_match = (
         pairs.join(
             sigs_c.select(
@@ -1017,7 +1014,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = simhash_pairs(docs, "doc_id", "text")
     return out.select(
         F.col("id_a"), F.col("id_b"), F.col("hamming").cast("int")
-    )
+    ).transform(sort_output, "id_a", "id_b")
 
 
 @register("simhash_documents", _simhash_sql())
@@ -2878,13 +2875,13 @@ def q_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    bits = (
-        docs.select("doc_id", ascii_codes("text").alias("codes"))
-        .select("doc_id", dhash_bits_expr(F.col("codes")).alias("dhash"))
-        .localCheckpoint()
+    bits = docs.select("doc_id", ascii_codes("text").alias("codes")).select(
+        "doc_id", dhash_bits_expr(F.col("codes")).alias("dhash")
     )
-    return dhash_pairs(bits, num_bands=8, max_hamming=7).select(
-        "id_a", "id_b", F.col("hamming").cast("int")
+    return (
+        dhash_pairs(bits, num_bands=8, max_hamming=7)
+        .select("id_a", "id_b", F.col("hamming").cast("int"))
+        .transform(sort_output, "id_a", "id_b")
     )
 
 

@@ -20,6 +20,11 @@ from pyspark.sql import SparkSession
 # registry with headroom; SCALE.md has the measurement and its cost.
 CODEGEN_CACHE_ENTRIES = 4096
 
+# The directory that holds the package. Python workers import the package
+# (the daemon module below), so they get it on their path whatever the
+# caller's current directory is.
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "mongo_analyser_spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession.
@@ -33,7 +38,8 @@ def get_spark(app_name: str = "mongo_analyser_spark", cpus: int | None = None) -
     * A generated-class cache that holds the registry's classes, so a
       repeated query reuses compiled code (CODEGEN_CACHE_ENTRIES).
     * A Python worker daemon that re-reads a zip archive only when it
-      changed (mongo_analyser_spark.worker_daemon).
+      changed (mongo_analyser_spark.worker_daemon), with the package's
+      parent directory on the workers' PYTHONPATH.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
@@ -65,6 +71,7 @@ def get_spark(app_name: str = "mongo_analyser_spark", cpus: int | None = None) -
         # Python workers keep pyspark.zip's directory across tasks instead
         # of re-reading it before each one (~0.15 s per task; worker_daemon)
         .config("spark.python.daemon.module", "mongo_analyser_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

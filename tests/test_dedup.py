@@ -5,10 +5,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from mongo_analyser_spark.operators.dedup import (
+    band_pairs,
     exact_dedup,
     jaccard_verify,
     lsh_band_hashes,
-    lsh_candidate_pairs,
     minhash_signatures,
     simhash_bits,
     vocab_key,
@@ -49,7 +49,9 @@ def test_minhash_lsh_pipeline(spark, docs):
     assert s1 == s2
 
     bands = lsh_band_hashes(sigs, "doc_id", bands=4, rows_per_band=2)
-    pairs = lsh_candidate_pairs(bands, "doc_id")
+    pairs = band_pairs(
+        bands, "doc_id", "band_hash", block=["band_id"], names=("doc_a", "doc_b")
+    )
     got = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
     assert (1, 2) in got  # exact dups always collide
     assert (1, 4) not in got  # unrelated docs don't
@@ -544,7 +546,9 @@ def _semi_filter_sides(docs, monkeypatch, optimized_plan):
 
     sigs = minhash_signatures(docs, "doc_id", "text", num_hashes=8)
     bands = lsh_band_hashes(sigs, "doc_id", bands=4, rows_per_band=2)
-    pairs = lsh_candidate_pairs(bands, "doc_id")
+    pairs = band_pairs(
+        bands, "doc_id", "band_hash", block=["band_id"], names=("doc_a", "doc_b")
+    )
     train = docs.filter("doc_id % 2 = 1")
     test = docs.filter("doc_id % 2 = 0")
     builds = (
@@ -586,3 +590,88 @@ def test_semi_filter_closed_on_unknown_size(docs, monkeypatch, optimized_plan):
     gate closed: both operators plan exactly as the forced-closed side."""
     for out in _semi_filter_sides(docs, monkeypatch, optimized_plan):
         assert out["open"] == out["closed"]
+
+
+# band_pairs cases, one per near-dup family's fingerprint shape:
+# (fp rows, schema, band_pairs arguments, the (block, band, key) buckets
+# of one fp row, the per-pair columns from the two rows). Every case has
+# a bucket of >= 10 equal keys and a pair that shares several buckets.
+_BITS = ["0000" + format(i % 16, "04b") for i in range(12)] + [
+    "10110110", "10110110", "10111110", "01001001"
+]
+_SIGS = ["aabbcc", "aabbcd", "aabbcc", "xxbbcc", "xyzzyx", "aabbcc"]
+BAND_CASES = {
+    # the long band table: band_id is a block column, band_hash the key;
+    # hash 5 in band 3 must not meet hash 5 in band 0
+    "minhash": (
+        [(d, 0, 5) for d in range(1, 13)]
+        + [(d, 1, d % 3) for d in range(1, 13)]
+        + [(d, 2, min(d, 3)) for d in range(1, 13)]
+        + [(20, 3, 5), (21, 3, 5), (20, 0, 9)],
+        "doc_id long, band_id int, band_hash long",
+        lambda: dict(band_keys="band_hash", block=["band_id"], names=("doc_a", "doc_b")),
+        lambda r: [(r[1], r[2])],
+        lambda ra, rb: (),
+    ),
+    # one block key, no block column (a pair meets in one bucket only)
+    "ngram": (
+        [(d, 42) for d in range(1, 12)] + [(12, 7), (13, 7), (14, 8)],
+        "doc_id long, block_key long",
+        lambda: dict(band_keys="block_key", names=("doc_a", "doc_b")),
+        lambda r: [(r[1],)],
+        lambda ra, rb: (),
+    ),
+    # bits cut into 2 bands of 4; packed words carried to score hamming
+    "hamming": (
+        list(enumerate(_BITS)),
+        "doc_id long, bits string",
+        lambda: dict(
+            band_keys=[F.substring("bits", 1, 4), F.substring("bits", 5, 4)],
+            carry={"w": F.expr("CAST(conv(bits, 2, 10) AS BIGINT)")},
+            pair_cols=[
+                F.bit_count(F.col("w_a").bitwiseXOR(F.col("w_b"))).alias("hamming")
+            ],
+        ),
+        lambda r: [(0, r[1][:4]), (1, r[1][4:])],
+        lambda ra, rb: (sum(x != y for x, y in zip(ra[1], rb[1])),),
+    ),
+    # SRP signature cut into 3 bands of 2 within a label block
+    "srp": (
+        [(i, i % 2, s) for i, s in enumerate(_SIGS)]
+        + [(10 + i, 0, "aabbcc") for i in range(10)],
+        "vec_id long, label int, sig string",
+        lambda: dict(
+            band_keys=[F.substring("sig", 2 * i + 1, 2) for i in range(3)],
+            block=["label"],
+        ),
+        lambda r: [(r[1], i, r[2][2 * i:2 * i + 2]) for i in range(3)],
+        lambda ra, rb: (),
+    ),
+}
+
+
+@pytest.mark.parametrize("family", sorted(BAND_CASES))
+def test_band_pairs_matches_python_enumeration(spark, family):
+    """band_pairs against a plain-Python twin: every (a, b), a < b, that
+    shares a (block, band, key) bucket, once, with its per-pair columns."""
+    from collections import defaultdict
+    from itertools import combinations
+
+    rows, schema, kwargs, buckets, extra = BAND_CASES[family]
+    members = defaultdict(set)
+    for r in rows:
+        for b in buckets(r):
+            members[b].add(r[0])
+    shared = defaultdict(int)
+    for ids in members.values():
+        for pair in combinations(sorted(ids), 2):
+            shared[pair] += 1
+    assert max(len(ids) for ids in members.values()) >= 10
+    if family != "ngram":
+        assert max(shared.values()) >= 2
+    by_id = {r[0]: r for r in rows}
+    expect = sorted((a, b, *extra(by_id[a], by_id[b])) for a, b in shared)
+
+    fp = spark.createDataFrame(rows, schema)
+    got = sorted(tuple(r) for r in band_pairs(fp, fp.columns[0], **kwargs()).collect())
+    assert got == expect

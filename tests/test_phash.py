@@ -84,9 +84,7 @@ def test_dhash_pairs_exact_dup_and_rerun_stable(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    bits = df.select(
-        "doc_id", dhash_bits_expr(ascii_codes("text")).alias("dhash")
-    ).localCheckpoint()
+    bits = df.select("doc_id", dhash_bits_expr(ascii_codes("text")).alias("dhash"))
     out = {
         (r["id_a"], r["id_b"]): r["hamming"]
         for r in dhash_pairs(bits, num_bands=8, max_hamming=7).collect()

@@ -577,3 +577,26 @@ def test_ewma_stays_in_codegen(spark):
     q = QUERIES["ewma_smooth_events"](spark, SF)
     plan = formatted_plan(q)
     assert "aggregate(" not in plan and "collect_list" not in plan
+
+
+# Static exchange count of every registry row built on
+# ``dedup.band_pairs``, the banded self-join of the near-dup families.
+BAND_JOIN_EXCHANGES = {
+    "dedup_minhash_pairs_documents": 4,
+    "minhash_estimate_error_pairs": 5,
+    "dedup_jaccard_pairs_documents": 4,
+    "dedup_clusters_documents": 1,
+    "simhash_pairs_documents": 3,
+    "dhash_pairs_documents": 3,
+    "embedding_near_dup_pairs": 1,
+    "pagerank_near_dup": 1,
+    "triangle_count_near_dup": 7,
+    "embedding_dedup_clusters": 1,
+}
+
+
+def test_band_join_rows_keep_their_exchange_count(spark):
+    got = {
+        name: num_exchanges(QUERIES[name](spark, SF)) for name in BAND_JOIN_EXCHANGES
+    }
+    assert got == BAND_JOIN_EXCHANGES

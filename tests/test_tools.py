@@ -97,3 +97,32 @@ def test_codec_throughput_probe_reports_every_family(capsys):
         assert fam["reps"] == 3
         assert fam["docs_per_s_core"] > 0
         assert 0 < fam["cpu_ms_min"] <= fam["cpu_ms_median"]
+
+
+def test_bench_tail_recovers_every_time_from_the_compact_line(tmp_path):
+    """The last 2,000 characters of a 201-row bench output hold every
+    per-query time: the compact line maps back to the registry names."""
+    from mongo_analyser_spark.queries import QUERIES
+
+    spec = importlib.util.spec_from_file_location(
+        "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py")
+    )
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    assert len(QUERIES) == 201
+    timings = {q: round(0.137 * (i % 29) + i / 1000, 3) for i, q in enumerate(QUERIES)}
+    lines = bench.output_lines(timings, 0.1)
+    assert [json.loads(line)["metric"] for line in lines] == [
+        "total_query_wall_clock", "bench_times", "bench_summary"
+    ]
+    assert len(lines[1]) <= 1500
+    tail = ("\n".join(lines) + "\n")[-2000:]
+    p = tmp_path / "BENCH_r99.json"
+    p.write_text(json.dumps({"rc": 0, "tail": tail}))
+    qs, note = bench_compare.load_bench_queries(str(p))
+    assert qs == timings
+    assert list(qs) == list(QUERIES)
+    assert "all 201 rows" in note
+
+    # a name order the registry does not have is not mapped
+    assert bench_compare.queries_from_compact(tail, list(QUERIES)[::-1]) is None

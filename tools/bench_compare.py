@@ -2,12 +2,13 @@
 
 Usage: python tools/bench_compare.py <bench.json> [--ratio 1.5]
 
-Accepts BOTH bench output shapes (verdict-r7 #3):
+Accepts BOTH bench output shapes:
  * bench.py's own line — ``{"queries": {name: sec, ...}, ...}``;
  * the driver's ``BENCH_rN.json`` — ``{"rc": ..., "tail": "<front-
-   truncated bench line>"}``: the per-query pairs are recovered from the
-   tail string (a leading name cut mid-token is dropped), and the report
-   says how many rows were recovered vs truncated away.
+   truncated bench output>"}``: the times are read from the compact
+   ``bench_times`` line when its name order matches the registry, else
+   recovered from the truncated full line (a leading name cut mid-token
+   is dropped) with a count of the rows truncated away.
 
 Prints queries whose reading exceeds ratio × their baseline row (and any
 queries missing a baseline row), sorted by ratio descending. Exit 0
@@ -19,8 +20,39 @@ note).
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
+import os
 import re
+import sys
+
+
+def order_hash(names: list[str]) -> str:
+    """Short hash of a name order: bench.py's compact line carries it so
+    a reader can tell whether its positions still match the registry."""
+    return hashlib.sha1("\n".join(names).encode()).hexdigest()[:8]
+
+
+def registry_names() -> list[str] | None:
+    """The registry's names in order, or None if it cannot be imported."""
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    try:
+        from mongo_analyser_spark.queries import QUERIES
+    except Exception:
+        return None
+    return list(QUERIES)
+
+
+def queries_from_compact(tail: str, names: list[str] | None) -> dict[str, float] | None:
+    """``{name: seconds}`` from the ``bench_times`` line in ``tail``, or
+    None without one or when its name order is not ``names``."""
+    i = tail.rfind('{"metric":"bench_times"')
+    if i < 0 or not names:
+        return None
+    line = json.loads(tail[i:].splitlines()[0])
+    if line["order"] != order_hash(names):
+        return None
+    return {q: ms / 1000 for q, ms in zip(names, line["ms"])}
 
 
 def queries_from_tail(tail: str) -> dict[str, float]:
@@ -70,20 +102,17 @@ def load_bench_queries(path: str) -> tuple[dict[str, float], str]:
             )
         except (ValueError, KeyError):
             pass
+    names = registry_names()
+    qs = queries_from_compact(tail, names)
+    if qs is not None:
+        return qs, (
+            f"  NOTE: tail input — read all {len(qs)} rows from the "
+            "compact bench_times line\n" + summary_note
+        )
     # recover per-query pairs from the region BEFORE the summary line so
     # the summary's own scalar fields can't be misread as query timings
     qs = queries_from_tail(tail[:i] if i >= 0 else tail)
-    total = None
-    try:  # registry size tells us how much the truncation cost
-        import os
-        import sys
-
-        sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-        from mongo_analyser_spark.queries import QUERIES
-
-        total = len(QUERIES)
-    except Exception:
-        pass
+    total = len(names) if names else None
     lost = f"{total - len(qs)} truncated away of {total}" if total else (
         "truncated count unknown (registry not importable here)")
     return qs, (

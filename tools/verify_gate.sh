@@ -52,7 +52,7 @@ PYTHONPATH="$PWD" python tools/check_oracle.py "$SF_DIR"
 echo "== [3/4] foreign-session gate (bare SparkSession, non-UTC TZ) =="
 TZ=America/Chicago python tools/driver_sim.py "$SF_DIR"
 
-echo "== [4/4] bench completes under budget and prints its full, chunk and summary lines =="
+echo "== [4/4] bench completes under budget and prints its full, compact and summary lines =="
 # MEASURED WALL BUDGET: the full bench (warm-up + SPARK_GRAFT_BENCH_REPS
 # timed reps of all 201 queries) must finish inside BENCH_BUDGET_S
 # (default 1200 s; a healthy run of the 201 rows at sf0.1 on 4 cores takes
@@ -64,9 +64,9 @@ echo "== [4/4] bench completes under budget and prints its full, chunk and summa
 # heredoc replace the piped stdin and json.loads('') always fails.
 BENCH_BUDGET_S="${BENCH_BUDGET_S:-1200}"
 T0=$(date +%s)
-# bench prints the full per-query line, <=50-row bench_queries chunks
-# (they survive a consumer that keeps only the tail of stdout) and a
-# compact summary.
+# bench prints the full per-query line, a compact positional line of
+# every time (it survives a consumer that keeps only the tail of stdout)
+# and a compact summary.
 # Select each line by its metric, not by its position: grade the full
 # per-query line; sanity-check the summary line.
 BENCH_RAW="$(timeout "$BENCH_BUDGET_S" python bench.py 2>/dev/null)"
